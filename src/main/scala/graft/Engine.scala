@@ -65,32 +65,24 @@ object Engine {
     * spark.graft.statsAnswer.enabled=true.
     */
   def install(spark: SparkSession): SparkSession = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "field", exprs => FieldExpr(FieldExpr.coerced(exprs)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "parse_url_tuple", exprs => graft.functions.ParseUrlTuple(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "in_file", exprs => graft.functions.InFile(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => graft.functions.CosineSim(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => graft.functions.DotProduct(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "int_dot", exprs => graft.functions.IntDot(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_count",
-      exprs => graft.functions.SortedIntersectCount(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_overlap",
-      exprs => graft.functions.SortedOverlap(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sorted_intersect_atleast",
-      exprs => graft.functions.SortedIntersectAtLeast(exprs(0), exprs(1), exprs(2)),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "reflect2", exprs => graft.functions.Reflect2(exprs), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sort_array_by", exprs => graft.functions.SortArrayBy(exprs), "scala_udf")
+    import org.apache.spark.sql.catalyst.expressions.{Expression, HiveHash,
+      MonotonicallyIncreasingID}
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{StddevPop, VariancePop}
+    import graft.functions.{CosineSim, DotProduct, InFile, IntDot, ParseUrlTuple,
+      Reflect2, SortArrayBy, SortedIntersectAtLeast, SortedIntersectCount}
+    val reg = spark.sessionState.functionRegistry
+    def fn(name: String)(build: Seq[Expression] => Expression): Unit =
+      reg.createOrReplaceTempFunction(name, build, "scala_udf")
+    fn("field")(e => FieldExpr(FieldExpr.coerced(e)))
+    fn("parse_url_tuple")(e => ParseUrlTuple(e))
+    fn("in_file")(e => InFile(e(0), e(1)))
+    fn("cosine_sim")(e => CosineSim(e(0), e(1)))
+    fn("dot_product")(e => DotProduct(e(0), e(1)))
+    fn("int_dot")(e => IntDot(e(0), e(1)))
+    fn("sorted_intersect_count")(e => SortedIntersectCount(e(0), e(1)))
+    fn("sorted_intersect_atleast")(e => SortedIntersectAtLeast(e(0), e(1), e(2)))
+    fn("reflect2")(e => Reflect2(e))
+    fn("sort_array_by")(e => SortArrayBy(e))
     // Hive's greatest/least return NULL when ANY argument is NULL
     // (GenericUDFGreatest/Least, HIVE-12082); Spark's skip nulls and
     // return the extreme of the non-null values — a silent value drift
@@ -99,20 +91,16 @@ object Engine {
     locally {
       import org.apache.spark.sql.catalyst.expressions.{Greatest, If, IsNull, Least, Literal, Or}
       import org.apache.spark.sql.types.NullType
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "greatest", exprs => If(exprs.map(IsNull).reduceLeft(Or),
-          Literal.create(null, NullType), Greatest(exprs)), "scala_udf")
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-        "least", exprs => If(exprs.map(IsNull).reduceLeft(Or),
-          Literal.create(null, NullType), Least(exprs)), "scala_udf")
+      fn("greatest")(e => If(e.map(IsNull).reduceLeft(Or),
+        Literal.create(null, NullType), Greatest(e)))
+      fn("least")(e => If(e.map(IsNull).reduceLeft(Or),
+        Literal.create(null, NullType), Least(e)))
     }
     // Hive 3's surrogate_key() (GenericUDFSurrogateKey: unique long per
     // written row from writeId/taskId/rowId bits) maps onto Spark's
     // partition-salted unique id — same contract (distributed uniqueness,
     // NOT density or ordering); the optional bit-width args are moot here
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "surrogate_key", _ => org.apache.spark.sql.catalyst.expressions
-        .MonotonicallyIncreasingID(), "scala_udf")
+    fn("surrogate_key")(_ => MonotonicallyIncreasingID())
     // Hive's std/stddev/variance are POPULATION statistics
     // (FunctionRegistry.java:348-354: std/stddev/stddev_pop all ->
     // GenericUDAFStd, variance/var_pop -> GenericUDAFVariance); Spark's
@@ -120,15 +108,9 @@ object Engine {
     // any migrating script. Re-point the ambiguous names at the
     // population implementations; the unambiguous *_samp/*_pop spellings
     // keep their native meaning on both engines.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "std", exprs => new org.apache.spark.sql.catalyst.expressions
-        .aggregate.StddevPop(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "stddev", exprs => new org.apache.spark.sql.catalyst.expressions
-        .aggregate.StddevPop(exprs(0)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "variance", exprs => new org.apache.spark.sql.catalyst.expressions
-        .aggregate.VariancePop(exprs(0)), "scala_udf")
+    fn("std")(e => new StddevPop(e(0)))
+    fn("stddev")(e => new StddevPop(e(0)))
+    fn("variance")(e => new VariancePop(e(0)))
     // Hive's hash() is the Java-style hashCode chain
     // (ObjectInspectorUtils.hashCode: int IS its hash, string is
     // String.hashCode, multi-arg folds h*31+next) — Spark's hash() is
@@ -136,9 +118,7 @@ object Engine {
     // silently change behavior; Spark ships the exact Hive algorithm as
     // the HiveHash expression, so re-point the name. Engine internals
     // (Dedup banding) use xxhash64/murmur3 directly, not this name.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hash", exprs => org.apache.spark.sql.catalyst.expressions
-        .HiveHash(exprs), "scala_udf")
+    fn("hash")(e => HiveHash(e))
     // SQL names for the Column-composed function family — a migrating
     // script calls these by NAME in SQL text (FunctionRegistry.java
     // registers all of them), so each gets a FunctionRegistry builder
@@ -147,12 +127,10 @@ object Engine {
     // (GenericUDAFnGrams checks PRIMITIVE CONSTANT args).
     locally {
       import org.apache.spark.sql.GraftColumnBridge.{toColumn, toExpression}
-      import org.apache.spark.sql.catalyst.expressions.{CreateArray, Expression, Literal}
-      val reg = spark.sessionState.functionRegistry
-      def colFn(name: String, build: Seq[org.apache.spark.sql.Column] =>
+      import org.apache.spark.sql.catalyst.expressions.{CreateArray, Literal}
+      def colFn(name: String)(build: Seq[org.apache.spark.sql.Column] =>
           org.apache.spark.sql.Column): Unit =
-        reg.createOrReplaceTempFunction(name,
-          exprs => toExpression(build(exprs.map(toColumn))), "scala_udf")
+        fn(name)(exprs => toExpression(build(exprs.map(toColumn))))
       def litInt(fname: String, e: Expression): Int = e match {
         case Literal(v: Int, _) => v
         case Literal(v: Long, _) => v.toInt
@@ -175,11 +153,11 @@ object Engine {
           _: org.apache.spark.sql.types.ArrayType, _) => true
         case _ => false
       }
-      reg.createOrReplaceTempFunction("ngrams", exprs =>
+      fn("ngrams")(exprs =>
         toExpression(graft.functions.NGrams.ngramsHive(toColumn(exprs(0)),
           nested(exprs(0)), litInt("ngrams", exprs(1)),
-          litInt("ngrams", exprs(2)))), "scala_udf")
-      reg.createOrReplaceTempFunction("context_ngrams", exprs => {
+          litInt("ngrams", exprs(2)))))
+      fn("context_ngrams") { exprs =>
         val context = exprs(1) match {
           // entries may be wrapped (e.g. CAST(NULL AS STRING)) — any
           // foldable entry works; a null fold is the wildcard slot
@@ -194,22 +172,20 @@ object Engine {
         }
         toExpression(graft.functions.NGrams.contextNGramsHive(toColumn(exprs(0)),
           nested(exprs(0)), context, litInt("context_ngrams", exprs(2))))
-      }, "scala_udf")
-      colFn("ewah_bitmap", cols => graft.functions.Bitmap.bitmapAgg(cols(0)))
-      colFn("ewah_bitmap_and", cols =>
-        graft.functions.Bitmap.bitmapAnd(cols(0), cols(1)))
-      colFn("ewah_bitmap_or", cols =>
-        graft.functions.Bitmap.bitmapOr(cols(0), cols(1)))
-      colFn("ewah_bitmap_empty", cols =>
-        graft.functions.Bitmap.bitmapEmpty(cols(0)))
-      colFn("create_union", cols =>
+      }
+      import graft.functions.Bitmap
+      colFn("ewah_bitmap")(cols => Bitmap.bitmapAgg(cols(0)))
+      colFn("ewah_bitmap_and")(cols => Bitmap.bitmapAnd(cols(0), cols(1)))
+      colFn("ewah_bitmap_or")(cols => Bitmap.bitmapOr(cols(0), cols(1)))
+      colFn("ewah_bitmap_empty")(cols => Bitmap.bitmapEmpty(cols(0)))
+      colFn("create_union")(cols =>
         graft.functions.UnionTypeShim.createUnion(cols.head, cols.tail: _*))
       // compute_stats(col[, numBitVectors]) — GenericUDAFComputeStats:
       // per-type stats struct with the reference's exact field names;
       // NumDistinctValues is an FM-sketch ESTIMATE there, so the faithful
       // distributed analog is approx_count_distinct (HLL++), not an exact
       // count. The numBitVectors argument is accepted and ignored.
-      reg.createOrReplaceTempFunction("compute_stats", exprs => {
+      fn("compute_stats") { exprs =>
         import org.apache.spark.sql.functions._
         import org.apache.spark.sql.types._
         val c = toColumn(exprs(0))
@@ -243,7 +219,7 @@ object Engine {
             s"compute_stats: unsupported column type ${other.catalogString}")
         }
         toExpression(stats)
-      }, "scala_udf")
+      }
     }
     if (!spark.experimental.extraOptimizations
         .exists(_.isInstanceOf[graft.plans.StatsAnswerRule]))
@@ -252,836 +228,6 @@ object Engine {
     spark
   }
 
-  /** CREATE/DROP [TEMPORARY] FUNCTION DDL surface — the reference's
-    * FunctionSemanticAnalyzer + FunctionTask: a statement names an
-    * implementing class, the task resolves the class to a function builder
-    * and registers it under the statement's name. The class catalog maps
-    * BOTH this engine's expression classes and the reference's Hive UDF
-    * class names (what a migrating user's scripts actually contain) onto
-    * the same Catalyst builders, so `CREATE TEMPORARY FUNCTION f AS
-    * 'org.apache.hadoop.hive.ql.udf.generic.GenericUDFField'` just works.
-    * Statements with an unknown class resolve against the session
-    * classloader (jarUdfBuilder — the ADD JAR runtime-loading path);
-    * anything else falls through to Spark's native parser.
-    */
-  private val functionClasses: Map[String, Seq[org.apache.spark.sql.catalyst.expressions.Expression] => org.apache.spark.sql.catalyst.expressions.Expression] = Map(
-    "graft.functions.FieldExpr" -> (exprs => FieldExpr(exprs)),
-    "org.apache.hadoop.hive.ql.udf.generic.GenericUDFField" -> (exprs => FieldExpr(exprs)),
-    "graft.functions.ParseUrlTuple" -> (exprs => graft.functions.ParseUrlTuple(exprs)),
-    "org.apache.hadoop.hive.ql.udf.generic.GenericUDTFParseUrlTuple" -> (exprs => graft.functions.ParseUrlTuple(exprs)),
-    "graft.functions.InFile" -> (exprs => graft.functions.InFile(exprs(0), exprs(1))),
-    "org.apache.hadoop.hive.ql.udf.UDFInFile" -> (exprs => graft.functions.InFile(exprs(0), exprs(1))),
-    "graft.functions.Reflect2" -> (exprs => graft.functions.Reflect2(exprs)),
-    "org.apache.hadoop.hive.ql.udf.generic.GenericUDFReflect2" -> (exprs => graft.functions.Reflect2(exprs)),
-    "graft.functions.SortArrayBy" -> (exprs => graft.functions.SortArrayBy(exprs)),
-    "org.apache.hadoop.hive.ql.udf.generic.GenericUDFSortArrayByField" -> (exprs => graft.functions.SortArrayBy(exprs)),
-    "org.apache.hadoop.hive.ql.udf.generic.GenericUDFSurrogateKey" -> (_ => org.apache.spark.sql.catalyst.expressions.MonotonicallyIncreasingID()),
-    // the contrib example UDFs the reference's udf_example_*.q tests
-    // register (contrib/src/java/.../udf/example/UDFExampleAdd.java:
-    // plain arity-n addition)
-    "org.apache.hadoop.hive.contrib.udf.example.UDFExampleAdd" -> (exprs =>
-      exprs.reduceLeft(org.apache.spark.sql.catalyst.expressions.Add(_, _))))
-
-  /** Executor-side invoker for a session-jar UDF class: captures only the
-    * class NAME, resolving instance + method lazily per JVM (ADD JAR
-    * distributes the jar; java.lang.reflect.Method is not serializable,
-    * so the resolution must happen after deserialization). */
-  private class JarUdfCall(clsName: String, arity: Int) extends Serializable {
-    @transient private lazy val target = {
-      val c = Class.forName(clsName, true,
-        Option(Thread.currentThread().getContextClassLoader)
-          .getOrElse(getClass.getClassLoader))
-      val inst = c.getDeclaredConstructor().newInstance()
-      val m = c.getMethods
-        .find(m => m.getName == "call" && m.getParameterCount == arity).get
-      (inst, m)
-    }
-    def invoke(args: Any*): Any =
-      target._2.invoke(target._1, args.map(_.asInstanceOf[AnyRef]): _*)
-  }
-
-  private def javaToCatalyst(t: java.lang.reflect.Type)
-      : Option[org.apache.spark.sql.types.DataType] = {
-    import org.apache.spark.sql.types._
-    t match {
-      case c: Class[_] => c.getName match {
-        case "java.lang.String" => Some(StringType)
-        case "java.lang.Integer" => Some(IntegerType)
-        case "java.lang.Long" => Some(LongType)
-        case "java.lang.Double" => Some(DoubleType)
-        case "java.lang.Float" => Some(FloatType)
-        case "java.lang.Boolean" => Some(BooleanType)
-        case "java.lang.Short" => Some(ShortType)
-        case "java.lang.Byte" => Some(ByteType)
-        case "java.math.BigDecimal" => Some(DecimalType.SYSTEM_DEFAULT)
-        case "[B" => Some(BinaryType)
-        case "java.sql.Date" => Some(DateType)
-        case "java.sql.Timestamp" => Some(TimestampType)
-        case _ => None
-      }
-      case _ => None
-    }
-  }
-
-  // successful resolutions only — a None must stay retryable because the
-  // class may become loadable after a LATER ADD JAR
-  private val jarUdfCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Seq[org.apache.spark.sql.catalyst.expressions.Expression] =>
-      org.apache.spark.sql.catalyst.expressions.Expression]()
-
-  /** CREATE FUNCTION for a class NOT in the builtin catalog: if the
-    * session classloader (which ADD JAR extends — mapjoin_addjar.q's
-    * runtime-loading surface) can load it and it implements the Java
-    * UDF0..UDF8 interfaces, resolve the reference's FunctionTask
-    * class→builder step to a ScalaUDF (arguments cast to the interface's
-    * declared types, Hive's coercion contract). Non-UDF shapes return
-    * None and the statement falls through to Spark's native handling;
-    * a UDF with arity above 8 fails loudly instead. */
-  private def jarUdfBuilder(cls: String): Option[Seq[
-      org.apache.spark.sql.catalyst.expressions.Expression] =>
-      org.apache.spark.sql.catalyst.expressions.Expression] = {
-    Option(jarUdfCache.get(cls)).foreach(b => return Some(b))
-    val c = try Class.forName(cls, false,
-        Option(Thread.currentThread().getContextClassLoader)
-          .getOrElse(getClass.getClassLoader))
-      catch { case _: ClassNotFoundException | _: LinkageError => return None }
-    val iface = c.getGenericInterfaces.collectFirst {
-      case p: java.lang.reflect.ParameterizedType
-        if p.getRawType.isInstanceOf[Class[_]] &&
-          p.getRawType.asInstanceOf[Class[_]].getName
-            .matches("org\\.apache\\.spark\\.sql\\.api\\.java\\.UDF\\d+") => p
-    }.getOrElse(return None)
-    val arity = iface.getRawType.asInstanceOf[Class[_]].getName
-      .stripPrefix("org.apache.spark.sql.api.java.UDF").toInt
-    require(arity <= 8,
-      s"graft: jar UDF $cls has arity $arity — only UDF0..UDF8 supported")
-    val ret = javaToCatalyst(iface.getActualTypeArguments.last)
-      .getOrElse(return None)
-    val argTypes = iface.getActualTypeArguments.init.map(javaToCatalyst)
-    val h = new JarUdfCall(cls, arity)
-    val fn: AnyRef = arity match {
-      case 0 => () => h.invoke()
-      case 1 => (a: Any) => h.invoke(a)
-      case 2 => (a: Any, b: Any) => h.invoke(a, b)
-      case 3 => (a: Any, b: Any, c3: Any) => h.invoke(a, b, c3)
-      case 4 => (a: Any, b: Any, c3: Any, d: Any) => h.invoke(a, b, c3, d)
-      case 5 => (a: Any, b: Any, c3: Any, d: Any, e: Any) =>
-        h.invoke(a, b, c3, d, e)
-      case 6 => (a: Any, b: Any, c3: Any, d: Any, e: Any, f: Any) =>
-        h.invoke(a, b, c3, d, e, f)
-      case 7 => (a: Any, b: Any, c3: Any, d: Any, e: Any, f: Any, g: Any) =>
-        h.invoke(a, b, c3, d, e, f, g)
-      case _ => (a: Any, b: Any, c3: Any, d: Any, e: Any, f: Any, g: Any,
-        i: Any) => h.invoke(a, b, c3, d, e, f, g, i)
-    }
-    val builder = (exprs: Seq[
-        org.apache.spark.sql.catalyst.expressions.Expression]) => {
-      // cast each argument to the interface's declared type (Hive coerces
-      // int→string etc.; the reflective call would otherwise throw on a
-      // mismatched boxed type)
-      val cast = exprs.zipWithIndex.map { case (e, i) =>
-        argTypes.lift(i).flatten match {
-          case Some(t) if e.dataType != t =>
-            org.apache.spark.sql.catalyst.expressions.Cast(e, t)
-          case _ => e
-        }
-      }
-      org.apache.spark.sql.catalyst.expressions.ScalaUDF(
-        fn, ret, cast, Nil, udfName = Some(cls))
-    }
-    jarUdfCache.put(cls, builder): Unit
-    Some(builder)
-  }
-
-  private val createFunRe =
-    """(?is)\s*CREATE\s+(?:TEMPORARY\s+)?FUNCTION\s+(?:IF\s+NOT\s+EXISTS\s+)?([\w.]+)\s+AS\s+'([^']+)'\s*(?:USING\s+(.+?))?\s*;?\s*""".r
-  // one USING resource: JAR|FILE|ARCHIVE '<uri>' (FunctionSemanticAnalyzer
-  // .getResourceList — parse/FunctionSemanticAnalyzer.java:131-156)
-  private val funResourceRe = """(?i)(JAR|FILE|ARCHIVE)\s+'([^']+)'""".r
-
-  /** Ship a CREATE FUNCTION statement's USING resources into the session
-    * (FunctionTask.addFunctionResources): ADD JAR extends the session and
-    * executor classloaders, so the named class becomes loadable exactly
-    * like the reference's resource-loading step. Idempotent (re-ADDing a
-    * jar is a no-op); a missing file fails the CREATE, matching the
-    * reference's loud resource error. */
-  private def shipFunctionResources(spark: SparkSession, resText: String): Unit =
-    if (resText != null) {
-      val resources = funResourceRe.findAllMatchIn(resText).toSeq
-      require(resources.nonEmpty,
-        s"CREATE FUNCTION ... USING: cannot parse resource list: $resText")
-      resources.foreach { m =>
-        val kind = m.group(1).toUpperCase
-        val uri = m.group(2)
-        // the reference fails the CREATE on an unreadable resource
-        // (FunctionTask.addFunctionResources → SessionState.add_resource);
-        // ADD JAR alone is not a reliable guard — when the class is
-        // already loadable from an earlier jar, a missing path would
-        // otherwise slip through silently
-        val p = new org.apache.hadoop.fs.Path(uri)
-        require(p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p),
-          s"CREATE FUNCTION ... USING $kind: resource does not exist: $uri")
-        kind match {
-          case "JAR" => spark.sql(s"ADD JAR '$uri'")
-          case "FILE" => spark.sql(s"ADD FILE '$uri'")
-          case "ARCHIVE" => spark.sql(s"ADD ARCHIVE '$uri'")
-        }
-      }
-    }
-
-  /** Third-party Hive UDF classes (GenericUDF subclasses, or legacy UDF
-    * via Hive's GenericUDFBridge) resolve onto the adapter expression —
-    * the FunctionTask class→builder step for classes this engine has no
-    * native Catalyst builder for. Not cached: the builder closes over the
-    * function NAME (the bridge reflects evaluate() overloads under it),
-    * and a later ADD JAR may replace the class. */
-  private def hiveUdfBuilder(funcName: String, cls: String): Option[Seq[
-      org.apache.spark.sql.catalyst.expressions.Expression] =>
-      org.apache.spark.sql.catalyst.expressions.Expression] =
-    if (graft.functions.HiveUdfAdapter.supports(cls))
-      Some(exprs => graft.functions.HiveGenericUdfExpr(funcName, cls, exprs))
-    else if (graft.functions.HiveUdfAdapter.supportsUdtf(cls))
-      Some(exprs => graft.functions.HiveGenericUdtfExpr(funcName, cls, exprs))
-    // third-party aggregates ride Spark's own HiveUDAFFunction (public
-    // spark-hive API): the TypedImperativeAggregate bridge over the
-    // evaluator's PARTIAL1/FINAL modes — partial results cross the
-    // shuffle exactly like any native partial aggregate
-    else if (graft.functions.HiveUdfAdapter.supportsUdaf(cls))
-      Some(exprs => org.apache.spark.sql.hive.GraftHiveUdafBridge.udaf(
-        funcName, cls, exprs,
-        graft.functions.HiveUdfAdapter.isLegacyUdaf(cls)))
-    else None
-  private val dropFunRe =
-    """(?is)\s*DROP\s+(?:TEMPORARY\s+)?FUNCTION\s+(IF\s+EXISTS\s+)?([\w.]+)\s*;?\s*""".r
-  // table rename only — the partition form has ')' before RENAME and
-  // falls through to the native ALTER ... PARTITION ... RENAME path.
-  // Identifier segments may be backtick-quoted (hyphens, spaces): those
-  // MUST match too — falling through to native Spark rename would skip
-  // renameWithPartitionFix and leave a renamed partitioned table
-  // silently reading empty (r14 advice). Backticks stay in the capture;
-  // parseTableIdentifier and the re-issued ALTER both consume them.
-  private val renameTableRe =
-    """(?is)\s*ALTER\s+TABLE\s+((?:`[^`]+`|\w+)(?:\.(?:`[^`]+`|\w+))*)\s+RENAME\s+TO\s+((?:`[^`]+`|\w+)(?:\.(?:`[^`]+`|\w+))*)\s*;?\s*""".r
-  // ALTER VIEW RENAME / ADD PARTITION — Hive-only forms Spark's parser
-  // rejects (DDLSemanticAnalyzer analyzeAlterTableRename/AddParts with
-  // expectView; clientnegative/alter_view_failure3/4/5/7/8/9.q pin the
-  // table-vs-view mismatch and spec-validation refusals)
-  private val alterViewRenameRe =
-    """(?is)\s*ALTER\s+VIEW\s+([\w.`]+)\s+RENAME\s+TO\s+([\w.`]+)\s*;?\s*""".r
-  private val alterViewAddPartRe =
-    """(?is)\s*ALTER\s+VIEW\s+([\w.`]+)\s+ADD\s+(IF\s+NOT\s+EXISTS\s+)?PARTITION\s*\(([^)]*)\)(\s+LOCATION\s+'[^']*')?\s*;?\s*""".r
-  private val alterViewDropPartRe =
-    """(?is)\s*ALTER\s+VIEW\s+([\w.`]+)\s+DROP\s+(IF\s+EXISTS\s+)?PARTITION\s*\(([^)]*)\)\s*;?\s*""".r
-  private val replaceViewRe =
-    """(?is)\s*CREATE\s+OR\s+REPLACE\s+VIEW\s+(?:IF\s+NOT\s+EXISTS\s+)?([\w.`]+)\b.*""".r
-  private val alterViewAsRe =
-    """(?is)\s*ALTER\s+VIEW\s+([\w.`]+)\s+AS\s+.*""".r
-  private val loadDataRe =
-    """(?is)\s*LOAD\s+DATA\s+(?:LOCAL\s+)?INPATH\s+'([^']+)'\s+(OVERWRITE\s+)?INTO\s+TABLE\s+([\w.]+)\s*(?:PARTITION\s*\(([^)]*)\))?\s*;?\s*""".r
-  private val updateRe =
-    """(?is)\s*UPDATE\s+([\w.]+)\s+SET\s+(.+?)\s+WHERE\s+(.+?)\s*;?\s*""".r
-  // full-table UPDATE (no WHERE): every row rewrites — legal in HiveQL
-  private val updateAllRe =
-    """(?is)\s*UPDATE\s+([\w.]+)\s+SET\s+(.+?)\s*;?\s*""".r
-  private val deleteRe =
-    """(?is)\s*DELETE\s+FROM\s+([\w.]+)\s+WHERE\s+(.+?)\s*;?\s*""".r
-  private val deleteAllRe =
-    """(?is)\s*DELETE\s+FROM\s+([\w.]+)\s*;?\s*""".r
-  // SET statements whose Hive key has a direct Spark execution
-  // equivalent: Hive scripts steer the ENGINE with these (reducer count,
-  // mapjoin auto-conversion), so recording the key without applying the
-  // knob would silently ignore the user's intent. Everything else a
-  // script SETs stays an inert session conf (g259). "Restore" (-1 /
-  // re-enable) puts back the value the SESSION had before the first
-  // bridge write — conf.unset would fall to Spark's stock defaults (200
-  // partitions, 10 MB), not the engine's configured ones.
-  private val setBridgeRe =
-    """(?is)\s*SET\s+([\w.]+)\s*=\s*([^\s;]+)\s*;?\s*""".r
-  private val bridgeSaved =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession,
-        java.util.concurrent.ConcurrentHashMap[String, String]]())
-  private def bridgeSet(s: SparkSession, key: String, value: String): Unit = {
-    bridgeSaved.computeIfAbsent(s,
-      _ => new java.util.concurrent.ConcurrentHashMap[String, String]())
-      .putIfAbsent(key, s.conf.get(key)): Unit
-    s.conf.set(key, value)
-  }
-  private def bridgeRestore(s: SparkSession, key: String): Unit =
-    Option(bridgeSaved.get(s)).flatMap(m => Option(m.get(key)))
-      .foreach(orig => s.conf.set(key, orig))
-  private val confBridge: Map[String, (SparkSession, String) => Unit] = {
-    val reduceTasks = (s: SparkSession, v: String) => {
-      val n = try v.toInt catch { case _: NumberFormatException =>
-        sys.error(s"mapred.reduce.tasks expects an integer, got '$v'") }
-      if (n > 0) bridgeSet(s, "spark.sql.shuffle.partitions", n.toString)
-      else bridgeRestore(s, "spark.sql.shuffle.partitions")
-    }
-    Map(
-      // reference: HiveConf HADOOPNUMREDUCERS; -1 = let the engine decide
-      "mapred.reduce.tasks" -> reduceTasks,
-      "mapreduce.job.reduces" -> reduceTasks,
-      // reference: HiveConf.java hive.auto.convert.join (mapjoin
-      // auto-conversion) — Spark's equivalent is the broadcast threshold.
-      // Re-enabling keeps an explicitly-SET size bound (the two confs are
-      // independent in Hive: turning conversion back on uses the
-      // configured size, not the pre-script default)
-      "hive.auto.convert.join" -> ((s: SparkSession, v: String) =>
-        if (parseBool("hive.auto.convert.join", v)) {
-          val sized = Seq("hive.auto.convert.join.noconditionaltask.size",
-            "hive.mapjoin.smalltable.filesize")
-            .flatMap(k => s.conf.getOption(k)).headOption
-          sized match {
-            case Some(bytes) =>
-              bridgeSet(s, "spark.sql.autoBroadcastJoinThreshold", bytes)
-            case None =>
-              bridgeRestore(s, "spark.sql.autoBroadcastJoinThreshold")
-          }
-        } else bridgeSet(s, "spark.sql.autoBroadcastJoinThreshold", "-1")),
-      // the small-table size bound for auto-conversion. INERT while
-      // auto-conversion is disabled (Hive's size confs do nothing when
-      // hive.auto.convert.join=false — setting one must not silently
-      // re-enable the broadcast the user just turned off); the =true
-      // handler above picks the recorded size up on re-enable.
-      "hive.auto.convert.join.noconditionaltask.size" ->
-        ((s: SparkSession, v: String) =>
-          if (!s.conf.get("hive.auto.convert.join", "true")
-              .equalsIgnoreCase("false"))
-            bridgeSet(s, "spark.sql.autoBroadcastJoinThreshold", v)),
-      "hive.mapjoin.smalltable.filesize" ->
-        ((s: SparkSession, v: String) =>
-          if (!s.conf.get("hive.auto.convert.join", "true")
-              .equalsIgnoreCase("false"))
-            bridgeSet(s, "spark.sql.autoBroadcastJoinThreshold", v)),
-      // runtime skew mitigation: Hive's conditional skew-join task maps
-      // onto AQE's skew-join split (on by default in both engines)
-      "hive.optimize.skewjoin" -> ((s: SparkSession, v: String) =>
-        bridgeSet(s, "spark.sql.adaptive.skewJoin.enabled",
-          parseBool("hive.optimize.skewjoin", v).toString)),
-      // cost-based optimizer toggle
-      "hive.cbo.enable" -> ((s: SparkSession, v: String) =>
-        bridgeSet(s, "spark.sql.cbo.enabled",
-          parseBool("hive.cbo.enable", v).toString)))
-  }
-
-  private def parseBool(key: String, v: String): Boolean =
-    if (v.equalsIgnoreCase("true")) true
-    else if (v.equalsIgnoreCase("false")) false
-    else sys.error(s"$key expects true or false, got '$v'")
-
-  // ALTER TABLE t [PARTITION (...)] CONCATENATE — DDLSemanticAnalyzer's
-  // merge-small-files task (exec/DDLTask mergeFiles); routed to the CoW
-  // compactor over the table's (or partition's) directory
-  private val concatenateRe =
-    """(?is)\s*ALTER\s+TABLE\s+([\w.]+)\s*(?:PARTITION\s*\(([^)]*)\)\s*)?CONCATENATE\s*;?\s*""".r
-  // ALTER TABLE t [PARTITION(...)] COMPACT 'major'|'minor' —
-  // DDLSemanticAnalyzer analyzeAlterTableCompact queues the request for
-  // the metastore compactor (ql/txn/compactor/Worker.java). Under CoW
-  // there are no deltas to merge, so both major and minor reduce to the
-  // same file-count compaction CONCATENATE runs — executed inline (no
-  // queue; SHOW COMPACTIONS stays empty by design).
-  private val compactRe =
-    """(?is)\s*ALTER\s+TABLE\s+([\w.]+)\s*(?:PARTITION\s*\(([^)]*)\)\s*)?COMPACT\s+'(\w+)'\s*;?\s*""".r
-  // ALTER TABLE t [PARTITION(...)] ENABLE|DISABLE NO_DROP [CASCADE]/
-  // OFFLINE — DDLSemanticAnalyzer analyzeAlterTableProtectMode
-  // (protectmode.q). NO_DROP is ENFORCED session-side: a protected table/
-  // partition refuses DROP. OFFLINE (query-blocking) has no Spark-side
-  // interception point for reads and is accepted as a warn no-op.
-  private val protectRe =
-    """(?is)\s*ALTER\s+TABLE\s+([\w.`]+)\s*(?:PARTITION\s*\(([^)]*)\)\s*)?(ENABLE|DISABLE)\s+(NO_DROP|OFFLINE)(\s+CASCADE)?\s*;?\s*""".r
-  private val dropTableStmtRe =
-    """(?is)\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?([\w.`]+)\s*(?:PURGE\s*)?;?\s*""".r
-  private val dropPartExactRe =
-    """(?is)\s*ALTER\s+TABLE\s+([\w.`]+)\s+DROP\s+(?:IF\s+EXISTS\s+)?PARTITION\s*\(([^)]*)\).*""".r
-  private val dropDatabaseCascadeRe =
-    """(?is)\s*DROP\s+(?:DATABASE|SCHEMA)\s+(?:IF\s+EXISTS\s+)?(\w+)\s+CASCADE\s*;?\s*""".r
-  // session-scoped protect-mode registry: tables and (table, partition
-  // spec) pairs under NO_DROP
-  private val noDropTables =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val noDropParts =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  // table keys protected with NO_DROP CASCADE: every partition of the
-  // table refuses DROP, not just the table object itself (protectmode.q)
-  private val noDropCascade =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  // table keys under ENABLE OFFLINE: queries and DML against them refuse
-  // (DDLSemanticAnalyzer protect mode, error 10113 — protectmode_tbl*.q)
-  private val offlineTables =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  /** Refuse any statement whose parsed plan references an OFFLINE table
-    * (reads and DML alike; DROP/ALTER stay allowed — those are NO_DROP's
-    * axis). Parse-only: rewrites-owned dialects that Spark's parser
-    * rejects skip the guard and meet it again on the inner statements
-    * they execute. */
-  private def checkOffline(spark: SparkSession, stmt: String): Unit = {
-    if (offlineTables.isEmpty) return
-    val head = stmt.trim.takeWhile(!_.isWhitespace).toUpperCase
-    val dmlHeads = Set("SELECT", "WITH", "FROM", "INSERT", "UPDATE",
-      "DELETE", "MERGE", "TRUNCATE", "LOAD", "EXPORT")
-    if (!dmlHeads.contains(head)) return
-    val refs: Seq[String] =
-      try {
-        val p = spark.sessionState.sqlParser.parsePlan(stmt)
-        def rels(q: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
-          q.collect {
-            case r: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation =>
-              r.multipartIdentifier.mkString(".")
-          }
-        // an INSERT's target is a constructor FIELD, not a traversed
-        // child — walk it explicitly or VALUES inserts slip the guard
-        rels(p) ++ p.collect {
-          case i: org.apache.spark.sql.catalyst.plans.logical.InsertIntoStatement =>
-            rels(i.table)
-        }.flatten
-      }
-      catch { case _: Exception => Nil }
-    refs.map(qualName(spark, _)).find(offlineTables.contains).foreach { t =>
-      sys.error("Query against an offline table or partition: " +
-        s"Table $t is offline (ALTER TABLE ... DISABLE OFFLINE first)")
-    }
-  }
-  /** hive.groupby.skewindata=true forbids more than one DISTINCT
-    * aggregate per query block — the reference's two-stage skew rewrite
-    * can spray only one distinct key (SemanticAnalyzer ErrorMsg 10022,
-    * clientnegative/groupby{2,3}_multi_distinct.q and the
-    * *_map_skew_multi_distinct variants). Spark's expand-based
-    * multi-distinct has no such limit, but under the Hive conf the
-    * refusal is the documented contract; a single DISTINCT stays
-    * accepted (groupby2_map_skew.q is positive). Parse-only: rewrites-
-    * owned dialects that Spark's parser rejects skip the guard. */
-  private def checkSkewMultiDistinct(spark: SparkSession, stmt: String): Unit = {
-    if (!spark.conf.getOption("hive.groupby.skewindata")
-          .exists(_.equalsIgnoreCase("true"))) return
-    if ("(?i)\\bdistinct\\b".r.findAllIn(stmt).take(2).size < 2) return
-    try {
-      val p = spark.sessionState.sqlParser.parsePlan(stmt)
-      p.foreach { node =>
-        val ds = node.expressions.flatMap(_.collect {
-          case f: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
-              if f.isDistinct => f
-        })
-        if (ds.size > 1)
-          sys.error("DISTINCT on different columns not supported with " +
-            "skew in data (error 10022; disable hive.groupby.skewindata)")
-      }
-    } catch {
-      case e: RuntimeException
-          if e.getMessage != null && e.getMessage.contains("10022") => throw e
-      case _: Exception => ()
-    }
-  }
-
-  /** An IN/EXISTS subquery with no FROM clause refuses
-    * (SubQueryUtils.checkForSubqueries → "From clause is missing in
-    * SubQuery", clientnegative/subquery_missing_from.q): Spark would
-    * resolve the lone select item as an OUTER reference and quietly
-    * turn `key in (select key)` into a tautology. Scalar subqueries
-    * (`(SELECT count(*) FROM t)`) are untouched — they carry leaves. */
-  private def checkSubqueryMissingFrom(spark: SparkSession, stmt: String): Unit = {
-    val l = stmt.toLowerCase
-    if (!(l.contains(" in") || l.contains("exists")) || !l.contains("select")) return
-    import org.apache.spark.sql.catalyst.expressions.{Exists, InSubquery, SubqueryExpression}
-    import org.apache.spark.sql.catalyst.plans.logical.OneRowRelation
-    try {
-      val plan = spark.sessionState.sqlParser.parsePlan(stmt)
-      val offenders = plan.flatMap { node =>
-        node.expressions.flatMap(_.collect {
-          case e: InSubquery
-              if e.query.plan.collectLeaves()
-                .forall(_.isInstanceOf[OneRowRelation]) => e
-          case e: Exists
-              if e.plan.collectLeaves()
-                .forall(_.isInstanceOf[OneRowRelation]) => e
-        })
-      }
-      if (offenders.nonEmpty)
-        sys.error("Invalid SubQuery expression: From clause is missing " +
-          "in SubQuery (the lone select item would resolve as an outer " +
-          "reference)")
-    } catch {
-      case e: RuntimeException
-          if e.getMessage != null &&
-             e.getMessage.contains("From clause is missing") => throw e
-      case _: Exception => ()
-    }
-  }
-
-  /** A MAPJOIN hint on a two-table OUTER join must leave the preserved
-    * side streamed: hinting ONLY the preserved table (so the other,
-    * null-extending side would stream) refuses like the reference
-    * (ErrorMsg 10246 "table chosen for streaming is not valid",
-    * clientnegative/smb_bucketmapjoin.q) instead of Spark's silent
-    * no-broadcast. Join CHAINS keep the reference's positive behavior
-    * (mapjoin_filter_on_outerjoin.q hints two of three tables around a
-    * RIGHT OUTER) — the guard only fires on a single-join hint scope
-    * whose sides are leaf relations. SMB exemption: under
-    * hive.optimize.bucketmapjoin.sortedmerge=true with BOTH sides
-    * bucketed AND sorted, the reference converts to a sort-merge join
-    * (no hash side at all), so any-side hints stay legal
-    * (smb_mapjoin_1.q..3.q are positive on exactly this shape; the
-    * negative smb_bucketmapjoin.q's tables are clustered but UNSORTED,
-    * which is what makes its streaming choice invalid). */
-  private def checkOuterMapjoin(spark: SparkSession, stmt: String): Unit = {
-    if (!"(?is)/\\*\\+\\s*(mapjoin|broadcastjoin|broadcast)\\b".r
-          .findFirstIn(stmt).isDefined) return
-    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, SubqueryAlias, UnresolvedHint}
-    import org.apache.spark.sql.catalyst.plans.{FullOuter, LeftOuter, RightOuter}
-    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
-    def leafName(p: LogicalPlan): Option[String] = p match {
-      case SubqueryAlias(id, _) => Some(id.name.toLowerCase)
-      case r: UnresolvedRelation => Some(r.multipartIdentifier.last.toLowerCase)
-      case _ => None
-    }
-    // the underlying TABLE name of a leaf (through one alias level), for
-    // the sorted-bucket catalog probe
-    def leafTable(p: LogicalPlan): Option[String] = p match {
-      case SubqueryAlias(_, r: UnresolvedRelation) =>
-        Some(r.multipartIdentifier.mkString("."))
-      case r: UnresolvedRelation => Some(r.multipartIdentifier.mkString("."))
-      case _ => None
-    }
-    def sortedBucketed(tbl: String): Boolean =
-      try {
-        val meta = spark.sessionState.catalog.getTableMetadata(
-          spark.sessionState.sqlParser.parseTableIdentifier(tbl))
-        meta.bucketSpec.exists(_.sortColumnNames.nonEmpty)
-      } catch { case _: Exception => false }
-    val smbConf = spark.conf
-      .getOption("hive.optimize.bucketmapjoin.sortedmerge")
-      .exists(_.equalsIgnoreCase("true"))
-    try {
-      val plan = spark.sessionState.sqlParser.parsePlan(stmt)
-      plan.foreach {
-        case h: UnresolvedHint
-            if Set("mapjoin", "broadcastjoin", "broadcast")
-              .contains(h.name.toLowerCase) =>
-          val params = h.parameters.collect {
-            case a: UnresolvedAttribute => a.name.toLowerCase
-          }.toSet
-          h.child.collect { case j: Join => j } match {
-            case Seq(j)
-                if !(smbConf &&
-                     leafTable(j.left).exists(sortedBucketed) &&
-                     leafTable(j.right).exists(sortedBucketed)) =>
-              val sides: Seq[(Option[String], Option[String])] = j.joinType match {
-                case LeftOuter  => Seq((leafName(j.left), leafName(j.right)))
-                case RightOuter => Seq((leafName(j.right), leafName(j.left)))
-                case FullOuter  => Seq((leafName(j.left), leafName(j.right)),
-                                       (leafName(j.right), leafName(j.left)))
-                case _ => Nil
-              }
-              sides.foreach {
-                case (Some(preserved), other)
-                    if params.contains(preserved) &&
-                       !other.exists(params.contains) =>
-                  sys.error(s"MAPJOIN hint on the preserved side of an " +
-                    s"outer join: table chosen for streaming is not valid " +
-                    s"(error 10246; hint the null-extending side instead " +
-                    s"of `$preserved`)")
-                case _ => ()
-              }
-            case _ => ()
-          }
-        case _ => ()
-      }
-    } catch {
-      case e: RuntimeException
-          if e.getMessage != null && e.getMessage.contains("10246") => throw e
-      case _: Exception => ()
-    }
-  }
-
-  /** NO_DROP keys are FULLY QUALIFIED (db.table, lowercased) so
-    * protecting `db.t` blocks `DROP TABLE t` under current database db
-    * and vice versa. */
-  private def qualName(spark: SparkSession, table: String): String =
-    try {
-      val id = spark.sessionState.sqlParser.parseTableIdentifier(table)
-      val db = id.database.getOrElse(spark.catalog.currentDatabase)
-      s"$db.${id.table}".toLowerCase
-    } catch {
-      // 3-part names (spark_catalog.db.t) don't parse as TableIdentifier;
-      // normalize textually so the guard neither throws on a legal DROP
-      // nor misses a protected table spelled with its catalog prefix
-      case _: Exception =>
-        val parts = table.toLowerCase.replace("`", "").split('.')
-          .filterNot(_ == "spark_catalog").filter(_.nonEmpty)
-        if (parts.length >= 2) parts.takeRight(2).mkString(".")
-        else (spark.catalog.currentDatabase.toLowerCase +: parts).mkString(".")
-    }
-  private def normSpec(spec: String): String =
-    spec.split(",").map { kv =>
-      val Array(k, v) = kv.split("=", 2).map(_.trim)
-      s"${k.toLowerCase}=${v.stripPrefix("'").stripSuffix("'")}"
-    }.sorted.mkString(",")
-  // EXPORT TABLE t TO 'dir' / IMPORT TABLE t FROM 'dir' [LOCATION 'loc']
-  // (ExportSemanticAnalyzer / ImportSemanticAnalyzer) — Spark's parser has
-  // no such statements; routed to the ExportImport operator
-  // the optional PARTITION (spec) selects a partition subtree: EXPORT
-  // snapshots just the matching partitions (ExportSemanticAnalyzer's
-  // per-partition dump, exim_04/05/06_*_part.q), IMPORT restores only the
-  // named partition from the dump (ImportSemanticAnalyzer partSpecs,
-  // exim_23_import_part_authsuccess.q)
-  private val exportRe =
-    """(?is)\s*EXPORT\s+TABLE\s+([\w.]+)(?:\s+PARTITION\s*\(([^)]*)\))?\s+TO\s+'([^']+)'\s*;?\s*""".r
-  private val importRe =
-    """(?is)\s*IMPORT\s+(EXTERNAL\s+)?TABLE\s+([\w.]+)(?:\s+PARTITION\s*\(([^)]*)\))?\s+FROM\s+'([^']+)'(?:\s+LOCATION\s+'([^']+)')?\s*;?\s*""".r
-
-  // DESCRIBE table.col[.path] (xpath tokens: $elem$/$key$/$value$ and
-  // struct member names) — see the dispatch branch
-  private val describeXpathRe =
-    """(?is)\s*DESC(?:RIBE)?\s+([\w$.]+)\s*;?\s*""".r
-  /** Resolve a DESCRIBE xpath target: Some(rows) when `name` is NOT a
-    * table itself but a 1- or 2-part prefix resolves to one and the
-    * remainder is a column path. Case-insensitive at every step, like
-    * the reference's ObjectInspector walk. */
-  private def describeXpath(spark: SparkSession,
-      name: String): Option[Seq[(String, String, String)]] = {
-    import org.apache.spark.sql.types._
-    if (!name.contains(".") && !name.contains("$")) return None
-    val parts = name.split('.').toSeq
-    def tableOf(n: Int): Option[StructType] =
-      if (parts.length <= n) None
-      else try {
-        val id = spark.sessionState.sqlParser.parseTableIdentifier(
-          parts.take(n).mkString("."))
-        if (spark.sessionState.catalog.tableExists(id) ||
-            spark.sessionState.catalog.isTempView(parts.take(n)))
-          Some(spark.table(parts.take(n).mkString(".")).schema)
-        else None
-      } catch { case _: Exception => None }
-    // a name that IS a table (1 or 2 part) stays native DESCRIBE
-    val whole =
-      try {
-        val id = spark.sessionState.sqlParser.parseTableIdentifier(name)
-        spark.sessionState.catalog.tableExists(id) ||
-          spark.sessionState.catalog.isTempView(parts)
-      } catch { case _: Exception => false }
-    if (whole) return None
-    val (schema, path) = tableOf(2).map(s => (Some(s), parts.drop(2)))
-      .filter(_ => parts.length > 2)
-      .orElse(Some((tableOf(1), parts.drop(1))))
-      .get
-    schema.flatMap { st0 =>
-      def walk(dt: DataType, segs: Seq[String]): Option[DataType] =
-        segs.headOption match {
-          case None => Some(dt)
-          case Some(seg) => (dt, seg.toLowerCase) match {
-            case (ArrayType(e, _), "$elem$") => walk(e, segs.tail)
-            case (MapType(k, _, _), "$key$") => walk(k, segs.tail)
-            case (MapType(_, v, _), "$value$") => walk(v, segs.tail)
-            case (s: StructType, f) =>
-              s.fields.find(_.name.toLowerCase == f)
-                .flatMap(fl => walk(fl.dataType, segs.tail))
-            case _ => None
-          }
-        }
-      walk(st0, path).map {
-        case s: StructType =>
-          s.fields.toSeq.map(f =>
-            (f.name, f.dataType.catalogString, "from deserializer"))
-        case other =>
-          Seq((path.last, other.catalogString, "from deserializer"))
-      }
-    }
-  }
-
-  // DESCRIBE FORMATTED/EXTENDED t PARTITION (spec): native in Spark, but
-  // Hive shows the PARTITION's own storage — append the diverged format
-  // row when the spec names a heterogeneous-format partition
-  private val descFmtPartRe =
-    """(?is)\s*DESC(?:RIBE)?\s+(?:FORMATTED|EXTENDED)\s+([\w.]+)\s+PARTITION\s*\(([^)]*)\)\s*;?\s*""".r
-
-  // ALTER TABLE t PARTITION (a) RENAME TO PARTITION (b): native in
-  // Spark, but on a heterogeneous-format table the divergence entry must
-  // MOVE with the partition or the renamed directory's foreign-format
-  // files would be read with the base provider
-  private val renamePartRe =
-    """(?is)\s*ALTER\s+TABLE\s+([\w.]+)\s+PARTITION\s*\(([^)]*)\)\s+RENAME\s+TO\s+PARTITION\s*\(([^)]*)\)\s*;?\s*""".r
-
-  // DROP PARTITION with comparison filters (c>='US', d<'2') — the
-  // reference's drop-by-filter form; Spark's parser only accepts exact
-  // `=` specs, so the filtered form is intercepted and expanded
-  private val dropPartFilterRe =
-    """(?is)\s*ALTER\s+TABLE\s+([\w.]+)\s+DROP\s+(IF\s+EXISTS\s+)?(PARTITION\s*\(.+?\)(?:\s*,\s*PARTITION\s*\(.+?\))*)\s*(PURGE\s*)?;?\s*""".r
-  private val partGroupRe = """(?is)PARTITION\s*\(([^)]*)\)""".r
-  private val partCmpRe =
-    """(?s)\s*([\w]+)\s*(<=|>=|!=|<>|<|>|=)\s*(?:'([^']*)'|"([^"]*)"|([\w.+-]+))\s*""".r
-
-  // CREATE TEMPORARY MACRO name(arg TYPE, ...) body — the reference's
-  // inline-expanded macros (FunctionSemanticAnalyzer + udf/generic/
-  // GenericUDFMacro.java). Spark 4's SQL scalar UDFs (CREATE TEMPORARY
-  // FUNCTION ... RETURN expr) have identical semantics — the body is
-  // inlined into the plan by Catalyst — so the statement text rewrites
-  // onto them. Group 2 starts at the open paren; the arg-list/body split
-  // is a paren walk (arg types may nest parens: DECIMAL(10,2)).
-  private val createMacroRe =
-    """(?is)\s*CREATE\s+TEMPORARY\s+MACRO\s+([\w]+)\s*(\(.*)""".r
-  private val dropMacroRe =
-    """(?is)\s*DROP\s+TEMPORARY\s+MACRO\s+(?:(IF\s+EXISTS)\s+)?([\w]+)\s*;?\s*""".r
-
-  // ALTER TABLE t [PARTITION(...)] SET FILEFORMAT fmt — DDLSemanticAnalyzer
-  // alterTableFileFormat. Hive flips metadata only (old files must already
-  // be readable as fmt); a datasource table carries ONE provider, so the
-  // CoW interpretation here is stronger and safer: rewrite the rows into
-  // the new format via CTAS and swap the table. Per-partition specs are
-  // rejected — mixed formats within one datasource table don't exist.
-  private val setFileFormatRe =
-    """(?is)\s*ALTER\s+TABLE\s+([\w.]+)\s+(?:PARTITION\s*\(([^)]*)\)\s+)?SET\s+FILEFORMAT\s+(\w+)\s*;?\s*""".r
-
-  // INSERT OVERWRITE TABLE t PARTITION (static spec) IF NOT EXISTS SELECT …
-  // — Hive skips the insert when the target partition already exists
-  // (SemanticAnalyzer; only legal with a fully-static spec). Spark's
-  // parser rejects the clause, so it's intercepted: existence check
-  // against the catalog, then the plain statement or a no-op.
-  private val insertIfNotExistsRe =
-    """(?is)\s*(INSERT\s+OVERWRITE\s+TABLE\s+([\w.]+)\s+PARTITION\s*\(([^)]*)\))\s+IF\s+NOT\s+EXISTS\s*(.+)""".r
-
-  // ALTER TABLE t CHANGE [COLUMN] old new TYPE [COMMENT ...]
-  // [FIRST | AFTER col] — DDLSemanticAnalyzer analyzeAlterTableRenameCol:
-  // rename, retype and reposition in one statement. Spark's v1 datasource
-  // tables support none of the three, so the CoW interpretation rewrites
-  // the rows through a projection (CTAS + swap, preserving provider,
-  // options and partitioning). Partition columns cannot CHANGE (the
-  // reference rejects that too).
-  private val notClusteredRe =
-    """(?is)\s*ALTER\s+TABLE\s+([\w.]+)\s+NOT\s+(?:CLUSTERED|(SORTED))\s*;?\s*""".r
-  // ALTER TABLE t PARTITION COLUMN (col type) — Hive-only partition-key
-  // retype (alter_partition_coltype.q; DDLSemanticAnalyzer
-  // analyzeAlterTablePartColType): metadata-only — catalog partition
-  // VALUES are strings either way, the declared type drives how scans
-  // parse them and how predicates compare (dt=100 as int after the
-  // change, '6.30' as double)
-  private val alterPartColTypeRe =
-    """(?is)\s*ALTER\s+TABLE\s+([\w.]+)\s+PARTITION\s+COLUMN\s*\(\s*(\w+)\s+([\w]+(?:\s*\([0-9,\s]*\))?)\s*\)\s*;?\s*""".r
-  private val changeColRe =
-    ("""(?is)\s*ALTER\s+TABLE\s+([\w.]+)\s+CHANGE\s+(?:COLUMN\s+)?""" +
-      """`?([\w]+)`?\s+`?([\w]+)`?\s+([\w]+(?:\s*\([0-9,\s]*\))?)""" +
-      """(?:\s+COMMENT\s+'[^']*')?(?:\s+(FIRST|AFTER\s+`?[\w]+`?))?\s*;?\s*""").r
-
-  // ALTER TABLE t REPLACE COLUMNS (a INT, b STRING ...) —
-  // DDLSemanticAnalyzer analyzeAlterTableModifyCols(REPLACE): the new
-  // list replaces the data columns POSITIONALLY (text tables re-read old
-  // rows under the new schema by position). CoW interpretation: project
-  // old columns onto the new list by position (cast), drop the excess,
-  // NULL-fill the growth; partition columns are untouched.
-  private val replaceColsRe =
-    """(?is)\s*ALTER\s+TABLE\s+([\w.]+)\s+REPLACE\s+COLUMNS\s*\((.+)\)\s*;?\s*""".r
-  private val addColumnsRe =
-    """(?is)\s*ALTER\s+TABLE\s+([\w.]+)\s+ADD\s+COLUMNS\s*\((.+)\)\s*;?\s*""".r
-  private val colDefRe =
-    """(?is)^\s*`?([\w]+)`?\s+(.+?)(?:\s+COMMENT\s+'[^']*')?\s*$""".r
-
-  // ALTER TABLE <dest> EXCHANGE PARTITION (<spec>) WITH TABLE <src> —
-  // DDLTask.java:4270 exchangeTablePartition / the metastore's
-  // exchange_partition: MOVE every source partition matching the
-  // (possibly partial, equality-only) spec into the destination table.
-  private val exchangeRe =
-    """(?is)\s*ALTER\s+TABLE\s+([\w.`]+)\s+EXCHANGE\s+PARTITION\s*\(([^)]*)\)\s+WITH\s+TABLE\s+([\w.`]+)\s*;?\s*""".r
-
-  // ALTER TABLE t [PARTITION(...)] TOUCH — DDLSemanticAnalyzer
-  // analyzeAlterTableTouch: fires pre/post hooks and bumps modification
-  // times, no data/metadata change. A deliberate no-op here.
-  // Hive grammar: PARTITION follows TOUCH (alterStatementSuffixTouch)
-  private val touchRe =
-    """(?is)\s*ALTER\s+TABLE\s+([\w.]+)\s+TOUCH\s*(?:PARTITION\s*\(([^)]*)\)\s*)?;?\s*""".r
-  // ALTER TABLE t NOT SKEWED / NOT STORED AS DIRECTORIES / SKEWED BY ... —
-  // DDLSemanticAnalyzer analyzeAltertableSkewedby: list-bucketing
-  // metadata only. Skew is a runtime concern here (AQE + Salt), exactly
-  // like the CREATE-side SKEWED BY strip — accept as no-ops.
-  private val alterSkewRe =
-    ("""(?is)\s*ALTER\s+TABLE\s+([\w.]+)\s+(?:NOT\s+SKEWED""" +
-      """|NOT\s+STORED\s+AS\s+DIRECTORIES""" +
-      """|SKEWED\s+BY\s*\([^)]*\)\s*ON\s*\((?:[^()]|\([^()]*\))*\)""" +
-      """(?:\s+STORED\s+AS\s+DIRECTORIES)?)\s*;?\s*""").r
-  // ALTER TABLE t CLUSTERED BY (cols) [SORTED BY (cols)] INTO n BUCKETS —
-  // alterStatementSuffixClusterbySortby. Hive only flips metadata (old
-  // data keeps its layout); here the table is REWRITTEN into the new
-  // bucketing via the same CTAS+swap machinery as SET FILEFORMAT, so the
-  // catalog's bucket spec and the files always agree.
-  private val alterClusterRe =
-    ("""(?is)\s*ALTER\s+TABLE\s+([\w.]+)\s+CLUSTERED\s+BY\s*\(([^)]*)\)""" +
-      """\s*(?:SORTED\s+BY\s*\(([^)]*)\)\s*)?INTO\s+(\d+)\s+BUCKETS\s*;?\s*""").r
-  // CREATE/DROP/ALTER INDEX — DDLSemanticAnalyzer.java:307
-  // (TOK_CREATEINDEX), ql/index/. The FEATURE is a deliberate skip
-  // (dropped by Hive 3; columnar stats + parquet min/max serve the same
-  // purpose on Spark — SURVEY §2.12), but the STATEMENTS survive in
-  // legacy scripts and must not kill a run: accept + warn no-op.
-  private val indexStmtRe =
-    ("""(?is)\s*(CREATE\s+INDEX\s+[\w`]+\s+ON\s+(?:TABLE\s+)?[\w.`]+.*""" +
-      """|DROP\s+INDEX\s+(?:IF\s+EXISTS\s+)?[\w`]+\s+ON\s+[\w.`]+""" +
-      """|ALTER\s+INDEX\s+[\w`]+\s+ON\s+[\w.`]+(?:\s+PARTITION\s*\([^)]*\))?\s+(?:REBUILD|SET\s+IDXPROPERTIES\s*\(.*\))""" +
-      """|SHOW\s+(?:FORMATTED\s+)?INDEX(?:ES)?\s+ON\s+[\w.`]+.*)\s*;?\s*""").r
-  // ALTER TABLE t [PARTITION(...)] ARCHIVE/UNARCHIVE —
-  // DDLSemanticAnalyzer.java:250-252; real semantics minus the HAR
-  // container live in operators/Archive.scala (relocate to a hidden
-  // subtree + write gating + read-back). Both clause orders accepted.
-  private val archiveStmtRe =
-    """(?is)\s*ALTER\s+TABLE\s+([\w.`]+)\s+(?:PARTITION\s*\(([^)]*)\)\s+)?(UN)?ARCHIVE\s*(?:PARTITION\s*\(([^)]*)\)\s*)?;?\s*""".r
-  // DELETE FILE[S]/JAR[S]/ARCHIVE[S] <paths> — the CLI's
-  // DeleteResourceProcessor: removes resources from the session list so
-  // later tasks stop shipping them. Spark cannot un-add a file/jar from
-  // a running context, so accept the statement as a loud no-op — the
-  // script's intent (end-of-run cleanup) has nothing left to affect.
-  private val deleteResourceRe =
-    """(?is)\s*DELETE\s+(FILES?|JARS?|ARCHIVES?)\s+(\S[^;]*?)\s*;?\s*""".r
-  // SHOW LOCKS [t] — with hive.support.concurrency=false (the default)
-  // the reference's lock manager is absent and the listing is empty; the
-  // engine has no lock manager by design (Spark's writers coordinate via
-  // commit protocols), so the statement answers an empty listing.
-  private val showLocksRe =
-    """(?is)\s*SHOW\s+LOCKS\b.*""".r
-  // LOCK/UNLOCK TABLE|DATABASE — DDLSemanticAnalyzer analyzeLockTable/
-  // analyzeUnlockTable: with no lock manager (hive.support.concurrency=
-  // false, our design point — Spark writers coordinate via commit
-  // protocols) Hive acquires nothing; accept as no-op.
-  private val lockStmtRe =
-    """(?is)\s*(?:UN)?LOCK\s+(?:TABLE|DATABASE|SCHEMA)\s+[\w.`]+.*""".r
-  // SHOW TRANSACTIONS / SHOW COMPACTIONS / ABORT TRANSACTIONS —
-  // DDLSemanticAnalyzer analyzeShowTxns/analyzeShowCompactions/
-  // analyzeAbortTxns. No transaction manager exists under copy-on-write
-  // (every statement is its own atomic file swap), so the listings answer
-  // empty and ABORT is a no-op.
-  private val showTxnsRe = """(?is)\s*SHOW\s+TRANSACTIONS\s*;?\s*""".r
-  private val showCompactionsRe = """(?is)\s*SHOW\s+COMPACTIONS\s*;?\s*""".r
-  // SHOW CONF 'name' — DDLSemanticAnalyzer.java:2347 analyzeShowConf /
-  // DDLTask.java:520 showConf: one (default, type, desc) row for a
-  // registered configuration, error for an unknown name. Spark-first the
-  // registry is SQLConf's defined entries.
-  private val showConfRe =
-    """(?is)\s*SHOW\s+CONF\s+'([^']+)'\s*;?\s*""".r
-  // SHOW TABLE EXTENDED [IN|FROM db] LIKE 'pattern' [PARTITION(...)] —
-  // TOK_SHOW_TABLESTATUS (DDLSemanticAnalyzer.java:2175) → DDLTask
-  // showTableStatus + TextMetaDataFormatter.showTableStatus: key:value
-  // lines per matched table plus filesystem stats. Intercepted before
-  // Spark's parser so the answer carries Hive's text shape, not Spark's
-  // (namespace, tableName, information) rows.
-  private val showTableExtRe =
-    """(?is)\s*SHOW\s+TABLE\s+EXTENDED\s+(?:(?:IN|FROM)\s+([\w]+)\s+)?LIKE\s+'?([^'\s;]+)'?\s*(?:PARTITION\s*\(([^)]*)\)\s*)?;?\s*""".r
-  private val abortTxnsRe =
-    """(?is)\s*ABORT\s+TRANSACTIONS\s+[\d\s,]+;?\s*""".r
-  // dfs -cmd args — Hive CLI's Hadoop shell passthrough
-  // (cli/src/java/org/apache/hadoop/hive/cli/CliDriver.java
-  // processCmd routes "dfs" to FsShell). Scripts use it for staging dirs
-  // around LOAD DATA / external tables, so it executes for real against
-  // the session's Hadoop FileSystem: mkdir/rm/rmr/cp/mv/touchz mutate,
-  // ls answers sorted paths, cat answers file lines.
-  private val dfsRe = """(?is)\s*dfs\s+(.+?);?\s*""".r
-  // ALTER TABLE ... SET SERDE / SET SERDEPROPERTIES — meaningful only for
-  // Hive-serde tables; on native datasource tables (our default) Spark
-  // rejects it, but the statement carries no semantics a parquet-native
-  // table needs (the provider already fixes the layout): accept + warn.
-  private val setSerdeRe =
-    """(?is)\s*ALTER\s+TABLE\s+[\w.`]+\s*(?:PARTITION\s*\([^)]*\)\s*)?SET\s+SERDE(?:PROPERTIES)?\b.*""".r
-  // CREATE TEMPORARY TABLE — session-scoped real tables
-  // (SessionHiveMetaStoreClient); Spark's parser rejects the TEMPORARY
-  // keyword on tables, so it strips to a plain CREATE TABLE — and the
-  // stripped name is REGISTERED for session-end auto-drop (a listener on
-  // the session's context drops every registered temp table when the
-  // context stops, completing the Hive session-scope parity).
-  private val tempTableRe =
-    """(?is)(\s*CREATE\s+)TEMPORARY\s+(TABLE\b.*)""".r
   private val tempTableNameRe =
     """(?is)\s*CREATE\s+TEMPORARY\s+(?:EXTERNAL\s+)?TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?([\w.`]+).*""".r
   private val tempTables =
@@ -1141,3152 +287,10 @@ object Engine {
     })
     set.add(qualified): Unit
   }
-  private val viewPartRe =
-    ("""(?is)(\s*CREATE\s+(?:OR\s+REPLACE\s+)?VIEW\s+(?:IF\s+NOT\s+EXISTS\s+)?""" +
-      """[\w.`]+\s*(?:\([^)]*\))?\s*)PARTITIONED\s+ON\s*\(([^)]*)\)\s*(AS\s+.*)""").r
-  // Hive bounds CHAR to [1,255] and VARCHAR to [1,65535] at type
-  // construction — DDL and CAST alike (reference: serde/.../typeinfo/
-  // BaseCharUtils.java; clientnegative/invalid_char_length_*.q,
-  // invalid_varchar_length_*.q). Spark's CharType/VarcharType accept any
-  // non-negative length, so the bound is enforced here at the statement
-  // boundary with the reference's RuntimeException message shape.
-  // Partition-value whitelist (reference: metastore MetaStoreUtils
-  // .validatePartitionNameCharacters, gated by
-  // hive.metastore.partition.name.whitelist.pattern — empty = off, the
-  // default). Every NEW partition value a DDL introduces (ADD PARTITION
-  // specs, the TARGET of a partition RENAME, static INSERT specs) must
-  // fully match the Java regex; add_partition_with_whitelist.q /
-  // alter_partition_with_whitelist.q pin the refusal text.
-  private val partSpecKvRe =
-    """(\w+)\s*=\s*(?:'([^']*)'|"([^"]*)"|([^,)\s]+))""".r
-  private val renameToPartRe =
-    """(?is)RENAME\s+TO\s+PARTITION\s*\(([^)]*)\)""".r
-  private val specGroupRe = """(?is)PARTITION\s*\(([^)]*)\)""".r
-  private def checkPartitionWhitelist(spark: SparkSession,
-      stmt: String): Unit = {
-    val pat = spark.conf
-      .getOption("hive.metastore.partition.name.whitelist.pattern")
-      .map(_.trim).filter(_.nonEmpty).getOrElse(return)
-    val u = stmt.toUpperCase
-    if (!u.contains("PARTITION")) return
-    val isAdd = u.matches("(?s)\\s*ALTER\\s+TABLE\\b.*\\bADD\\b.*") ||
-      u.matches("(?s)\\s*INSERT\\b.*")
-    val re = java.util.regex.Pattern.compile(pat)
-    def check(specText: String, prefix: String): Unit =
-      partSpecKvRe.findAllMatchIn(specText).foreach { m =>
-        val v = Seq(m.group(2), m.group(3), m.group(4)).find(_ != null)
-          .getOrElse("")
-        if (!re.matcher(v).matches())
-          sys.error(s"${prefix}Partition value '$v' contains a character " +
-            s"not matched by whitelist pattern '$pat'. (configure with " +
-            "hive.metastore.partition.name.whitelist.pattern)")
-      }
-    renameToPartRe.findFirstMatchIn(stmt) match {
-      case Some(m) => check(m.group(1), "Unable to rename partition. ")
-      case None if isAdd =>
-        specGroupRe.findAllMatchIn(stmt).foreach(m => check(m.group(1), ""))
-      case None => ()
-    }
-  }
 
-  private val charLenRe = """(?i)\b(var)?char\s*\(\s*(\d+)\s*\)""".r
-
-  /** Blank out quoted string literals (both quote styles, with the
-    * backslash and doubled-quote escapes Hive accepts) and `--` line
-    * comments, preserving offsets, so textual guards like the char-length
-    * check only see real DDL/cast type positions — a literal value of
-    * 'char(300)' or a trailing comment must not trip the length guard.
-    */
-  private[graft] def maskLiteralsAndComments(s: String): String = {
-    val out = s.toCharArray
-    var i = 0
-    while (i < out.length) {
-      val c = out(i)
-      if (c == '\'' || c == '"') {
-        val q = c
-        i += 1
-        var done = false
-        while (i < out.length && !done) {
-          if (out(i) == '\\' && i + 1 < out.length) {
-            out(i) = ' '; out(i + 1) = ' '; i += 2
-          } else if (out(i) == q && i + 1 < out.length && out(i + 1) == q) {
-            out(i) = ' '; out(i + 1) = ' '; i += 2
-          } else if (out(i) == q) {
-            done = true; i += 1
-          } else { out(i) = ' '; i += 1 }
-        }
-      } else if (c == '-' && i + 1 < out.length && out(i + 1) == '-') {
-        while (i < out.length && out(i) != '\n') { out(i) = ' '; i += 1 }
-      } else i += 1
-    }
-    new String(out)
-  }
-
-  /** Hive window-spec parity guards — shapes Spark accepts but the
-    * reference refuses:
-    *  - `OVER (PARTITION BY ... SORT BY ...)` is a Hive PARSE error: the
-    *    window grammar pairs PARTITION BY with ORDER BY, and DISTRIBUTE
-    *    BY with SORT BY (clientnegative/ptf_negative_PartitionBySortBy.q,
-    *    "missing ) at 'sort'"). Spark silently treats SORT BY as ORDER BY
-    *    here, so a migrating script would run instead of failing.
-    *  - lag/lead with a NEGATIVE offset: GenericUDFLeadLag refuses
-    *    ("Lag amount can not be nagative" — sic,
-    *    clientnegative/windowing_ll_no_neg.q); Spark silently flips the
-    *    call into the OPPOSITE function, the worst kind of drift.
-    * Both run on the MASKED text (literals/comments blanked) so string
-    * contents can't trip them.
-    */
-  private def checkWindowDialect(stmt: String): Unit = {
-    val m = maskLiteralsAndComments(stmt)
-    val lower = m.toLowerCase
-    def balancedEnd(open: Int): Int = {
-      var depth = 0
-      var j = open
-      while (j < lower.length) {
-        lower.charAt(j) match {
-          case '(' => depth += 1
-          case ')' => depth -= 1; if (depth == 0) return j
-          case _ => ()
-        }
-        j += 1
-      }
-      -1
-    }
-    val overRe = """\bover\s*\(""".r
-    overRe.findAllMatchIn(lower).foreach { mm =>
-      val open = mm.end - 1
-      val end = balancedEnd(open)
-      if (end > 0) {
-        val span = lower.substring(open, end)
-        if ("""\bpartition\s+by\b""".r.findFirstIn(span).isDefined &&
-            """\bsort\s+by\b""".r.findFirstIn(span).isDefined)
-          sys.error("window specification: PARTITION BY pairs with ORDER " +
-            "BY (DISTRIBUTE BY pairs with SORT BY): missing ) at 'sort'")
-      }
-    }
-    val llRe = """\b(lag|lead)\s*\(""".r
-    llRe.findAllMatchIn(lower).foreach { mm =>
-      val open = mm.end - 1
-      val end = balancedEnd(open)
-      if (end > 0) {
-        // second top-level argument, if present and a negative literal
-        val args = splitAssignments(m.substring(open + 1, end))
-        if (args.length >= 2 && args(1).trim.matches("-\\s*\\d+"))
-          sys.error(s"${mm.group(1).capitalize} amount can not be " +
-            s"negative. Specified: ${args(1).trim}")
-      }
-    }
-  }
-
-  private def checkCharLengths(stmt: String): Unit =
-    charLenRe.findAllMatchIn(maskLiteralsAndComments(stmt)).foreach { m =>
-      val n = BigInt(m.group(2))
-      if (m.group(1) != null) {
-        if (n < 1 || n > 65535)
-          sys.error(s"Varchar length $n out of allowed range [1, 65535]")
-      } else if (n < 1 || n > 255)
-        sys.error(s"Char length $n out of allowed range [1, 255]")
-    }
-
-  // CREATE TABLE ... AS SELECT with unaliased expression columns — Hive
-  // names them positionally (_c1, _c2 ...; SemanticAnalyzer
-  // getColumnInternalName), Spark by expression text ("count(1)"), so a
-  // migrating script's later `SELECT _c1 FROM t` breaks. When any CTAS
-  // output name is not a plain identifier, the select re-lands through a
-  // positionally-renamed temp view. `AS WITH ...` CTAS forms pass through
-  // (their aliasing is explicit in practice).
-  private val ctasRe =
-    """(?is)\s*(CREATE\s+(?:TEMPORARY\s+)?(?:EXTERNAL\s+)?TABLE\b.*?)\bAS\s+(SELECT\b.*)""".r
-  // same positional naming for views; a view can't be re-landed through a
-  // temp view (persistent views may not reference temporaries), but
-  // Spark's explicit view column list renames in place. Only fires when
-  // the statement has NO column list already (the name is followed
-  // directly by AS SELECT).
-  private val createViewRe =
-    ("""(?is)\s*(CREATE\s+(?:OR\s+REPLACE\s+)?(?:TEMPORARY\s+)?VIEW\s+""" +
-      """(?:IF\s+NOT\s+EXISTS\s+)?[`\w.]+)\s+AS\s+(SELECT\b.*)""").r
-  private val ctasSeq = new java.util.concurrent.atomic.AtomicInteger
-
-  /** CTAS + swap: re-land `table`'s rows through `selectSql`, preserving
-    * provider, options and partitioning (the schema-rewrite path CHANGE /
-    * REPLACE COLUMNS share). Partition locations are rediscovered after
-    * the rename — RENAME moves the managed dir but partition entries
-    * still name the old locations.
-    */
-  private def swapTable(spark: SparkSession, table: String,
-      meta: org.apache.spark.sql.catalyst.catalog.CatalogTable,
-      selectSql: String,
-      schemaDdl: Option[String] = None): Unit = {
-    val partCols = meta.partitionColumnNames
-    // backquoted: the engine's own providers are hyphenated identifiers
-    // (graft-avro, graft-seq, ...) Spark's parser rejects unquoted
-    val provider = "`" + meta.provider.getOrElse("parquet") + "`"
-    val opts = meta.storage.properties.view
-      .filterKeys(k => !k.equalsIgnoreCase("path")).toMap match {
-      case m if m.isEmpty => ""
-      case m => m.map { case (k, v) =>
-        s"$k = '${v.replace("\\", "\\\\").replace("'", "\\'")}'" }
-        .mkString(" OPTIONS (", ", ", ")")
-    }
-    val partBy = if (partCols.nonEmpty)
-      partCols.mkString(" PARTITIONED BY (", ", ", ")") else ""
-    val tmp = table + "_swap_tmp"
-    spark.sql(s"DROP TABLE IF EXISTS $tmp")
-    // a stale managed dir from a crashed earlier run blocks the CTAS
-    val p = new org.apache.hadoop.fs.Path(
-      spark.sessionState.catalog.defaultTablePath(
-        spark.sessionState.sqlParser.parseTableIdentifier(tmp)))
-    p.getFileSystem(spark.sessionState.newHadoopConf()).delete(p, true)
-    schemaDdl match {
-      case Some(ddl) =>
-        // explicit-schema swap (CHANGE COLUMN to char/varchar): a CTAS
-        // would degrade char(n) to string in the query output — create
-        // the target with the declared types, then insert (trailing
-        // select columns feed the partition columns dynamically)
-        spark.sql(s"CREATE TABLE $tmp ($ddl) USING $provider$opts$partBy")
-        execInsertStmt(spark, s"INSERT INTO TABLE $tmp $selectSql"): Unit
-      case None =>
-        spark.sql(s"CREATE TABLE $tmp USING $provider$opts$partBy AS $selectSql")
-    }
-    spark.sql(s"DROP TABLE $table")
-    spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-    // graft DSv2 providers scan the directory layout directly (no
-    // catalog partition list) and reject RECOVER as v2 tables
-    if (partCols.nonEmpty && !meta.provider.exists(_.startsWith("graft-")))
-      spark.sql(s"ALTER TABLE $table RECOVER PARTITIONS")
-    spark.sql(s"REFRESH TABLE $table")
-  }
-
-  /** Which output columns of `select` carry Spark's auto-generated
-    * expression-text name (the __autoGeneratedAlias marker) — exactly the
-    * columns Hive would have named _cN. Explicit aliases — including
-    * quoted ones with spaces/dots — and bare column refs are untouched.
-    */
-  private def autoNamed(spark: SparkSession, select: String): Seq[Boolean] =
-    spark.sql(select).schema.fields.toSeq
-      .map(_.metadata.contains("__autoGeneratedAlias"))
-
-  private def hiveColNames(spark: SparkSession, select: String): Seq[String] =
-    spark.sql(select).schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
-      if (f.metadata.contains("__autoGeneratedAlias")) s"_c$i" else f.name
-    }
-
-  // SET hive.support.quoted.identifiers=none|column — `none` turns
-  // backquoted identifiers into SELECT-list column regexes (the
-  // reference's regex_col.q feature, parse/HiveLexer.g QuotedIdentifier);
-  // Spark has the identical feature behind
-  // spark.sql.parser.quotedRegexColumnNames, so the statement maps to a
-  // conf flip instead of passing through as an inert Hive conf string.
-  private val quotedIdRe =
-    """(?is)\s*SET\s+hive\.support\.quoted\.identifiers\s*=\s*(\w+)\s*;?\s*""".r
-
-  private val insertBranchRe =
-    """(?is)\s*INSERT\s+(OVERWRITE|INTO)\s+(?:TABLE\s+)?([\w.]+)\s*(?:PARTITION\s*\(([^)]*)\))?\s+(SELECT.+)""".r
-  private val insertTransformBranchRe =
-    """(?is)\s*INSERT\s+(OVERWRITE|INTO)\s+(?:TABLE\s+)?([\w.]+)\s*(?:PARTITION\s*\(([^)]*)\))?\s+((?:MAP|REDUCE)\b.+)""".r
-  private val insertSchemaBranchRe =
-    """(?is)\s*INSERT\s+(OVERWRITE|INTO)\s+(?:TABLE\s+)?([\w.]+)\s*(\(\s*[\w`]+(?:\s*,\s*[\w`]+)*\s*\))\s+(SELECT.+)""".r
-  private val insertValuesRe =
-    """(?is)\s*INSERT\s+(OVERWRITE|INTO)\s+(?:TABLE\s+)?([\w.]+)\s*(?:PARTITION\s*\(([^)]*)\))?\s+VALUES\s+(.+?)\s*;?\s*""".r
-  // target-table extraction for ANY insert form (SELECT or VALUES tail)
-  private val insertTargetRe =
-    """(?is)\s*INSERT\s+(?:OVERWRITE|INTO)\s+(?:TABLE\s+)?([\w.]+).*""".r
-  private val whenUpdateRe =
-    """(?is)\s*WHEN\s+MATCHED\s+(?:AND\s+(.+?)\s+)?THEN\s+UPDATE\s+SET\s+(.+?)\s*""".r
-  private val whenDeleteRe =
-    """(?is)\s*WHEN\s+MATCHED\s+(?:AND\s+(.+?)\s+)?THEN\s+DELETE\s*""".r
-  private val whenInsertRe =
-    """(?is)\s*WHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT\s+(\*|VALUES\s*\(.+?\))\s*""".r
-
-  /** ALTER TABLE … DROP [IF EXISTS] PARTITION (filters)[, PARTITION …]
-    * with comparison operators — the reference's drop-by-filter form
-    * (DDLTask.dropPartitions; golden drop_partitions_filter.q), which
-    * Spark's parser rejects (exact `=` specs only). Each PARTITION group
-    * is a conjunction of per-column comparisons; groups union. Matching
-    * partitions resolve from the catalog (metadata-sized listing, never a
-    * data scan) and drop through Spark's native exact-spec command.
-    * Values compare numerically when both sides parse as numbers
-    * (partition values are stored as strings), lexicographically
-    * otherwise — the metastore filter's behavior. Without IF EXISTS a
-    * group matching nothing is an error, like
-    * hive.exec.drop.ignorenonexistent=false.
-    */
-  // ---- partitioned graft-* partition-statement surface -------------------
-  // v2 tables reject SHOW PARTITIONS / ALTER TABLE ADD|DROP PARTITION, but
-  // the graft sources' partitions ARE the directory layout — so the engine
-  // answers these statements from the filesystem, Hive text shapes intact.
-
-  private val showPartsRe =
-    """(?is)\s*SHOW\s+PARTITIONS\s+([\w.]+)(?:\s+PARTITION\s*\(([^)]*)\))?\s*;?\s*""".r
-  private val addPartRe =
-    """(?is)\s*ALTER\s+TABLE\s+([\w.]+)\s+ADD\s+(IF\s+NOT\s+EXISTS\s+)?(PARTITION\s*\(.+?\)(?:\s*(?:PARTITION\s*\(.+?\))*)?)\s*;?\s*""".r
-
-  /** Partition columns when `table` is a partitioned graft-* table; Nil
-    * otherwise (including unresolvable names — the caller falls through
-    * to Spark's native command). */
-  private def graftPartCols(spark: SparkSession, table: String): Seq[String] =
-    try {
-      val m = spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(table))
-      if (m.provider.exists(_.toLowerCase.startsWith("graft-")))
-        m.partitionColumnNames
-      else Nil
-    } catch { case _: Exception => Nil }
-
-  /** Declared partition-column types (lowercased names) for ANY catalog
-    * table; empty on unresolvable names. Partition comparisons dispatch
-    * on these: Hive's metastore compares a numeric-typed partition
-    * value numerically (hr=1 matches hr=01) but a STRING-typed one by
-    * exact text (p='1' and p='01' are distinct partitions). */
-  private def tablePartTypes(spark: SparkSession, table: String)
-      : Map[String, org.apache.spark.sql.types.DataType] =
-    try {
-      val m = spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(table))
-      m.partitionSchema.fields.map(f => f.name.toLowerCase -> f.dataType).toMap
-    } catch { case _: Exception => Map.empty }
-
-  /** Numeric compare for numeric-typed partition columns, lexicographic
-    * for string-typed — the comparison the metastore's
-    * dropPartitionsByFilter applies per declared column type. */
-  private def partValueCmp(v: String, lit: String,
-      dt: org.apache.spark.sql.types.DataType): Int =
-    if (graft.sources.v2.PartLayout.numericPartType(dt))
-      (v.toDoubleOption, lit.toDoubleOption) match {
-        case (Some(a), Some(b)) => java.lang.Double.compare(a, b)
-        case _ => v.compareTo(lit)
-      }
-    else v.compareTo(lit)
-
-  private def specMatches(preds: Seq[(String, String, String)],
-      spec: Seq[(String, String)], table: String,
-      types: Map[String, org.apache.spark.sql.types.DataType]): Boolean =
-    preds.forall { case (name, op, lit) =>
-      spec.find(_._1.equalsIgnoreCase(name)) match {
-        case None => sys.error(s"$name is not a partition column of $table")
-        case Some((_, v)) =>
-          val cmp = partValueCmp(v, lit,
-            types.getOrElse(name.toLowerCase, org.apache.spark.sql.types.StringType))
-          op match {
-            case "="         => cmp == 0
-            case "!=" | "<>" => cmp != 0
-            case "<"         => cmp < 0
-            case "<="        => cmp <= 0
-            case ">"         => cmp > 0
-            case ">="        => cmp >= 0
-          }
-      }
-    }
-
-  private def parsePreds(g: String): Seq[(String, String, String)] = {
-    // split on commas OUTSIDE quotes — a partition value may legally
-    // contain one (PARTITION (p='a,b'))
-    val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var quote = '\u0000'
-    g.foreach { c =>
-      if (quote != '\u0000') { cur += c; if (c == quote) quote = '\u0000' }
-      else if (c == '\'' || c == '"') { cur += c; quote = c }
-      else if (c == ',') { parts += cur.toString; cur.clear() }
-      else cur += c
-    }
-    if (cur.nonEmpty) parts += cur.toString
-    parts.toSeq.map {
-      case partCmpRe(name, op, v1, v2, v3) =>
-        (name, op, Seq(v1, v2, v3).find(_ != null).get)
-      case bad => sys.error(s"unsupported partition spec: $bad")
-    }
-  }
-
-  private def graftPartRoot(spark: SparkSession, table: String)
-      : (org.apache.hadoop.fs.Path, org.apache.hadoop.fs.FileSystem) = {
-    val root = new org.apache.hadoop.fs.Path(tableLocation(spark, table))
-    (root, root.getFileSystem(spark.sessionState.newHadoopConf()))
-  }
-
-  /** NO_DROP protection check by partition VALUE, not spelling: the
-    * ENABLE statement's raw text key (hr=01) must protect the same
-    * logical partition a numeric-matching DROP names as hr=1. */
-  private def noDropProtected(spark: SparkSession, table: String,
-      spec: Seq[(String, String)]): Boolean = {
-    import scala.jdk.CollectionConverters._
-    val prefix = qualName(spark, table) + "/"
-    val types = tablePartTypes(spark, table)
-    noDropCascade.contains(qualName(spark, table)) ||
-      noDropParts.asScala.exists { key =>
-        key.startsWith(prefix) && {
-          val kvs = key.stripPrefix(prefix).split(",").toSeq
-            .map(_.split("=", 2)).collect { case Array(k, v) => k -> v }
-          kvs.size == spec.size && kvs.forall { case (k, v) =>
-            spec.exists { case (sk, sv) =>
-              sk.equalsIgnoreCase(k) && partValueCmp(sv, v,
-                types.getOrElse(k.toLowerCase,
-                  org.apache.spark.sql.types.StringType)) == 0 }
-          }
-        }
-      }
-  }
-
-  private def specDirName(spec: Seq[(String, String)]): String =
-    spec.map { case (k, v) =>
-      graft.sources.v2.PartLayout.escape(k) + "=" +
-        graft.sources.v2.PartLayout.escape(v)
-    }.mkString("/")
-
-  /** SHOW PARTITIONS over the directory layout (Hive's one-string-per-
-    * partition `p=v/q=w` shape; optional partial spec filters). */
-  private def showGraftPartitions(spark: SparkSession, table: String,
-      partial: Option[String]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    import scala.jdk.CollectionConverters._
-    val (root, fs) = graftPartRoot(spark, table)
-    val dirs = graft.sources.v2.PartLayout.listPartitionDirs(
-      root, fs, graftPartCols(spark, table))
-    val preds = partial.toSeq.flatMap(parsePreds)
-    require(preds.forall(_._2 == "="),
-      "SHOW PARTITIONS accepts only equality partition specs")
-    val rows = dirs.filter(
-      specMatches(preds, _, table, tablePartTypes(spark, table))).map(specDirName)
-    spark.createDataFrame(
-      rows.map(org.apache.spark.sql.Row(_)).asJava,
-      StructType(Seq(StructField("partition", StringType))))
-  }
-
-  /** ALTER TABLE ... ADD PARTITION on a graft table = create the
-    * directory (all partition columns must be bound, equality only). */
-  private def addGraftPartitions(spark: SparkSession, table: String,
-      ifNotExists: Boolean, specText: String): Unit = {
-    val (root, fs) = graftPartRoot(spark, table)
-    val partCols = graftPartCols(spark, table)
-    partGroupRe.findAllMatchIn(specText).map(_.group(1)).foreach { g =>
-      val preds = parsePreds(g)
-      require(preds.forall(_._2 == "="), s"ADD PARTITION needs exact specs: $g")
-      val byName = preds.map(p => p._1.toLowerCase -> p._3).toMap
-      require(partCols.forall(c => byName.contains(c.toLowerCase)),
-        s"ADD PARTITION must bind every partition column (${partCols.mkString(",")}): $g")
-      val spec = partCols.map(c => c -> byName(c.toLowerCase))
-      val dir = new org.apache.hadoop.fs.Path(root, specDirName(spec))
-      if (fs.exists(dir)) {
-        if (!ifNotExists) sys.error(s"partition ($g) already exists in $table")
-      } else fs.mkdirs(dir): Unit
-    }
-  }
-
-  /** ALTER TABLE ... DROP PARTITION on a graft table: match directories
-    * (comparator specs included), honor NO_DROP protection, delete the
-    * subtrees. */
-  private def dropGraftPartitions(spark: SparkSession, table: String,
-      ifExists: Boolean, specText: String): Unit = {
-    val (root, fs) = graftPartRoot(spark, table)
-    val dirs = graft.sources.v2.PartLayout.listPartitionDirs(
-      root, fs, graftPartCols(spark, table))
-    val toDrop = partGroupRe.findAllMatchIn(specText).map(_.group(1)).toSeq
-      .flatMap { g =>
-        val matches = dirs.filter(
-          specMatches(parsePreds(g), _, table, tablePartTypes(spark, table)))
-        if (matches.isEmpty && !ifExists)
-          sys.error(s"no partition of $table matches ($g); use DROP IF EXISTS to ignore")
-        matches
-      }.distinct
-    toDrop.foreach { spec =>
-      require(!noDropProtected(spark, table, spec),
-        s"Partition (${spec.map { case (k, v) => s"$k=$v" }.mkString(",")})" +
-          s" of $table is protected from being dropped (NO_DROP)")
-    }
-    toDrop.foreach { spec =>
-      fs.delete(new org.apache.hadoop.fs.Path(root, specDirName(spec)), true): Unit
-    }
-    spark.sql(s"REFRESH TABLE $table"): Unit
-  }
-
-  /** ALTER TABLE dest EXCHANGE PARTITION (spec) WITH TABLE src —
-    * DDLTask.java:4270 exchangeTablePartition. The metastore contract
-    * (exchange_partition): both tables must share column AND partition
-    * schemas, every source partition matching the spec moves (a partial
-    * spec exchanges the whole matching subtree, exchange_partition3.q),
-    * the destination must not already hold any matched partition, and
-    * the move is a directory RENAME — no data rewrite, scale-free.
-    * Supported uniformly for catalog-partitioned v1 tables and
-    * directory-partitioned graft-* DSv2 tables; mixed formats are
-    * refused because the files move verbatim.
-    */
-  private def exchangePartition(spark: SparkSession, destName: String,
-      specText: String, srcName: String): Unit = {
-    val cat = spark.sessionState.catalog
-    val parser = spark.sessionState.sqlParser
-    val destId = parser.parseTableIdentifier(destName)
-    val srcId = parser.parseTableIdentifier(srcName)
-    val dest = cat.getTableMetadata(destId)
-    val src = cat.getTableMetadata(srcId)
-    require(dest.identifier != src.identifier,
-      s"EXCHANGE PARTITION: source and destination are the same table ($srcName)")
-    def sig(m: org.apache.spark.sql.catalyst.catalog.CatalogTable) =
-      m.schema.map(f => (f.name.toLowerCase, f.dataType.catalogString))
-    require(sig(dest) == sig(src) &&
-      dest.partitionColumnNames.map(_.toLowerCase) ==
-        src.partitionColumnNames.map(_.toLowerCase),
-      s"EXCHANGE PARTITION: $destName and $srcName have different schemas")
-    // files move verbatim, so a format-diverged partition on EITHER side
-    // could land foreign-format files under the other table's provider
-    require(graft.plans.HeteroPartitions.entriesOf(spark, destName).isEmpty &&
-        graft.plans.HeteroPartitions.entriesOf(spark, srcName).isEmpty,
-      s"EXCHANGE PARTITION: $destName/$srcName carry heterogeneous " +
-        "partition file formats; unify with ALTER TABLE ... SET FILEFORMAT first")
-    val destProv = dest.provider.filterNot(_.equalsIgnoreCase("hive"))
-      .map(_.toLowerCase).getOrElse("parquet")
-    val srcProv = src.provider.filterNot(_.equalsIgnoreCase("hive"))
-      .map(_.toLowerCase).getOrElse("parquet")
-    require(destProv == srcProv,
-      s"EXCHANGE PARTITION: storage formats differ ($srcProv vs $destProv); " +
-        "partition files move verbatim, so both tables must share a format")
-    val partCols = src.partitionColumnNames
-    val preds = parsePreds(specText)
-    require(preds.nonEmpty && preds.forall(_._2 == "="),
-      s"EXCHANGE PARTITION needs an equality partition spec, got: $specText")
-    preds.foreach { case (n, _, _) =>
-      require(partCols.exists(_.equalsIgnoreCase(n)),
-        s"$n is not a partition column of $srcName") }
-    val isGraft = srcProv.startsWith("graft-")
-    val srcPartTypes = src.partitionSchema.fields
-      .map(f => f.name.toLowerCase -> f.dataType).toMap
-    // matched source partitions as (full ordered spec, source directory)
-    val matched: Seq[(Seq[(String, String)], org.apache.hadoop.fs.Path)] =
-      if (isGraft) {
-        val (root, fs) = graftPartRoot(spark, srcName)
-        graft.sources.v2.PartLayout.listPartitionDirs(root, fs, partCols)
-          .filter(specMatches(preds, _, srcName, srcPartTypes))
-          .map(s => s -> new org.apache.hadoop.fs.Path(root, specDirName(s)))
-      } else cat.listPartitions(srcId).map { p =>
-        val spec = partCols.map(c =>
-          c -> p.spec.find(_._1.equalsIgnoreCase(c)).map(_._2).getOrElse(
-            sys.error(s"partition of $srcName lacks column $c")))
-        spec -> new org.apache.hadoop.fs.Path(p.location)
-      }.filter { case (spec, _) => specMatches(preds, spec, srcName, srcPartTypes) }
-    require(matched.nonEmpty,
-      s"EXCHANGE PARTITION: no partition of $srcName matches ($specText)")
-    matched.foreach { case (spec, _) =>
-      require(!noDropProtected(spark, srcName, spec),
-        s"Partition (${spec.map { case (k, v) => s"$k=$v" }.mkString(",")})" +
-          s" of $srcName is protected from being dropped (NO_DROP)") }
-    val hconf = spark.sessionState.newHadoopConf()
-    val destRoot = new org.apache.hadoop.fs.Path(tableLocation(spark, destName))
-    val fsDest = destRoot.getFileSystem(hconf)
-    // validate the WHOLE batch before touching anything — the metastore
-    // refuses the exchange outright rather than half-applying it. One
-    // dest-catalog fetch, compared in memory (not one listing RPC per
-    // matched partition).
-    // existing logical partitions at the destination, VALUE-matched: a
-    // dest holding hr=01 must refuse an incoming hr=1 (same logical
-    // partition under another spelling — two directories for one
-    // partition otherwise), for graft directory layouts and catalog
-    // tables alike.
-    val destExisting: Seq[Seq[(String, String)]] =
-      if (destProv.startsWith("graft-"))
-        graft.sources.v2.PartLayout.listPartitionDirs(destRoot, fsDest, partCols)
-      else cat.listPartitions(destId).map(p =>
-        partCols.map(c => c -> p.spec.find(_._1.equalsIgnoreCase(c)).map(_._2)
-          .getOrElse(sys.error(s"partition of $destName lacks column $c"))))
-    matched.foreach { case (spec, _) =>
-      val specStr = spec.map { case (k, v) => s"$k=$v" }.mkString(",")
-      val dup = destExisting.exists(ex => spec.forall { case (k, v) =>
-        ex.exists { case (ek, ev) => ek.equalsIgnoreCase(k) &&
-          partValueCmp(ev, v, srcPartTypes.getOrElse(k.toLowerCase,
-            org.apache.spark.sql.types.StringType)) == 0 } })
-      require(!dup,
-        s"EXCHANGE PARTITION: partition ($specStr) already exists in $destName")
-      require(!fsDest.exists(new org.apache.hadoop.fs.Path(destRoot, specDirName(spec))),
-        s"EXCHANGE PARTITION: target directory for ($specStr) already exists under $destName")
-    }
-    // phase 1: move every directory; on any failure, roll the completed
-    // renames back so a multi-partition batch is never left half-moved
-    // (a rename can fail mid-batch on cross-filesystem tables or quota)
-    val moved = scala.collection.mutable.ListBuffer
-      .empty[(org.apache.hadoop.fs.Path, org.apache.hadoop.fs.Path)]
-    try matched.foreach { case (spec, srcDir) =>
-      val destDir = new org.apache.hadoop.fs.Path(destRoot, specDirName(spec))
-      if (destDir.getParent != null) fsDest.mkdirs(destDir.getParent): Unit
-      require(fsDest.rename(srcDir, destDir),
-        s"EXCHANGE PARTITION: move failed: $srcDir -> $destDir")
-      moved += ((srcDir, destDir))
-    } catch { case e: Throwable =>
-      moved.reverse.foreach { case (srcDir, destDir) =>
-        fsDest.rename(destDir, srcDir): Unit }
-      throw e
-    }
-    // phase 2: catalog updates, after all data is in place
-    if (!isGraft) matched.foreach { case (spec, _) =>
-      val specSql = spec.map { case (k, v) =>
-        s"$k='${v.replace("\\", "\\\\").replace("'", "\\'")}'" }.mkString(", ")
-      // data already moved: ADD points the dest catalog at the standard
-      // layout dir; the source DROP finds its directory gone (no-op delete)
-      spark.sql(s"ALTER TABLE $destName ADD PARTITION ($specSql)"): Unit
-      spark.sql(s"ALTER TABLE $srcName DROP PARTITION ($specSql)"): Unit
-    }
-    spark.sql(s"REFRESH TABLE $destName"): Unit
-    spark.sql(s"REFRESH TABLE $srcName"): Unit
-  }
-
-  private def dropPartitionsByFilter(spark: SparkSession, table: String,
-                                     ifExists: Boolean, specText: String): Unit = {
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val parts = spark.sessionState.catalog.listPartitions(ident)
-    val types = tablePartTypes(spark, table)
-    val groups = partGroupRe.findAllMatchIn(specText).map(_.group(1)).toSeq
-    val toDrop = groups.flatMap { g =>
-      val preds = g.split(",").toSeq.map {
-        case partCmpRe(name, op, v1, v2, v3) =>
-          (name, op, Seq(v1, v2, v3).find(_ != null).get)
-        case bad => sys.error(s"unsupported partition filter: $bad")
-      }
-      val matches = parts.filter { p =>
-        preds.forall { case (name, op, lit) =>
-          p.spec.find(_._1.equalsIgnoreCase(name)) match {
-            case None => sys.error(s"$name is not a partition column of $table")
-            case Some((_, v)) =>
-              val cmp = partValueCmp(v, lit, types.getOrElse(name.toLowerCase,
-                org.apache.spark.sql.types.StringType))
-              op match {
-                case "="         => cmp == 0
-                case "!=" | "<>" => cmp != 0
-                case "<"         => cmp < 0
-                case "<="        => cmp <= 0
-                case ">"         => cmp > 0
-                case ">="        => cmp >= 0
-              }
-          }
-        }
-      }
-      if (matches.isEmpty && !ifExists)
-        sys.error(s"no partition of $table matches ($g); use DROP IF EXISTS to ignore")
-      matches
-    }
-    val specs = toDrop.map(_.spec).distinct
-    // validate protection over the WHOLE set before dropping anything —
-    // a protected partition must not abort the statement half-applied
-    specs.foreach { spec =>
-      val norm = spec.map { case (k, v) => s"${k.toLowerCase}=$v" }
-        .toSeq.sorted.mkString(",")
-      require(!noDropParts.contains(qualName(spark, table) + "/" + norm) &&
-          !noDropCascade.contains(qualName(spark, table)),
-        s"Partition ($norm) of $table is protected from being dropped (NO_DROP)")
-    }
-    specs.foreach { spec =>
-      val specSql = spec.map { case (k, v) => s"$k='$v'" }.mkString(", ")
-      spark.sql(s"ALTER TABLE $table DROP IF EXISTS PARTITION ($specSql)")
-    }
-  }
-
-  private def tableLocation(spark: SparkSession, table: String): String = {
-    val m = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-    // every tableLocation caller is a storage-addressed operation
-    // (UPDATE/DELETE/MERGE CoW, EXPORT, COMPACT, EXCHANGE...) — a VIEW
-    // has none, and letting CatalogTable.location throw surfaces an
-    // internal "did not specify locationUri" instead of the reference's
-    // view refusal (clientnegative/view_update.q, view_delete.q)
-    if (m.tableType == org.apache.spark.sql.catalyst.catalog.CatalogTableType.VIEW)
-      sys.error(s"$table is a view: views have no storage, the " +
-        "operation expects a table")
-    m.location.toString
-  }
-
-  /** Explicit read schema for the copy-on-write engine on tables whose
-    * format or layout does not self-describe: graft-seq lines infer
-    * c0..cN strings without the catalog schema, and a PARTITIONED
-    * graft-avro table can't infer its partition-column types from the
-    * container files. Both get the catalog's FULL schema (the sources
-    * answer partition columns from directory names via the `partitions`
-    * option). Self-describing unpartitioned formats return null. */
-  private def tableDmlSchema(spark: SparkSession, table: String)
-      : org.apache.spark.sql.types.StructType = {
-    val fmt = tableFormat(spark, table)
-    val m = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-    if (fmt == "graft-seq" || fmt == "graft-rcfile" || fmt == "graft-text" ||
-        (fmt == "graft-avro" && m.partitionColumnNames.nonEmpty)) m.schema
-    else null
-  }
-
-  /** DATA-only schema (partition columns excluded) for operations that
-    * run inside ONE flat directory — a partition subdir's files never
-    * store the partition columns, so a COMPACT/CONCATENATE there must
-    * read and write the line fields only (a full-schema read would map
-    * the partition column to NULL and the rewrite would append it as a
-    * spurious trailing field). */
-  private def tableDataSchema(spark: SparkSession, table: String)
-      : org.apache.spark.sql.types.StructType = {
-    val fmt = tableFormat(spark, table)
-    if (fmt != "graft-seq" && fmt != "graft-rcfile" && fmt != "graft-text")
-      return null
-    val m = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-    org.apache.spark.sql.types.StructType(
-      m.schema.filterNot(f => m.partitionColumnNames.contains(f.name)))
-  }
-
-  /** Datasource provider of `table`, for the copy-on-write engine: DML on
-    * a STORED AS ORC/AVRO table must rewrite files in the table's own
-    * format, not parquet. */
-  private def tableFormat(spark: SparkSession, table: String): String =
-    spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-      .provider.map(_.toLowerCase).filterNot(_ == "hive").getOrElse("parquet")
-
-  /** Partition columns of `table`, for the copy-on-write engine's
-    * partition-aware rewrite. Partitioned graft-seq/graft-avro tables are
-    * first-class since round 10: the DSv2 sources walk the Hive `p=v`
-    * layout on read (via the `partitions` option Acid passes) and route
-    * rows back into partition directories on write. */
-  /** Source options the copy-on-write engine must echo on its path-based
-    * reads and rewrites (e.g. graft-rcfile's `serde` — a rewrite through
-    * the wrong cell codec would corrupt the table). Catalog loads get
-    * these automatically; Acid's direct path loads do not. */
-  private def tableDmlOptions(spark: SparkSession, table: String)
-      : Map[String, String] =
-    spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-      .storage.properties.filter { case (k, _) =>
-        !Set("path", "location", "partitions").contains(k.toLowerCase) }
-
-  private def tableDmlPartCols(spark: SparkSession, table: String): Seq[String] =
-    spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-      .partitionColumnNames
-
-  /** SHOW CONF 'name' (DDLTask.java:520 showConf): one
-    * (default, type, desc) row; unknown names error with the reference's
-    * "invalid configuration name" text. The registry is SQLConf's
-    * defined entries — Spark's analog of HiveConf.ConfVars. */
-  private def showConf(spark: SparkSession,
-                       name: String): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    val entry = spark.sessionState.conf.getAllDefinedConfs
-      .find(_._1.equalsIgnoreCase(name)).getOrElse(
-        sys.error(s"invalid configuration name $name"))
-    val value = Option(entry._2).getOrElse("")
-    val typ =
-      if (value.equalsIgnoreCase("true") || value.equalsIgnoreCase("false"))
-        "BOOLEAN"
-      else if (value.matches("[+-]?\\d{1,9}")) "INT"
-      else if (value.matches("[+-]?\\d+")) "LONG"
-      else if (scala.util.Try(value.toDouble).isSuccess) "FLOAT"
-      else "STRING"
-    // the reference collapses doc newlines into single spaces
-    val desc = Option(entry._3).getOrElse("").replaceAll(" *\n *", " ")
-    spark.createDataFrame(
-      java.util.Arrays.asList(org.apache.spark.sql.Row(value, typ, desc)),
-      StructType(Seq(StructField("default", StringType),
-        StructField("type", StringType), StructField("desc", StringType))))
-  }
-
-  /** SHOW TABLE EXTENDED [IN db] LIKE 'pattern' [PARTITION(spec)] —
-    * TOK_SHOW_TABLESTATUS. Answers TextMetaDataFormatter.showTableStatus's
-    * key:value lines (tableName/owner/location/formats/columns in thrift
-    * DDL/partitioned/partitionColumns + recursive filesystem stats), one
-    * line per row in the reference's single `tab_name` fetch column. */
-  private def showTableExtended(spark: SparkSession, db: Option[String],
-      pattern0: String,
-      part: Option[String]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    // LIKE `name` (backquoted) is legal surface — strip the quoting
-    // (show_tablestatus_not_existing_part.q writes it that way)
-    val pattern = pattern0.replace("`", "")
-    val catalog = spark.sessionState.catalog
-    val dbName = db.getOrElse(spark.catalog.currentDatabase)
-    val conf = spark.sessionState.newHadoopConf()
-    // MetaStoreUtils.typeToThriftType, token-wise over the DDL string
-    def thrift(t: String): String =
-      "[a-zA-Z0-9]+".r.replaceAllIn(t, m => m.matched match {
-        case "int" => "i32"
-        case "bigint" => "i64"
-        case "smallint" => "i16"
-        case "tinyint" => "byte"
-        case "boolean" => "bool"
-        case "array" => "list"
-        case other => other
-      })
-    def ddlOf(name: String,
-              fields: Seq[org.apache.spark.sql.types.StructField]): String =
-      "struct " + name + " { " +
-        fields.map(f => thrift(f.dataType.catalogString) + " " + f.name)
-          .mkString(", ") + "}"
-    val lines = scala.collection.mutable.ArrayBuffer.empty[String]
-    // listTables mixes in TEMP VIEWS (database-less identifiers), for
-    // which getTableMetadata throws — the reference's SHOW TABLE EXTENDED
-    // lists metastore tables only, so skip them rather than crash when
-    // the LIKE pattern matches a registered fixture view
-    catalog.listTables(dbName, pattern).sortBy(_.table)
-      .filter(_.database.isDefined).foreach { id =>
-      val m = catalog.getTableMetadata(id)
-      val partitioned = m.partitionColumnNames.nonEmpty
-      // a PARTITION spec must name an EXISTING partition
-      // (clientnegative/show_tablestatus_not_existing_part.q — the
-      // reference throws "Partition not found" instead of reporting
-      // stats for a fabricated path)
-      part.foreach { spec =>
-        if (!partitioned)
-          sys.error(s"Table ${id.table} is not a partitioned table")
-        val specMap = spec.split(",").map { kv =>
-          val Array(k, v) = kv.split("=", 2).map(_.trim)
-          val key = m.partitionColumnNames
-            .find(_.equalsIgnoreCase(k)).getOrElse(k)
-          key -> v.stripPrefix("'").stripSuffix("'")
-        }.toMap
-        val exists =
-          try catalog.listPartitions(id, Some(specMap)).nonEmpty
-          catch { case _: Exception => false }
-        if (!exists)
-          sys.error(s"Partition not found for table ${id.table}: $spec")
-      }
-      val tblLoc = m.storage.locationUri.map(_.toString)
-      val statLoc = part match {
-        case Some(spec) => tblLoc.map(_.stripSuffix("/") + "/" +
-          spec.split(",").map { kv =>
-            val Array(k, v) = kv.split("=", 2).map(_.trim)
-            s"$k=${v.stripPrefix("'").stripSuffix("'")}"
-          }.mkString("/"))
-        case None => tblLoc
-      }
-      // a format-diverged partition reports ITS OWN format (the property
-      // partition_wise_fileformat.q's SHOW TABLE EXTENDED checks in Hive)
-      val effProvider = part.flatMap { spec =>
-        try graft.plans.HeteroPartitions
-          .entriesOf(spark, s"$dbName.${id.table}")
-          .find(_._1 == partSubdirLiteral(spark, s"$dbName.${id.table}", spec))
-          .map(_._2)
-        catch { case _: Exception => None }
-      }.orElse(m.provider.map(_.toLowerCase.replace("`", "")))
-      val (inFmt, outFmt) =
-        effProvider.getOrElse("parquet") match {
-          case "orc" =>
-            ("org.apache.hadoop.hive.ql.io.orc.OrcInputFormat",
-              "org.apache.hadoop.hive.ql.io.orc.OrcOutputFormat")
-          case "avro" | "graft-avro" =>
-            ("org.apache.hadoop.hive.ql.io.avro.AvroContainerInputFormat",
-              "org.apache.hadoop.hive.ql.io.avro.AvroContainerOutputFormat")
-          case "csv" | "text" | "json" | "graft-text" =>
-            ("org.apache.hadoop.mapred.TextInputFormat",
-              "org.apache.hadoop.hive.ql.io.HiveIgnoreKeyTextOutputFormat")
-          case "graft-seq" =>
-            ("org.apache.hadoop.mapred.SequenceFileInputFormat",
-              "org.apache.hadoop.hive.ql.io.HiveSequenceFileOutputFormat")
-          case "graft-rcfile" =>
-            ("org.apache.hadoop.hive.ql.io.RCFileInputFormat",
-              "org.apache.hadoop.hive.ql.io.RCFileOutputFormat")
-          case _ =>
-            ("org.apache.hadoop.hive.ql.io.parquet.MapredParquetInputFormat",
-              "org.apache.hadoop.hive.ql.io.parquet.MapredParquetOutputFormat")
-        }
-      val dataCols = m.schema.filterNot(f =>
-        m.partitionColumnNames.contains(f.name))
-      val partCols = m.schema.filter(f =>
-        m.partitionColumnNames.contains(f.name))
-      lines += s"tableName:${id.table}"
-      lines += s"owner:${System.getProperty("user.name")}"
-      lines += s"location:${statLoc.orNull}"
-      lines += s"inputformat:$inFmt"
-      lines += s"outputformat:$outFmt"
-      lines += s"columns:${ddlOf("columns", dataCols)}"
-      lines += s"partitioned:$partitioned"
-      lines += ("partitionColumns:" +
-        (if (partitioned) ddlOf("partition_columns", partCols) else ""))
-      statLoc.foreach { l =>
-        val p = new org.apache.hadoop.fs.Path(l)
-        val fs = p.getFileSystem(conf)
-        if (fs.exists(p)) {
-          var n = 0; var tot = 0L; var mx = 0L; var mn = Long.MaxValue
-          var acc = 0L; var upd = 0L
-          val it = fs.listFiles(p, true)
-          while (it.hasNext) {
-            val st = it.next()
-            val nm = st.getPath.getName
-            if (st.isFile && !nm.startsWith("_") && !nm.startsWith(".")) {
-              n += 1; tot += st.getLen
-              mx = math.max(mx, st.getLen); mn = math.min(mn, st.getLen)
-              acc = math.max(acc, st.getAccessTime)
-              upd = math.max(upd, st.getModificationTime)
-            }
-          }
-          lines += s"totalNumberFiles:$n"
-          lines += s"totalFileSize:$tot"
-          lines += s"maxFileSize:$mx"
-          lines += s"minFileSize:${if (n > 0) mn else 0}"
-          lines += s"lastAccessTime:$acc"
-          lines += s"lastUpdateTime:$upd"
-        }
-      }
-      lines += "" // terminator line between tables
-    }
-    import scala.jdk.CollectionConverters._
-    spark.createDataFrame(
-      lines.map(org.apache.spark.sql.Row(_)).asJava,
-      StructType(Seq(StructField("tab_name", StringType))))
-  }
-
-  /** `dfs -cmd args` passthrough (CliDriver's FsShell route), on the
-    * session's Hadoop FileSystem. Mutations (mkdir/rm/rmr/cp/mv/touchz)
-    * answer no rows; `-ls` answers sorted child paths and `-cat` file
-    * lines, one row each. */
-  private def runDfs(spark: SparkSession,
-                     cmdline: String): org.apache.spark.sql.DataFrame = {
-    import scala.jdk.CollectionConverters._
-    val conf = spark.sessionState.newHadoopConf()
-    val toks = cmdline.trim.split("\\s+").toSeq
-      .map(t => t.stripPrefix("'").stripSuffix("'").stripPrefix("\"").stripSuffix("\""))
-    require(toks.nonEmpty && toks.head.startsWith("-"),
-      s"dfs: expected -command, got: $cmdline")
-    val cmd = toks.head.stripPrefix("-")
-    val flags = toks.tail.takeWhile(_.startsWith("-")).map(_.stripPrefix("-"))
-    val paths = toks.tail.dropWhile(_.startsWith("-"))
-    def fs(p: org.apache.hadoop.fs.Path) = p.getFileSystem(conf)
-    def rows(vals: Seq[String]) = spark.createDataFrame(
-      vals.map(org.apache.spark.sql.Row(_)).asJava,
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("result",
-          org.apache.spark.sql.types.StringType))))
-    cmd match {
-      case "mkdir" =>
-        paths.foreach { s0 => val p = new org.apache.hadoop.fs.Path(s0)
-          fs(p).mkdirs(p) }
-        spark.emptyDataFrame
-      case "rm" | "rmr" =>
-        val recursive = cmd == "rmr" || flags.exists(f => f == "r" || f == "R")
-        paths.foreach { s0 => val p = new org.apache.hadoop.fs.Path(s0)
-          fs(p).delete(p, recursive) }
-        spark.emptyDataFrame
-      case "cp" | "mv" =>
-        require(paths.length == 2, s"dfs -$cmd needs src dst")
-        val (src, dst) = (new org.apache.hadoop.fs.Path(paths(0)),
-          new org.apache.hadoop.fs.Path(paths(1)))
-        if (cmd == "mv") fs(src).rename(src, dst)
-        else org.apache.hadoop.fs.FileUtil.copy(
-          fs(src), src, fs(dst), dst, false, conf)
-        spark.emptyDataFrame
-      case "touchz" =>
-        paths.foreach { s0 => val p = new org.apache.hadoop.fs.Path(s0)
-          fs(p).create(p, true).close() }
-        spark.emptyDataFrame
-      case "ls" =>
-        // FsShell parity: arguments glob; a directory argument lists its
-        // children, a file argument lists itself
-        rows(paths.flatMap { s0 => val p = new org.apache.hadoop.fs.Path(s0)
-          Option(fs(p).globStatus(p)).getOrElse(Array.empty).flatMap { st =>
-            if (st.isDirectory) fs(p).listStatus(st.getPath).toSeq else Seq(st)
-          }.map(_.getPath.toUri.getPath).toSeq
-        }.sorted)
-      case "cat" =>
-        // globs and directories expand to their data files (sorted for a
-        // stable line order), hidden committer files skipped
-        rows(paths.flatMap { s0 => val p = new org.apache.hadoop.fs.Path(s0)
-          val files = Option(fs(p).globStatus(p)).getOrElse(Array.empty)
-            .flatMap { st =>
-              if (st.isDirectory) fs(p).listStatus(st.getPath).toSeq
-              else Seq(st)
-            }
-            .filter(st => st.isFile &&
-              !st.getPath.getName.startsWith("_") &&
-              !st.getPath.getName.startsWith("."))
-            .sortBy(_.getPath.toString)
-          files.flatMap { st =>
-            val in = fs(p).open(st.getPath)
-            try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-            finally in.close()
-          }.toSeq
-        })
-      case other =>
-        System.err.println(s"[graft] dfs -$other accepted as no-op")
-        spark.emptyDataFrame
-    }
-  }
-
-  /** MERGE INTO target [AS t] USING source [AS s] ON keys WHEN ... SQL
-    * text, routed to the copy-on-write upsert (`operators.Acid.mergeInto`).
-    *
-    * Reference: UpdateDeleteSemanticAnalyzer's MERGE rewrite (the
-    * three-branch UPDATE/DELETE/INSERT plan over one source scan). Spark's
-    * parser accepts MERGE but no v1 file table supports row-level ops, so
-    * the statement is parsed here with the paren-aware `topLevel` slicer
-    * (a subquery source may itself contain JOIN ... ON) and handed to the
-    * CoW engine. Supported — the common Hive upsert shape:
-    *   - ON: conjunction of same-named key equalities (t.k = s.k);
-    *   - WHEN MATCHED [AND pred] THEN UPDATE SET c = <expr over source>;
-    *   - WHEN MATCHED [AND pred] THEN DELETE (pred may mix target columns
-    *     and source columns);
-    *   - WHEN NOT MATCHED THEN INSERT (*|VALUES (<exprs over source>)).
-    * A column named by both UPDATE SET and INSERT VALUES must receive the
-    * same expression (one projected source feeds both branches).
-    */
-  private def sqlMerge(spark: SparkSession, stmt: String): Unit = {
-    import org.apache.spark.sql.functions.{col, expr}
-    val text = stmt.trim.stripSuffix(";")
-    val usingPos = topLevel(text, "USING").headOption.getOrElse(
-      sys.error("MERGE without USING"))
-    val onPos = topLevel(text, "ON").find(_ > usingPos).getOrElse(
-      sys.error("MERGE without ON"))
-    val whenPos = topLevel(text, "WHEN").filter(_ > onPos)
-    require(whenPos.nonEmpty, "MERGE without WHEN clauses")
-
-    // MERGE INTO <table> [AS] [alias]
-    val headToks = text.substring("MERGE".length, usingPos).trim
-      .replaceAll("(?i)^INTO\\s+", "").split("\\s+").toSeq
-      .filterNot(_.equalsIgnoreCase("AS"))
-    val table = headToks.head
-    requireNoHetero(spark, table, "MERGE")
-    val tAlias = headToks.lift(1).getOrElse(table.split('.').last)
-
-    // USING <table|(subquery)> [AS] [alias]
-    val usingText = text.substring(usingPos + "USING".length, onPos).trim
-    val (srcDf, sAlias) =
-      if (usingText.startsWith("(")) {
-        val close = {
-          var depth = 0; var i = 0; var end = -1
-          while (i < usingText.length && end < 0) {
-            usingText.charAt(i) match {
-              case '(' => depth += 1
-              case ')' => depth -= 1; if (depth == 0) end = i
-              case _ =>
-            }
-            i += 1
-          }
-          require(end > 0, s"unbalanced parens in MERGE USING: $usingText"); end
-        }
-        val alias = usingText.substring(close + 1).trim
-          .replaceAll("(?i)^AS\\s+", "")
-        require(alias.nonEmpty, "MERGE USING (subquery) needs an alias")
-        (spark.sql(usingText.substring(1, close)), alias)
-      } else {
-        val toks = usingText.split("\\s+").toSeq.filterNot(_.equalsIgnoreCase("AS"))
-        (spark.table(toks.head), toks.lift(1).getOrElse(toks.head.split('.').last))
-      }
-
-    // strip/reroute alias qualifiers in an expression: target alias drops
-    // (evaluated over target columns), source alias maps to __src_ in the
-    // delete predicate or drops in source-side expressions
-    def unqualify(e: String, srcPrefix: String): String = e
-      .replaceAll("(?i)\\b" + java.util.regex.Pattern.quote(tAlias) + "\\.", "")
-      .replaceAll("(?i)\\b" + java.util.regex.Pattern.quote(sAlias) + "\\.", srcPrefix)
-
-    // ON: conjunctive same-named equalities → the CoW join keys
-    val onText = text.substring(onPos + "ON".length, whenPos.head).trim
-    val keys = onText.split("(?i)\\bAND\\b").toSeq.map { term =>
-      val sides = term.split("=").map(_.trim)
-      require(sides.length == 2, s"unsupported MERGE ON term: $term")
-      val names = sides.map(x => x.substring(x.lastIndexOf('.') + 1))
-      require(names(0).equalsIgnoreCase(names(1)),
-        s"MERGE ON must equate same-named key columns, got: $term")
-      names(0)
-    }
-
-    // WHEN clauses. A SET expression that references the TARGET alias
-    // (the accumulate-upsert shape `SET cnt = t.cnt + s.cnt`) cannot be
-    // evaluated over the source projection — it routes to the post-join
-    // path instead (target columns by bare name, source as __src_*).
-    val targetCols = spark.table(table).columns.toSeq
-    val tRefRe = ("(?i)\\b" + java.util.regex.Pattern.quote(tAlias) + "\\.").r
-    var setExprs = Map.empty[String, String]      // target col -> source-side expr
-    var setPostJoin = Map.empty[String, String]   // target col -> post-join expr
-    var insertExprs = Map.empty[String, String]
-    var insertNotMatched = false
-    var deleteMatched = Option.empty[String]
-    val bounds = whenPos :+ text.length
-    // SemanticAnalyzer parity (merge_negative_2.q; Spark raises
-    // NON_LAST_MATCHED_CLAUSE_OMIT_CONDITION): with several MATCHED
-    // clauses only the LAST may omit its AND condition — an earlier
-    // unconditional clause would make the rest dead code, silently
-    val matchedPreds = bounds.sliding(2)
-      .map(w => text.substring(w(0), w(1)).trim).flatMap {
-        case whenUpdateRe(p, _) => Some(Option(p))
-        case whenDeleteRe(p) => Some(Option(p))
-        case _ => None
-      }.toSeq
-    matchedPreds.dropRight(1).foreach(p => require(p.nonEmpty,
-      "MERGE: when there are more than one MATCHED clause, only the last " +
-        "MATCHED clause can omit its condition " +
-        "(NON_LAST_MATCHED_CLAUSE_OMIT_CONDITION)"))
-    bounds.sliding(2).map(w => text.substring(w(0), w(1)).trim).foreach {
-      case whenUpdateRe(updPred, assigns) =>
-        // a conditional UPDATE (WHEN MATCHED AND pred) can only evaluate
-        // post-join — the predicate may mix sides and an unmet predicate
-        // must KEEP the target's value, which the source projection can't
-        // express — so fold the predicate into a post-join CASE
-        val pred = Option(updPred).map(unqualify(_, "__src_pj_"))
-        splitAssignments(assigns).foreach { a =>
-          val Array(k, v) = a.split("=", 2)
-          val c = k.trim.substring(k.trim.lastIndexOf('.') + 1)
-          (pred, tRefRe.findFirstIn(v.trim).isDefined) match {
-            case (Some(p), _) =>
-              setPostJoin += c ->
-                s"CASE WHEN ($p) THEN (${unqualify(v.trim, "__src_pj_")}) ELSE $c END"
-            case (None, true) =>
-              setPostJoin += c -> unqualify(v.trim, "__src_pj_")
-            case (None, false) =>
-              setExprs += c -> unqualify(v.trim, "")
-          }
-        }
-      case whenDeleteRe(pred) =>
-        deleteMatched = Some(Option(pred).map(unqualify(_, "__src_pj_")).getOrElse("true"))
-      case whenInsertRe(spec) =>
-        insertNotMatched = true
-        if (!spec.trim.startsWith("*")) {
-          val inner = spec.trim.replaceAll("(?is)^VALUES\\s*\\(", "").stripSuffix(")")
-          val rawVals = splitAssignments(inner).map(_.trim)
-          // an insert row has no target side to reference
-          rawVals.find(v => tRefRe.findFirstIn(v).isDefined).foreach(v =>
-            sys.error(s"MERGE INSERT VALUES cannot reference the target alias: $v"))
-          val vals = rawVals.map(v => unqualify(v, ""))
-          require(vals.length == targetCols.length,
-            s"MERGE INSERT VALUES arity ${vals.length} != ${targetCols.length} target columns")
-          insertExprs = targetCols.zip(vals).toMap
-        }
-      case other => sys.error(s"unsupported MERGE WHEN clause: $other")
-    }
-    for (c <- setExprs.keys if insertExprs.contains(c))
-      require(setExprs(c) == insertExprs(c),
-        s"MERGE column $c: UPDATE SET and INSERT VALUES must agree (one projected source)")
-
-    // one projected source feeds keys, update values and inserts; extra
-    // source columns referenced by the delete predicate or a post-join SET
-    // expression ride along under a `pj_` name of their own — NEVER the
-    // bare target-column name, which `merged` may have remapped to the
-    // INSERT/UPDATE expression (SET cnt = t.cnt + s.cnt alongside INSERT
-    // VALUES (..., 0) must read s.cnt, not the insert's 0)
-    val merged = setExprs ++ insertExprs
-    val deletePred = deleteMatched.map(expr)
-    val srcRefCols = (deleteMatched.toSeq ++ setPostJoin.values).flatMap { p =>
-      "__src_pj_(\\w+)".r.findAllMatchIn(p).map(_.group(1)).toSeq
-    }.distinct
-    require(!targetCols.exists(_.startsWith("pj_")),
-      "MERGE: target columns named pj_* collide with the post-join source projection")
-    val projected = srcDf.select(
-      (targetCols.map(c => expr(merged.getOrElse(c, c)).as(c)) ++
-        srcRefCols.map(c => col(c).as(s"pj_$c"))): _*)
-    val partCols = tableDmlPartCols(spark, table)
-    operators.Acid.mergeInto(spark, tableLocation(spark, table), projected,
-      keys = keys, setFromSource = setExprs.keys.toSeq,
-      insertNotMatched = insertNotMatched, deleteMatched = deletePred,
-      format = tableFormat(spark, table),
-      deleteSourceCols = srcRefCols.map("pj_" + _),
-      schema = tableDmlSchema(spark, table), setPostJoin = setPostJoin,
-      partitionCols = partCols, options = tableDmlOptions(spark, table))
-    // the insert branch may have created partition DIRECTORIES the catalog
-    // has never seen (Hive's dynamic-partition MoveTask registers them);
-    // MSCK registers the delta so the new rows are visible. graft DSv2
-    // tables skip it: their scans walk the directory layout directly
-    // (never the catalog partition list), and v2 tables reject MSCK
-    if (partCols.nonEmpty && insertNotMatched &&
-        !tableFormat(spark, table).startsWith("graft-"))
-      spark.sql(s"MSCK REPAIR TABLE $table"): Unit
-    spark.sql(s"REFRESH TABLE $table"): Unit
-  }
-
-  /** Start offsets of top-level (not inside quotes or parens) word
-    * occurrences, case-insensitive. */
-  private def topLevel(s: String, word: String): Seq[Int] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[Int]
-    var depth = 0
-    var i = 0
-    var quote = ' '
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != ' ') {
-        // skip the escaped char or \' would read as the closing quote and
-        // invert the quote state for the rest of the statement
-        if (c == '\\' && i + 1 < s.length) i += 2
-        else { if (c == quote) quote = ' '; i += 1 }
-      }
-      else c match {
-        case '\'' | '"' => quote = c; i += 1
-        case '(' => depth += 1; i += 1
-        case ')' => depth -= 1; i += 1
-        case _ =>
-          if (depth == 0 && s.regionMatches(true, i, word, 0, word.length) &&
-              (i == 0 || !Character.isLetterOrDigit(s.charAt(i - 1))) &&
-              (i + word.length >= s.length ||
-                !Character.isLetterOrDigit(s.charAt(i + word.length)))) {
-            out += i; i += word.length
-          } else i += 1
-      }
-    }
-    out.toSeq
-  }
-
-  /** Execute a statement, retrying under Hive's permissive store-assignment
-    * policy when Spark's default ANSI policy rejects an implicit narrowing
-    * cast on INSERT (groupby_sort_1_23.q inserts STRING keys into an INT
-    * column; FileSinkOperator casts via the target serde's ObjectInspector).
-    * The retry is statement-scoped — the session stays on ANSI so v2
-    * (graft-avro/graft-seq) writes, which reject LEGACY outright, keep
-    * their normal path, and unrelated statements keep strict checking.
-    */
-  /** Hive dynamic-partition INSERT guards (SemanticAnalyzer
-    * validatePartSpec / ErrorMsg 10096/10094/10095, clientnegative
-    * dyn_part1–4.q), evaluated from the session confs each statement:
-    *   - `hive.exec.dynamic.partition=false` refuses any dynamic column;
-    *   - `hive.exec.dynamic.partition.mode=strict` requires >=1 static
-    *     column in the PARTITION clause (the engine's default stays
-    *     nonstrict — Spark parity);
-    *   - a static column may never FOLLOW a dynamic one (the directory
-    *     tree can't nest a constant under a varying parent);
-    *   - `hive.exec.max.dynamic.partitions`, when explicitly set, caps
-    *     the distinct dynamic tuples the statement writes — enforced in
-    *     cappedDynInsert over a ONE-PASS checkpoint staging (the SELECT
-    *     materializes once; the count and the write read the same rows,
-    *     so nondeterministic SELECTs are guarded too, and a tripped cap
-    *     leaves the table untouched).
-    */
-  private def dynPartGuards(spark: SparkSession, stmt: String): Unit =
-    stmt match {
-      case insertBranchRe(_, tbl, part, select) if part != null &&
-          splitPartSpec(part).exists(!_.contains("=")) =>
-        // quote-aware split: PARTITION (p='a,b') is static, not dynamic
-        val kvs = splitPartSpec(part)
-        val dynIdx = kvs.indexWhere(!_.contains("="))
-        if (!spark.conf.get("hive.exec.dynamic.partition", "true").trim
-            .equalsIgnoreCase("true"))
-          sys.error("Dynamic partition is disabled " +
-            "(hive.exec.dynamic.partition=false): " +
-            s"INSERT into $tbl PARTITION ($part)")
-        if (spark.conf.get("hive.exec.dynamic.partition.mode", "nonstrict")
-            .trim.equalsIgnoreCase("strict") && dynIdx == 0)
-          sys.error("Dynamic partition strict mode requires at least one " +
-            "static partition column " +
-            "(set hive.exec.dynamic.partition.mode=nonstrict): " +
-            s"INSERT into $tbl PARTITION ($part)")
-        kvs.drop(dynIdx).find(_.contains("=")).foreach(k =>
-          sys.error(s"Dynamic partition cannot be the parent of a static " +
-            s"partition: ${k.trim} follows a dynamic column in " +
-            s"PARTITION ($part)"))
-        // hive.exec.max.dynamic.partitions enforcement moved to
-        // cappedDynInsert: the SELECT materializes once, the distinct
-        // dynamic tuples are counted on the materialized rows, and the
-        // write runs from the same checkpoint — one pass, nondeterministic
-        // SELECTs included, nothing written when the cap trips
-        ()
-      case _ => ()
-    }
-
-  /** Post-INSERT small-file auto-merge (reference: hive.merge.mapfiles /
-    * hive.merge.mapredfiles, ConditionalTask + ConditionalResolverMergeFiles
-    * — when the job's average output file size is below
-    * `hive.merge.smallfiles.avgsize` a follow-up merge job rewrites the
-    * job's output into ~`hive.merge.size.per.task`-sized files before
-    * MoveTask publishes). Opt-in here (Spark parity default: no merge):
-    * any of the hive.merge.{mapfiles,mapredfiles,sparkfiles} keys
-    * explicitly SET true enables it. Only the files the statement itself
-    * wrote are merged (before/after directory diff — metadata-sized), per
-    * directory, so an incremental append to a 100 TB table merges only
-    * its own output and never rewrites pre-existing files.
-    */
-  private def listDataFiles(spark: SparkSession, loc: String)
-      : Map[String, Long] = {
-    // `loc` is URI-spelled (CatalogTable.location / mergeScope): the
-    // URI constructor decodes one escape round, yielding the directory's
-    // literal on-disk name (p=a%253Ab -> p=a%3Ab); the string
-    // constructor would keep the raw spelling and miss the directory.
-    // Characters escapePathName leaves raw (a space) make the string an
-    // invalid URI — fall back to a manual one-round %XX decode so a
-    // value with BOTH a space and an escaped char ("a:b c" ->
-    // "p=a%253Ab c" in scope spelling) still resolves to the literal
-    // directory; URLDecoder is wrong here (it would eat '+').
-    val p = try new org.apache.hadoop.fs.Path(new java.net.URI(loc))
-      catch { case _: java.net.URISyntaxException =>
-        val dec = """%([0-9A-Fa-f]{2})""".r.replaceAllIn(loc, m =>
-          java.util.regex.Matcher.quoteReplacement(
-            Integer.parseInt(m.group(1), 16).toChar.toString))
-        new org.apache.hadoop.fs.Path(dec) }
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) Map.empty
-    else {
-      val b = Map.newBuilder[String, Long]
-      val it = fs.listFiles(p, true)
-      while (it.hasNext) {
-        val st = it.next()
-        val n = st.getPath.getName
-        if (st.isFile && !n.startsWith("_") && !n.startsWith("."))
-          b += st.getPath.toUri.toString -> st.getLen
-      }
-      b.result()
-    }
-  }
-
-  private def smallFileMergeSnapshot(spark: SparkSession, stmt: String)
-      : Option[(String, Map[String, Long])] = {
-    val on = Seq("hive.merge.mapfiles", "hive.merge.mapredfiles",
-      "hive.merge.sparkfiles", "hive.merge.tezfiles").exists(k =>
-      spark.conf.getOption(k).exists(_.trim.equalsIgnoreCase("true")))
-    if (!on) None
-    else stmt match {
-      case insertTargetRe(tbl) =>
-        // a temp-view or path-less target has no location: merge is a no-op
-        try {
-          // bucketed targets are NEVER merged: repartition(n) would strip
-          // the bucket-id file naming Spark derives bucket membership
-          // from — the same invariant loadData enforces; Hive's
-          // ConditionalResolverMergeFiles likewise skips bucketed outputs
-          val meta = spark.sessionState.catalog.getTableMetadata(
-            spark.sessionState.sqlParser.parseTableIdentifier(tbl))
-          if (meta.bucketSpec.isDefined) None
-          else Some(tbl -> listDataFiles(spark, mergeScope(spark, tbl, stmt)))
-        } catch { case _: Exception => None }
-      case _ => None
-    }
-  }
-
-  /** Split a PARTITION (...) clause body on commas OUTSIDE single quotes:
-    * PARTITION (p='a,b', q) is one static column with a comma in its
-    * value plus one dynamic column, not three entries. */
-  private[graft] def splitPartSpec(part: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    val cur = new StringBuilder
-    var inQuote = false
-    var i = 0
-    while (i < part.length) {
-      part(i) match {
-        // a backslash escapes the next char (PARTITION (p='a\'b,c')) —
-        // same convention as splitStatements
-        case '\\' if i + 1 < part.length =>
-          cur += '\\'; cur += part(i + 1); i += 1
-        case '\'' => inQuote = !inQuote; cur += '\''
-        case ',' if !inQuote => out += cur.toString; cur.clear()
-        case c => cur += c
-      }
-      i += 1
-    }
-    out += cur.toString
-    out.map(_.trim).filter(_.nonEmpty).toSeq
-  }
-
-  /** Strip one round of SQL quote escapes from a single-quoted value:
-    * PARTITION (p='a\'b') and (p='a''b') both carry the literal a'b. */
-  private def unescapeSqlValue(s: String): String =
-    s.replace("''", "'").replaceAll("""\\(.)""", "$1")
-
-  /** On-disk partition SUBPATH for a static spec — declared column case
-    * plus Spark/Hive path escaping, in the LITERAL spelling (the real
-    * directory name, e.g. p=a%3Ab for value a:b). Shared by LOAD's
-    * destination and the auto-merge scope so every writer/reader of the
-    * layout spells directories identically. */
-  /** STORED AS keyword -> datasource provider (bare name; SQL sites
-    * backtick-quote it). Shared by table-wide and per-partition
-    * SET FILEFORMAT and CREATE-side STORED AS rewrites. */
-  private def fileFormatProvider(fmt: String, hasComplex: Boolean): String =
-    fmt.toUpperCase match {
-      case "TEXTFILE" if hasComplex => "graft-text"
-      case "TEXTFILE" => "csv"
-      case "PARQUET"  => "parquet"
-      case "ORC"      => "orc"
-      case "AVRO"     => "graft-avro"
-      case "JSONFILE" => "json"
-      case "SEQUENCEFILE" => "graft-seq"
-      case "RCFILE"   => "graft-rcfile"
-      case o => throw new IllegalArgumentException(
-        s"SET FILEFORMAT $o has no datasource mapping")
-    }
-
-  /** Whole-table DML cannot run over a table whose partitions diverge in
-    * format (the CoW machinery reads/rewrites one provider) — refuse
-    * loudly instead of corrupting the diverged partition at rewrite. */
-  /** Format/schema/options a maintenance rewrite (COMPACT/CONCATENATE)
-    * must use for `part` of `table` — a format-diverged partition
-    * rewrites in ITS OWN format, never the table-wide one (a base-format
-    * rewrite of a diverged directory would corrupt it at the next read). */
-  private def maintenanceTarget(spark: SparkSession, table: String,
-      part: Option[String])
-      : (String, org.apache.spark.sql.types.StructType, Map[String, String]) = {
-    val hetero = part.flatMap { spec =>
-      graft.plans.HeteroPartitions.entriesOf(spark, table)
-        .find(_._1 == partSubdirLiteral(spark, table, spec)).map(_._2)
-    }
-    hetero match {
-      case Some(prov) =>
-        val m = spark.sessionState.catalog.getTableMetadata(
-          spark.sessionState.sqlParser.parseTableIdentifier(table))
-        val dataSchema =
-          if (Set("graft-seq", "graft-rcfile", "graft-text").contains(prov))
-            org.apache.spark.sql.types.StructType(m.schema.filterNot(f =>
-              m.partitionColumnNames.contains(f.name)))
-          else null
-        (prov, dataSchema, graft.plans.HeteroPartitions.providerOptions(prov))
-      case None =>
-        (tableFormat(spark, table), tableDataSchema(spark, table),
-          tableDmlOptions(spark, table))
-    }
-  }
-
-  /** Remove hetero entries whose partition no longer exists (after DROP
-    * PARTITION): a stale entry would make a LATER ADD PARTITION of the
-    * same spec resurrect the old format divergence and silently misread
-    * the fresh base-format files. Liveness is the CATALOG's partition
-    * list when the table tracks partitions there — DROP PARTITION on an
-    * EXTERNAL table removes the catalog entry but keeps the files, so a
-    * directory-existence check alone would keep serving the dropped
-    * partition's rows forever. Directory existence remains a second
-    * condition (a catalog entry whose files vanished reads nothing). */
-  private def pruneHeteroEntries(spark: SparkSession, table: String): Unit = {
-    val entries = graft.plans.HeteroPartitions.entriesOf(spark, table)
-    if (entries.nonEmpty) {
-      val loc = tableLocation(spark, table).stripSuffix("/")
-      val conf = spark.sessionState.newHadoopConf()
-      // catalog view: the set of live partition locations (relative specs
-      // resolve under the table location, matching entry encoding). None
-      // when partition metadata is untracked (directory-is-layout tables)
-      // — then the filesystem check is the only authority, as before.
-      val catalogLive: Option[Set[String]] =
-        try {
-          val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-          Some(spark.sessionState.catalog.listPartitions(ident)
-            .map(p => new org.apache.hadoop.fs.Path(p.location)
-              .toString.stripSuffix("/")).toSet)
-        } catch { case _: Exception => None }
-      val live = entries.filter { case (spec, _) =>
-        val p = new org.apache.hadoop.fs.Path(loc + "/" + spec)
-        // an ARCHIVED partition relocated under .graft_archive is still
-        // live (reads keep working; UNARCHIVE restores) — both checks
-        // must accept either location or archiving would silently strip
-        // the format divergence
-        val pArch = new org.apache.hadoop.fs.Path(
-          loc + "/.graft_archive/" + spec)
-        val dirOk =
-          try {
-            val fs = p.getFileSystem(conf)
-            fs.exists(p) || fs.exists(pArch)
-          } catch { case _: Exception => true }
-        val catOk = catalogLive.forall(set =>
-          set.contains(p.toString.stripSuffix("/")) ||
-            set.contains(pArch.toString.stripSuffix("/")))
-        dirOk && catOk
-      }
-      if (live.size != entries.size) {
-        val key = graft.plans.HeteroPartitions.PropKey
-        if (live.isEmpty)
-          spark.sql(s"ALTER TABLE $table UNSET TBLPROPERTIES IF EXISTS ('$key')")
-        else spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES ('$key' = " +
-          s"'${graft.plans.HeteroPartitions.encode(live)}')")
-        spark.sql(s"REFRESH TABLE $table")
-      }
-    }
-  }
-
-  /** Row-rewriting maintenance (CoW DML) rewrites files wherever the
-    * predicate reaches — with any partition archived, a rewrite could
-    * target the relocated subtree, so refuse until UNARCHIVE (archived
-    * partitions pre-date ACID in the reference too). */
-  private def requireNoArchived(spark: SparkSession, table: String,
-      op: String): Unit =
-    operators.Archive.entriesOf(spark, table).headOption.foreach(e =>
-      sys.error(s"$op is not supported on $table while partitions are " +
-        s"archived ($e); UNARCHIVE first"))
-
-  private def requireNoHetero(spark: SparkSession, table: String,
-      op: String): Unit =
-    if (graft.plans.HeteroPartitions.entriesOf(spark, table).nonEmpty)
-      sys.error(s"$op is not supported on $table while partitions carry " +
-        "heterogeneous file formats (per-partition SET FILEFORMAT); " +
-        "unify with ALTER TABLE ... SET FILEFORMAT first")
-
-  /** INSERT routing for heterogeneous-format tables: a fully-static spec
-    * aimed at a diverged partition becomes a path write in that
-    * partition's own format; dynamic/absent specs are refused (rows could
-    * land in a diverged directory in the wrong format). Returns Some when
-    * the statement was fully handled here. */
-  private def heteroInsertRoute(spark: SparkSession, stmt: String)
-      : Option[org.apache.spark.sql.DataFrame] = stmt match {
-    case insertBranchRe(mode, tbl, part, select)
-        if graft.plans.HeteroPartitions.entriesOf(spark, tbl).nonEmpty =>
-      val entries = graft.plans.HeteroPartitions.entriesOf(spark, tbl)
-      val meta = spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(tbl))
-      val partCols = meta.partitionColumnNames
-      val kvs = Option(part).map(splitPartSpec).getOrElse(Nil)
-      val fullyStatic = kvs.nonEmpty && kvs.forall(_.contains("=")) &&
-        kvs.length == partCols.length
-      if (!fullyStatic)
-        sys.error(s"INSERT into $tbl requires a fully-static PARTITION " +
-          "spec while partitions carry heterogeneous file formats " +
-          "(a dynamic write could land base-format rows in a diverged " +
-          "partition directory)")
-      val specPath = partSubdirLiteral(spark, tbl, part)
-      entries.find(_._1 == specPath).map { case (_, prov) =>
-        val dir = meta.location.toString.stripSuffix("/") + "/" + specPath
-        val dataFields = meta.schema.fields
-          .filterNot(f => partCols.exists(_.equalsIgnoreCase(f.name)))
-        val df = spark.sql(select)
-        require(df.columns.length == dataFields.length,
-          s"INSERT into $tbl PARTITION ($part): expected " +
-            s"${dataFields.length} data columns, got ${df.columns.length}")
-        val cast = df.select(df.columns.zip(dataFields).map { case (c, f) =>
-          org.apache.spark.sql.functions.col(s"`$c`")
-            .cast(f.dataType).as(f.name) }.toSeq: _*)
-        cast.write.format(prov)
-          .options(graft.plans.HeteroPartitions.providerOptions(prov))
-          .mode(if (mode.equalsIgnoreCase("OVERWRITE")) "overwrite" else "append")
-          .save(dir)
-        spark.sql(s"REFRESH TABLE $tbl")
-        spark.emptyDataFrame
-      } // non-diverged static partition: None -> the normal insert path
-    case insertTargetRe(tbl)
-        if graft.plans.HeteroPartitions.entriesOf(spark, tbl).nonEmpty =>
-      sys.error(s"INSERT into $tbl requires the PARTITION (...) SELECT " +
-        "form while partitions carry heterogeneous file formats")
-    case _ => None
-  }
-
-  private def partSubdirLiteral(spark: SparkSession, table: String,
-      spec: String): String = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    val declared = spark.sessionState.catalog.getTableMetadata(
-      spark.sessionState.sqlParser.parseTableIdentifier(table))
-      .partitionColumnNames
-    splitPartSpec(spec).map { kv =>
-      val Array(k0, v0) = kv.split("=", 2).map(_.trim)
-      val k = declared.find(_.equalsIgnoreCase(k0)).getOrElse(k0)
-      ExternalCatalogUtils.escapePathName(k) + "=" +
-        ExternalCatalogUtils.escapePathName(
-          unescapeSqlValue(v0.stripPrefix("'").stripSuffix("'")))
-    }.mkString("/")
-  }
-
-  /** Listing scope for the auto-merge diff: a fully-STATIC PARTITION spec
-    * confines the statement's output to one directory, so both listings
-    * cover just that subtree instead of the whole table — an append into
-    * one partition of a million-file table lists that partition only.
-    * Dynamic or absent specs fall back to the table root. */
-  private def mergeScope(spark: SparkSession, tbl: String,
-      stmt: String): String = {
-    val root = tableLocation(spark, tbl)
-    stmt match {
-      case insertBranchRe(_, _, part, _) if part != null &&
-          splitPartSpec(part).forall(_.contains("=")) =>
-        // directory names use the DECLARED column case and Spark's path
-        // escaping — PARTITION (P='a:b') lands in p=a%3Ab, so the scoped
-        // listing must spell it the same way or the diff sees nothing.
-        // partSubdirLiteral gives the LITERAL name; the scope string
-        // feeds new Path(str), which decodes one round of %-escapes —
-        // so emit the URI spelling (a%253Ab), the same convention
-        // FileStatus.toUri / _metadata use
-        val sub = partSubdirLiteral(spark, tbl, part).replace("%", "%25")
-        root.stripSuffix("/") + "/" + sub
-      case _ => root
-    }
-  }
-
-  private def autoMergeSmallFiles(spark: SparkSession, tbl: String,
-      stmt: String, before: Map[String, Long]): Unit = {
-    val avgSize = spark.conf.getOption("hive.merge.smallfiles.avgsize")
-      .map(_.trim.toLong).getOrElse(16000000L)
-    val perTask = spark.conf.getOption("hive.merge.size.per.task")
-      .map(_.trim.toLong).getOrElse(256000000L)
-    val after = listDataFiles(spark, mergeScope(spark, tbl, stmt))
-    val fresh = after.filter { case (f, _) => !before.contains(f) }
-    if (fresh.isEmpty) return
-    var merged = false
-    // per-directory decision, as the reference resolves per partition
-    fresh.groupBy { case (f, _) => f.substring(0, f.lastIndexOf('/')) }
-      .foreach { case (dir, fl) =>
-        val total = fl.values.sum
-        val n = math.max(1, math.ceil(total.toDouble / perTask).toInt)
-        if (fl.size > n && total / fl.size < avgSize) {
-          operators.Acid.mergeFiles(spark, dir, fl.keys.toSeq, n,
-            format = tableFormat(spark, tbl),
-            schema = tableDataSchema(spark, tbl),
-            options = tableDmlOptions(spark, tbl))
-          merged = true
-        }
-      }
-    if (merged)
-      try { spark.sql(s"REFRESH TABLE $tbl"): Unit }
-      catch { case _: Exception => () }
-  }
-
-  /** Refuse a write aimed at (or overlapping) an archived partition —
-    * the reference's compile-time guard ("Insert conflict with existing
-    * archive", SemanticAnalyzer; clientnegative/archive_insert1.q). A
-    * dynamic or absent spec on a table with ANY archived partition
-    * refuses too: the write could land under an archived prefix. */
-  private def requireNoArchiveConflict(spark: SparkSession, table: String,
-      part: Option[String], op: String): Unit =
-    if (operators.Archive.entriesOf(spark, table).nonEmpty) {
-      val path = part match {
-        case Some(p) if splitPartSpec(p).forall(_.contains("=")) =>
-          operators.Archive.specPath(spark, table, p, requirePrefix = false)
-        case _ => "" // dynamic or whole-table: could touch anything
-      }
-      operators.Archive.conflict(spark, table, path).foreach(e =>
-        sys.error(s"$op conflict with existing archive: $e"))
-    }
-
-  // target + static spec for ANY insert form (SELECT or VALUES tail) —
-  // insertBranchRe's SELECT-only tail would drop the PARTITION clause
-  // of a VALUES insert and misread it as a whole-table write. Backticks
-  // accepted: a quoted target must not slip past the archive guard.
-  private val insertTargetPartRe =
-    """(?is)\s*INSERT\s+(?:OVERWRITE|INTO)\s+(?:TABLE\s+)?(?!DIRECTORY\b|LOCAL\b)([\w.`]+)\s*(?:PARTITION\s*\(([^)]*)\))?.*""".r
-  private val mergeTargetRe = """(?is)MERGE\s+INTO\s+([\w.`]+)""".r
-  private val truncateTargetRe =
-    """(?is)\s*TRUNCATE\s+TABLE\s+([\w.`]+)\s*(?:PARTITION\s*\(([^)]*)\))?\s*;?\s*""".r
-
-  private def insertWithHiveCasts(spark: SparkSession,
-      stmt: String): org.apache.spark.sql.DataFrame = {
-    stmt match {
-      case insertTargetPartRe(tbl, part) =>
-        requireNoArchiveConflict(spark, tbl.replace("`", ""), Option(part), "Insert")
-      // TRUNCATE clears data at each catalog partition location — with a
-      // partition archived that would destroy the relocated subtree while
-      // the archive entry persists (the reference refuses truncating
-      // archived partitions)
-      case truncateTargetRe(tbl, part) =>
-        requireNoArchiveConflict(spark, tbl.replace("`", ""), Option(part), "TRUNCATE")
-      case _ => ()
-    }
-    heteroInsertRoute(spark, stmt).getOrElse(
-      insertWithHiveCasts0(spark, stmt))
-  }
-
-  /** One-pass hive.exec.max.dynamic.partitions enforcement: the SELECT
-    * materializes ONCE through a tracked checkpoint (durable under
-    * spark.graft.checkpointDir — tools/Checkpoints.cut), the distinct
-    * dynamic tuples are counted on the materialized rows, and only then
-    * does the write run FROM the checkpoint. Nothing touches the table
-    * when the cap trips (clean rollback), nondeterministic SELECTs are
-    * now guarded too (the count and the write see the same rows), and
-    * the old pre-write probe's double SELECT execution is gone — at
-    * 100 TB the staging pass costs one executor-disk materialization,
-    * the same scratch-dir shape the reference's FileSinkOperator uses.
-    * Returns None when the statement has no explicit cap to enforce. */
-  private val dynCapSeq = new java.util.concurrent.atomic.AtomicInteger
-  private def cappedDynInsert(spark: SparkSession,
-      stmt: String): Option[org.apache.spark.sql.DataFrame] = stmt match {
-    case insertBranchRe(mode, tbl, part, select)
-        if part != null && splitPartSpec(part).exists(!_.contains("=")) &&
-          (spark.conf.getOption("hive.exec.max.dynamic.partitions").isDefined ||
-            spark.conf.getOption("hive.exec.max.dynamic.partitions.pernode")
-              .isDefined ||
-            spark.conf
-              .getOption("hive.metastore.partition.name.whitelist.pattern")
-              .exists(_.trim.nonEmpty)) &&
-          !select.contains("graft_dyncap_") => // the rewritten stage itself
-      // pernode caps what one node creates (dyn_part_max_per_node.q) — on
-      // this engine a write is one Spark job over one logical cluster, so
-      // the binding cap is simply the smaller of the two when both are set
-      val total = spark.conf.getOption("hive.exec.max.dynamic.partitions")
-        .map(_.trim.toInt)
-      val perNode = spark.conf
-        .getOption("hive.exec.max.dynamic.partitions.pernode").map(_.trim.toInt)
-      val whitelist = spark.conf
-        .getOption("hive.metastore.partition.name.whitelist.pattern")
-        .map(_.trim).filter(_.nonEmpty)
-      val kvs = splitPartSpec(part)
-      val dynCols = kvs.count(!_.contains("="))
-      val staged = graft.tools.Checkpoints.cut(spark.sql(select))
-      try {
-        val tail = staged.columns.takeRight(dynCols).toSeq
-        // dynamic whitelist leg (dynamic_partitions_with_whitelist.q): a
-        // DATA-derived partition value outside the pattern refuses BEFORE
-        // the write — the one-pass staging guarantees nothing lands. The
-        // check is distributed (rlike filter, first offender collected);
-        // NULL values become Hive's default partition and skip the gate.
-        whitelist.foreach { pat =>
-          import org.apache.spark.sql.functions.col
-          val anchored = "^(?:" + pat + ")$"
-          tail.foreach { c =>
-            val bad = staged.filter(col(c).isNotNull &&
-                !col(c).cast("string").rlike(anchored))
-              .select(col(c).cast("string")).limit(1).collect()
-            if (bad.nonEmpty)
-              sys.error(s"Partition value '${bad(0).getString(0)}' " +
-                s"contains a character not matched by whitelist pattern " +
-                s"'$pat'. (configure with " +
-                "hive.metastore.partition.name.whitelist.pattern)")
-          }
-        }
-        if (total.isDefined || perNode.isDefined) {
-          val max = (total.toSeq ++ perNode.toSeq).min
-          val capName =
-            if (perNode.exists(p => total.forall(p <= _)))
-              "hive.exec.max.dynamic.partitions.pernode"
-            else "hive.exec.max.dynamic.partitions"
-          val n = staged.select(tail.map(org.apache.spark.sql.functions.col): _*)
-            .distinct().limit(max + 1).count()
-          if (n > max) sys.error(s"Dynamic partition INSERT into $tbl " +
-            s"would create at least $n partitions, which is more than " +
-            s"$capName=$max")
-        }
-        val view = s"graft_dyncap_${dynCapSeq.incrementAndGet()}"
-        staged.createOrReplaceTempView(view)
-        try Some(execInsertStmt(spark,
-          s"INSERT $mode TABLE $tbl PARTITION ($part) SELECT * FROM $view"))
-        finally spark.catalog.dropTempView(view)
-      } finally graft.tools.Checkpoints.release(staged)
-    case _ => None
-  }
-
-  /** spark.sql with the Hive implicit-cast retry: on CANNOT_SAFELY_CAST
-    * the statement re-runs on a CLONED session under the LEGACY store
-    * policy so the permissive cast is truly statement-scoped — flipping
-    * the shared session conf would let a concurrently-executing statement
-    * momentarily run with silently-nulling casts. The clone shares the
-    * external catalog (the INSERT lands in the same tables) and snapshots
-    * temp views. */
-  private def execInsertStmt(spark: SparkSession,
-      stmt: String): org.apache.spark.sql.DataFrame =
-    try spark.sql(stmt)
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getMessage.contains("CANNOT_SAFELY_CAST") =>
-        val cloned = org.apache.spark.sql.GraftSessionClone.cloneSession(spark)
-        cloned.conf.set("spark.sql.storeAssignmentPolicy", "LEGACY")
-        val res = cloned.sql(stmt)
-        // the clone invalidated ITS relation cache; refresh the target in
-        // the caller's session too so it doesn't serve a stale file list
-        // (insertTargetRe also covers INSERT INTO t VALUES (...) — the
-        // SELECT-only branch regex would miss the VALUES form)
-        stmt match {
-          case insertTargetRe(target) =>
-            try { spark.sql(s"REFRESH TABLE $target"): Unit }
-            catch { case _: Exception => () }
-          case _ => ()
-        }
-        res
-      // Hive TRUNCATES a char/varchar value longer than the declared
-      // length on write (HiveChar/HiveVarchar setValue enforce maxLength;
-      // alter_char2.q inserts a long string into char(10) and reads the
-      // 10-char prefix) — Spark refuses with EXCEED_LIMIT_LENGTH. Retry
-      // the statement with the source projected through substr() at each
-      // over-length char/varchar target column.
-      case e: Throwable if {
-        def chain(t: Throwable, d: Int): Boolean = t != null && d < 8 &&
-          (Option(t.getMessage).exists(_.contains("EXCEED_LIMIT_LENGTH")) ||
-            chain(t.getCause, d + 1))
-        chain(e, 0) && !stmt.contains("graft_trunc_")
-      } => truncatingInsert(spark, stmt).getOrElse(throw e)
-    }
-
-  /** Re-issue an insert with char/varchar columns truncated to their
-    * declared lengths (Hive write semantics). None when the statement
-    * shape or target schema gives nothing to truncate. */
-  private def truncatingInsert(spark: SparkSession,
-      stmt: String): Option[org.apache.spark.sql.DataFrame] = {
-    import org.apache.spark.sql.catalyst.util.CharVarcharUtils
-    val (mode, tbl, part, source) = stmt match {
-      case insertBranchRe(m, t, p, sel) => (m, t, p, sel)
-      case insertValuesRe(m, t, p, vals) =>
-        (m, t, p, s"SELECT * FROM (VALUES $vals)")
-      case _ => return None
-    }
-    val meta = try spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(tbl))
-      catch { case _: Exception => return None }
-    val partCols = meta.partitionColumnNames
-    val dataFields = meta.schema.fields.filterNot(f =>
-      partCols.exists(_.equalsIgnoreCase(f.name)))
-    val limits: Seq[Option[Int]] = dataFields.toSeq.map { f =>
-      CharVarcharUtils.getRawType(f.metadata).collect {
-        case org.apache.spark.sql.types.CharType(n) => n
-        case org.apache.spark.sql.types.VarcharType(n) => n
-      }
-    }
-    if (!limits.exists(_.isDefined)) return None
-    val src = spark.sql(source)
-    // source outputs map positionally: data columns first, then any
-    // DYNAMIC partition columns (never truncated)
-    val proj = src.columns.zipWithIndex.map { case (c, i) =>
-      limits.lift(i).flatten match {
-        case Some(n) => s"substr(`$c`, 1, $n) AS `$c`"
-        case None => s"`$c`"
-      }
-    }
-    val view = s"graft_trunc_${dynCapSeq.incrementAndGet()}"
-    src.createOrReplaceTempView(view)
-    try {
-      val partClause = Option(part).map(p => s" PARTITION ($p)").getOrElse("")
-      Some(spark.sql(s"INSERT $mode TABLE $tbl$partClause " +
-        s"SELECT ${proj.mkString(", ")} FROM $view"))
-    } finally spark.catalog.dropTempView(view): Unit
-  }
-
-  private def insertWithHiveCasts0(spark: SparkSession,
-      stmt: String): org.apache.spark.sql.DataFrame = {
-    dynPartGuards(spark, stmt)
-    val mergeSnap = smallFileMergeSnapshot(spark, stmt)
-    def run(): org.apache.spark.sql.DataFrame =
-      cappedDynInsert(spark, stmt).getOrElse(execInsertStmt(spark, stmt))
-    val out = try run()
-    catch {
-      // Hive allows INSERT OVERWRITE of a table that the query also reads
-      // (MoveTask stages the result before the move — union22.q rebuilds a
-      // partition from the table itself). Spark rejects the plan outright,
-      // so stage it: materialize the SELECT with a TRACKED checkpoint
-      // (breaking lineage to the target's scan; a bare localCheckpoint +
-      // Dataset.unpersist would leak its storage blocks — the round-4
-      // class), turn a static PARTITION spec into trailing constant
-      // columns, and insertInto under dynamic-overwrite mode. Living here
-      // gives EVERY insert route the fallback — FROM-first branches
-      // included, not just the plain statement shape.
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getMessage.contains("UNSUPPORTED_OVERWRITE") =>
-        stmt match {
-          case insertBranchRe(mode, target, partSpec, select)
-              if mode.equalsIgnoreCase("OVERWRITE") =>
-            val staticCols = Option(partSpec).toSeq.flatMap(
-              _.split(",").toSeq.filter(_.contains("=")).map { kv =>
-                val Array(_, v) = kv.split("=", 2).map(_.trim); v
-              })
-            val sel = if (staticCols.isEmpty) select
-              else s"SELECT q.*, ${staticCols.mkString(", ")} FROM ($select) q"
-            val staged = graft.tools.Checkpoints.local(spark.sql(sel))
-            try staged.write.mode("overwrite").insertInto(target)
-            finally graft.tools.Checkpoints.release(staged)
-            spark.sql(s"REFRESH TABLE $target")
-            spark.emptyDataFrame
-          case _ => throw e
-        }
-    }
-    mergeSnap.foreach { case (tbl, before) =>
-      autoMergeSmallFiles(spark, tbl, stmt, before) }
-    // hive.stats.autogather (HiveConf.java:1184, default true there —
-    // opt-in here, Spark parity): Hive gathers basic table stats as part
-    // of every INSERT's job; the Spark equivalent is an ANALYZE after the
-    // write, so the refreshed rowCount/sizeInBytes feed broadcast and
-    // CBO decisions without a manual ANALYZE. COST CAVEAT (why opt-in,
-    // not default-on like Hive): the reference reads its counts from the
-    // write job's own counters at O(job) cost, while ANALYZE rescans the
-    // table — O(table) per statement. Suitable for rebuild-style
-    // pipelines; a high-frequency small-append workload should ANALYZE
-    // on its own cadence instead.
-    if (spark.conf.getOption("hive.stats.autogather")
-        .exists(_.trim.equalsIgnoreCase("true")))
-      stmt match {
-        case insertTargetRe(tbl) =>
-          // stats gathering is a maintenance task: it must work under
-          // strict mode too (Hive's autogather reads job counters, never
-          // a checked query), so the internal count runs suspended
-          try graft.plans.StrictChecks.suspended(spark) {
-            spark.sql(s"ANALYZE TABLE $tbl COMPUTE STATISTICS"): Unit
-          } catch { case _: Exception => () } // temp-view target etc.
-        case _ => ()
-      }
-    out
-  }
-
-  /** Multi-insert SQL text — `FROM src INSERT OVERWRITE TABLE t1 SELECT ...
-    * INSERT INTO t2 SELECT ...` (reference parse/SemanticAnalyzer.java:8711
-    * genBodyPlan: ONE scan of the shared source feeds every destination).
-    * Spark's parser rejects the FROM-first multi-destination form, so this
-    * materializes the source once (persisted, like MultiInsert.fanOut),
-    * registers it as a view under the source's own alias, and rewrites each
-    * branch into a normal single-destination INSERT over that view. The
-    * source is computed once regardless of destination count — at 100 TB
-    * the re-scan this avoids is the whole point of the statement.
-    */
-  private case class MiBranch(mode: String, tbl: String, partSql: String,
-                              body: String, colList: String = "") {
-    /** Inject a FROM clause into the branch SELECT, before the first
-      * top-level post-SELECT clause keyword. LATERAL first: a per-branch
-      * LATERAL VIEW attaches to the FROM, so the injected clause must land
-      * before it (multi_insert_lateral_view.q shape). */
-    def selectSql(fromClause: String): String = {
-      // MAP/REDUCE transform sugar (input33.q: INSERT ... REDUCE cols
-      // USING ...): SemanticAnalyzer treats them as SELECT TRANSFORM
-      // synonyms, so convert — the column list runs to the first
-      // top-level ROW FORMAT / USING — and re-enter for FROM injection
-      val head = body.trim.takeWhile(!_.isWhitespace).toUpperCase
-      if (head == "MAP" || head == "REDUCE") {
-        val afterKw = body.trim.substring(head.length)
-        val cut = Seq("ROW", "USING")
-          .flatMap(k => Engine.topLevel(afterKw, k).headOption).minOption
-        cut match {
-          case Some(p) =>
-            val cols = afterKw.substring(0, p).trim
-            return this.copy(body =
-              s"SELECT TRANSFORM($cols) ${afterKw.substring(p)}")
-              .selectSql(fromClause)
-          case None => return s"$fromClause $body" // malformed: parser reports
-        }
-      }
-      val cut = Seq("LATERAL", "WHERE", "GROUP", "HAVING", "ORDER",
-          "SORT", "DISTRIBUTE", "CLUSTER", "LIMIT")
-        .flatMap(k => Engine.topLevel(body, k).headOption).minOption
-      cut match {
-        case Some(p) => body.substring(0, p) + s" $fromClause " + body.substring(p)
-        case None    => s"$body $fromClause"
-      }
-    }
-    def insertPrefix: String = s"INSERT $mode TABLE $tbl$partSql$colList"
-  }
-
-  private def multiInsert(spark: SparkSession, stmt: String): org.apache.spark.sql.DataFrame = {
-    val t = stmt.trim.stripSuffix(";").trim
-    val inserts = topLevel(t, "INSERT")
-    val src = t.substring("FROM".length, inserts.head).trim
-    val branches = inserts.zipAll(inserts.drop(1), 0, t.length).map {
-      case (a, b) => t.substring(a, b)
-    }.map {
-      case insertBranchRe(mode, tbl, part, body) =>
-        MiBranch(mode, tbl,
-          Option(part).map(p => s" PARTITION ($p)").getOrElse(""), body)
-      // MAP/REDUCE branch bodies (TRANSFORM sugar, SemanticAnalyzer
-      // treats all three identically — input33.q's INSERT ... REDUCE)
-      case insertTransformBranchRe(mode, tbl, part, body) =>
-        MiBranch(mode, tbl,
-          Option(part).map(p => s" PARTITION ($p)").getOrElse(""), body)
-      // target column list (HIVE-9481, insert_into_with_schema.q):
-      // unnamed columns fill NULL — Spark's native column-list insert
-      // handles that once the branch is rewritten standalone
-      case insertSchemaBranchRe(mode, tbl, cols, body) =>
-        MiBranch(mode, tbl, "", body, " " + cols.trim)
-      case seg => sys.error(s"unsupported multi-insert branch: $seg")
-    }
-    // one output entity per statement (SemanticAnalyzer ErrorMsg 10087,
-    // duplicate_insert1/2.q): the same table — or the same table+partition
-    // — may not appear as two destinations; branch order would silently
-    // decide which write survives
-    val dupTargets = branches.groupBy(b => (b.tbl.toLowerCase,
-        b.partSql.toLowerCase.replaceAll("[\\s'\"]", "")))
-      .filter(_._2.lengthCompare(1) > 0).keys.map(_._1)
-    require(dupTargets.isEmpty,
-      s"The same output cannot be present multiple times: ${dupTargets.mkString(", ")}")
-    // A joined source (`FROM a JOIN b ON ...` / comma list) can't be
-    // collapsed into a SELECT * view: qualifiers would be lost and
-    // same-named columns collide.
-    val joined = topLevel(src, "JOIN").nonEmpty ||
-      splitAssignments(src).lengthCompare(1) > 0
-    if (branches.lengthCompare(1) == 0) {
-      // single destination (innerjoin.q's FROM-first INSERT): a plain
-      // statement rewrite, any source shape
-      insertWithHiveCasts(spark,
-        s"${branches.head.insertPrefix} ${branches.head.selectSql(s"FROM $src")}")
-      return spark.emptyDataFrame
-    }
-    if (joined) {
-      // several destinations over a joined source: genBodyPlan's
-      // single-snapshot contract means every branch must read the
-      // PRE-STATEMENT state — a branch that overwrites one of the joined
-      // tables must not feed later branches its own output. Materialize
-      // every branch result (eager checkpoint) BEFORE the first write.
-      val views = branches.zipWithIndex.map { case (b, i) =>
-        val snap = graft.tools.Checkpoints.local(
-          spark.sql(b.selectSql(s"FROM $src")))
-        val v = "graft_mi_snap_" + i + "_" +
-          java.util.UUID.randomUUID().toString.replace("-", "")
-        snap.createOrReplaceTempView(v)
-        (b, v, snap)
-      }
-      try views.foreach { case (b, v, _) =>
-        insertWithHiveCasts(spark, s"${b.insertPrefix} SELECT * FROM $v")
-      } finally views.foreach { case (_, v, snap) =>
-        spark.catalog.dropTempView(v)
-        graft.tools.Checkpoints.release(snap)
-      }
-      return spark.emptyDataFrame
-    }
-    // Simple shared source: compute it ONCE, persist, and feed every
-    // branch from the cached view (the reference's genBodyPlan shape — at
-    // 100 TB the re-scan this avoids is the whole point). The cached scan
-    // gets its own view name (so it never shadows — and on cleanup never
-    // drops — a user view of the same name), re-aliased in each branch
-    // back to the source's alias/table name so qualified column references
-    // in the branch SELECTs keep resolving.
-    val aliasRe = """(?is).*?(?:\)|[\w.]+)\s+(?:AS\s+)?(\w+)""".r
-    val simpleRe = """(?is)([\w.]+)""".r
-    val alias = src match {
-      case simpleRe(n)  => Some(n.split('.').last)
-      case aliasRe(a)   => Some(a)
-      case _            => None
-    }
-    // UUID-suffixed so two concurrent multi-insert statements on one
-    // session never collide on the shared-scan view
-    val view = "graft_mi_src_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    val fromClause = s"FROM $view" + alias.map(a => s" AS $a").getOrElse("")
-    val cached = spark.sql(s"SELECT * FROM $src")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    cached.createOrReplaceTempView(view)
-    try branches.foreach { b =>
-      insertWithHiveCasts(spark, s"${b.insertPrefix} ${b.selectSql(fromClause)}")
-    } finally {
-      spark.catalog.dropTempView(view)
-      cached.unpersist()
-    }
-    spark.emptyDataFrame
-  }
-
-  /** Split a SET clause on top-level commas only (commas inside function
-    * calls / CASE arms stay put). */
-  private def splitAssignments(s: String): Seq[String] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[String]
-    var depth = 0
-    var start = 0
-    var i = 0
-    var quote = '\u0000'
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (quote != '\u0000') {
-        if (c == '\\' && i + 1 < s.length) i += 1 // skip the escaped char
-        else if (c == quote) quote = '\u0000'
-      }
-      else c match {
-        case '\'' | '"' => quote = c
-        case '(' => depth += 1
-        case ')' => depth -= 1
-        case ',' if depth == 0 => out += s.substring(start, i); start = i + 1
-        case _ =>
-      }
-      i += 1
-    }
-    out += s.substring(start)
-    out.toSeq.map(_.trim).filter(_.nonEmpty)
-  }
-
-  /** LOAD DATA INPATH — LoadSemanticAnalyzer + MoveTask parity: files move
-    * into the table's (or partition's) directory byte-for-byte, no rewrite
-    * and no validation, then the table is refreshed (and partitions
-    * recovered when a PARTITION spec names the target subdir). Spark's
-    * native LOAD DATA only serves Hive-catalog tables; this serves the
-    * engine's own parquet tables through the same statement text.
-    */
-  /** ALTER TABLE ... RENAME TO with partition-location repair. Spark's
-    * InMemoryCatalog re-roots a MANAGED table's partition locations on
-    * rename but RE-ESCAPES the already-escaped path segments (a
-    * partition value with ':' stored as `test_part%3A` comes back as
-    * `test_part%253A`), so a renamed partitioned table silently reads
-    * EMPTY whenever a partition value needed escaping — the Hive
-    * metastore rewrites these correctly and alter3.q depends on it.
-    * After the native rename, every partition rooted under the table
-    * directory (old or new — custom-located partitions are untouched)
-    * gets its location RECOMPUTED from its spec exactly the way the
-    * write path built it, in one batched alterPartitions. */
-  private[graft] def renameWithPartitionFix(spark: SparkSession, from: String,
-      to: String): Unit = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    val cat = spark.sessionState.catalog
-    val fromId = spark.sessionState.sqlParser.parseTableIdentifier(from)
-    val oldMeta = cat.getTableMetadata(fromId)
-    // Hive routes renames by object kind (alter_view_failure9.q):
-    // ALTER TABLE on a view is refused toward the ALTER VIEW form
-    if (oldMeta.tableType ==
-        org.apache.spark.sql.catalyst.catalog.CatalogTableType.VIEW)
-      sys.error("To alter a view you need to use the ALTER VIEW command. " +
-        s"($from is a view)")
-    val oldPath = oldMeta.storage.locationUri.map(_.getPath.stripSuffix("/"))
-    // cross-DATABASE rename (HIVE-2943; alter_rename_table.q): Spark's
-    // SessionCatalog refuses when the databases differ, so the engine
-    // does the metastore-style move itself
-    locally {
-      val toIdX = spark.sessionState.sqlParser.parseTableIdentifier(to)
-      val fromDb = fromId.database.getOrElse(spark.catalog.currentDatabase)
-      val toDb = toIdX.database.getOrElse(fromDb)
-      if (!toDb.equalsIgnoreCase(fromDb)) {
-        renameAcrossDatabases(spark, fromId.copy(database = Some(fromDb)),
-          toIdX.copy(database = Some(toDb)), oldMeta)
-        operators.Auth.renameOwner(spark, fromDb, fromId.table,
-          toDb, toIdX.table)
-        return
-      }
-    }
-    spark.sql(s"ALTER TABLE $from RENAME TO $to")
-    // Spark requires same-database renames; qualify the new name with the
-    // source db when the statement left it implicit
-    val toId0 = spark.sessionState.sqlParser.parseTableIdentifier(to)
-    val toId = if (toId0.database.isDefined) toId0
-      else toId0.copy(database = fromId.database.orElse(
-        Some(spark.catalog.currentDatabase)))
-    // ownership follows the rename (Hive renames keep the owner in the
-    // metastore entry): without this the renamed table would have no
-    // owners-map entry, and the owner's implicit sql-std privileges on
-    // their own table (authorization_owner_actions.q flow) would vanish
-    operators.Auth.renameOwner(spark,
-      fromId.database.getOrElse(spark.catalog.currentDatabase), fromId.table,
-      toId0.database.orElse(fromId.database)
-        .getOrElse(spark.catalog.currentDatabase), toId0.table)
-    val newMeta = cat.getTableMetadata(toId)
-    if (newMeta.partitionColumnNames.isEmpty) return
-    val newRootUri = newMeta.location
-    val newPath = newRootUri.getPath.stripSuffix("/")
-    val cols = newMeta.partitionColumnNames
-    val moved = cat.listPartitions(toId).flatMap { p =>
-      p.storage.locationUri.flatMap { u =>
-        val dp = Option(u.getPath).getOrElse("").stripSuffix("/")
-        val underTableRoot = oldPath.exists(op =>
-          dp == op || dp.startsWith(op + "/")) ||
-          dp == newPath || dp.startsWith(newPath + "/")
-        if (!underTableRoot) None // custom-located partition: leave as-is
-        else {
-          val rel = cols.map { c =>
-            val v = p.spec.getOrElse(c,
-              p.spec.collectFirst { case (k, vv) if k.equalsIgnoreCase(c) => vv }
-                .getOrElse(sys.error(s"rename: partition spec missing $c")))
-            ExternalCatalogUtils.escapePathName(c) + "=" +
-              ExternalCatalogUtils.escapePathName(v)
-          }.mkString("/")
-          val fixed = new org.apache.hadoop.fs.Path(
-            new org.apache.hadoop.fs.Path(newRootUri), rel).toUri
-          if (fixed == u) None
-          else Some(p.copy(storage = p.storage.copy(locationUri = Some(fixed))))
-        }
-      }
-    }
-    if (moved.nonEmpty) cat.alterPartitions(toId, moved)
-  }
-
-  /** Cross-database ALTER TABLE ... RENAME TO (HIVE-2943;
-    * clientpositive/alter_rename_table.q): one directory rename into the
-    * target database's warehouse location plus a catalog entry re-create
-    * (partition entries re-rooted with the same escaping the write path
-    * uses) — no data rewrite, scale-free like the reference's metastore
-    * move. External tables keep their location; only the entry moves. */
-  private def renameAcrossDatabases(spark: SparkSession,
-      fromId: org.apache.spark.sql.catalyst.TableIdentifier,
-      toId: org.apache.spark.sql.catalyst.TableIdentifier,
-      oldMeta: org.apache.spark.sql.catalyst.catalog.CatalogTable): Unit = {
-    import org.apache.spark.sql.catalyst.catalog.{CatalogTableType, ExternalCatalogUtils}
-    import org.apache.hadoop.fs.Path
-    val cat = spark.sessionState.catalog
-    if (!cat.databaseExists(toId.database.get))
-      sys.error(s"Database ${toId.database.get} does not exist")
-    if (cat.tableExists(toId))
-      sys.error(s"Table ${toId.unquotedString} already exists")
-    val parts =
-      if (oldMeta.partitionColumnNames.nonEmpty) cat.listPartitions(fromId)
-      else Nil
-    val managed = oldMeta.tableType == CatalogTableType.MANAGED
-    val oldLoc = new Path(oldMeta.location)
-    val newLoc = if (managed) new Path(cat.defaultTablePath(toId)) else oldLoc
-    val fs = oldLoc.getFileSystem(spark.sessionState.newHadoopConf())
-    if (managed && fs.exists(oldLoc)) {
-      if (newLoc.getParent != null) fs.mkdirs(newLoc.getParent): Unit
-      if (!fs.rename(oldLoc, newLoc))
-        sys.error(s"rename: could not move $oldLoc to $newLoc")
-    }
-    // drop the OLD entry AFTER the move: the catalog's managed-dir
-    // delete is a no-op on the now-absent old path
-    cat.dropTable(fromId, ignoreIfNotExists = false, purge = false)
-    val newStorage =
-      if (managed) oldMeta.storage.copy(locationUri = Some(newLoc.toUri))
-      else oldMeta.storage
-    // the just-moved directory IS the new location — skip the
-    // managed-location-must-not-exist validation
-    cat.createTable(oldMeta.copy(identifier = toId, storage = newStorage),
-      ignoreIfExists = false, validateLocation = false)
-    if (parts.nonEmpty) {
-      val oldRootPath = oldLoc.toUri.getPath.stripSuffix("/")
-      val cols = oldMeta.partitionColumnNames
-      val newParts = parts.map { p =>
-        val under = p.storage.locationUri.exists { u =>
-          val d = Option(u.getPath).getOrElse("").stripSuffix("/")
-          d == oldRootPath || d.startsWith(oldRootPath + "/")
-        }
-        if (!under) p // custom-located partition: leave as-is
-        else {
-          val rel = cols.map { c =>
-            val v = p.spec.getOrElse(c,
-              p.spec.collectFirst { case (k, vv) if k.equalsIgnoreCase(c) => vv }
-                .getOrElse(sys.error(s"rename: partition spec missing $c")))
-            ExternalCatalogUtils.escapePathName(c) + "=" +
-              ExternalCatalogUtils.escapePathName(v)
-          }.mkString("/")
-          p.copy(storage = p.storage.copy(
-            locationUri = Some(new Path(newLoc, rel).toUri)))
-        }
-      }
-      cat.createPartitions(toId, newParts, ignoreIfExists = false)
-    }
-  }
-
-  private def loadData(spark: SparkSession, inpath: String, overwrite: Boolean,
-                       table: String, partSpec: Option[String]): Unit = {
-    import org.apache.hadoop.fs.{FileUtil, Path}
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val meta = spark.sessionState.catalog.getTableMetadata(ident)
-    // a VIEW has no storage to move files into — refuse with the
-    // reference's shape (clientnegative/load_view_failure.q) instead of
-    // letting CatalogTable.location throw its internal locationUri error
-    if (meta.tableType == org.apache.spark.sql.catalyst.catalog.CatalogTableType.VIEW)
-      sys.error(s"LOAD DATA into a view is not allowed: $table is a view")
-    // Hive's strict.checks.bucketing (default TRUE in the strict-checks
-    // line): LOAD is a raw file move, which cannot assign bucket ids —
-    // Spark reads the bucket id from the writer's file naming, so a
-    // loaded foreign file makes every bucketed read (SMB joins, bucket
-    // TABLESAMPLE) silently wrong. Refused by default, not opt-in.
-    if (meta.bucketSpec.isDefined &&
-        spark.conf.get("hive.strict.checks.bucketing", "true").trim
-          .equalsIgnoreCase("true"))
-      sys.error(s"LOAD DATA into bucketed table $table is not supported: " +
-        "a file move cannot preserve the bucket layout. Load into an " +
-        "intermediate table and INSERT ... SELECT (or set " +
-        "hive.strict.checks.bucketing=false to force)")
-    // LOAD is a blind file move, so a format mismatch surfaces only at
-    // the NEXT read as corruption — validate the incoming files' magic
-    // bytes against the table's declared format up front, as the
-    // reference does (clientnegative/load_wrong_fileformat.q: loading a
-    // text file into a SEQUENCEFILE table is refused)
-    // a provider of "hive" (or none) says nothing about the storage
-    // format — the table may be text/sequencefile/orc; resolve the real
-    // format from CatalogTable.storage's input format, and skip
-    // validation entirely when it can't be determined (never guess
-    // parquet and refuse a valid load)
-    val baseFormat: String = meta.provider.map(_.toLowerCase) match {
-      case Some(p) if p != "hive" => p
-      case _ => meta.storage.inputFormat.map(_.toLowerCase).collect {
-          case f if f.contains("sequencefile") => "graft-seq"
-          case f if f.contains("rcfile") => "graft-rcfile"
-          case f if f.contains("orc") => "orc"
-          case f if f.contains("parquet") => "parquet"
-          case f if f.contains("avro") => "avro"
-        }.getOrElse("unknown")
-    }
-    // a load aimed at a format-diverged partition validates against THAT
-    // partition's format, not the table-wide one
-    val declaredFormat: String = partSpec.flatMap { spec =>
-      graft.plans.HeteroPartitions.entriesOf(spark, table)
-        .find(_._1 == partSubdirLiteral(spark, table, spec)).map(_._2)
-    }.getOrElse(baseFormat)
-    val expectMagic: Option[(String, Array[Byte] => Boolean)] =
-      declaredFormat match {
-        case "parquet" => Some("parquet" -> (b => b.length >= 4 &&
-          b(0) == 'P' && b(1) == 'A' && b(2) == 'R' && b(3) == '1'))
-        case "orc" => Some("ORC" -> (b => b.length >= 3 &&
-          b(0) == 'O' && b(1) == 'R' && b(2) == 'C'))
-        case "avro" | "graft-avro" => Some("Avro" -> (b => b.length >= 4 &&
-          b(0) == 'O' && b(1) == 'b' && b(2) == 'j' && b(3) == 1))
-        case "graft-seq" => Some("SequenceFile" -> (b => b.length >= 3 &&
-          b(0) == 'S' && b(1) == 'E' && b(2) == 'Q'))
-        case "graft-rcfile" => Some("RCFile" -> (b => b.length >= 3 &&
-          ((b(0) == 'R' && b(1) == 'C' && b(2) == 'F') ||
-           (b(0) == 'S' && b(1) == 'E' && b(2) == 'Q'))))
-        case _ => None // text/csv/json accept any bytes
-      }
-    val tableLoc = new Path(meta.location)
-    // the destination subdir must spell values the way INSERT does
-    // (declared column case, path escaping, quote-aware split) — a raw
-    // spelling would create a SECOND directory for the same logical
-    // partition next to the escaped one INSERT writes
-    val dst = partSpec match {
-      case Some(spec) =>
-        new Path(tableLoc, partSubdirLiteral(spark, table, spec))
-      case None => tableLoc
-    }
-    val conf = spark.sparkContext.hadoopConfiguration
-    val srcFs = new Path(inpath).getFileSystem(conf)
-    val dstFs = dst.getFileSystem(conf)
-    val src = new Path(inpath)
-    val files =
-      if (srcFs.getFileStatus(src).isDirectory)
-        srcFs.listStatus(src).filter { st =>
-          val n = st.getPath.getName
-          // skip hidden/committer files (".crc", "_SUCCESS") like every
-          // other listing in the engine — a dot-file must neither be
-          // format-validated nor loaded
-          st.isFile && !n.startsWith("_") && !n.startsWith(".")
-        }.map(_.getPath)
-      else Array(src)
-    // magic-byte validation BEFORE any destructive step (the OVERWRITE
-    // delete below must never run for a load that is about to be refused)
-    expectMagic.foreach { case (fmtName, ok) =>
-      files.foreach { f =>
-        val in = srcFs.open(f)
-        val head = new Array[Byte](4)
-        // read() may legally return short — loop to 4 bytes or EOF
-        val n = try {
-          var got = 0
-          var r = 0
-          while (got < 4 && r >= 0) {
-            r = in.read(head, got, 4 - got)
-            if (r > 0) got += r
-          }
-          got
-        } finally in.close()
-        if (n < 4 || !ok(head))
-          sys.error(s"Wrong file format: ${f.getName} is not a $fmtName " +
-            s"file, but table $table is stored as $fmtName (reference " +
-            "LOAD semantics validate the file format before the move)")
-      }
-    }
-    dstFs.mkdirs(dst)
-    if (overwrite)
-      dstFs.listStatus(dst).filter(_.isFile).foreach(st => dstFs.delete(st.getPath, false))
-    files.foreach(f => FileUtil.copy(srcFs, f, dstFs, new Path(dst, f.getName), false, conf))
-    // graft DSv2 tables scan the directory layout directly (no catalog
-    // partition list) and reject MSCK as v2 tables
-    if (partSpec.nonEmpty && !tableFormat(spark, table).startsWith("graft-"))
-      spark.sql(s"MSCK REPAIR TABLE $table"): Unit
-    spark.sql(s"REFRESH TABLE $table")
-    // LOAD is a byte copy — the files may hold over-length char/varchar
-    // values the engine never clamped at write; mark the table so reads
-    // apply the Hive truncation (HiveBaseChar.enforceMaxLength applies
-    // at every read regardless of how the bytes arrived)
-    graft.plans.HiveSemantics.CharStripReads.stampNarrowedIfChar(spark, table)
-  }
-
-  // `tab TABLESAMPLE(BUCKET x OUT OF y ON cols) [alias]` — the reference's
-  // deterministic bucket-sampling text form (parse/FromClauseParser.g:154-166),
-  // which Spark's parser rejects (it only accepts the ON-less form, as a
-  // RANDOM fraction — different semantics).
-  private val bucketSampleRe =
-    ("""(?is)([\w.]+)\s+TABLESAMPLE\s*\(\s*BUCKET\s+(\d+)\s+OUT\s+OF\s+(\d+)""" +
-      """\s+ON\s+((?:[^()]+|\([^()]*\))+)\)(\s+(?:AS\s+)?(\w+))?""").r // ON may hold calls like rand()
-  private val sqlKeywords = Set("WHERE", "GROUP", "HAVING", "ORDER", "SORT",
-    "DISTRIBUTE", "CLUSTER", "LIMIT", "JOIN", "ON", "LEFT", "RIGHT", "FULL",
-    "INNER", "CROSS", "UNION", "INTERSECT", "EXCEPT", "SELECT", "FROM")
-
-  /** Rewrite every `TABLESAMPLE(BUCKET x OUT OF y ON cols)` in a statement
-    * into the deterministic bucket-membership filter
-    * `pmod(hash_hive(cols), y) = x-1` as an inline subquery (aliased back to
-    * the table name so qualified column references keep resolving).
-    *
-    * Bucket function parity: Hive buckets by `ObjectInspectorUtils.hashCode`
-    * — for integral columns the hash IS the value, multi-column combines as
-    * `31*h + next` — so the filter reproduces Hive's row-to-bucket
-    * assignment for integer sample columns (the only type the reference's
-    * own bucketed fixtures use; `ON rand()` rewrites to a fraction filter).
-    * At scale the rewrite keeps sampling a pure scan-side filter: no
-    * shuffle, pushdown-eligible, and on a table bucketed by the same
-    * columns it reads whole buckets.
-    */
-  private[graft] def rewriteBucketSample(stmt: String): String =
-    bucketSampleRe.replaceAllIn(stmt, m => {
-      val (tab, x, y) = (m.group(1), m.group(2).toInt, m.group(3).toInt)
-      val onExpr = m.group(4).trim
-      val aliasWord = Option(m.group(6))
-      val keepAlias = aliasWord.filter(a => !sqlKeywords.contains(a.toUpperCase))
-      val alias = keepAlias.getOrElse(tab.split('.').last)
-      // non-alias trailing word (e.g. WHERE) must survive the rewrite
-      val tail = if (keepAlias.isEmpty) Option(m.group(5)).getOrElse("") else ""
-      require(x >= 1 && x <= y, s"BUCKET $x OUT OF $y: x must be in [1, y]")
-      val pred =
-        if (onExpr.equalsIgnoreCase("rand()"))
-          s"rand() * $y < 1" // random bucket: fraction 1/y, like the reference
-        else {
-          // Hive buckets by (32-bit ObjectInspectorUtils.hashCode &
-          // Int.MaxValue) % y; the registered `hash` IS that exact chain
-          // (HiveHash, Engine.install), so use it instead of an unbounded
-          // BIGINT 31*a+b — which diverges on negative hashes (& masks
-          // the sign bit, pmod does not) and on 32-bit overflow
-          val h = s"hash(${splitAssignments(onExpr).mkString(", ")})"
-          s"(($h & 2147483647) % $y) = ${x - 1}"
-        }
-      java.util.regex.Matcher.quoteReplacement(
-        s"(SELECT * FROM $tab WHERE $pred) AS $alias$tail")
-    })
-
-  // ON-less `tab TABLESAMPLE(BUCKET x OUT OF y)` — the reference resolves
-  // the sample columns from the table's CLUSTERED BY spec
-  // (FromClauseParser.g + TableSampleDesc: "if columns are omitted, the
-  // bucketing columns are used"). Spark PARSES this form but as a RANDOM
-  // row fraction x/y — a silent semantics change for a migrating script on
-  // a bucketed table. Resolve the bucket columns from the catalog and
-  // rewrite to the same deterministic pmod filter as the ON form; a
-  // non-bucketed table falls through to Spark's native fraction sample.
-  private val bucketSampleNoOnRe =
-    """(?is)([\w.]+)\s+TABLESAMPLE\s*\(\s*BUCKET\s+(\d+)\s+OUT\s+OF\s+(\d+)\s*\)(\s+(?:AS\s+)?(\w+))?""".r
-
-  private[graft] def rewriteBucketSampleNoOn(spark: SparkSession, stmt: String): String =
-    bucketSampleNoOnRe.replaceAllIn(stmt, m => {
-      val (tab, x, y) = (m.group(1), m.group(2).toInt, m.group(3).toInt)
-      val bucketCols: Seq[String] = try {
-        val ident = spark.sessionState.sqlParser.parseTableIdentifier(tab)
-        spark.sessionState.catalog.getTableMetadata(ident)
-          .bucketSpec.map(_.bucketColumnNames).getOrElse(Seq.empty)
-      } catch { case scala.util.control.NonFatal(_) => Seq.empty }
-      if (bucketCols.isEmpty) java.util.regex.Matcher.quoteReplacement(m.matched)
-      else {
-        require(x >= 1 && x <= y, s"BUCKET $x OUT OF $y: x must be in [1, y]")
-        val aliasWord = Option(m.group(5))
-        val keepAlias = aliasWord.filter(a => !sqlKeywords.contains(a.toUpperCase))
-        val alias = keepAlias.getOrElse(tab.split('.').last)
-        val tail = if (keepAlias.isEmpty) Option(m.group(4)).getOrElse("") else ""
-        val h = s"hash(${bucketCols.mkString(", ")})"
-        java.util.regex.Matcher.quoteReplacement(
-          s"(SELECT * FROM $tab WHERE (($h & 2147483647) % $y) = ${x - 1}) AS $alias$tail")
-      }
-    })
-
-  // Hive test PTFs `noop`/`noopwithmap`/`noopstreaming`/
-  // `noopwithmapstreaming` (reference ql/src/test/.../udf/ptf/Noop.java,
-  // NoopWithMap.java — identity table functions whose PARTITION BY/ORDER
-  // BY clause only forces a reshuffle+sort stage). `FROM noop(ON src
-  // PARTITION BY p ORDER BY o)` has no Spark parse, so rewrite it to the
-  // semantically identical `(SELECT * FROM src DISTRIBUTE BY p SORT BY o)`
-  // — same partitioned-and-sorted physical shape, same rows.
-  private val ptfNoopRe = """(?i)\bnoop(?:withmap)?(?:streaming)?\s*\(""".r
-
-  private[graft] def rewritePtfNoop(stmt0: String): String = {
-    var stmt = stmt0
-    var m = ptfNoopRe.findFirstMatchIn(stmt)
-    while (m.isDefined) {
-      val open = m.get.end - 1 // index of '('
-      var depth = 0; var i = open
-      while (i < stmt.length && (depth != 0 || i == open)) {
-        stmt.charAt(i) match {
-          case '(' => depth += 1
-          case ')' => depth -= 1
-          case _ => ()
-        }
-        i += 1
-      }
-      require(depth == 0, s"unbalanced parens in PTF call: ${m.get.matched}")
-      val body0 = stmt.substring(open + 1, i - 1).trim
-      require(body0.toUpperCase.startsWith("ON"),
-        s"PTF call without ON clause: $body0")
-      val body = body0.substring(2).trim
-      // source: `(subquery) [alias]` or `table [alias]`, then clauses
-      val (src, rest) =
-        if (body.startsWith("(")) {
-          var d = 0; var j = 0
-          while (j < body.length && (d != 0 || j == 0)) {
-            body.charAt(j) match {
-              case '(' => d += 1
-              case ')' => d -= 1
-              case _ => ()
-            }
-            j += 1
-          }
-          (body.substring(0, j), body.substring(j))
-        } else {
-          val j = body.indexWhere(c => !(c.isLetterOrDigit || c == '_' || c == '.'))
-          if (j < 0) (body, "") else (body.substring(0, j), body.substring(j))
-        }
-      // optional alias word before PARTITION/ORDER/DISTRIBUTE/SORT
-      val aliasRe = """(?is)^\s*(\w+)\b(.*)""".r
-      val clauseWords = Set("PARTITION", "ORDER", "DISTRIBUTE", "SORT")
-      val (srcAlias, clauses0) = rest match {
-        case aliasRe(w, tail) if !clauseWords.contains(w.toUpperCase) =>
-          (" " + w, tail)
-        case other => ("", other)
-      }
-      val clauses = clauses0.trim
-        .replaceAll("(?i)\\bPARTITION\\s+BY\\b", "DISTRIBUTE BY")
-        .replaceAll("(?i)\\bORDER\\s+BY\\b", "SORT BY")
-      val defaultAlias = if (srcAlias.nonEmpty) srcAlias.trim
-        else if (!src.startsWith("(")) src.split('.').last
-        else "ptf"
-      // trailing alias after the PTF call (`from noop(...) abc`)?
-      val tailAliasRe = """(?is)^\s+(?:AS\s+)?(\w+)\b""".r
-      val afterCall = stmt.substring(i)
-      val keepTail = tailAliasRe.findFirstMatchIn(afterCall)
-        .map(_.group(1)).filter(a => !sqlKeywords.contains(a.toUpperCase))
-      val outerAlias = keepTail.getOrElse(defaultAlias)
-      val tailStart = keepTail match {
-        case Some(_) => i + tailAliasRe.findFirstMatchIn(afterCall).get.end
-        case None => i
-      }
-      val inner = s"(SELECT * FROM $src$srcAlias" +
-        (if (clauses.nonEmpty) s" $clauses" else "") + s") $outerAlias"
-      stmt = stmt.substring(0, m.get.start) + inner + stmt.substring(tailStart)
-      m = ptfNoopRe.findFirstMatchIn(stmt)
-    }
-    stmt
-  }
-
-  // `matchpath(ON src DISTRIBUTE BY p SORT BY s arg1('PAT'),
-  // arg2('SYM'), arg3(pred)[, ...], argN('result list'))` — the
-  // reference's MatchPath PTF invocation text (ptf_matchpath.q;
-  // udf/ptf/MatchPath.java reads the args POSITIONALLY: pattern, then
-  // alternating symbol-name/defining-predicate pairs, last = result
-  // expressions). The rewrite computes the PTF via
-  // operators.MatchPath.matchPathRows + selectExpr(result list),
-  // registers the result as a temp view, and splices the view name into
-  // the statement.
-  private val matchPathCallRe = """(?i)\bmatchpath\s*\(""".r
-  private val mpViews = new java.util.concurrent.atomic.AtomicInteger(0)
-
-  private def closeParen(s: String, open: Int): Int = {
-    var depth = 0; var i = open; var inQ = false
-    while (i < s.length && (depth != 0 || i == open || inQ)) {
-      s.charAt(i) match {
-        case '\'' => inQ = !inQ
-        case '(' if !inQ => depth += 1
-        case ')' if !inQ => depth -= 1
-        case _ => ()
-      }
-      i += 1
-    }
-    require(depth == 0 && !inQ, s"unbalanced parens in: ${s.substring(open).take(80)}")
-    i
-  }
-
-  private def stripQuotes(s: String): String = {
-    val t = s.trim
-    if ((t.startsWith("'") && t.endsWith("'")) ||
-        (t.startsWith("\"") && t.endsWith("\"")))
-      t.substring(1, t.length - 1)
-    else t
-  }
-
-  private[graft] def rewriteMatchPath(spark: SparkSession, stmt0: String): String = {
-    import org.apache.spark.sql.functions.expr
-    var stmt = stmt0
-    var m = matchPathCallRe.findFirstMatchIn(stmt)
-    while (m.isDefined) {
-      val open = m.get.end - 1
-      val close = closeParen(stmt, open)
-      val body0 = stmt.substring(open + 1, close - 1).trim
-      require(body0.toUpperCase.startsWith("ON"),
-        s"matchpath without ON clause: ${body0.take(60)}")
-      val body = body0.substring(2).trim
-      val (src, rest) =
-        if (body.startsWith("(")) {
-          val j = closeParen(body, 0); (body.substring(0, j), body.substring(j))
-        } else {
-          val j = body.indexWhere(c => !(c.isLetterOrDigit || c == '_' || c == '.'))
-          if (j < 0) (body, "") else (body.substring(0, j), body.substring(j))
-        }
-      val clauseRe =
-        ("""(?is)^\s*(?:DISTRIBUTE|PARTITION)\s+BY\s+(.*?)""" +
-          """\s+(?:SORT|ORDER)\s+BY\s+(.*?)\s*(\w+\s*\(.*)$""").r
-      val (distTxt, sortTxt, argsTxt) = rest.trim match {
-        case clauseRe(d, s, a) => (d, s, a)
-        case other => throw new IllegalArgumentException(
-          s"matchpath needs DISTRIBUTE BY ... SORT BY ... args, got: ${other.take(80)}")
-      }
-      // positional arg segments: name( ... ) separated by optional commas
-      val args = scala.collection.mutable.ArrayBuffer.empty[String]
-      var p = 0
-      val argOpenRe = """(?s)\s*,?\s*\w+\s*\(""".r
-      while (p < argsTxt.length) {
-        argOpenRe.findPrefixMatchOf(argsTxt.substring(p)) match {
-          case Some(am) =>
-            val aOpen = p + am.end - 1
-            val aClose = closeParen(argsTxt, aOpen)
-            args += argsTxt.substring(aOpen + 1, aClose - 1).trim
-            p = aClose
-          case None => p = argsTxt.length // trailing whitespace/newlines
-        }
-      }
-      require(args.size >= 4 && args.size % 2 == 0,
-        s"matchpath expects pattern, (symbol, predicate) pairs and a result list; got ${args.size} args")
-      val pattern = stripQuotes(args.head)
-      val resultList = stripQuotes(args.last)
-      val symbols = args.slice(1, args.size - 1).grouped(2).map { pair =>
-        (stripQuotes(pair(0)), expr(pair(1)))
-      }.toSeq
-      val srcDf = spark.sql(s"SELECT * FROM $src")
-      val partCols = splitAssignments(distTxt).map(c => expr(c.trim))
-      val sortCols = splitAssignments(sortTxt).map { c =>
-        val t = c.trim; val up = t.toUpperCase
-        if (up.endsWith(" DESC")) expr(t.dropRight(5)).desc
-        else if (up.endsWith(" ASC")) expr(t.dropRight(4)).asc
-        else expr(t)
-      }
-      val out = graft.operators.MatchPath
-        .matchPathRows(spark, srcDf, partCols, sortCols, pattern, symbols)
-        .selectExpr(splitAssignments(resultList).map(_.trim): _*)
-      val view = s"graft_matchpath_${mpViews.incrementAndGet()}"
-      out.createOrReplaceTempView(view)
-      stmt = stmt.substring(0, m.get.start) + view + stmt.substring(close)
-      m = matchPathCallRe.findFirstMatchIn(stmt)
-    }
-    stmt
-  }
-
-  /** Hive virtual columns (reference
-    * ql/src/java/org/apache/hadoop/hive/ql/metadata/VirtualColumn.java)
-    * mapped onto Spark equivalents as a statement-text rewrite:
-    * INPUT__FILE__NAME → input_file_name(), BLOCK__OFFSET__INSIDE__FILE →
-    * input_file_block_start() (block granularity — the reference also
-    * reports block, not row, offsets for columnar formats; unlike
-    * _metadata.file_block_start this resolves through temp views),
-    * GROUPING__ID → grouping_id() (bit order matches the reference's
-    * post-HIVE-16102 standard semantics: leftmost group-by column is the
-    * most significant bit). ROW__ID is deliberately absent: the CoW DML
-    * engine (operators/Acid.scala) has no ACID row ids by design.
-    *
-    * A table-alias qualifier (`t3.BLOCK__OFFSET__INSIDE__FILE`, the shape
-    * join_vc.q exercises) keeps Hive's per-TABLE semantics: the function
-    * replacements are row-scoped and Spark rejects them outright in a
-    * multi-source query (MULTI_SOURCES_UNSUPPORTED_FOR_EXPRESSION), so a
-    * qualified vcol is instead pushed into the qualifying table's own FROM
-    * entry — `FROM tbl t3` becomes a subquery projecting the vcol under an
-    * internal name, and `t3.VCOL` rewrites to that column. This is exactly
-    * where Hive computes the value (the table's TableScanOperator row
-    * context), so the vcol is well-defined on every side of a join.
-    */
-  private[graft] def rewriteVirtualColumns(stmt: String): String = {
-    val scanVcols = Map(
-      "INPUT__FILE__NAME" -> ("input_file_name()", "graft_vc_file"),
-      "BLOCK__OFFSET__INSIDE__FILE" -> ("input_file_block_start()", "graft_vc_off"))
-    val qualRe = """\b([A-Za-z_][A-Za-z0-9_]*)\.(INPUT__FILE__NAME|BLOCK__OFFSET__INSIDE__FILE)\b""".r
-    var s = stmt
-    // alias-qualified scan vcols: rewrite the alias's FROM entry once per
-    // alias, then repoint every qualified use at the projected column
-    val byAlias = qualRe.findAllMatchIn(s)
-      .map(m => (m.group(1), m.group(2))).toSeq.distinct.groupBy(_._1)
-    for ((alias, uses) <- byAlias) {
-      val proj = uses.map { case (_, v) =>
-        val (fn, name) = scanVcols(v); s"$fn AS $name"
-      }.mkString(", ")
-      val fromRe = ("(?i)\\b(FROM|JOIN|,)(\\s+)([A-Za-z_][\\w.]*)\\s+(?:AS\\s+)?" +
-        java.util.regex.Pattern.quote(alias) + "\\b").r
-      fromRe.findFirstMatchIn(s) match {
-        case Some(m) =>
-          s = s.substring(0, m.start) +
-            s"${m.group(1)}${m.group(2)}(SELECT *, $proj FROM ${m.group(3)}) $alias" +
-            s.substring(m.end)
-          for ((_, v) <- uses)
-            s = s.replaceAll("\\b" + alias + "\\." + v + "\\b",
-              alias + "." + scanVcols(v)._2)
-        case None => // alias not a plain table ref — fall through to bare form
-      }
-    }
-    s.replaceAll("\\b(?:[A-Za-z_][A-Za-z0-9_]*\\.)?INPUT__FILE__NAME\\b",
-        "input_file_name()")
-      .replaceAll("\\b(?:[A-Za-z_][A-Za-z0-9_]*\\.)?BLOCK__OFFSET__INSIDE__FILE\\b",
-        "input_file_block_start()")
-      .replaceAll("\\b(?:[A-Za-z_][A-Za-z0-9_]*\\.)?GROUPING__ID\\b",
-        "grouping_id()")
-  }
-
-  /** Decode a Hive delimiter literal: `\t`/`\n`/`\r`, `\\` (ESCAPED BY
-    * '\\' means ONE backslash — create_escape.q), octal `\001`, unicode
-    * `\uXXXX` (HIVE-4618, unicode_notation.q), else the raw text. */
-  private def delimChar(s: String): String = s match {
-    case "\\t" => "\t"
-    case "\\n" => "\n"
-    case "\\r" => "\r"
-    case "\\\\" => "\\"
-    case uni if uni.matches("""\\u[0-9a-fA-F]{4}""") =>
-      Integer.parseInt(uni.substring(2), 16).toChar.toString
-    case oct if oct.matches("""\\[0-7]{1,3}""") =>
-      Integer.parseInt(oct.substring(1), 8).toChar.toString
-    case other => other
-  }
-
-  private val storedAsRe = """(?is)\s*STORED\s+AS\s+(\w+)\s*""".r
-  // STORED AS INPUTFORMAT 'cls' OUTPUTFORMAT 'cls' (HiveParser
-  // tableFileFormat's explicit-class branch, custom_input_output_format.q)
-  // — the standard Hive IO class pairs map onto their format keyword;
-  // unknown classes leave the statement untouched (loud native error
-  // beats silently picking a wrong format)
-  private val storedAsIORe =
-    """(?is)\s*STORED\s+AS\s+INPUTFORMAT\s+'([^']+)'\s+OUTPUTFORMAT\s+'([^']+)'\s*""".r
-  private def mapStoredAsIO(s: String): String =
-    storedAsIORe.replaceAllIn(s, m => {
-      // the pair must MATCH: a mixed in/out pair (reads seq, writes text)
-      // has no single-format equivalent — leave it for the loud native
-      // error rather than silently writing the wrong format
-      val kw = (m.group(1).split('.').last, m.group(2).split('.').last) match {
-        case ("SequenceFileInputFormat", "HiveSequenceFileOutputFormat") =>
-          Some("SEQUENCEFILE")
-        case ("TextInputFormat", "HiveIgnoreKeyTextOutputFormat") =>
-          Some("TEXTFILE")
-        case ("OrcInputFormat", "OrcOutputFormat") => Some("ORC")
-        case ("MapredParquetInputFormat", "MapredParquetOutputFormat") =>
-          Some("PARQUET")
-        case ("AvroContainerInputFormat", "AvroContainerOutputFormat") =>
-          Some("AVRO")
-        case ("RCFileInputFormat", "RCFileOutputFormat") => Some("RCFILE")
-        case _ => None
-      }
-      scala.util.matching.Regex.quoteReplacement(
-        kw.map(k => s" STORED AS $k ").getOrElse(m.matched))
-    })
-  // SKEWED BY (c1, c2) ON ((v1, v2), (v3, v4)) [STORED AS DIRECTORIES] —
-  // the ON list holds bare values or parenthesized tuples (one level)
-  private val skewedByRe =
-    ("""(?is)\s*SKEWED\s+BY\s*\([^)]*\)\s*ON\s*""" +
-      """\((?:[^()]|\([^()]*\))*\)(?:\s+STORED\s+AS\s+DIRECTORIES)?\s*""").r
-  private val rowFormatRe =
-    """(?is)\s*ROW\s+FORMAT\s+DELIMITED((?:\s+(?:FIELDS\s+TERMINATED\s+BY|ESCAPED\s+BY|COLLECTION\s+ITEMS\s+TERMINATED\s+BY|MAP\s+KEYS\s+TERMINATED\s+BY|LINES\s+TERMINATED\s+BY|NULL\s+DEFINED\s+AS)\s+'[^']*')*)\s*""".r
-  private val rowFormatOptRe =
-    """(?is)(FIELDS\s+TERMINATED\s+BY|ESCAPED\s+BY|NULL\s+DEFINED\s+AS|COLLECTION\s+ITEMS\s+TERMINATED\s+BY|MAP\s+KEYS\s+TERMINATED\s+BY|LINES\s+TERMINATED\s+BY)\s+'([^']*)'""".r
-  // ROW FORMAT SERDE 'class' [WITH SERDEPROPERTIES ('k'='v', ...)] — the
-  // named-serde form; known classes map onto datasource providers
-  private val rowFormatSerdeRe =
-    """(?is)\s*ROW\s+FORMAT\s+SERDE\s+'([^']+)'(\s+WITH\s+SERDEPROPERTIES\s*\(([^)]*)\))?\s*""".r
-  private val serdePropRe = """'([^']*)'\s*=\s*'([^']*)'""".r
-
-  /** Rewrite legacy Hive `CREATE [EXTERNAL] TABLE ... [ROW FORMAT
-    * DELIMITED ...] STORED AS <fmt>` DDL text into Spark datasource DDL
-    * (`USING <provider> [OPTIONS (...)]`). This is the single most common
-    * statement in a migrating user's scripts (every clientpositive .q
-    * opens with one) and Spark without Hive catalog support rejects it
-    * outright (NOT_SUPPORTED_COMMAND_WITHOUT_HIVE_SUPPORT).
-    *
-    * Mapping (reference: LazySimpleSerDe defaults, serde2/lazy/
-    * LazySerDeParameters.java — field delim \001, NULL literal \N):
-    * TEXTFILE (+ ROW FORMAT DELIMITED opts) → csv with the Hive
-    * delimiters; PARQUET/ORC/AVRO/JSONFILE → the native providers.
-    * EXTERNAL drops (a datasource table with LOCATION is external).
-    * `USING` must sit right after the column list (Spark grammar), while
-    * Hive's format clauses sit after PARTITIONED/CLUSTERED — so the
-    * rewrite re-anchors the provider clause to the schema.
-    */
-  /** Hive windowing-spec dialect: `over(distribute by X sort by Y)` and
-    * `window w as (cluster by X)` (windowing.q throughout; PTFTranslator
-    * maps DISTRIBUTE/SORT/CLUSTER inside a window spec onto
-    * PARTITION/ORDER). Spark's parser accepts only the ANSI spelling, so
-    * the tokens are rewritten INSIDE window-spec parens only — query-tail
-    * DISTRIBUTE/SORT/CLUSTER BY (a different operator: shuffle+local
-    * sort) pass through untouched. A paren region qualifies when it
-    * directly follows the OVER keyword, or when it opens with a
-    * partition-ish token (a named `WINDOW w AS (...)` spec — no other
-    * SQL paren opens with DISTRIBUTE/SORT/CLUSTER/PARTITION BY).
-    */
-  /** Hive's script-transform default IO contract is TAB-delimited on both
-    * stdin and stdout (exec/TextRecordReader/Writer via LazySimpleSerDe
-    * with field.delim '\t'); Spark's no-serde transform defaults to
-    * \\u0001, which silently breaks field-positional scripts (`cut -f1`,
-    * `uniq -c | sed ...`). When a TRANSFORM(...) / MAP / REDUCE clause
-    * carries no explicit ROW FORMAT, inject `ROW FORMAT DELIMITED FIELDS
-    * TERMINATED BY '\t'` on the missing side(s) to restore the Hive
-    * default. Quote-aware; the higher-order `transform(arr, x -> ...)`
-    * and the `map(...)` constructor are skipped (no USING follows them).
-    */
-  private[graft] def rewriteTransformDelims(sql: String): String = {
-    val clause = " ROW FORMAT DELIMITED FIELDS TERMINATED BY '\\t' "
-    def isWordChar(c: Char) = c.isLetterOrDigit || c == '_'
-    // next non-ws index at/after i
-    def skipWs(s: String, i0: Int): Int = {
-      var i = i0; while (i < s.length && s.charAt(i).isWhitespace) i += 1; i
-    }
-    // upper-case word starting at i (empty if none)
-    def wordAt(s: String, i: Int): String = {
-      var j = i; while (j < s.length && isWordChar(s.charAt(j))) j += 1
-      s.substring(i, j).toUpperCase
-    }
-    // walk a balanced paren region starting at '(' (quote-aware); returns
-    // index just past the close
-    def walkParens(s: String, open: Int): Int = {
-      var depth = 0; var i = open; var q: Char = 0
-      while (i < s.length) {
-        val c = s.charAt(i)
-        if (q != 0) { if (c == q) q = 0 }
-        else c match {
-          case '\'' | '"' => q = c
-          case '(' => depth += 1
-          case ')' => depth -= 1; if (depth == 0) return i + 1
-          case _ => ()
-        }
-        i += 1
-      }
-      s.length
-    }
-    // walk a quoted string starting at the quote char
-    def walkString(s: String, open: Int): Int = {
-      val q = s.charAt(open); var i = open + 1
-      while (i < s.length && s.charAt(i) != q) i += 1
-      math.min(i + 1, s.length)
-    }
-    val sb = new StringBuilder(sql)
-    var i = 0
-    var quote: Char = 0
-    while (i < sb.length) {
-      val c = sb.charAt(i)
-      if (quote != 0) { if (c == quote) quote = 0; i += 1 }
-      else if (c == '\'' || c == '"') { quote = c; i += 1 }
-      else if (isWordChar(c) && (i == 0 || (!isWordChar(sb.charAt(i - 1)) &&
-               sb.charAt(i - 1) != '.'))) {
-        val w = wordAt(sb.toString, i)
-        val kwEnd = i + w.length
-        if (w == "TRANSFORM" || w == "MAP" || w == "REDUCE") {
-          val s = sb.toString
-          // argument region: TRANSFORM has parens; MAP/REDUCE a bare list
-          // (a '(' directly after MAP is the map() constructor — skip)
-          val afterKw = skipWs(s, kwEnd)
-          val argsEnd =
-            if (afterKw < s.length && s.charAt(afterKw) == '(')
-              if (w == "TRANSFORM") walkParens(s, afterKw) else -1
-            else if (w == "TRANSFORM") -1
-            else afterKw // MAP/REDUCE: insertion points anchor on USING
-          if (argsEnd >= 0) {
-            // find top-level USING ahead (script form); bail at ';'
-            var j = argsEnd; var usingAt = -1; var q2: Char = 0
-            while (j < s.length && usingAt < 0) {
-              val ch = s.charAt(j)
-              if (q2 != 0) { if (ch == q2) q2 = 0; j += 1 }
-              else if (ch == '\'' || ch == '"') { q2 = ch; j += 1 }
-              else if (ch == '(') j = walkParens(s, j)
-              else if (isWordChar(ch) && !isWordChar(s.charAt(j - 1))) {
-                val w2 = wordAt(s, j)
-                if (w2 == "USING") usingAt = j
-                // a new query block before USING → not a script transform
-                else if (w2 == "SELECT" || w2 == "FROM" || w2 == "WHERE") j = s.length
-                else j += w2.length.max(1)
-              } else j += 1
-            }
-            if (usingAt >= 0) {
-              val between = s.substring(argsEnd, usingAt)
-              val hasInFormat = between.matches("(?is).*\\bROW\\s+FORMAT\\b.*")
-              // command string after USING
-              val cmdStart = skipWs(s, usingAt + "USING".length)
-              if (cmdStart < s.length &&
-                  (s.charAt(cmdStart) == '\'' || s.charAt(cmdStart) == '"')) {
-                val cmdEnd = walkString(s, cmdStart)
-                // optional AS list
-                var asEnd = cmdEnd
-                val afterCmd = skipWs(s, cmdEnd)
-                if (wordAt(s, afterCmd) == "AS") {
-                  val afterAs = skipWs(s, afterCmd + 2)
-                  if (afterAs < s.length && s.charAt(afterAs) == '(')
-                    asEnd = walkParens(s, afterAs)
-                  else {
-                    // bare ident list: ident (, ident)*
-                    var k = afterAs
-                    var done = false
-                    while (!done) {
-                      var e = k
-                      while (e < s.length && isWordChar(s.charAt(e))) e += 1
-                      val nxt = skipWs(s, e)
-                      if (nxt < s.length && s.charAt(nxt) == ',') k = skipWs(s, nxt + 1)
-                      else { asEnd = e; done = true }
-                    }
-                  }
-                }
-                val tail = wordAt(s, skipWs(s, asEnd))
-                val hasOutFormat = tail == "ROW" || tail == "RECORDREADER"
-                // apply edits back-to-front so offsets stay valid
-                if (!hasOutFormat) sb.insert(asEnd, clause)
-                if (!hasInFormat) sb.insert(usingAt, clause)
-                i = asEnd +
-                  (if (!hasOutFormat) clause.length else 0) +
-                  (if (!hasInFormat) clause.length else 0)
-              } else i = kwEnd
-            } else i = kwEnd
-          } else i = kwEnd
-        } else i = kwEnd
-      } else i += 1
-    }
-    sb.toString
-  }
-
-  private[graft] def rewriteWindowDialect(sql: String): String = {
-    val specStart =
-      """(?is)\s*(distribute|cluster|sort|partition|order)\s+by\b.*""".r
-    def fix(inner: String): String = inner
-      .replaceAll("(?i)\\bdistribute\\s+by\\b", "partition by")
-      .replaceAll("(?i)\\bcluster\\s+by\\b", "partition by")
-      .replaceAll("(?i)\\bsort\\s+by\\b", "order by")
-    val sb = new StringBuilder
-    var i = 0
-    while (i < sql.length) {
-      val c = sql.charAt(i)
-      if (c == '(') {
-        // the word before the paren, for the OVER( test
-        var k = i - 1
-        while (k >= 0 && sql.charAt(k).isWhitespace) k -= 1
-        val we = k + 1
-        while (k >= 0 && (sql.charAt(k).isLetterOrDigit || sql.charAt(k) == '_')) k -= 1
-        val prevWord = sql.substring(k + 1, we).toLowerCase
-        // matching close paren, quote-aware
-        var depth = 0; var j = i; var inStr: Char = 0
-        while (j < sql.length && (depth != 0 || j == i)) {
-          val ch = sql.charAt(j)
-          if (inStr != 0) { if (ch == inStr) inStr = 0 }
-          else ch match {
-            case '\'' | '"' => inStr = ch
-            case '(' => depth += 1
-            case ')' => depth -= 1
-            case _ => ()
-          }
-          j += 1
-        }
-        val inner = sql.substring(i + 1, j - 1)
-        if (prevWord == "over" || specStart.pattern.matcher(inner).matches()) {
-          sb.append('(').append(fix(inner)).append(')')
-          i = j
-        } else { sb.append(c); i += 1 } // keep scanning inside
-      } else { sb.append(c); i += 1 }
-    }
-    sb.toString
-  }
-
-  /** `UNIONTYPE<T0, T1, ...>` column DDL (HiveParser.g:2050,
-    * serde UnionTypeInfo) → the engine's documented union shim shape
-    * (functions/UnionTypeShim.scala): `STRUCT<tag:INT, field0:T0, ...>`
-    * with exactly the tag'th field non-null. Bracket-aware — member
-    * types may nest generics (`UNIONTYPE<INT, MAP<STRING,INT>>`) and
-    * unions may nest unions.
-    */
-  private[graft] def rewriteUnionType(stmt: String): String = {
-    val up = stmt.toUpperCase
-    var idx = up.indexOf("UNIONTYPE")
-    if (idx < 0) return stmt
-    val sb = new StringBuilder
-    var pos = 0
-    while (idx >= 0) {
-      val boundary = idx == 0 || !Character.isLetterOrDigit(stmt.charAt(idx - 1))
-      val after = idx + "UNIONTYPE".length
-      val lt = stmt.indexWhere(!_.isWhitespace, after)
-      if (!boundary || lt < 0 || stmt.charAt(lt) != '<') {
-        sb.append(stmt.substring(pos, after)); pos = after
-      } else {
-        sb.append(stmt.substring(pos, idx))
-        var depth = 0; var i = lt
-        while (i < stmt.length && (depth != 0 || i == lt)) {
-          stmt.charAt(i) match {
-            case '<' => depth += 1
-            case '>' => depth -= 1
-            case _ => ()
-          }
-          i += 1
-        }
-        val inner = stmt.substring(lt + 1, i - 1)
-        // split member types on TOP-LEVEL commas only (generics + decimal
-        // precision commas sit inside <> / () nesting)
-        val parts = scala.collection.mutable.ArrayBuffer.empty[String]
-        var d = 0; var start = 0
-        inner.zipWithIndex.foreach { case (c, j) => c match {
-          case '<' | '(' => d += 1
-          case '>' | ')' => d -= 1
-          case ',' if d == 0 => parts += inner.substring(start, j); start = j + 1
-          case _ => ()
-        }}
-        parts += inner.substring(start)
-        sb.append("STRUCT<tag: INT" + parts.zipWithIndex.map { case (t, j) =>
-          s", field$j: ${t.trim}" }.mkString + ">")
-        pos = i
-      }
-      idx = up.indexOf("UNIONTYPE", math.max(pos, after))
-    }
-    sb.append(stmt.substring(pos))
-    val out = sb.toString
-    if (out.toUpperCase.contains("UNIONTYPE<")) rewriteUnionType(out) else out
-  }
-
-  private[graft] def rewriteHiveCreate(stmt0x: String): String = {
-    val stmt0 = if (stmt0x.toUpperCase.contains("UNIONTYPE"))
-      rewriteUnionType(stmt0x) else stmt0x
-    val up = stmt0.toUpperCase
-    if (!up.contains("CREATE") || !up.contains("TABLE") ||
-        !(up.contains("STORED AS") || up.contains("ROW FORMAT") ||
-          up.contains("SKEWED BY"))) return stmt0
-    if (up.contains("USING")) return stmt0 // already datasource DDL
-    // SKEWED BY (cols) ON ((v),...) [STORED AS DIRECTORIES] — Hive's
-    // list-bucketing hint (DDLSemanticAnalyzer analyzeSkewedValues).
-    // Skew is a runtime concern here (AQE skew-join handles it), so the
-    // clause strips. Must go first: its optional STORED AS DIRECTORIES
-    // tail would otherwise be read as a STORED AS format.
-    val noSkew = mapStoredAsIO(skewedByRe.replaceAllIn(stmt0, " "))
-    // collect + strip the format clauses
-    var fmt = "TEXTFILE"
-    var opts = scala.collection.mutable.LinkedHashMap[String, String]()
-    var s = storedAsRe.replaceAllIn(noSkew, m => { fmt = m.group(1).toUpperCase; " " })
-    s = rowFormatRe.replaceAllIn(s, m => {
-      rowFormatOptRe.findAllMatchIn(m.group(1)).foreach { o =>
-        o.group(1).toUpperCase.replaceAll("\\s+", " ") match {
-          case "FIELDS TERMINATED BY" => opts += "sep" -> delimChar(o.group(2))
-          case "ESCAPED BY"           => opts += "escape" -> delimChar(o.group(2))
-          case "NULL DEFINED AS"      => opts += "nullValue" -> o.group(2)
-          case "COLLECTION ITEMS TERMINATED BY" =>
-            opts += "collection.delim" -> delimChar(o.group(2))
-          case "MAP KEYS TERMINATED BY" =>
-            opts += "mapkey.delim" -> delimChar(o.group(2))
-          case _                      => ()
-        }
-      }
-      " "
-    })
-    // named serde classes (serde/ registry): the mappable ones reroute
-    // the provider; anything else (RegexSerDe etc.) keeps the statement
-    // untouched so the caller's recipe path can handle it
-    var serdeClass: Option[String] = None
-    val serdeProps = scala.collection.mutable.LinkedHashMap[String, String]()
-    s = rowFormatSerdeRe.replaceAllIn(s, m => {
-      serdeClass = Some(m.group(1))
-      Option(m.group(3)).foreach { ps =>
-        serdePropRe.findAllMatchIn(ps).foreach(p =>
-          serdeProps += p.group(1) -> p.group(2))
-      }
-      " "
-    })
-    serdeClass.map(_.split('.').last) match {
-      case None => ()
-      case Some("LazySimpleSerDe") =>
-        serdeProps.get("field.delim").foreach(v => opts += "sep" -> v)
-        serdeProps.get("serialization.null.format")
-          .foreach(v => opts += "nullValue" -> v)
-        serdeProps.get("collection.delim")
-          .foreach(v => opts += "collection.delim" -> v)
-        serdeProps.get("mapkey.delim")
-          .foreach(v => opts += "mapkey.delim" -> v)
-      case Some("OpenCSVSerde") =>
-        opts += "sep" -> serdeProps.getOrElse("separatorChar", ",")
-        opts += "quote" -> serdeProps.getOrElse("quoteChar", "\"")
-        opts += "escape" -> serdeProps.getOrElse("escapeChar", "\\")
-        fmt = "OPENCSV"
-      case Some("JsonSerDe") => fmt = "JSONFILE"
-      // both columnar serdes route to graft-rcfile, which instantiates
-      // the NAMED serde class for its cell codec (bare STORED AS RCFILE
-      // defaults to LazyBinaryColumnarSerDe, the reference's
-      // hive.default.rcfile.serde)
-      case Some("ColumnarSerDe") =>
-        fmt = "RCFILE"
-        opts += "serde" -> "org.apache.hadoop.hive.serde2.columnar.ColumnarSerDe"
-      case Some("LazyBinaryColumnarSerDe") => fmt = "RCFILE"
-      // thrift-serialized sequencefiles (src_thrift / join_thrift.q):
-      // the serde class IS the schema — serialization.class flows to the
-      // DSv2 source, which derives columns from the thrift metadata
-      case Some("ThriftDeserializer") =>
-        serdeProps.get("serialization.class")
-          .foreach(c => opts += "thrift.class" -> c)
-        serdeProps.get("serialization.format")
-          .foreach(f => opts += "thrift.protocol" -> f)
-        fmt = "THRIFTSEQ"
-      case Some(_) => return stmt0 // RegexSerDe & friends: no provider
-    }
-    s = s.replaceAll("(?i)\\bEXTERNAL\\s+", "")
-    // serde-relevant table properties: Hive passes TBLPROPERTIES to the
-    // serde at init, so skip.header.line.count and
-    // serialization.null.format are honored from EITHER properties
-    // clause (OpenCSVSerde/LazySimpleSerDe behavior). header=1 maps to
-    // the csv header option (per-file first-line skip, same semantics);
-    // deeper skips have no datasource mapping — refuse loudly rather
-    // than silently reading header lines as data.
-    if (fmt == "TEXTFILE" || fmt == "OPENCSV") {
-      val propRe =
-        """(?i)'(skip\.header\.line\.count|skip\.footer\.line\.count|serialization\.null\.format)'\s*=\s*'([^']*)'""".r
-      propRe.findAllMatchIn(s).foreach { m =>
-        (m.group(1).toLowerCase, m.group(2)) match {
-          case ("skip.header.line.count", "1") => opts += "header" -> "true"
-          case ("skip.header.line.count", "0") => ()
-          case ("skip.header.line.count", n) => sys.error(
-            s"skip.header.line.count=$n has no datasource mapping (only 0/1)")
-          case ("skip.footer.line.count", "0") => ()
-          case ("skip.footer.line.count", n) => sys.error(
-            s"skip.footer.line.count=$n has no datasource mapping")
-          case ("serialization.null.format", v) =>
-            if (!opts.contains("nullValue")) opts += "nullValue" -> v
-        }
-      }
-    }
-    val provider = fmt match {
-      case "TEXTFILE" =>
-        // complex column types (or explicit collection/map-key delims)
-        // exceed the csv datasource — route to graft-text, which runs
-        // the REAL LazySimpleSerDe (nested \002/\003 separators, byte-
-        // interoperable). UNIONTYPE was already rewritten to STRUCT<.
-        // detection region stops at the CTAS SELECT (a TIMESTAMP literal
-        // or array() call in the query text is not a column type)
-        val head = "(?is)\\bSELECT\\b".r.findFirstMatchIn(s)
-          .map(m => s.substring(0, m.start)).getOrElse(s)
-        val complex = "(?i)\\b(ARRAY|MAP|STRUCT)\\s*<".r.findFirstIn(head).isDefined
-        // TIMESTAMP columns route to the serde too: Hive text carries
-        // `yyyy-MM-dd HH:mm:ss[.f...]` wall-clock values, where the csv
-        // writer emits ISO-8601 `T`/`Z` forms a Hive reader cannot parse
-        val hasTs = "(?i)\\bTIMESTAMP\\b".r.findFirstIn(head).isDefined
-        if (complex || hasTs || opts.contains("collection.delim") ||
-            opts.contains("mapkey.delim")) {
-          require(!opts.contains("header"),
-            "skip.header.line.count is not supported on complex-typed text tables")
-          val t = scala.collection.mutable.LinkedHashMap[String, String]()
-          opts.get("sep").foreach(v => t += "field.delim" -> v)
-          opts.get("collection.delim").foreach(v => t += "collection.delim" -> v)
-          opts.get("mapkey.delim").foreach(v => t += "mapkey.delim" -> v)
-          opts.get("escape").foreach(v => t += "escape.delim" -> v)
-          opts.get("nullValue").foreach(v => t += "serialization.null.format" -> v)
-          opts = t
-          "`graft-text`"
-        } else {
-          if (!opts.contains("sep")) opts += "sep" -> "\u0001"
-          if (!opts.contains("nullValue")) opts += "nullValue" -> "\\N"
-          opts.remove("collection.delim"): Unit
-          opts.remove("mapkey.delim"): Unit
-          "csv"
-        }
-      case "OPENCSV"  => "csv"
-      case "PARQUET"  => "parquet"
-      case "ORC"      => "orc"
-      case "AVRO"     => "`graft-avro`"
-      case "JSONFILE" => "json"
-      case "SEQUENCEFILE" => "`graft-seq`"
-      case "RCFILE" => "`graft-rcfile`"
-      case "THRIFTSEQ" => "`graft-thrift-seq`"
-      case other => return stmt0
-    }
-    val optsSql = if (opts.isEmpty) "" else
-      opts.map { case (k, v) =>
-        s"$k = '${v.replace("\\", "\\\\").replace("'", "\\'")}'" }
-        .mkString(" OPTIONS (", ", ", ")")
-    val using = s" USING $provider$optsSql "
-    // anchor: after the column-list ')' if the table has one, else right
-    // before the first clause keyword / AS (CTAS)
-    val tblIdx = "(?is)TABLE\\s+(IF\\s+NOT\\s+EXISTS\\s+)?[`\\w.]+".r
-      .findFirstMatchIn(s).map(_.end).getOrElse(return stmt0)
-    val rest = s.substring(tblIdx)
-    val trimmed = rest.trim
-    if (trimmed.startsWith("(")) {
-      // walk to the matching close paren of the column list
-      val open = s.indexOf('(', tblIdx)
-      var depth = 0; var i = open
-      while (i < s.length && (depth != 0 || i == open)) {
-        s.charAt(i) match {
-          case '(' => depth += 1
-          case ')' => depth -= 1
-          case _ => ()
-        }
-        i += 1
-      }
-      s.substring(0, i) + using + s.substring(i)
-    } else if (trimmed.toUpperCase.startsWith("LIKE")) {
-      // CREATE TABLE a LIKE b [format]: Spark's grammar takes the provider
-      // AFTER the LIKE clause — append at the end of the statement
-      s.stripTrailing.stripSuffix(";") + using
-    } else {
-      s.substring(0, tblIdx) + using + rest
-    }
-  }
-
-  private val iodRe =
-    ("""(?is)(\s*INSERT\s+OVERWRITE\s+(?:LOCAL\s+)?DIRECTORY\s+'[^']+')""" +
-      """((?:\s+ROW\s+FORMAT\s+DELIMITED(?:\s+(?:FIELDS\s+TERMINATED\s+BY|ESCAPED\s+BY|COLLECTION\s+ITEMS\s+TERMINATED\s+BY|MAP\s+KEYS\s+TERMINATED\s+BY|LINES\s+TERMINATED\s+BY|NULL\s+DEFINED\s+AS)\s+'[^']*')*)|\s+STORED\s+AS\s+\w+)*(\s+SELECT\b.*|\s+FROM\b.*)""").r
-
-  /** `INSERT OVERWRITE [LOCAL] DIRECTORY '<p>' [ROW FORMAT DELIMITED ...]
-    * [STORED AS fmt] SELECT ...` — the reference's write-results-to-path
-    * statement (exec/MoveTask.java). Spark's datasource form wants
-    * `USING provider [OPTIONS(...)]`; same delimiter mapping as
-    * [[rewriteHiveCreate]].
-    */
-  private[graft] def rewriteHiveInsertDir(stmt0: String): String =
-    iodRe.replaceAllIn(stmt0, m => {
-      val clauses = m.group(0).substring(m.group(1).length,
-        m.group(0).length - m.group(3).length)
-      var fmt = "TEXTFILE"
-      val opts = scala.collection.mutable.LinkedHashMap[String, String]()
-      storedAsRe.findFirstMatchIn(clauses).foreach(x => fmt = x.group(1).toUpperCase)
-      rowFormatOptRe.findAllMatchIn(clauses).foreach { o =>
-        o.group(1).toUpperCase.replaceAll("\\s+", " ") match {
-          case "FIELDS TERMINATED BY" => opts += "sep" -> delimChar(o.group(2))
-          case "ESCAPED BY"           => opts += "escape" -> delimChar(o.group(2))
-          case "NULL DEFINED AS"      => opts += "nullValue" -> o.group(2)
-          case _                      => ()
-        }
-      }
-      val provider = fmt match {
-        case "TEXTFILE" =>
-          // Hive default field delimiter is \001 — a dropped literal here
-          // made the default an EMPTY sep, which Spark CSV rejects
-          if (!opts.contains("sep")) opts += "sep" -> "\u0001"
-          if (!opts.contains("nullValue")) opts += "nullValue" -> "\\N"
-          "csv"
-        case "PARQUET" => "parquet"
-        case "ORC" => "orc"
-        case "AVRO" => "`graft-avro`"
-        case "JSONFILE" => "json"
-        case "SEQUENCEFILE" => "`graft-seq`"
-        case "RCFILE" => "`graft-rcfile`"
-        case _ => return stmt0
-      }
-      val optsSql = if (opts.isEmpty) "" else
-        opts.map { case (k, v) =>
-        s"$k = '${v.replace("\\", "\\\\").replace("'", "\\'")}'" }
-          .mkString(" OPTIONS (", ", ", ")")
-      java.util.regex.Matcher.quoteReplacement(
-        s"${m.group(1)} USING $provider$optsSql${m.group(3)}")
-    })
-
-  /** Drop the comment-only prefix lines of a .q-style statement (the
-    * splitter keeps them attached); Spark's parser skips them, but the
-    * statement-shape regexes here anchor at the text start — both must
-    * see the same statement. */
-  private def stripLeadingComments(stmt0x: String): String = {
-    val lines = stmt0x.linesIterator.toSeq
-    val idx = lines.indexWhere { l =>
-      val t = l.trim; t.nonEmpty && !t.startsWith("--")
-    }
-    if (idx <= 0) stmt0x else lines.drop(idx).mkString("\n")
-  }
-
-  /** Run one statement, intercepting function DDL (result: empty frame,
-    * like a DDL command). Everything else goes to Spark SQL unchanged.
+  /** Run one statement through the HiveQL front end
+    * ([[frontend.Router]]: rewrites, guards, then the one handler that
+    * owns its shape). Everything no handler claims goes to Spark SQL.
     *
     * CREATE TEMPORARY TABLE session-end registration lives HERE, around
     * the execution, not inside the rewrite: registering at rewrite time
@@ -4296,344 +300,10 @@ object Engine {
     * never created. Register only a table that did not exist before the
     * statement and does exist after it.
     */
-  /** Authorization enforcement for one statement (the reference's
-    * Driver.doAuthorization step, active only under
-    * hive.security.authorization.enabled=true — operators/Auth.scala):
-    * writes need the matching privilege on their output table, reads
-    * need Select on every analyzed input. Statements Spark cannot parse
-    * (HiveQL shapes the later rewrite branches own) skip the input walk
-    * — their write-side check still fired from the regexes here. */
-  // enforcement statement shapes (hoisted: these run per statement)
-  private val addPartAuthRe =
-    """(?is)\s*ALTER\s+TABLE\s+([\w.`]+)\s+ADD\s+(?:IF\s+NOT\s+EXISTS\s+)?PARTITION\b.*""".r
-  private val alterAuthRe = """(?is)\s*ALTER\s+TABLE\s+([\w.`]+)\b.*""".r
-  private val dropAuthRe =
-    """(?is)\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?([\w.`]+)\s*(?:PURGE\s*)?;?\s*""".r
-  private val dropViewAuthRe =
-    """(?is)\s*DROP\s+VIEW\s+(?:IF\s+EXISTS\s+)?([\w.`]+)\s*;?\s*""".r
-  private val truncAuthRe = """(?is)\s*TRUNCATE\s+TABLE\s+([\w.`]+).*""".r
-  // ---- view partitions (metadata-only; Hive keeps them in the
-  // metastore with no storage). Each entry is the spec in DECLARED
-  // column order as URL-encoded k=v tokens joined by '/', entries
-  // joined by ',' in the graft.view.partitions table property —
-  // encoding keeps values containing '/', ',' or '=' unambiguous.
-  private def viewPartEntry(declared: Seq[String],
-      kvs: Seq[(String, String)]): String = {
-    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
-    declared.map { d =>
-      val v = kvs.collectFirst {
-        case (k, vv) if k.equalsIgnoreCase(d) => vv }.getOrElse("")
-      enc(d) + "=" + enc(v)
-    }.mkString("/")
-  }
-  private def decodeViewPartEntry(e: String): String =
-    e.split("/").map { tok =>
-      val Array(k, v) = tok.split("=", 2)
-      java.net.URLDecoder.decode(k, "UTF-8") + "=" +
-        java.net.URLDecoder.decode(v, "UTF-8")
-    }.mkString("/")
-  private def viewPartitions(
-      meta: org.apache.spark.sql.catalyst.catalog.CatalogTable): Seq[String] =
-    meta.properties.get("graft.view.partitions").toSeq
-      .flatMap(_.split(",")).filter(_.nonEmpty)
-  private def viewPartColsOf(spark: SparkSession, table: String): Seq[String] =
-    try {
-      val meta = spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(table))
-      if (meta.tableType ==
-          org.apache.spark.sql.catalyst.catalog.CatalogTableType.VIEW)
-        meta.properties.get("graft.view.partcols")
-          .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
-          .getOrElse(Nil)
-      else Nil
-    } catch { case _: Exception => Nil }
-
-  // TRANSFORM/MAP/REDUCE ... USING 'script' — the script URI is the
-  // gated object under sql-std (see enforceAuthorization)
-  private val transformScriptAuthRe =
-    """(?is)\b(?:TRANSFORM\s*\(|MAP\s+[^(]+?|REDUCE\s+[^(]+?)[^;]*?\bUSING\s+'([^']+)'""".r
-  /** Existence probe for the DROP enforcement gates; an unresolvable
-    * name keeps the gate (fail closed). */
-  private def authTableExists(spark: SparkSession, t: String): Boolean =
-    try spark.sessionState.catalog.tableExists(
-      spark.sessionState.sqlParser.parseTableIdentifier(t.replace("`", "")))
-    catch { case _: Exception => true }
-  // negative lookahead: INSERT OVERWRITE [LOCAL] DIRECTORY writes a
-  // filesystem path, not a table — 'DIRECTORY' must not parse as one
-  private val insertAuthRe =
-    """(?is)\s*INSERT\s+(?:OVERWRITE|INTO)\s+(?:TABLE\s+)?(?!DIRECTORY\b|LOCAL\b)([\w.`]+).*""".r
-  // every INSERT branch of a FROM-first multi-insert (genBodyPlan)
-  private val fromFirstBranchAuthRe =
-    """(?i)INSERT\s+(?:OVERWRITE|INTO)\s+(?:TABLE\s+)?(?!DIRECTORY\b|LOCAL\b)([\w.`]+)""".r
-  private val fromFirstSourceAuthRe =
-    """(?is)\s*FROM\s+([\w.`]+)\b.*""".r
-  private val ctasSelAuthRe = """(?is).*?\bAS\s+(SELECT\b.*|WITH\b.*)""".r
-
-  private def enforceAuthorization(spark: SparkSession, stmt0: String): Unit = {
-    if (!graft.operators.Auth.enforcementEnabled(spark)) return
-    if (graft.operators.Auth.handles(stmt0)) return // GRANT/SHOW/... run free
-    // sql-std: a TRANSFORM script is a LOCAL_URI object no one holds
-    // privileges on — the reference refuses the whole query
-    // (authorization_disallow_transform.q: "[[SELECT] on Object
-    // [type=LOCAL_URI, name=cat]]"); admin runs free as everywhere else
-    if (graft.operators.Auth.sqlStdEnabled(spark) &&
-        !graft.operators.Auth.isAdminSession(spark)) {
-      // match against the MASKED text (literals/comments blanked,
-      // offsets preserved) so a string literal that merely CONTAINS a
-      // MAP/TRANSFORM-shaped token ("SELECT 'MAP a USING ''cat'''")
-      // cannot be falsely refused; the script name is recovered from
-      // the ORIGINAL text at the match offsets (masking blanks it)
-      transformScriptAuthRe.findFirstMatchIn(
-          maskLiteralsAndComments(stmt0)).foreach { m =>
-        val script = stmt0.substring(m.start(1), m.end(1))
-        sys.error("Permission denied: Principal [name=" +
-          graft.operators.Auth.currentUser(spark) + ", type=USER] does " +
-          "not have following privileges for operation QUERY [[SELECT] " +
-          s"on Object [type=LOCAL_URI, name=$script]]")
-      }
-    }
-    def nameOf(t: String): (String, String) = {
-      val p = t.replace("`", "").split("\\.")
-      if (p.length >= 2) (p(p.length - 2), p.last)
-      else (spark.catalog.currentDatabase, p.last)
-    }
-    stmt0 match {
-      case insertAuthRe(t) =>
-        val (db, tb) = nameOf(t)
-        graft.operators.Auth.enforce(spark, "Insert", db, tb, output = true)
-      case updateRe(t, _, cond) =>
-        val (db, tb) = nameOf(t)
-        graft.operators.Auth.enforce(spark, "Update", db, tb, output = true)
-        enforceConditionReads(spark, t, cond)
-      case updateAllRe(t, _) =>
-        val (db, tb) = nameOf(t)
-        graft.operators.Auth.enforce(spark, "Update", db, tb, output = true)
-      case deleteRe(t, cond) =>
-        val (db, tb) = nameOf(t)
-        graft.operators.Auth.enforce(spark, "Delete", db, tb, output = true)
-        enforceConditionReads(spark, t, cond)
-      case deleteAllRe(t) =>
-        val (db, tb) = nameOf(t)
-        graft.operators.Auth.enforce(spark, "Delete", db, tb, output = true)
-      case loadDataRe(_, _, t, _) =>
-        val (db, tb) = nameOf(t)
-        graft.operators.Auth.enforce(spark, "Insert", db, tb, output = true)
-      // ADD PARTITION needs Create on the TABLE (authorization_fail_2.q)
-      case addPartAuthRe(t) =>
-        val (db, tb) = nameOf(t)
-        graft.operators.Auth.enforce(spark, "Create", db, tb, output = true)
-      // DROP on an ABSENT table produces no outputs in the reference's
-      // semantic analysis, so no privilege check fires: `IF EXISTS` must
-      // no-op and a plain DROP must raise its own table-not-found — a
-      // Permission denied about a ghost table is the wrong shape
-      case dropAuthRe(t) if authTableExists(spark, t) =>
-        val (db, tb) = nameOf(t)
-        // sql-std model: DROP is ownership-gated (no-op under the legacy
-        // provider); legacy model: Drop privilege as before
-        graft.operators.Auth.enforceOwnership(spark, "DROPTABLE", db, tb)
-        graft.operators.Auth.enforce(spark, "Drop", db, tb, output = true)
-      case dropViewAuthRe(t) if authTableExists(spark, t) =>
-        val (db, tb) = nameOf(t)
-        graft.operators.Auth.enforceOwnership(spark, "DROPVIEW", db, tb)
-        graft.operators.Auth.enforce(spark, "Drop", db, tb, output = true)
-      case truncAuthRe(t) =>
-        val (db, tb) = nameOf(t)
-        graft.operators.Auth.enforce(spark, "Update", db, tb, output = true)
-      case renameTableRe(t, _) =>
-        val (db, tb) = nameOf(t)
-        graft.operators.Auth.enforceOwnership(spark, "ALTERTABLE_RENAME", db, tb)
-        graft.operators.Auth.enforce(spark, "Alter", db, tb, output = true)
-      case alterAuthRe(t) =>
-        val (db, tb) = nameOf(t)
-        // sql-std: every ALTER TABLE form is ownership-gated (the
-        // reference's HiveOperationType maps ALTERTABLE_* to OWNER
-        // privilege on the input — authorization_not_owner_alter_tab_
-        // serdeprop.q refuses a non-owner's SET SERDEPROPERTIES);
-        // legacy model: the Alter grant as before
-        graft.operators.Auth.enforceOwnership(spark, "ALTERTABLE", db, tb)
-        graft.operators.Auth.enforce(spark, "Alter", db, tb, output = true)
-      // EXPORT TABLE reads the table's FULL contents — a rewrite-owned
-      // read path the analyzed-plan walk below never sees (the statement
-      // doesn't parse as a query), so it needs its own Select case or a
-      // user with no grant at all could still exfiltrate the data
-      case exportRe(t, _, _) =>
-        val (db, tb) = nameOf(t)
-        val allCols =
-          try spark.sessionState.catalog.getTableMetadata(
-              spark.sessionState.sqlParser.parseTableIdentifier(t))
-            .schema.map(_.name).toSet
-          catch { case _: Exception => Set.empty[String] }
-        graft.operators.Auth.enforce(spark, "Select", db, tb,
-          output = false, needed = allCols)
-      // IMPORT into an EXISTING table alters/appends it — the reference
-      // gates it on Alter (exim_23_import_exist_authfail.q: "No privilege
-      // 'Alter' found for outputs"); a fresh-name import creates a new
-      // table, which the table-level model leaves ungated
-      case importRe(_, t, _, _, _) if authTableExists(spark, t) =>
-        val (db, tb) = nameOf(t)
-        graft.operators.Auth.enforce(spark, "Alter", db, tb, output = true)
-      // FROM-first multi-insert: every INSERT branch is a write, and the
-      // shared FROM source (when it names a table, not a subquery) a read
-      case s if s.trim.toUpperCase.startsWith("FROM") &&
-          topLevel(s.trim, "INSERT").nonEmpty =>
-        fromFirstBranchAuthRe.findAllMatchIn(s).foreach { m =>
-          val (db, tb) = nameOf(m.group(1))
-          graft.operators.Auth.enforce(spark, "Insert", db, tb, output = true)
-        }
-        s match {
-          case fromFirstSourceAuthRe(src) =>
-            val (db, tb) = nameOf(src)
-            graft.operators.Auth.enforce(spark, "Select", db, tb, output = false)
-          case _ => ()
-        }
-      case _ => ()
-    }
-    // the read side: analyze the QUERY part (a command's inner query is a
-    // constructor field, not a traversed child, so INSERT/CTAS hand their
-    // SELECT tail to the walk directly)
-    val head = stmt0.trim.takeWhile(!_.isWhitespace).toUpperCase
-    val queryPart: Option[String] = stmt0 match {
-      case _ if head == "SELECT" || head == "WITH" => Some(stmt0)
-      case insertBranchRe(_, _, _, sel) => Some(sel)
-      case _ if stmt0.trim.toUpperCase
-          .matches("(?s)CREATE\\s+(?:TEMPORARY\\s+)?(?:EXTERNAL\\s+)?TABLE\\b.*\\bAS\\s+(SELECT|WITH)\\b.*") =>
-        stmt0 match { case ctasSelAuthRe(sel) => Some(sel); case _ => None }
-      case _ => None
-    }
-    queryPart.foreach { q =>
-      authInputColumns(spark, q.trim.stripSuffix(";")).foreach { case (n, cols) =>
-        val (db, tb) = n.split("@") match {
-          case Array(d, t) => (d, t)
-          case Array(t) => (spark.catalog.currentDatabase, t)
-        }
-        graft.operators.Auth.enforce(spark, "Select", db, tb,
-          output = false, needed = cols)
-      }
-    }
-  }
-
-  /** The HiveQL-only query shapes the engine rewrites before execution
-    * (bucket TABLESAMPLE ON, matchpath PTF, DISTRIBUTE/SORT window
-    * dialect, TRANSFORM delims, virtual columns) fail Spark's analyzer
-    * as written — the authorization walk applies the same rewrites so
-    * those statements' read entities are still visible to enforcement. */
-  private def rewriteQueryForAnalysis(spark: SparkSession, q0: String): String = {
-    val s0 = if (ptfNoopRe.findFirstIn(q0).isDefined) rewritePtfNoop(q0) else q0
-    val s1 = if (matchPathCallRe.findFirstIn(s0).isDefined)
-      rewriteMatchPath(spark, s0) else s0
-    val s2 = {
-      val l = s1.toLowerCase
-      if (l.contains("over") && (l.contains("distribute by") ||
-        l.contains("sort by") || l.contains("cluster by")))
-        rewriteWindowDialect(s1)
-      else s1
-    }
-    val s3 = if (s2.toUpperCase.contains("USING")) rewriteTransformDelims(s2) else s2
-    val s4 = if (s3.toUpperCase.contains("TABLESAMPLE"))
-      rewriteBucketSampleNoOn(spark, rewriteBucketSample(s3)) else s3
-    if (s4.contains("__")) rewriteVirtualColumns(s4) else s4
-  }
-
-  /** Read entities of a query for enforcement — FAIL CLOSED (r14 verdict
-    * "What's wrong" #3): a statement the analyzer rejects as written gets
-    * one retry through the engine's own dialect rewrites; if it still
-    * cannot be analyzed, the original analysis error is raised so
-    * enforcement DENIES instead of silently skipping the Select checks
-    * (the reference's SemanticAnalyzer fails the statement before any
-    * authorization decision, never around it). Only reached when
-    * hive.security.authorization.enabled=true. */
-  private def authInputColumns(spark: SparkSession,
-      q: String): Seq[(String, Set[String])] =
-    try queryInputColumns(spark, q)
-    catch { case e1: Exception =>
-      try queryInputColumns(spark, rewriteQueryForAnalysis(spark, q))
-      catch { case _: Exception => throw e1 }
-    }
-
-  /** UPDATE/DELETE are rewrite-owned (the statement never reaches the
-    * analyzed-plan walk), but their WHERE clause can read OTHER tables
-    * through subqueries — a read path that must not fail open. Analyze
-    * the condition as a query over the target and Select-check every
-    * input EXCEPT the target itself (the target's access is governed by
-    * the Update/Delete write privilege, as in the reference's legacy
-    * provider where the updated table is a WriteEntity). */
-  private def enforceConditionReads(spark: SparkSession, target: String,
-      cond: String): Unit = {
-    if (!cond.toUpperCase.contains("SELECT")) return // no subquery: no reads
-    val tgt = target.replace("`", "")
-    val tgtName = tgt.split("\\.").last
-    // fail CLOSED like the SELECT walk: an unanalyzable WHERE subquery
-    // denies with the analysis error instead of skipping its Select checks
-    val inputs = authInputColumns(spark, s"SELECT 1 FROM $tgt WHERE $cond")
-    inputs.foreach { case (n, cols) =>
-      val (db, tb) = n.split("@") match {
-        case Array(d, t) => (d, t)
-        case Array(t) => (spark.catalog.currentDatabase, t)
-      }
-      if (!tb.equalsIgnoreCase(tgtName))
-        graft.operators.Auth.enforce(spark, "Select", db, tb,
-          output = false, needed = cols)
-    }
-  }
-
-  /** Input tables of a query WITH the columns the plan actually touches
-    * per table (plan-wide referenced attribute ids intersected with each
-    * leaf's output) — the reference's per-column read entities that
-    * column-level grants check against. */
-  private def queryInputColumns(spark: SparkSession,
-      q: String): Seq[(String, Set[String])] = {
-    import org.apache.spark.sql.catalyst.plans.logical.{SubqueryAlias, View}
-    val analyzed = analyzeOnly(spark, q).analyzed
-    // leaf relations carry their own output attributes as constructor
-    // fields (LogicalRelation.output), which `expressions` reports —
-    // counting those would mark every column of every table as "used".
-    // collectWithSubqueries, not collect: IN/EXISTS/scalar subqueries
-    // hold their plans inside EXPRESSIONS, so a child-only walk would
-    // fail-open the tables a WHERE-subquery reads
-    val refs = analyzed.collectWithSubqueries {
-      case n if !n.isInstanceOf[
-          org.apache.spark.sql.catalyst.plans.logical.LeafNode] =>
-        n.expressions.flatMap(_.references.map(_.exprId))
-    }.flatten.toSet
-    val acc = scala.collection.mutable.Map.empty[String, Set[String]]
-    def add(segs: Seq[String],
-        plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Unit = {
-      val keep = segs.filter(x => x.nonEmpty && x != "spark_catalog")
-      val name = if (keep.length >= 2) keep.takeRight(2).mkString("@")
-        else keep.mkString
-      val used = plan.output.filter(a => refs.contains(a.exprId))
-        .map(_.name).toSet
-      acc.update(name, acc.getOrElse(name, Set.empty) ++ used)
-    }
-    // only aliases wrapping an ACTUAL stored relation are read entities —
-    // a table-free derived table (`FROM (SELECT 1) t`), aliased VALUES
-    // (LocalRelation), or range() TVF has no table to authorize, and the
-    // reference only emits ReadEntity for real tables/views
-    def isStoredRelation(
-        p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean =
-      p match {
-        case _: org.apache.spark.sql.execution.datasources.LogicalRelation => true
-        case _: org.apache.spark.sql.catalyst.catalog.HiveTableRelation => true
-        case _: org.apache.spark.sql.catalyst.catalog.UnresolvedCatalogRelation => true
-        case _: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation => true
-        case _: View => true
-        case _ => false
-      }
-    analyzed.collectWithSubqueries {
-      case v: View =>
-        add(v.desc.identifier.database.toSeq :+ v.desc.identifier.table, v)
-      case sa: SubqueryAlias
-          if !sa.child.exists(_.isInstanceOf[SubqueryAlias]) &&
-            sa.child.exists(isStoredRelation) =>
-        add(sa.identifier.qualifier :+ sa.identifier.name, sa)
-    }
-    acc.toSeq
-  }
-
-  def ddl(spark: SparkSession, stmt0x: String): org.apache.spark.sql.DataFrame = {
-    enforceAuthorization(spark, stripLeadingComments(stmt0x))
+  def ddl(spark: SparkSession, stmt: String): org.apache.spark.sql.DataFrame = {
+    val routed = frontend.Router.prepare(spark, stmt)
     val pendingTemp: Option[String] =
-      stripLeadingComments(stmt0x) match {
+      routed.stmt0 match {
         case tempTableNameRe(name) =>
           // qualify NOW: an unqualified name resolved at session END would
           // land in whatever database is current THEN (a USE between
@@ -4649,6 +319,11 @@ object Engine {
           if (preExists) None else Some(qualified)
         case _ => None
       }
+    // (permanent, name) of the table or view a CREATE names
+    val createdObj = routed.stmt0 match {
+      case createdObjRe(tempKw, name) => Some((tempKw == null, name))
+      case _ => None
+    }
     // ownership recording (sql-std OBJECT OWNERSHIP axis): the creating
     // user owns the object — but ONLY when the statement actually creates
     // it. A no-op `CREATE TABLE IF NOT EXISTS existing` or a `CREATE OR
@@ -4658,22 +333,21 @@ object Engine {
     // seize a permanent table's owners entry by creating a temp view of
     // the same name. So: resolve pre-existence BEFORE the statement runs,
     // record AFTER it succeeds (a refused CREATE records nothing).
-    val pendingOwner: Option[(String, String)] =
-      stripLeadingComments(stmt0x) match {
-        case createdObjRe(tempKw, name) if tempKw == null =>
-          val n = name.replace("`", "")
-          val (db, tb) =
-            if (n.contains(".")) {
-              val p = n.split("\\."); (p(p.length - 2), p.last)
-            } else (spark.sessionState.catalog.getCurrentDatabase, n)
-          val preExists =
-            try spark.sessionState.catalog.tableExists(
-              org.apache.spark.sql.catalyst.TableIdentifier(tb, Some(db)))
-            catch { case _: Exception => true } // odd name: don't risk a seizure
-          if (preExists) None else Some((db, tb))
-        case _ => None
-      }
-    val out = ddlImpl(spark, stmt0x)
+    val pendingOwner: Option[(String, String)] = createdObj.flatMap {
+      case (true, name) =>
+        val n = name.replace("`", "")
+        val (db, tb) =
+          if (n.contains(".")) {
+            val p = n.split("\\."); (p(p.length - 2), p.last)
+          } else (spark.sessionState.catalog.getCurrentDatabase, n)
+        val preExists =
+          try spark.sessionState.catalog.tableExists(
+            org.apache.spark.sql.catalyst.TableIdentifier(tb, Some(db)))
+          catch { case _: Exception => true } // odd name: don't risk a seizure
+        if (preExists) None else Some((db, tb))
+      case _ => None
+    }
+    val out = routed.run()
     // external-location provenance: CREATE TABLE ... LOCATION (over
     // pre-existing files), ALTER TABLE ... SET LOCATION, and ADD
     // PARTITION ... LOCATION point the table at data the engine did not
@@ -4682,18 +356,13 @@ object Engine {
     // Stamp the read-clamp property when the schema declares char/varchar
     // (matched on MASKED text so a string literal containing "LOCATION '"
     // cannot trip it; the clause's own quote survives masking).
-    locally {
-      val s0 = stripLeadingComments(stmt0x)
-      if (locationClauseRe.findFirstIn(maskLiteralsAndComments(s0)).isDefined) {
-        val target = s0 match {
-          case createdObjRe(_, name) => Some(name)
-          case alterTableHeadRe(name) => Some(name)
-          case _ => None
-        }
-        target.foreach(t => graft.plans.HiveSemantics.CharStripReads
-          .stampNarrowedIfChar(spark, t))
-      }
-    }
+    if (locationClauseRe.findFirstIn(
+        frontend.SqlText.maskLiteralsAndComments(routed.stmt0)).isDefined)
+      createdObj.map(_._2).orElse(routed.stmt0 match {
+        case frontend.Guards.alterTableHeadRe(name) => Some(name)
+        case _ => None
+      }).foreach(t => graft.plans.HiveSemantics.CharStripReads
+        .stampNarrowedIfChar(spark, t))
     pendingTemp.foreach { q =>
       val ident = spark.sessionState.sqlParser.parseTableIdentifier(q)
       if (spark.sessionState.catalog.tableExists(ident))
@@ -4712,1392 +381,11 @@ object Engine {
     ("""(?is)\s*CREATE\s+(?:OR\s+REPLACE\s+)?(TEMPORARY\s+)?""" +
       """(?:EXTERNAL\s+)?(?:TABLE|VIEW)\s+(?:IF\s+NOT\s+EXISTS\s+)?""" +
       """([\w.`]+).*""").r
-  // provenance stamp (char/varchar read clamp) trigger + ALTER head
+  // provenance stamp (char/varchar read clamp) trigger
   private val locationClauseRe = """(?i)\bLOCATION\s*'""".r
-  private val alterTableHeadRe = """(?is)\s*ALTER\s+TABLE\s+([\w.`]+)\b.*""".r
 
-  // UNSET TBLPROPERTIES list, for the duplicate-key dedupe below
-  private val unsetTblPropsRe =
-    """(?is)(UNSET\s+TBLPROPERTIES\s*(?:IF\s+EXISTS\s*)?\()([^)]*)(\))""".r
-
-  private def ddlImpl(spark: SparkSession, stmt0x: String): org.apache.spark.sql.DataFrame = {
-    // Hive tolerates the same key repeated in an UNSET TBLPROPERTIES
-    // list (unset_table_view_property.q unsets 'c','c','c'); Spark's
-    // parser refuses duplicates — dedupe the quoted keys in place
-    val stmt0a = unsetTblPropsRe.replaceAllIn(
-      stripLeadingComments(stmt0x), m => {
-        val seen = scala.collection.mutable.LinkedHashSet[String]()
-        """'[^']*'|"[^"]*"""".r.findAllIn(m.group(2)).foreach(k => seen.add(k): Unit)
-        java.util.regex.Matcher.quoteReplacement(
-          m.group(1) + seen.mkString(", ") + m.group(3))
-      })
-    // ALTER ... ADD/REPLACE/CHANGE COLUMNS ... CASCADE|RESTRICT
-    // (alter_table_cascade.q): the engine's catalog schema governs every
-    // partition's read already — CASCADE semantics are the default and
-    // RESTRICT's partition-pinned schemas don't exist here, so the
-    // keyword is surface only. Spark's parser rejects it; strip it.
-    val stmt0b =
-      if ("(?is)\\bALTER\\s".r.findFirstIn(stmt0a).isDefined &&
-          "(?is)\\b(ADD|REPLACE|CHANGE)\\s".r.findFirstIn(stmt0a).isDefined)
-        "(?is)\\s+(CASCADE|RESTRICT)\\s*(;?\\s*)$".r
-          .replaceAllIn(stmt0a, m => m.group(2))
-      else stmt0a
-    // ANALYZE ... COMPUTE STATISTICS FOR COLUMNS with NO column list =
-    // all columns in Hive (columnstats_tbllvl.q); Spark requires the
-    // ALL keyword
-    val stmt0 =
-      "(?is)(FOR\\s+COLUMNS)\\s*(;?\\s*)$".r.replaceAllIn(stmt0b,
-        m => "FOR ALL COLUMNS" + m.group(2))
-    // holder so the jar-UDF CREATE FUNCTION branch resolves once in its
-    // guard and reuses the builder in its body
-    var hiveUdfResolved: Option[Seq[
-      org.apache.spark.sql.catalyst.expressions.Expression] =>
-      org.apache.spark.sql.catalyst.expressions.Expression] = None
-    // Hive temp tables: strip TEMPORARY (CREATE TEMPORARY VIEW/FUNCTION/
-    // MACRO are untouched — the regex requires TABLE) before the legacy
-    // format-clause rewrite sees the statement; registration for
-    // session-end drop happens in the `ddl` wrapper AFTER the statement
-    // succeeds (Hive session-scope semantics)
-    val stmtT0 = stmt0 match {
-      case tempTableRe(pre, rest) => pre + rest
-      case s => s
-    }
-    if (stmt0.toLowerCase.contains("char")) checkCharLengths(stmt0)
-    locally {
-      val l = stmt0.toLowerCase
-      if (l.contains("over") || l.contains("lag") || l.contains("lead"))
-        checkWindowDialect(stmt0)
-    }
-    checkOffline(spark, stmt0)
-    checkSkewMultiDistinct(spark, stmt0)
-    checkOuterMapjoin(spark, stmt0)
-    checkSubqueryMissingFrom(spark, stmt0)
-    checkPartitionWhitelist(spark, stmt0)
-    // a view that HAS partitions cannot be redefined — the new definition
-    // would orphan the recorded specs (DDLSemanticAnalyzer, error 10217;
-    // clientnegative/create_or_replace_view2.q). Drop the partitions
-    // first (create_or_replace_view.q does exactly that).
-    locally {
-      val target = stmt0 match {
-        case replaceViewRe(nm) => Some(nm)
-        case alterViewAsRe(nm) => Some(nm)
-        case _ => None
-      }
-      val partitioned = target.exists { nm =>
-        try {
-          val meta = spark.sessionState.catalog.getTableMetadata(
-            spark.sessionState.sqlParser.parseTableIdentifier(
-              nm.replace("`", "")))
-          meta.tableType ==
-            org.apache.spark.sql.catalyst.catalog.CatalogTableType.VIEW &&
-            viewPartitions(meta).nonEmpty
-        } catch { case _: Exception => false }
-      }
-      if (partitioned)
-        sys.error("Cannot replace a view with CREATE VIEW or REPLACE VIEW " +
-          "or ALTER VIEW AS SELECT if the view has partitions")
-    }
-    // partitioned views (create_view_partitioned.q): PARTITIONED ON is
-    // Hive metadata-only (no read-path effect; DDLSemanticAnalyzer
-    // validateCreateView) — strip the clause, keep the view, and record
-    // the declared columns as a table property so ALTER VIEW ... ADD
-    // PARTITION can validate its spec against them (alter_view_failure5/7)
-    val stmtT = stmtT0 match {
-      case viewPartRe(pre, cols, rest) =>
-        val names = cols.split(",").map(_.trim.split("\\s+")(0)).filter(_.nonEmpty)
-        // Hive validates that PARTITIONED ON names the view's RIGHTMOST
-        // output columns (DDLSemanticAnalyzer validateCreateView, error
-        // 10093; create_view_failure6.q) — checkable when the output
-        // names come from the SELECT itself (no explicit column list)
-        if (!pre.contains("(")) {
-          val sel = rest.replaceFirst("(?is)^AS\\s+", "")
-          val out =
-            try spark.sql(sel).schema.fieldNames.toSeq
-            catch { case _: Exception => Nil }
-          if (out.nonEmpty) {
-            val tail = out.takeRight(names.length).map(_.toLowerCase)
-            if (tail != names.toSeq.map(_.toLowerCase))
-              sys.error("Rightmost columns in view output do not match " +
-                "PARTITIONED ON clause")
-          }
-        }
-        pre + s" TBLPROPERTIES ('graft.view.partcols'='${names.mkString(",")}') " + rest
-      case s => s
-    }
-    val stmtS0 = if (ptfNoopRe.findFirstIn(stmtT).isDefined)
-      rewritePtfNoop(stmtT) else stmtT
-    val stmtS = if (matchPathCallRe.findFirstIn(stmtS0).isDefined)
-      rewriteMatchPath(spark, stmtS0) else stmtS0
-    val stmtSw = {
-      val l = stmtS.toLowerCase
-      if (l.contains("over") && (l.contains("distribute by") ||
-        l.contains("sort by") || l.contains("cluster by")))
-        rewriteWindowDialect(stmtS)
-      else stmtS
-    }
-    val stmtTf = if (stmtSw.toUpperCase.contains("USING"))
-      rewriteTransformDelims(stmtSw) else stmtSw
-    val stmt1a = if (stmtTf.toUpperCase.contains("TABLESAMPLE"))
-      rewriteBucketSampleNoOn(spark, rewriteBucketSample(stmtTf)) else stmtTf
-    val stmt1 = if (stmt1a.contains("__")) rewriteVirtualColumns(stmt1a)
-      else stmt1a
-    // Hive accepts per-column sort DIRECTION in bucket DDL — `SORTED BY
-    // (key DESC)` (enforce_order.q); Spark's parser requires ASC. The
-    // direction only shapes within-bucket file order (no read-path
-    // semantics Spark consumes — SMB planning keys off the column list),
-    // so normalize to ASC rather than reject the statement.
-    val stmt1d = if (stmt1.toUpperCase.contains("SORTED BY")) {
-      val dirRe = "(?i)(SORTED\\s+BY\\s*\\([^)]*?)\\s+(?:ASC|DESC)\\b".r
-      var d = stmt1; var prev = "" // one direction per pass; fixpoint for multi-column lists
-      while (d != prev) {
-        prev = d
-        d = dirRe.replaceAllIn(d,
-          m => java.util.regex.Matcher.quoteReplacement(m.group(1)))
-      }
-      d
-    } else stmt1
-    val stmt2 = rewriteHiveCreate(stmt1d)
-    // the bare `INSERT OVERWRITE [LOCAL] DIRECTORY '<p>' SELECT` form
-    // (no ROW FORMAT / STORED AS) defaults to Hive text, same as a
-    // clause-less table — route it through the rewrite too
-    val stmt = if (stmt2.toUpperCase.contains("OVERWRITE") &&
-      (stmt2.toUpperCase.contains("ROW FORMAT") ||
-        stmt2.toUpperCase.contains("STORED AS") ||
-        stmt2.toUpperCase.contains("DIRECTORY")))
-      rewriteHiveInsertDir(stmt2) else stmt2
-    // authorization DDL (GRANT/REVOKE/ROLE/SHOW GRANT...) — Spark has no
-    // parser for these at all; answered from the session registry
-    // (operators/Auth.scala, reference DDLSemanticAnalyzer.java:438,456-459)
-    graft.operators.Auth.run(spark, stmt0) match {
-      case Some(df) => return df
-      case None => ()
-    }
-    stmt0 match {
-      case setBridgeRe(k, v) if confBridge.contains(k.toLowerCase) =>
-        // apply the Spark-equivalent execution knob first (it validates
-        // the value — a failed SET must leave no state behind), then
-        // record the Hive key so SHOW CONF / later reads see it
-        confBridge(k.toLowerCase)(spark, v.trim)
-        spark.conf.set(k, v.trim)
-        return spark.emptyDataFrame
-      case touchRe(table, _) =>
-        // validate the table exists (Hive's TOUCH errors on a bad name),
-        // then no-op — there are no hooks to fire here
-        spark.sessionState.catalog.getTableMetadata(
-          spark.sessionState.sqlParser.parseTableIdentifier(table)): Unit
-        return spark.emptyDataFrame
-      case alterSkewRe(table) =>
-        spark.sessionState.catalog.getTableMetadata(
-          spark.sessionState.sqlParser.parseTableIdentifier(table)): Unit
-        return spark.emptyDataFrame
-      case alterClusterRe(table, cols, sorted, n) =>
-        val id = spark.sessionState.sqlParser.parseTableIdentifier(table)
-        val meta = spark.sessionState.catalog.getTableMetadata(id)
-        val provider0 = meta.provider
-          .filterNot(_.equalsIgnoreCase("hive")).getOrElse("parquet")
-        val provider =
-          if (provider0.startsWith("graft-")) s"`$provider0`" else provider0
-        val optsMap = meta.storage.properties.filter { case (k, _) =>
-          !Set("path", "location").contains(k.toLowerCase) }
-        val optsSql = if (optsMap.isEmpty) "" else optsMap.map { case (k, v) =>
-          s"$k = '${v.replace("\\", "\\\\").replace("'", "\\'")}'" }
-          .mkString(" OPTIONS (", ", ", ")")
-        val partBy = if (meta.partitionColumnNames.nonEmpty)
-          meta.partitionColumnNames.mkString(" PARTITIONED BY (", ", ", ")")
-        else ""
-        val sortBy = Option(sorted).map(s => s" SORTED BY ($s)").getOrElse("")
-        val tmp = table + "_clust_tmp"
-        spark.sql(s"DROP TABLE IF EXISTS $tmp")
-        val tmpPath = new org.apache.hadoop.fs.Path(
-          spark.sessionState.catalog.defaultTablePath(
-            spark.sessionState.sqlParser.parseTableIdentifier(tmp)))
-        tmpPath.getFileSystem(spark.sessionState.newHadoopConf())
-          .delete(tmpPath, true): Unit
-        spark.sql(s"CREATE TABLE $tmp USING $provider$optsSql$partBy" +
-          s" CLUSTERED BY ($cols)$sortBy INTO $n BUCKETS" +
-          s" AS SELECT * FROM $table")
-        spark.sql(s"DROP TABLE $table")
-        spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-        // graft DSv2 rebuilds scan the directory layout directly and
-        // reject RECOVER as v2 tables
-        if (meta.partitionColumnNames.nonEmpty &&
-            !provider.contains("graft-"))
-          spark.sql(s"ALTER TABLE $table RECOVER PARTITIONS")
-        spark.sql(s"REFRESH TABLE $table")
-        return spark.emptyDataFrame
-      case exchangeRe(destT, specText, srcT) =>
-        requireNoArchiveConflict(spark, destT, Some(specText), "EXCHANGE")
-        requireNoArchiveConflict(spark, srcT, Some(specText), "EXCHANGE")
-        exchangePartition(spark, destT, specText, srcT)
-        return spark.emptyDataFrame
-      // STORED BY '<handler>' — external-system storage handlers
-      // (HBase/Accumulo), the documented out-of-scope connectors
-      // (SURVEY §2.1). Refuse with intent, not a bare parse error.
-      case s if "(?is)\\bSTORED\\s+BY\\s+'".r.findFirstIn(s).isDefined =>
-        sys.error("STORED BY storage handlers (HBase/Accumulo connectors) " +
-          "are out of scope — see SURVEY.md §2.1; use a native format " +
-          "(PARQUET/ORC/TEXTFILE/...) instead")
-      case showConfRe(name) => return showConf(spark, name)
-      case showTableExtRe(db, pattern, part) =>
-        return showTableExtended(spark, Option(db), pattern, Option(part))
-      case indexStmtRe(s) =>
-        if (!s.trim.toUpperCase.startsWith("SHOW")) {
-          System.err.println(
-            s"[graft] index DDL accepted as no-op (indexes dropped by Hive 3; " +
-              s"parquet min/max + column stats serve reads): ${s.trim.takeWhile(_ != '\n')}")
-          return spark.emptyDataFrame
-        }
-        // SHOW INDEX answers the empty listing (no indexes ever exist)
-        return spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("idx_name",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("tab_name",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("col_names",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("idx_tab_name",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("idx_type",
-              org.apache.spark.sql.types.StringType))))
-      case archiveStmtRe(table, specPre, un, specPost) =>
-        val spec = Option(specPre).orElse(Option(specPost)).getOrElse(
-          sys.error("ARCHIVE can only be run on partitions")) // ErrorMsg 10110
-        val t = table.replace("`", "")
-        if (un == null) operators.Archive.archive(spark, t, spec)
-        else operators.Archive.unarchive(spark, t, spec)
-        return spark.emptyDataFrame
-      case deleteResourceRe(kind, paths) =>
-        System.err.println(s"[graft] DELETE ${kind.toUpperCase} accepted as " +
-          s"no-op (Spark cannot un-add session resources): ${paths.trim}")
-        return spark.emptyDataFrame
-      case showLocksRe() =>
-        return spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("lockid",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("database",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("table",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("lock_state",
-              org.apache.spark.sql.types.StringType))))
-      case lockStmtRe() | abortTxnsRe() =>
-        // no lock/txn manager by design: acquire/release/abort is vacuous
-        return spark.emptyDataFrame
-      case dfsRe(cmdline) =>
-        return runDfs(spark, cmdline)
-      case setSerdeRe() =>
-        return try spark.sql(stmt0) catch {
-          case _: Exception =>
-            System.err.println(s"[graft] SET SERDE accepted as no-op on a " +
-              s"native datasource table: ${stmt0.trim.takeWhile(_ != '\n')}")
-            spark.emptyDataFrame
-        }
-      case showTxnsRe() =>
-        return spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("txnid",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("state",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("user",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("host",
-              org.apache.spark.sql.types.StringType))))
-      case showCompactionsRe() =>
-        return spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("dbname",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("tabname",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("partname",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("type",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("state",
-              org.apache.spark.sql.types.StringType))))
-      case _ => ()
-    }
-    stmt match {
-      case quotedIdRe(v) =>
-        spark.conf.set("spark.sql.parser.quotedRegexColumnNames",
-          v.equalsIgnoreCase("none").toString)
-        spark.emptyDataFrame
-      case createMacroRe(name, rest) =>
-        // split "(arg list) body" at the matching close paren
-        var depth = 0; var i = 0
-        while (i < rest.length && (depth != 0 || i == 0)) {
-          rest.charAt(i) match {
-            case '(' => depth += 1
-            case ')' => depth -= 1
-            case _ => ()
-          }
-          i += 1
-        }
-        require(depth == 0 && i <= rest.length,
-          s"unbalanced parens in CREATE TEMPORARY MACRO $name")
-        val args = rest.substring(1, i - 1).trim
-        val body = rest.substring(i).trim.stripSuffix(";").trim
-        require(body.nonEmpty, s"CREATE TEMPORARY MACRO $name has no body")
-        spark.sql(
-          s"CREATE OR REPLACE TEMPORARY FUNCTION $name($args) RETURN $body")
-        spark.emptyDataFrame
-      case dropMacroRe(ifEx, name) =>
-        spark.sql("DROP TEMPORARY FUNCTION " +
-          (if (ifEx != null) "IF EXISTS " else "") + name)
-        spark.emptyDataFrame
-      case setFileFormatRe(table, part, fmt) if part != null =>
-        // per-partition divergence (DDLTask.alterTableFileFormat with a
-        // partition spec): recorded as a table property; the injected
-        // HeteroPartitions.Reads rule unions per-format scans on read,
-        // and the insert/LOAD paths write the partition's own format.
-        // Hive parity: the ALTER does NOT rewrite existing data — the
-        // standard workflow reloads the partition right after.
-        val meta = spark.sessionState.catalog.getTableMetadata(
-          spark.sessionState.sqlParser.parseTableIdentifier(table))
-        val baseProv = meta.provider.map(_.toLowerCase)
-          .filterNot(_ == "hive").getOrElse("parquet")
-        require(Set("parquet", "orc", "csv", "json").contains(baseProv),
-          s"per-partition SET FILEFORMAT requires a v1 datasource base " +
-            s"table; $table uses $baseProv")
-        require(meta.partitionColumnNames.nonEmpty,
-          s"$table is not partitioned")
-        val kvs = splitPartSpec(part)
-        require(kvs.forall(_.contains("=")) &&
-            kvs.length == meta.partitionColumnNames.length,
-          s"PARTITION ($part) must name every partition column with a value")
-        val specPath = partSubdirLiteral(spark, table, part)
-        val dir = new org.apache.hadoop.fs.Path(
-          meta.location.toString.stripSuffix("/") + "/" + specPath)
-        require(dir.getFileSystem(spark.sessionState.newHadoopConf())
-            .exists(dir),
-          s"partition ($part) does not exist on $table")
-        // the union read derives the partition directory from the table
-        // location + standard layout; a partition REGISTERED at a custom
-        // location (ADD PARTITION ... LOCATION) would silently read the
-        // wrong (empty) directory — refuse loudly instead
-        try {
-          val spec = kvs.map { kv =>
-            val Array(k, v) = kv.split("=", 2).map(_.trim)
-            val declared = meta.partitionColumnNames
-              .find(_.equalsIgnoreCase(k)).getOrElse(k)
-            declared -> unescapeSqlValue(v.stripPrefix("'").stripSuffix("'"))
-          }.toMap
-          val catLoc = spark.sessionState.catalog.getPartition(
-            spark.sessionState.sqlParser.parseTableIdentifier(table), spec)
-            .location.toString.stripSuffix("/")
-          require(catLoc == dir.toString.stripSuffix("/") ||
-              new org.apache.hadoop.fs.Path(catLoc) == dir,
-            s"partition ($part) of $table lives at a custom location " +
-              s"($catLoc); per-partition SET FILEFORMAT requires the " +
-              "standard <table>/<spec> layout")
-        } catch {
-          case e: IllegalArgumentException => throw e
-          case _: Exception => () // partition untracked in catalog: the
-          // directory IS the layout (graft-style), already validated above
-        }
-        val hasComplexP = meta.schema.fields.exists(f => f.dataType match {
-          case _: org.apache.spark.sql.types.ArrayType |
-               _: org.apache.spark.sql.types.MapType |
-               _: org.apache.spark.sql.types.StructType => true
-          case _ => false
-        })
-        val newProv = fileFormatProvider(fmt, hasComplexP)
-        val prevEntries = graft.plans.HeteroPartitions.parse(meta.properties)
-          .filterNot(_._1 == specPath)
-        val updated =
-          if (newProv == baseProv) prevEntries
-          else prevEntries :+ (specPath -> newProv)
-        val key = graft.plans.HeteroPartitions.PropKey
-        if (updated.isEmpty)
-          spark.sql(s"ALTER TABLE $table UNSET TBLPROPERTIES IF EXISTS ('$key')")
-        else
-          spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES ('$key' = " +
-            s"'${graft.plans.HeteroPartitions.encode(updated)}')")
-        spark.sql(s"REFRESH TABLE $table")
-        spark.emptyDataFrame
-      case setFileFormatRe(table, part, fmt) =>
-        val meta = spark.sessionState.catalog.getTableMetadata(
-          spark.sessionState.sqlParser.parseTableIdentifier(table))
-        // a complex-typed schema exceeds the csv datasource: the TEXTFILE
-        // target then means graft-text (real LazySimpleSerDe), same
-        // routing as the CREATE-side rewrite
-        val hasComplex = meta.schema.fields.exists(f => f.dataType match {
-          case _: org.apache.spark.sql.types.ArrayType |
-               _: org.apache.spark.sql.types.MapType |
-               _: org.apache.spark.sql.types.StructType => true
-          case _ => false
-        })
-        val provider = "`" + fileFormatProvider(fmt, hasComplex) + "`"
-        val opts = if (provider == "`csv`")
-          " OPTIONS (sep = '\u0001', nullValue = '\\\\N')" else ""
-        val partBy = if (meta.partitionColumnNames.nonEmpty)
-          meta.partitionColumnNames.mkString(" PARTITIONED BY (", ", ", ")")
-        else ""
-        val tmp = table + "_setff_tmp"
-        spark.sql(s"DROP TABLE IF EXISTS $tmp")
-        // a stale managed dir from a crashed earlier run blocks the CTAS
-        // (LOCATION_ALREADY_EXISTS) — clear it best-effort
-        val tmpPath = new org.apache.hadoop.fs.Path(
-          spark.sessionState.catalog.defaultTablePath(
-            spark.sessionState.sqlParser.parseTableIdentifier(tmp)))
-        tmpPath.getFileSystem(spark.sessionState.newHadoopConf())
-          .delete(tmpPath, true)
-        spark.sql(
-          s"CREATE TABLE $tmp USING $provider$opts$partBy AS SELECT * FROM $table")
-        spark.sql(s"DROP TABLE $table")
-        spark.sql(s"ALTER TABLE $tmp RENAME TO $table")
-        // partition entries still name the pre-RENAME locations (graft
-        // DSv2 rebuilds have no catalog partition list and reject RECOVER)
-        if (meta.partitionColumnNames.nonEmpty &&
-            !provider.contains("graft-"))
-          spark.sql(s"ALTER TABLE $table RECOVER PARTITIONS")
-        spark.sql(s"REFRESH TABLE $table")
-        spark.emptyDataFrame
-      // ADD COLUMNS on a graft DSv2 container is METADATA-ONLY, as in the
-      // reference (partition_wise_fileformat11.q adds a column over
-      // existing RCFile partitions with no rewrite): the columnar /
-      // sequence serdes tolerate rows with fewer cells than the declared
-      // schema and read the missing tail as NULL. Spark's native command
-      // rejects v2 tables, so the catalog data schema is extended
-      // directly. Non-graft providers keep the native path (fall through).
-      case addColumnsRe(table, colList)
-          if tableFormat(spark, table).startsWith("graft-") =>
-        val cat = spark.sessionState.catalog
-        val id = spark.sessionState.sqlParser.parseTableIdentifier(table)
-        val meta = cat.getTableMetadata(id)
-        val partCols = meta.partitionColumnNames
-        val parsed = org.apache.spark.sql.types.StructType.fromDDL(colList)
-        val newFields = parsed.fields.map { f =>
-          f.dataType match {
-            case ct @ (_: org.apache.spark.sql.types.CharType |
-                       _: org.apache.spark.sql.types.VarcharType) =>
-              val mb = new org.apache.spark.sql.types.MetadataBuilder()
-                .withMetadata(f.metadata)
-                .putString("__CHAR_VARCHAR_TYPE_STRING", ct.sql.toLowerCase)
-              f.copy(dataType = org.apache.spark.sql.types.StringType,
-                metadata = mb.build())
-            case _ => f
-          }
-        }
-        val existing = meta.schema.fieldNames.map(_.toLowerCase).toSet
-        newFields.foreach(f => require(!existing.contains(f.name.toLowerCase),
-          s"Duplicate column name: ${f.name}"))
-        val dataFields = meta.schema.fields
-          .filterNot(f => partCols.exists(_.equalsIgnoreCase(f.name)))
-        cat.alterTableDataSchema(id,
-          org.apache.spark.sql.types.StructType(dataFields ++ newFields))
-        spark.sql(s"REFRESH TABLE $table")
-        spark.emptyDataFrame
-      case replaceColsRe(table, colList) =>
-        val meta = spark.sessionState.catalog.getTableMetadata(
-          spark.sessionState.sqlParser.parseTableIdentifier(table))
-        val partCols = meta.partitionColumnNames
-        val dataCols = meta.schema.map(_.name)
-          .filterNot(c => partCols.exists(_.equalsIgnoreCase(c)))
-        val newDefs = splitAssignments(colList).map {
-          case colDefRe(n, t) => (n, t.trim)
-          case d => throw new IllegalArgumentException(
-            s"REPLACE COLUMNS: cannot parse column definition: $d")
-        }
-        val projected = newDefs.zipWithIndex.map { case ((n, t), i) =>
-          if (i < dataCols.length) s"CAST(`${dataCols(i)}` AS $t) AS `$n`"
-          else s"CAST(NULL AS $t) AS `$n`"
-        }
-        val selectSql = "SELECT " +
-          (projected ++ partCols.map(c => s"`$c`")).mkString(", ") +
-          s" FROM $table"
-        swapTable(spark, table, meta, selectSql)
-        spark.emptyDataFrame
-      case alterPartColTypeRe(table, colN, typ) =>
-        val cat = spark.sessionState.catalog
-        val id = spark.sessionState.sqlParser.parseTableIdentifier(table)
-        val meta = cat.getTableMetadata(id)
-        require(meta.partitionColumnNames.exists(_.equalsIgnoreCase(colN)),
-          s"$colN is not a partition column of $table")
-        val dt = spark.sessionState.sqlParser.parseDataType(typ.trim)
-        // Hive's type lattice only: Spark 4 parses types Hive never had
-        // (TIME), which the reference refuses at parse
-        // (alter_partition_coltype_invalidtype.q — `ts time`)
-        dt match {
-          case org.apache.spark.sql.types.ByteType |
-               org.apache.spark.sql.types.ShortType |
-               org.apache.spark.sql.types.IntegerType |
-               org.apache.spark.sql.types.LongType |
-               org.apache.spark.sql.types.FloatType |
-               org.apache.spark.sql.types.DoubleType |
-               org.apache.spark.sql.types.BooleanType |
-               org.apache.spark.sql.types.StringType |
-               org.apache.spark.sql.types.DateType |
-               org.apache.spark.sql.types.TimestampType |
-               org.apache.spark.sql.types.BinaryType => ()
-          case _: org.apache.spark.sql.types.DecimalType |
-               _: org.apache.spark.sql.types.CharType |
-               _: org.apache.spark.sql.types.VarcharType => ()
-          case _ => sys.error(
-            s"partition column type ${typ.trim} is not supported")
-        }
-        val newSchema = org.apache.spark.sql.types.StructType(
-          meta.schema.fields.map(f =>
-            if (f.name.equalsIgnoreCase(colN)) f.copy(dataType = dt) else f))
-        cat.alterTable(meta.copy(schema = newSchema))
-        spark.sql(s"REFRESH TABLE $table")
-        spark.emptyDataFrame
-      case notClusteredRe(table, sortedOnly) =>
-        // ALTER TABLE ... NOT CLUSTERED / NOT SORTED (alter4.q,
-        // alter_table_not_sorted.q; DDLSemanticAnalyzer
-        // analyzeAlterTableClusterSort): drop the bucketing spec (or just
-        // its sort columns) from the catalog — already-written files keep
-        // their layout, but the planner stops ASSUMING it (no more SMB/
-        // bucket-sample planning against files a future unbucketed write
-        // could violate)
-        val cat = spark.sessionState.catalog
-        val id = spark.sessionState.sqlParser.parseTableIdentifier(table)
-        val meta = cat.getTableMetadata(id)
-        val newSpec =
-          if (sortedOnly != null) meta.bucketSpec.map(_.copy(sortColumnNames = Nil))
-          else None
-        cat.alterTable(meta.copy(bucketSpec = newSpec))
-        spark.sql(s"REFRESH TABLE $table")
-        spark.emptyDataFrame
-      // string-family CHANGE (string ↔ char(n) ↔ varchar(n), same name,
-      // no reposition) is METADATA-ONLY, as in the reference
-      // (DDLSemanticAnalyzer alter is a metastore update; alter_char1.q:
-      // narrowing truncates the READ VIEW and widening back restores the
-      // full values — the data files never rewrite). The read-side
-      // truncation lives in HiveSemantics.CharStripReads.
-      case changeColRe(table, oldC, newC, typ, pos)
-          if pos == null && oldC.equalsIgnoreCase(newC) &&
-            typ.matches("(?is)\\s*(string|(var)?char\\s*\\(\\s*\\d+\\s*\\))\\s*") && {
-              val meta = spark.sessionState.catalog.getTableMetadata(
-                spark.sessionState.sqlParser.parseTableIdentifier(table))
-              val f = meta.schema.fields.find(_.name.equalsIgnoreCase(oldC))
-              !meta.partitionColumnNames.exists(_.equalsIgnoreCase(oldC)) &&
-              f.exists { fd =>
-                import org.apache.spark.sql.catalyst.util.CharVarcharUtils
-                CharVarcharUtils.getRawType(fd.metadata)
-                  .getOrElse(fd.dataType) match {
-                  case org.apache.spark.sql.types.StringType |
-                       org.apache.spark.sql.types.CharType(_) |
-                       org.apache.spark.sql.types.VarcharType(_) => true
-                  case _ => false
-                }
-              }
-            } =>
-        import org.apache.spark.sql.catalyst.util.CharVarcharUtils
-        import org.apache.spark.sql.types._
-        val id = spark.sessionState.sqlParser.parseTableIdentifier(table)
-        val cat = spark.sessionState.catalog
-        val meta = cat.getTableMetadata(id)
-        val partCols = meta.partitionColumnNames
-        val dt = spark.sessionState.sqlParser.parseDataType(typ.trim)
-        // narrowing detection: a CHANGE whose new declared length can be
-        // SHORTER than stored values (string→char/varchar, or a smaller
-        // length) stamps the table so CharStripReads applies its
-        // read-side truncation clamp there — and ONLY there; untouched
-        // tables keep bare reads and full parquet filter pushdown
-        val narrows = {
-          val prior = meta.schema.fields
-            .find(_.name.equalsIgnoreCase(oldC))
-            .map(f => CharVarcharUtils.getRawType(f.metadata)
-              .getOrElse(f.dataType))
-          (prior, dt) match {
-            case (Some(CharType(a)), CharType(b)) => b < a
-            case (Some(CharType(a)), VarcharType(b)) => b < a
-            case (Some(VarcharType(a)), CharType(b)) => b < a
-            case (Some(VarcharType(a)), VarcharType(b)) => b < a
-            case (Some(StringType), _: CharType | _: VarcharType) => true
-            case _ => false
-          }
-        }
-        val newData = meta.schema.fields
-          .filterNot(f => partCols.exists(_.equalsIgnoreCase(f.name)))
-          .map { f =>
-            if (!f.name.equalsIgnoreCase(oldC)) f
-            else {
-              val mb = new MetadataBuilder().withMetadata(f.metadata)
-              dt match {
-                // the metadata key is private in CharVarcharUtils — its
-                // literal is the stable on-disk contract
-                case _: CharType | _: VarcharType => mb.putString(
-                  "__CHAR_VARCHAR_TYPE_STRING", dt.sql.toLowerCase)
-                case _ => mb.remove("__CHAR_VARCHAR_TYPE_STRING")
-              }
-              f.copy(dataType = StringType, metadata = mb.build())
-            }
-          }
-        if (narrows) {
-          val prop = graft.plans.HiveSemantics.CharStripReads.NarrowedProp
-          if (!meta.properties.contains(prop))
-            cat.alterTable(meta.copy(
-              properties = meta.properties + (prop -> "true")))
-        }
-        cat.alterTableDataSchema(id, StructType(newData))
-        spark.sql(s"REFRESH TABLE $table")
-        spark.emptyDataFrame
-      case changeColRe(table, oldC, newC, typ, pos) =>
-        val meta = spark.sessionState.catalog.getTableMetadata(
-          spark.sessionState.sqlParser.parseTableIdentifier(table))
-        val partCols = meta.partitionColumnNames
-        require(!partCols.exists(_.equalsIgnoreCase(oldC)),
-          s"CHANGE cannot alter partition column $oldC")
-        val dataCols = meta.schema.map(_.name)
-          .filterNot(c => partCols.exists(_.equalsIgnoreCase(c)))
-        require(dataCols.exists(_.equalsIgnoreCase(oldC)),
-          s"no column $oldC in $table")
-        // char/varchar targets: Hive TRUNCATES existing over-length values
-        // at the type change (HiveBaseChar.enforceMaxLength; alter_char2.q
-        // narrows char(255)→char(10) and reads the 10-char prefix) — and
-        // the rebuilt table must keep the declared char type, which a CTAS
-        // would degrade to string, so the swap gets an explicit schema
-        val charLen = """(?i)\s*(?:var)?char\s*\(\s*(\d+)\s*\)\s*""".r
-        def hiveCast(c: String): String = typ match {
-          case charLen(n) => s"substr(CAST(`$c` AS STRING), 1, $n) AS `$newC`"
-          case _ => s"CAST(`$c` AS $typ) AS `$newC`"
-        }
-        val entries = dataCols.map { c =>
-          if (c.equalsIgnoreCase(oldC)) (newC, hiveCast(c))
-          else (c, s"`$c`")
-        }
-        val reordered = Option(pos).map(_.trim) match {
-          case None => entries
-          case Some(p) if p.equalsIgnoreCase("FIRST") =>
-            val (m, rest) = entries.partition(_._1.equalsIgnoreCase(newC))
-            m ++ rest
-          case Some(p) =>
-            val after = p.split("\\s+")(1).replace("`", "")
-            val (m, rest) = entries.partition(_._1.equalsIgnoreCase(newC))
-            val idx = rest.indexWhere(_._1.equalsIgnoreCase(after))
-            require(idx >= 0, s"AFTER column $after not found in $table")
-            rest.take(idx + 1) ++ m ++ rest.drop(idx + 1)
-        }
-        val selectSql = "SELECT " +
-          (reordered.map(_._2) ++ partCols.map(c => s"`$c`")).mkString(", ") +
-          s" FROM $table"
-        // explicit target schema: the changed column gets the declared
-        // type text, untouched columns keep their raw type (char metadata
-        // included), partition columns close the list
-        val schemaDdl = {
-          import org.apache.spark.sql.catalyst.util.CharVarcharUtils
-          def rawSql(n: String): String = {
-            val f = meta.schema.fields
-              .find(_.name.equalsIgnoreCase(n)).get
-            CharVarcharUtils.getRawType(f.metadata)
-              .getOrElse(f.dataType).sql
-          }
-          (reordered.map { case (n, _) =>
-            if (n.equalsIgnoreCase(newC)) s"`$n` $typ" else s"`$n` ${rawSql(n)}"
-          } ++ partCols.map(c => s"`$c` ${rawSql(c)}")).mkString(", ")
-        }
-        swapTable(spark, table, meta, selectSql, Some(schemaDdl))
-        spark.emptyDataFrame
-      case insertIfNotExistsRe(prefix, table, spec, rest) =>
-        val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-        val specMap = spec.split(",").map { kv =>
-          require(kv.contains("="), // dynamic column (no value given)
-            s"IF NOT EXISTS needs a fully-static partition spec, got: $kv")
-          val Array(k, v) = kv.split("=", 2).map(_.trim)
-          k.toLowerCase -> v.stripPrefix("'").stripSuffix("'")
-        }.toMap
-        val exists = spark.sessionState.catalog
-          .listPartitions(ident, Some(specMap)).nonEmpty
-        // through the full insert route (NOT a bare spark.sql): the
-        // rewritten statement must still see the dyn-part guards, the
-        // Hive-cast retry, small-file merge/autogather, and the
-        // heterogeneous-partition write routing
-        if (exists) spark.emptyDataFrame
-        else insertWithHiveCasts(spark, prefix + " " + rest)
-      case createFunRe(name, cls, res) if functionClasses.contains(cls) =>
-        shipFunctionResources(spark, res)
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          name.split('.').last, functionClasses(cls), "scala_udf")
-        spark.emptyDataFrame
-      // a class NOT in the builtin catalog but loadable from the session
-      // classloader (after ADD JAR, or shipped right here by the
-      // statement's own USING JAR clause — mapjoin_addjar.q's
-      // runtime-loading surface) that implements the Java UDF0..22
-      // interfaces: resolve it to a ScalaUDF builder, the reference's
-      // FunctionTask class-to-builder step for user jars
-      case createFunRe(name, cls, res) if {
-        // resources ship INSIDE the guard: the class can only load after
-        // its jar joins the session classloader, and the next branch's
-        // guard (the Hive-UDF adapter probe) needs it shipped too
-        shipFunctionResources(spark, res)
-        // re-registration must re-resolve: a later ADD JAR may carry a
-        // MODIFIED class (changed arity/signature) under the same name,
-        // and a forever-cached builder would keep serving the stale shape
-        jarUdfCache.remove(cls)
-        jarUdfBuilder(cls).isDefined
-      } =>
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          name.split('.').last, jarUdfBuilder(cls).get, "scala_udf")
-        spark.emptyDataFrame
-      // a third-party Hive UDF class (GenericUDF, or legacy UDF through
-      // GenericUDFBridge): execute through the adapter expression. The
-      // jar was already shipped by the previous branch's guard. Classes
-      // that are loadable but none of the UDF shapes fall through to
-      // Spark's native CREATE FUNCTION (whose CANNOT_LOAD_FUNCTION_CLASS
-      // error is the pinned negative shape).
-      case createFunRe(name, cls, _) if {
-        // resolve ONCE (guard + body share through the holder): the probe
-        // class-loads and walks the type hierarchy, no need to pay twice
-        hiveUdfResolved = hiveUdfBuilder(name.split('.').last, cls)
-        hiveUdfResolved.isDefined
-      } =>
-        spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-          name.split('.').last, hiveUdfResolved.get, "scala_udf")
-        spark.emptyDataFrame
-      case dropFunRe(ifExists, name) =>
-        val fid = org.apache.spark.sql.catalyst.FunctionIdentifier(
-          name.split('.').last)
-        // FunctionRegistry parity (drop_native_udf.q): a BUILT-IN function
-        // cannot be dropped — and Spark's session registry would otherwise
-        // happily remove `max` for the whole session
-        if (org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-              .builtin.functionExists(fid))
-          sys.error(s"Cannot drop native function ${fid.funcName}")
-        val dropped = spark.sessionState.functionRegistry.dropFunction(fid)
-        // FunctionTask parity (drop_func_nonexistent.q): without IF EXISTS,
-        // dropping an unregistered function is an error, not a no-op
-        if (!dropped && ifExists == null)
-          sys.error(s"Cannot drop function $name: it is not registered " +
-            "(use DROP FUNCTION IF EXISTS to ignore)")
-        spark.emptyDataFrame
-      case renameTableRe(from, to) =>
-        renameWithPartitionFix(spark, from, to)
-        spark.emptyDataFrame
-      case alterViewRenameRe(from, to) =>
-        val meta = spark.sessionState.catalog.getTableMetadata(
-          spark.sessionState.sqlParser.parseTableIdentifier(from))
-        if (meta.tableType !=
-            org.apache.spark.sql.catalyst.catalog.CatalogTableType.VIEW)
-          sys.error("To alter a base table you need to use the ALTER TABLE " +
-            s"command. ($from is a table)")
-        // a view rename is pure catalog metadata — no partition locations
-        // to repair; Spark's ALTER TABLE form refuses views, so go
-        // straight to the SessionCatalog rename
-        val toId0 = spark.sessionState.sqlParser.parseTableIdentifier(to)
-        val fromId = spark.sessionState.sqlParser.parseTableIdentifier(from)
-        spark.sessionState.catalog.renameTable(
-          fromId,
-          if (toId0.database.isDefined) toId0
-          else toId0.copy(database = fromId.database))
-        operators.Auth.renameOwner(spark,
-          fromId.database.getOrElse(spark.catalog.currentDatabase),
-          fromId.table,
-          toId0.database.orElse(fromId.database)
-            .getOrElse(spark.catalog.currentDatabase), toId0.table)
-        spark.emptyDataFrame
-      case alterViewAddPartRe(name, ifNot, specText, locClause) =>
-        val meta = spark.sessionState.catalog.getTableMetadata(
-          spark.sessionState.sqlParser.parseTableIdentifier(name))
-        if (meta.tableType !=
-            org.apache.spark.sql.catalyst.catalog.CatalogTableType.VIEW)
-          sys.error("To alter a base table you need to use the ALTER TABLE " +
-            s"command. ($name is a table)")
-        if (locClause != null)
-          sys.error("LOCATION clause illegal for view partition")
-        val declared = meta.properties.get("graft.view.partcols")
-          .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty)).getOrElse(Nil)
-        if (declared.isEmpty)
-          sys.error(s"view $name is not partitioned but partition spec exists")
-        val kvs = operators.ExportImport.parseSpec(Some(specText)).get
-        val shown = kvs.map { case (k, v) => s"$k=$v" }.mkString("{", ", ", "}")
-        if (!kvs.forall(kv => declared.exists(_.equalsIgnoreCase(kv._1))))
-          sys.error(s"Partition spec $shown contains non-partition columns")
-        // compare KEY SETS, not lengths: a duplicate key (a=1, a=2) would
-        // otherwise satisfy the length check while leaving another
-        // declared column unbound (alter_view_failure5-family semantics)
-        val specKeys = kvs.map(_._1.toLowerCase).toSet
-        if (specKeys.size != kvs.length)
-          sys.error(s"Partition spec $shown contains duplicate columns")
-        if (!declared.forall(d => specKeys.contains(d.toLowerCase)))
-          sys.error(s"partition spec $shown doesn't contain all " +
-            s"(${declared.length}) partition columns")
-        // spec is valid: RECORD the view partition (r16; previously
-        // validated-and-discarded) — the metastore keeps view partitions
-        // as pure metadata (no storage), and three consumers need them:
-        // SHOW PARTITIONS on the view, DROP PARTITION, and the 10217
-        // refusal of CREATE OR REPLACE VIEW while partitions exist
-        // (create_or_replace_view.q / create_or_replace_view2.q)
-        val entry = viewPartEntry(declared, kvs)
-        val existing = viewPartitions(meta)
-        if (existing.contains(entry)) {
-          if (ifNot == null)
-            sys.error(s"Partition already exists: $name $shown")
-        } else {
-          spark.sessionState.catalog.alterTable(meta.copy(properties =
-            meta.properties + ("graft.view.partitions" ->
-              (existing :+ entry).mkString(","))))
-          spark.sql(s"REFRESH TABLE $name")
-        }
-        spark.emptyDataFrame
-      case alterViewDropPartRe(name, ifEx, specText) =>
-        val meta = spark.sessionState.catalog.getTableMetadata(
-          spark.sessionState.sqlParser.parseTableIdentifier(name))
-        if (meta.tableType !=
-            org.apache.spark.sql.catalyst.catalog.CatalogTableType.VIEW)
-          sys.error("To alter a base table you need to use the ALTER TABLE " +
-            s"command. ($name is a table)")
-        val declared = meta.properties.get("graft.view.partcols")
-          .map(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty)).getOrElse(Nil)
-        val kvs = operators.ExportImport.parseSpec(Some(specText)).get
-        // Hive's DROP PARTITION takes a PARTIAL spec too (drops every
-        // matching partition); match entries that contain ALL spec pairs
-        val wanted = kvs.map { case (k, v) =>
-          java.net.URLEncoder.encode(
-            declared.find(_.equalsIgnoreCase(k)).getOrElse(k), "UTF-8") +
-            "=" + java.net.URLEncoder.encode(v, "UTF-8")
-        }.toSet
-        val existing = viewPartitions(meta)
-        val (hit, keep) = existing.partition(e =>
-          wanted.subsetOf(e.split("/").toSet))
-        if (hit.isEmpty) {
-          if (ifEx == null)
-            sys.error(s"Specified partition does not exist: $name " +
-              kvs.map { case (k, v) => s"$k=$v" }.mkString("(", ", ", ")"))
-        } else {
-          spark.sessionState.catalog.alterTable(meta.copy(properties =
-            meta.properties + ("graft.view.partitions" -> keep.mkString(","))))
-          spark.sql(s"REFRESH TABLE $name")
-        }
-        spark.emptyDataFrame
-      // SHOW PARTITIONS on a partitioned VIEW answers from the recorded
-      // metadata entries (Hive prints the ds=v/hr=v partition names)
-      case showPartsRe(table, partial) if viewPartColsOf(spark, table).nonEmpty =>
-        val meta = spark.sessionState.catalog.getTableMetadata(
-          spark.sessionState.sqlParser.parseTableIdentifier(table))
-        val prefixes = Option(partial).map { p =>
-          operators.ExportImport.parseSpec(Some(p)).get
-            .map { case (k, v) => s"${k.toLowerCase}=${v.toLowerCase}" }
-        }.getOrElse(Nil)
-        val rows = viewPartitions(meta)
-          .map(decodeViewPartEntry)
-          .filter(n => prefixes.forall(pr =>
-            n.toLowerCase.split("/").contains(pr)))
-          .sorted
-        import spark.implicits._
-        rows.toDF("partition")
-      case loadDataRe(inpath, over, table, part) =>
-        requireNoArchiveConflict(spark, table, Option(part), "LOAD")
-        loadData(spark, inpath, over != null, table, Option(part))
-        spark.emptyDataFrame
-      // partitioned graft-* tables: partition statements answered from
-      // the directory layout (v2 tables reject the native commands)
-      case showPartsRe(table, partial)
-          if graftPartCols(spark, table).nonEmpty =>
-        showGraftPartitions(spark, table, Option(partial))
-      case dropPartFilterRe(table, ifEx, specText, _)
-          if graftPartCols(spark, table).nonEmpty =>
-        dropGraftPartitions(spark, table, ifEx != null, specText)
-        spark.emptyDataFrame
-      case addPartRe(table, ifNot, specText)
-          if graftPartCols(spark, table).nonEmpty =>
-        addGraftPartitions(spark, table, ifNot != null, specText)
-        spark.emptyDataFrame
-      // DROP PARTITION with comparators goes through the catalog-filter
-      // expansion; exact =-only specs stay on Spark's native command
-      case dropPartFilterRe(table, ifEx, specText, _)
-          if "<>!".exists(specText.contains(_)) =>
-        dropPartitionsByFilter(spark, table, ifEx != null, specText)
-        pruneHeteroEntries(spark, table)
-        operators.Archive.prune(spark, table)
-        spark.emptyDataFrame
-      // a PARTIAL exact spec (fewer columns than the table's partition
-      // keys) drops EVERY matching partition (drop_multi_partitions.q's
-      // `drop partition (b='1')` over (b,c) keys); Spark's native
-      // command reads the spec as exact and misses — route through the
-      // same catalog-filter expansion the comparator form uses
-      case dropPartFilterRe(table, ifEx, specText, _)
-          if !"<>!".exists(specText.contains(_)) && {
-            val cols = tablePartTypes(spark, table)
-            cols.nonEmpty && partGroupRe.findAllMatchIn(specText).exists { g =>
-              val n = partCmpRe.findAllMatchIn(g.group(1)).size
-              n > 0 && n < cols.size
-            }
-          } =>
-        dropPartitionsByFilter(spark, table, ifEx != null, specText)
-        pruneHeteroEntries(spark, table)
-        operators.Archive.prune(spark, table)
-        spark.emptyDataFrame
-      // exact-spec drops stay on Spark's native command, but a hetero
-      // or partially-archived table must afterwards prune entries whose
-      // partition vanished (the reference lets archived partitions drop)
-      case dropPartFilterRe(table, _, _, _)
-          if graft.plans.HeteroPartitions.entriesOf(spark, table).nonEmpty ||
-             operators.Archive.entriesOf(spark, table).nonEmpty =>
-        val out = spark.sql(stmt)
-        pruneHeteroEntries(spark, table)
-        operators.Archive.prune(spark, table)
-        out
-      // describe of a diverged partition: append its own format row
-      // (DDLTask.describeTable shows the partition's storage in Hive)
-      // DESCRIBE table.col[.path] with Hive's xpath tokens — $elem$ (array
-      // element), $key$/$value$ (map sides), struct member names
-      // (DDLSemanticAnalyzer describe_xpath.q family). A path resolving
-      // to a STRUCT lists its fields as rows; anything else prints one
-      // (last-segment, type) row, Hive's "from deserializer" comment
-      // included. Only fires when the name does NOT itself resolve as a
-      // table but a 1- or 2-part prefix does (so DESCRIBE db.table stays
-      // native).
-      case describeXpathRe(name) if describeXpath(spark, name).isDefined =>
-        val rows = describeXpath(spark, name).get
-        import scala.jdk.CollectionConverters._
-        spark.createDataFrame(
-          rows.map(r => org.apache.spark.sql.Row(r._1, r._2, r._3)).asJava,
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("col_name",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("data_type",
-              org.apache.spark.sql.types.StringType),
-            org.apache.spark.sql.types.StructField("comment",
-              org.apache.spark.sql.types.StringType))))
-      case descFmtPartRe(table, part)
-          if graft.plans.HeteroPartitions.entriesOf(spark, table)
-            .exists(_._1 == partSubdirLiteral(spark, table, part)) =>
-        val prov = graft.plans.HeteroPartitions.entriesOf(spark, table)
-          .find(_._1 == partSubdirLiteral(spark, table, part)).get._2
-        val native = spark.sql(stmt)
-        native.union(spark.createDataFrame(
-          java.util.Arrays.asList(
-            org.apache.spark.sql.Row("Partition Format", prov,
-              "per-partition SET FILEFORMAT")),
-          native.schema))
-      // partition rename on a hetero table: move the divergence entry
-      // with the partition (the files keep their format through a rename)
-      case renamePartRe(table, fromSpec, toSpec)
-          if graft.plans.HeteroPartitions.entriesOf(spark, table).nonEmpty =>
-        val fromPath = partSubdirLiteral(spark, table, fromSpec)
-        val out = spark.sql(stmt)
-        val entries = graft.plans.HeteroPartitions.entriesOf(spark, table)
-        entries.find(_._1 == fromPath).foreach { case (_, prov) =>
-          val toPath = partSubdirLiteral(spark, table, toSpec)
-          val moved = entries.filterNot(_._1 == fromPath) :+ (toPath -> prov)
-          val key = graft.plans.HeteroPartitions.PropKey
-          spark.sql(s"ALTER TABLE $table SET TBLPROPERTIES ('$key' = " +
-            s"'${graft.plans.HeteroPartitions.encode(moved)}')")
-          spark.sql(s"REFRESH TABLE $table")
-        }
-        out
-      // row-level DML SQL text → the copy-on-write engine
-      // (UpdateDeleteSemanticAnalyzer's rewrite, targeting the table's
-      // files; Spark's own parser rejects UPDATE/DELETE on parquet tables)
-      case s if s.trim.toUpperCase.startsWith("MERGE") =>
-        mergeTargetRe.findFirstMatchIn(s).foreach(m =>
-          requireNoArchived(spark, m.group(1).replace("`", ""), "MERGE"))
-        sqlMerge(spark, s)
-        spark.emptyDataFrame
-      case updateRe(table, setClause, cond) =>
-        requireNoHetero(spark, table, "UPDATE")
-        requireNoArchived(spark, table, "UPDATE")
-        val partCols = tableDmlPartCols(spark, table)
-        val set = splitAssignments(setClause).map { a =>
-          val Array(k, v) = a.split("=", 2)
-          k.trim -> org.apache.spark.sql.functions.expr(v.trim)
-        }.toMap
-        // Hive parity (UpdateDeleteSemanticAnalyzer): a SET on a partition
-        // column is rejected — moved rows would land in partition dirs the
-        // catalog has never registered, making them silently invisible
-        set.keys.find(k => partCols.exists(_.equalsIgnoreCase(k))).foreach(k =>
-          sys.error(s"UPDATE cannot set partition column $k"))
-        operators.Acid.updateWhere(spark, tableLocation(spark, table),
-          org.apache.spark.sql.functions.expr(cond), set,
-          tableFormat(spark, table), tableDmlSchema(spark, table), partCols,
-          tableDmlOptions(spark, table))
-        spark.sql(s"REFRESH TABLE $table")
-        spark.emptyDataFrame
-      // no-WHERE forms (legal HiveQL: rewrite/drop every row) — ordered
-      // after the WHERE forms, whose regexes are strictly more specific
-      case updateAllRe(table, setClause) =>
-        requireNoHetero(spark, table, "UPDATE")
-        requireNoArchived(spark, table, "UPDATE")
-        val partCols = tableDmlPartCols(spark, table)
-        val set = splitAssignments(setClause).map { a =>
-          val Array(k, v) = a.split("=", 2)
-          k.trim -> org.apache.spark.sql.functions.expr(v.trim)
-        }.toMap
-        set.keys.find(k => partCols.exists(_.equalsIgnoreCase(k))).foreach(k =>
-          sys.error(s"UPDATE cannot set partition column $k"))
-        operators.Acid.updateWhere(spark, tableLocation(spark, table),
-          org.apache.spark.sql.functions.lit(true), set,
-          tableFormat(spark, table), tableDmlSchema(spark, table), partCols,
-          tableDmlOptions(spark, table))
-        spark.sql(s"REFRESH TABLE $table")
-        spark.emptyDataFrame
-      case deleteRe(table, cond) =>
-        requireNoHetero(spark, table, "DELETE")
-        requireNoArchived(spark, table, "DELETE")
-        operators.Acid.deleteWhere(spark, tableLocation(spark, table),
-          org.apache.spark.sql.functions.expr(cond), tableFormat(spark, table),
-          tableDmlSchema(spark, table), tableDmlPartCols(spark, table),
-          tableDmlOptions(spark, table))
-        spark.sql(s"REFRESH TABLE $table")
-        spark.emptyDataFrame
-      case deleteAllRe(table) =>
-        requireNoHetero(spark, table, "DELETE")
-        requireNoArchived(spark, table, "DELETE")
-        operators.Acid.deleteWhere(spark, tableLocation(spark, table),
-          org.apache.spark.sql.functions.lit(true), tableFormat(spark, table),
-          tableDmlSchema(spark, table), tableDmlPartCols(spark, table),
-          tableDmlOptions(spark, table))
-        spark.sql(s"REFRESH TABLE $table")
-        spark.emptyDataFrame
-      case protectRe(table, part, enable, mode, cascade) =>
-        val key = qualName(spark, table)
-        if (mode.equalsIgnoreCase("OFFLINE")) {
-          // table-level OFFLINE is ENFORCED (r17): any query or DML whose
-          // parsed plan references the table refuses with the reference's
-          // error 10113 shape (protectmode_tbl1/3/4/5.q). Partition-level
-          // OFFLINE stays a warn no-op — a partition-pruning-aware read
-          // block would need pruning results the guard runs before.
-          if (part == null) {
-            if (enable.equalsIgnoreCase("ENABLE")) offlineTables.add(key): Unit
-            else offlineTables.remove(key): Unit
-          } else
-            System.err.println(s"[graft] $enable OFFLINE on a PARTITION " +
-              "accepted as no-op (table-level OFFLINE is enforced)")
-        } else if (part == null) {
-          if (enable.equalsIgnoreCase("ENABLE")) {
-            noDropTables.add(key)
-            if (cascade != null) noDropCascade.add(key): Unit
-          } else {
-            noDropTables.remove(key)
-            noDropCascade.remove(key)
-          }
-        } else {
-          val pk = key + "/" + normSpec(part)
-          if (enable.equalsIgnoreCase("ENABLE")) noDropParts.add(pk)
-          else noDropParts.remove(pk)
-        }
-        spark.emptyDataFrame
-      case dropTableStmtRe(table)
-          if noDropTables.contains(qualName(spark, table)) =>
-        sys.error(s"Table $table is protected from being dropped (NO_DROP); " +
-          s"ALTER TABLE $table DISABLE NO_DROP first")
-      case dropPartExactRe(table, spec)
-          if noDropParts.contains(qualName(spark, table) + "/" + normSpec(spec)) ||
-             noDropCascade.contains(qualName(spark, table)) =>
-        sys.error(s"Partition ($spec) of $table is protected from being " +
-          s"dropped (NO_DROP); DISABLE NO_DROP first")
-      // CASCADE would drop protected tables inside the database wholesale
-      case dropDatabaseCascadeRe(db)
-          if noDropTables.stream().anyMatch(_.startsWith(db.toLowerCase + ".")) ||
-             noDropParts.stream().anyMatch(_.startsWith(db.toLowerCase + ".")) =>
-        sys.error(s"Database $db contains NO_DROP-protected tables/" +
-          s"partitions; DISABLE NO_DROP on them before DROP DATABASE CASCADE")
-      case compactRe(table, part, kind) =>
-        requireNoArchiveConflict(spark, table, Option(part), "COMPACT")
-        require(kind.equalsIgnoreCase("major") || kind.equalsIgnoreCase("minor"),
-          s"unknown compaction type '$kind'")
-        val dir = Option(part) match {
-          case Some(spec) =>
-            tableLocation(spark, table).stripSuffix("/") + "/" +
-              spec.split(",").map { kv =>
-                val Array(k, v) = kv.split("=", 2).map(_.trim)
-                s"$k=${v.stripPrefix("'").stripSuffix("'")}"
-              }.mkString("/")
-          case None =>
-            // Whole-table COMPACT on a partitioned table would flatten the
-            // partition layout (partition columns become data columns and
-            // the subdirectory files are deleted) — the reference rejects
-            // this outright (ErrorMsg.java:405 NO_COMPACTION_PARTITION)
-            val partitioned = spark.sessionState.catalog.getTableMetadata(
-              spark.sessionState.sqlParser.parseTableIdentifier(table))
-              .partitionColumnNames.nonEmpty
-            require(!partitioned,
-              s"You must specify a partition to compact for partitioned tables ($table)")
-            tableLocation(spark, table)
-        }
-        val (cFmt, cSchema, cOpts) = maintenanceTarget(spark, table, Option(part))
-        operators.Acid.compact(spark, dir, numFiles = 1,
-          format = cFmt, schema = cSchema, options = cOpts)
-        spark.sql(s"REFRESH TABLE $table")
-        spark.emptyDataFrame
-      case concatenateRe(table, part) =>
-        requireNoArchiveConflict(spark, table, Option(part), "CONCATENATE")
-        val partitioned = spark.sessionState.catalog.getTableMetadata(
-          spark.sessionState.sqlParser.parseTableIdentifier(table))
-          .partitionColumnNames.nonEmpty
-        val dir = Option(part) match {
-          case Some(spec) =>
-            val sub = spec.split(",").map { kv =>
-              val Array(k, v) = kv.split("=", 2).map(_.trim)
-              s"$k=${v.stripPrefix("'").stripSuffix("'")}"
-            }.mkString("/")
-            tableLocation(spark, table).stripSuffix("/") + "/" + sub
-          case None =>
-            // Hive rejects whole-table CONCATENATE on partitioned tables
-            // (a flat rewrite would destroy the partition layout)
-            require(!partitioned,
-              s"$table is partitioned: CONCATENATE needs a PARTITION spec")
-            tableLocation(spark, table)
-        }
-        val (nFmt, nSchema, nOpts) = maintenanceTarget(spark, table, Option(part))
-        operators.Acid.compact(spark, dir, numFiles = 1,
-          format = nFmt, schema = nSchema, options = nOpts)
-        spark.sql(s"REFRESH TABLE $table")
-        spark.emptyDataFrame
-      case exportRe(table, part, dir) =>
-        val meta = spark.sessionState.catalog.getTableMetadata(
-          spark.sessionState.sqlParser.parseTableIdentifier(table))
-        val spec = operators.ExportImport.parseSpec(Option(part))
-        spec.foreach { kvs =>
-          val declared = meta.partitionColumnNames
-          kvs.foreach { case (k, _) =>
-            require(declared.exists(_.equalsIgnoreCase(k)),
-              s"EXPORT: $k is not a partition column of $table " +
-                s"(partition columns: ${declared.mkString(", ")})")
-          }
-          // the reference refuses a spec matching no partition
-          // (ExportSemanticAnalyzer getPartitions EMPTY check);
-          // normalize spec keys to the declared column case first
-          val normalized = kvs.map { case (k, v) =>
-            declared.find(_.equalsIgnoreCase(k)).getOrElse(k) -> v
-          }.toMap
-          val matching = spark.sessionState.catalog.listPartitions(
-            spark.sessionState.sqlParser.parseTableIdentifier(table),
-            Some(normalized))
-          require(matching.nonEmpty,
-            s"EXPORT: no partition of $table matches the specification " +
-              kvs.map { case (k, v) => s"$k='$v'" }.mkString("(", ", ", ")"))
-        }
-        val df0 = spark.table(table)
-        val df = spec.fold(df0)(kvs => kvs.foldLeft(df0) { case (d, (k, v)) =>
-          d.filter(org.apache.spark.sql.functions.col(k) === v) })
-        operators.ExportImport.exportTable(df, dir, meta.partitionColumnNames)
-        spark.emptyDataFrame
-      case importRe(ext, table, part, dir, loc) =>
-        val location = Option(loc).getOrElse(
-          graft.tools.Tmp.dir("graft_import") + "/" + table.split('.').last)
-        operators.ExportImport.importTable(spark, dir, table, location,
-          operators.ExportImport.parseSpec(Option(part)),
-          external = ext != null, explicitLocation = loc != null)
-        spark.emptyDataFrame
-      // FROM-first multi-destination insert (genBodyPlan): Spark's parser
-      // rejects it, so detect and fan out over one shared scan
-      case s if s.trim.toUpperCase.startsWith("FROM") &&
-                topLevel(s.trim, "INSERT").nonEmpty =>
-        multiInsert(spark, s)
-      // EXPLAIN DEPENDENCY SELECT ... (ExplainTask.getJSONDependencies):
-      // the input tables/views a query reads, as one JSON row. Views are
-      // expanded by the analyzer, so both the view and its base tables
-      // list — the reference's behavior. The innermost SubqueryAlias
-      // above each leaf carries the relation's name (outer aliases like
-      // `src s1` are skipped); View nodes carry catalog/temp view names.
-      // input_partitions stays empty: pruned-partition detail lives in
-      // EXPLAIN FORMATTED's PartitionFilters here.
-      case s if s.trim.toUpperCase.startsWith("EXPLAIN DEPENDENCY") =>
-        val q = s.trim.substring("EXPLAIN DEPENDENCY".length).trim
-        val names = queryInputTables(spark, q)
-        val json = names
-          .map(n => s"""{"tablename":"$n"}""")
-          .mkString("""{"input_partitions":[],"input_tables":[""", ",", "]}")
-        spark.createDataFrame(
-          java.util.Collections.singletonList(org.apache.spark.sql.Row(json)),
-          org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("dependency",
-              org.apache.spark.sql.types.StringType))))
-      // SHOW CREATE TABLE t AS SERDE asks for Hive-serde DDL — a shape
-      // Spark only answers for Hive-provider tables. Every table here is
-      // a datasource table, so degrade to the plain form (the table's
-      // actual runnable DDL) instead of erroring the script.
-      case s if "(?is)^\\s*SHOW\\s+CREATE\\s+TABLE\\s+[\\w.`]+\\s+AS\\s+SERDE\\s*;?\\s*$".r
-          .findFirstIn(s).isDefined =>
-        spark.sql("(?is)\\s+AS\\s+SERDE\\s*;?\\s*$".r.replaceFirstIn(s.trim, ""))
-      // EXPLAIN LOGICAL <query> — reference explainOption KW_LOGICAL
-      // (HiveParser.g:650): print the logical operator tree only. The
-      // analog here is the OPTIMIZED logical plan (what Catalyst hands
-      // to physical planning), scrubbed like the physical EXPLAIN path.
-      case s if s.trim.toUpperCase.startsWith("EXPLAIN LOGICAL") =>
-        val q = s.trim.substring("EXPLAIN LOGICAL".length).trim
-        return oneStringRow(spark, "plan",
-          scrubPlanText(analyzeOnly(spark, q).optimizedPlan.toString))
-      // EXPLAIN [FORMATTED] AUTHORIZATION <stmt> — ExplainTask.java:319-334:
-      // the INPUTS/OUTPUTS/CURRENT_USER/OPERATION block. Inputs reuse the
-      // DEPENDENCY traversal (db@table per analyzed leaf); outputs are
-      // empty for queries (the reference masks its scratch-dir line);
-      // authorization *enforcement* is a deliberate scope-out, so no
-      // AUTHORIZATION_FAILURES section is emitted.
-      case s if "(?is)^\\s*EXPLAIN\\s+(FORMATTED\\s+)?AUTHORIZATION\\b".r
-          .findFirstIn(s.trim).isDefined =>
-        val q = "(?is)^\\s*EXPLAIN\\s+(FORMATTED\\s+)?AUTHORIZATION\\b".r
-          .replaceFirstIn(s.trim, "").trim.stripSuffix(";").trim
-        val toks = q.split("\\s+").filter(_.nonEmpty)
-        val op = toks.headOption.map(_.toUpperCase) match {
-          case Some("USE") => "SWITCHDATABASE"
-          case _ => "QUERY"
-        }
-        val (inputs, outputs) =
-          if (op == "SWITCHDATABASE") {
-            require(toks.length >= 2, s"USE needs a database name: $q")
-            (Seq("database:" + toks(1)), Seq.empty[String])
-          } else {
-            val analyzed = analyzeOnly(spark, q).analyzed
-            // write targets are OUTPUTS (the reference lists the insert
-            // target there, not under INPUTS)
-            val outs = analyzed.collect {
-              case c: org.apache.spark.sql.execution.datasources
-                  .InsertIntoHadoopFsRelationCommand => c.catalogTable
-            }.flatten.map(t =>
-              (t.identifier.database.toSeq :+ t.identifier.table)
-                .filter(x => x.nonEmpty && x != "spark_catalog").mkString("@"))
-            (queryInputTablesOf(analyzed), outs.distinct.sorted)
-          }
-        val text = (Seq("INPUTS: ") ++ inputs.map("  " + _) ++
-          Seq("OUTPUTS: ") ++ outputs.map("  " + _) ++
-          Seq("CURRENT_USER: ",
-            "  " + System.getProperty("user.name"),
-            "OPERATION: ", "  " + op)).mkString("\n")
-        return oneStringRow(spark, "explain", text)
-      // EXPLAIN [EXTENDED|FORMATTED|...] SELECT — the reference's
-      // ExplainTask surface. Spark answers natively; the raw text carries
-      // per-session expression ids (#123) and absolute file paths, both
-      // scrubbed here so explain output is stable across sessions and
-      // hosts — the property the reference's explain .q goldens rely on.
-      case s if s.trim.toUpperCase.startsWith("EXPLAIN ") =>
-        // Hive 2.x EXPLAIN ANALYZE annotates the plan with measured row
-        // counts; Spark's closest surface is the cost-annotated plan.
-        // EXPLAIN answers a single string row, so the shared string-side
-        // scrub (scrubPlanText) applies — one scrub contract, not two.
-        val s2 = "(?is)^\\s*EXPLAIN\\s+ANALYZE\\b".r
-          .replaceFirstIn(s, "EXPLAIN COST")
-        return oneStringRow(spark, "plan", scrubPlanText(
-          spark.sql(s2).collect().map(_.getString(0)).mkString("\n")))
-      case createViewRe(prefix, select)
-          if autoNamed(spark, select).exists(identity) =>
-        val names = hiveColNames(spark, select)
-        spark.sql(s"$prefix (${names.map(n => s"`$n`").mkString(", ")}) " +
-          s"AS $select")
-      case ctasRe(prefix, select)
-          if autoNamed(spark, select).exists(identity) =>
-        val tmp = s"graft_ctas_${ctasSeq.incrementAndGet()}"
-        spark.sql(select).toDF(hiveColNames(spark, select): _*)
-          .createOrReplaceTempView(tmp)
-        try spark.sql(s"$prefix AS SELECT * FROM $tmp")
-        finally spark.catalog.dropTempView(tmp)
-      case _ =>
-        // the self-read INSERT OVERWRITE staging and the Hive implicit-cast
-        // retry both live inside insertWithHiveCasts so every insert route
-        // (plain and FROM-first branches) shares them
-        try insertWithHiveCasts(spark, stmt)
-        catch {
-          // a text directory export whose SELECT carries complex types
-          // exceeds the csv datasource; the serde-faithful fallback is
-          // graft-text (same \001 layout, nested \002/\003 for the
-          // complex columns — what Hive itself writes). Types are only
-          // known post-analysis, hence retry rather than pre-route.
-          case e: Exception
-              if (String.valueOf(e.getMessage)
-                  .contains("UNSUPPORTED_DATA_TYPE_FOR_DATASOURCE") &&
-                  stmt.contains("USING csv")) ||
-                String.valueOf(e.getMessage)
-                  .contains("Only Data Sources providing FileFormat") =>
-            val dirRe = ("""(?is)\s*INSERT\s+OVERWRITE\s+(?:LOCAL\s+)?""" +
-              """DIRECTORY\s+'([^']+)'\s+USING\s+`?([\w-]+)`?\s*""" +
-              """(?:OPTIONS\s*\(([^)]*)\))?\s*(.*)""").r
-            stmt match {
-              case dirRe(dir, prov, optText, select) =>
-                val pair = """`?([\w.]+)`?\s*=\s*'((?:[^'\\]|\\.)*)'""".r
-                val pairs = pair.findAllMatchIn(Option(optText).getOrElse(""))
-                  .map(p => p.group(1) ->
-                    p.group(2).replace("\\'", "'").replace("\\\\", "\\"))
-                  .toSeq
-                // a csv export whose SELECT carries complex types exceeds
-                // the csv datasource: the serde-faithful fallback is
-                // graft-text (same \001 layout, nested \002/\003 for the
-                // complex columns — what Hive itself writes). Option
-                // names remap to the serde's. Types are only known
-                // post-analysis, hence retry rather than pre-route.
-                val (provider, opts) =
-                  if (prov == "csv") {
-                    val nameMap = Map("sep" -> "field.delim",
-                      "nullValue" -> "serialization.null.format",
-                      "escape" -> "escape.delim")
-                    ("graft-text",
-                      pairs.flatMap { case (k, v) => nameMap.get(k).map(_ -> v) })
-                  } else (prov, pairs)
-                spark.sql(select).write.format(provider)
-                  .options(opts.toMap).mode("overwrite").save(dir)
-                spark.emptyDataFrame
-              // CTAS into a text table whose SELECT carries complex types:
-              // the column types are only known post-analysis, so the
-              // rewrite routed to csv — retry as a graft-text CTAS (DSv2
-              // CTAS works; option keys remap to the serde's names)
-              case _ if "(?is)\\bCREATE\\s+TABLE\\b".r.findFirstIn(stmt).isDefined &&
-                  !stmt.contains("header = ") =>
-                val remapped = stmt.replace("USING csv", "USING `graft-text`")
-                  .replace("sep = ", "`field.delim` = ")
-                  .replace("nullValue = ", "`serialization.null.format` = ")
-                  .replace("escape = ", "`escape.delim` = ")
-                insertWithHiveCasts(spark, remapped)
-              case _ => throw e
-            }
-        }
-    }
-  }
-
-  /** The input tables/views a query reads, as sorted db@table strings —
-    * the ExplainTask dependency/authorization traversal shared by
-    * EXPLAIN DEPENDENCY and EXPLAIN AUTHORIZATION. Views are expanded by
-    * the analyzer, so both the view and its base tables list — the
-    * reference's behavior. The innermost SubqueryAlias above each leaf
-    * carries the relation's name (outer aliases like `src s1` are
-    * skipped); View nodes carry catalog/temp view names.
-    */
-  /** Parse + analyze WITHOUT executing: `spark.sql` runs command plans
-    * eagerly, so an `EXPLAIN AUTHORIZATION INSERT ...` routed through it
-    * would actually perform the INSERT. SKIP mode analyzes only. */
-  private def analyzeOnly(spark: SparkSession, q: String)
-      : org.apache.spark.sql.execution.QueryExecution =
-    spark.sessionState.executePlan(
-      spark.sessionState.sqlParser.parsePlan(q),
-      org.apache.spark.sql.execution.CommandExecutionMode.SKIP)
-
-  private def queryInputTables(spark: SparkSession, q: String): Seq[String] =
-    queryInputTablesOf(analyzeOnly(spark, q).analyzed)
-
-  private def queryInputTablesOf(
-      analyzed: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Seq[String] = {
-    import org.apache.spark.sql.catalyst.plans.logical.{SubqueryAlias, View}
-    val names = scala.collection.mutable.SortedSet[String]()
-    def add(segs: Seq[String]): Unit = {
-      val keep = segs.filter(x => x.nonEmpty && x != "spark_catalog")
-      names += (if (keep.length >= 2) keep.takeRight(2).mkString("@")
-                else keep.mkString)
-    }
-    analyzed.foreach {
-      case v: View => add(v.desc.identifier.database.toSeq :+
-        v.desc.identifier.table)
-      case sa: SubqueryAlias
-          if !sa.child.exists(_.isInstanceOf[SubqueryAlias]) =>
-        add(sa.identifier.qualifier :+ sa.identifier.name)
-      case _ => ()
-    }
-    names.toSeq
-  }
-
-  /** Session- and host-stable plan text: expression ids, absolute file
-    * paths, and plan ids scrubbed — same contract as the EXPLAIN path. */
-  private def scrubPlanText(plan: String): String =
-    plan.replaceAll("#\\d+", "#")
-      .replaceAll("(file|hdfs|s3a?):[^\\s,\\]]+", "$1:<path>")
-      .replaceAll("plan_id=\\d+", "plan_id=")
-
-  private def oneStringRow(spark: SparkSession, colName: String,
-      value: String): org.apache.spark.sql.DataFrame =
-    spark.createDataFrame(
-      java.util.Collections.singletonList(org.apache.spark.sql.Row(value)),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(colName,
-          org.apache.spark.sql.types.StringType))))
-
-  // one registration per (session, dataDir); avoids 10 schema reads per query
+  // one registration per (session, dataDir); avoids 10 schema reads per
+  // query. A session's first entry also installs the function pack.
   private val registered =
     java.util.Collections.synchronizedMap(
       new java.util.WeakHashMap[SparkSession, java.util.Set[String]]())
@@ -6115,13 +403,14 @@ object Engine {
     */
   def sql(spark: SparkSession, dataDir: String,
           query: String): org.apache.spark.sql.DataFrame = {
-    install(spark)
     // keyed by the SESSION OBJECT, not its identityHashCode: hash codes
     // are reused after GC (the cast-retry path clones sessions freely),
     // and a reused code would silently skip view registration for a
     // brand-new session — fixture tables would resolve as missing
-    val dirs = registered.computeIfAbsent(spark, _ =>
-      java.util.Collections.synchronizedSet(new java.util.HashSet[String]()))
+    val dirs = registered.computeIfAbsent(spark, _ => {
+      install(spark)
+      java.util.Collections.synchronizedSet(new java.util.HashSet[String]())
+    })
     if (dirs.add(dataDir)) {
       val present = Tables.all.filter(n =>
         java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dataDir/$n.parquet")))

@@ -1,0 +1,665 @@
+package graft
+package frontend
+
+import org.apache.spark.sql.SparkSession
+import graft.operators.Auth
+import SqlText._
+import Commands.analyzeOnly
+import Ddl.renameTableRe
+import Dml.{deleteAllRe, deleteRe, exportRe, importRe, insertBranchRe,
+  loadDataRe, updateAllRe, updateRe}
+
+/** The guard pass: refusals the reference raises at compile time, run
+  * once per statement on `stmt0` before any handler is chosen —
+  * authorization enforcement, Hive's type and window-spec bounds, protect
+  * mode (OFFLINE / NO_DROP), the strict skew/mapjoin/subquery checks, the
+  * partition-name whitelist and the partitioned-view redefinition refusal.
+  * A guard either throws the reference's error or returns. */
+private[graft] object Guards {
+
+  def check(spark: SparkSession, stmt0: String): Unit = {
+    enforceAuthorization(spark, stmt0)
+    if (stmt0.toLowerCase.contains("char")) checkCharLengths(stmt0)
+    locally {
+      val l = stmt0.toLowerCase
+      if (l.contains("over") || l.contains("lag") || l.contains("lead"))
+        checkWindowDialect(stmt0)
+    }
+    checkOffline(spark, stmt0)
+    checkSkewMultiDistinct(spark, stmt0)
+    checkOuterMapjoin(spark, stmt0)
+    checkSubqueryMissingFrom(spark, stmt0)
+    checkPartitionWhitelist(spark, stmt0)
+    checkViewReplace(spark, stmt0)
+  }
+
+  /** A view that HAS partitions cannot be redefined — the new definition
+    * would orphan the recorded specs (DDLSemanticAnalyzer, error 10217;
+    * clientnegative/create_or_replace_view2.q). Drop the partitions first
+    * (create_or_replace_view.q does exactly that). */
+  private def checkViewReplace(spark: SparkSession, stmt0: String): Unit = {
+    val target = stmt0 match {
+      case Ddl.replaceViewRe(nm) => Some(nm)
+      case Ddl.alterViewAsRe(nm) => Some(nm)
+      case _ => None
+    }
+    if (target.flatMap(nm => TableDesc.find(spark, nm.replace("`", "")))
+        .exists(d => d.isView && Partitions.viewPartitions(d.meta).nonEmpty))
+      sys.error("Cannot replace a view with CREATE VIEW or REPLACE VIEW " +
+        "or ALTER VIEW AS SELECT if the view has partitions")
+  }
+
+  // ALTER TABLE t [PARTITION(...)] ENABLE|DISABLE NO_DROP [CASCADE]/
+  // OFFLINE — DDLSemanticAnalyzer analyzeAlterTableProtectMode
+  // (protectmode.q). NO_DROP is ENFORCED session-side: a protected table/
+  // partition refuses DROP. OFFLINE (query-blocking) has no Spark-side
+  // interception point for reads and is accepted as a warn no-op.
+  val protectRe =
+    """(?is)\s*ALTER\s+TABLE\s+([\w.`]+)\s*(?:PARTITION\s*\(([^)]*)\)\s*)?(ENABLE|DISABLE)\s+(NO_DROP|OFFLINE)(\s+CASCADE)?\s*;?\s*""".r
+  val dropTableStmtRe =
+    """(?is)\s*DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?([\w.`]+)\s*(?:PURGE\s*)?;?\s*""".r
+  val dropPartExactRe =
+    """(?is)\s*ALTER\s+TABLE\s+([\w.`]+)\s+DROP\s+(?:IF\s+EXISTS\s+)?PARTITION\s*\(([^)]*)\).*""".r
+  val dropDatabaseCascadeRe =
+    """(?is)\s*DROP\s+(?:DATABASE|SCHEMA)\s+(?:IF\s+EXISTS\s+)?(\w+)\s+CASCADE\s*;?\s*""".r
+  // session-scoped protect-mode registry: tables and (table, partition
+  // spec) pairs under NO_DROP
+  val noDropTables =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  val noDropParts =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  // table keys protected with NO_DROP CASCADE: every partition of the
+  // table refuses DROP, not just the table object itself (protectmode.q)
+  val noDropCascade =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  // table keys under ENABLE OFFLINE: queries and DML against them refuse
+  // (DDLSemanticAnalyzer protect mode, error 10113 — protectmode_tbl*.q)
+  private val offlineTables =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  /** Refuse any statement whose parsed plan references an OFFLINE table
+    * (reads and DML alike; DROP/ALTER stay allowed — those are NO_DROP's
+    * axis). Parse-only: rewrites-owned dialects that Spark's parser
+    * rejects skip the guard and meet it again on the inner statements
+    * they execute. */
+  private def checkOffline(spark: SparkSession, stmt: String): Unit = {
+    if (offlineTables.isEmpty) return
+    val head = stmt.trim.takeWhile(!_.isWhitespace).toUpperCase
+    val dmlHeads = Set("SELECT", "WITH", "FROM", "INSERT", "UPDATE",
+      "DELETE", "MERGE", "TRUNCATE", "LOAD", "EXPORT")
+    if (!dmlHeads.contains(head)) return
+    val refs: Seq[String] =
+      try {
+        val p = spark.sessionState.sqlParser.parsePlan(stmt)
+        def rels(q: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
+          q.collect {
+            case r: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation =>
+              r.multipartIdentifier.mkString(".")
+          }
+        // an INSERT's target is a constructor FIELD, not a traversed
+        // child — walk it explicitly or VALUES inserts slip the guard
+        rels(p) ++ p.collect {
+          case i: org.apache.spark.sql.catalyst.plans.logical.InsertIntoStatement =>
+            rels(i.table)
+        }.flatten
+      }
+      catch { case _: Exception => Nil }
+    refs.map(qualName(spark, _)).find(offlineTables.contains).foreach { t =>
+      sys.error("Query against an offline table or partition: " +
+        s"Table $t is offline (ALTER TABLE ... DISABLE OFFLINE first)")
+    }
+  }
+  /** hive.groupby.skewindata=true forbids more than one DISTINCT
+    * aggregate per query block — the reference's two-stage skew rewrite
+    * can spray only one distinct key (SemanticAnalyzer ErrorMsg 10022,
+    * clientnegative/groupby{2,3}_multi_distinct.q and the
+    * *_map_skew_multi_distinct variants). Spark's expand-based
+    * multi-distinct has no such limit, but under the Hive conf the
+    * refusal is the documented contract; a single DISTINCT stays
+    * accepted (groupby2_map_skew.q is positive). Parse-only: rewrites-
+    * owned dialects that Spark's parser rejects skip the guard. */
+  private def checkSkewMultiDistinct(spark: SparkSession, stmt: String): Unit = {
+    if (!spark.conf.getOption("hive.groupby.skewindata")
+          .exists(_.equalsIgnoreCase("true"))) return
+    if ("(?i)\\bdistinct\\b".r.findAllIn(stmt).take(2).size < 2) return
+    onParsed(spark, stmt, "10022")(_.foreach { node =>
+      val ds = node.expressions.flatMap(_.collect {
+        case f: org.apache.spark.sql.catalyst.analysis.UnresolvedFunction
+            if f.isDistinct => f
+      })
+      if (ds.size > 1)
+        sys.error("DISTINCT on different columns not supported with " +
+          "skew in data (error 10022; disable hive.groupby.skewindata)")
+    })
+  }
+
+  /** Run `check` on the parsed statement. A statement Spark's parser
+    * rejects (a HiveQL shape a rewrite owns) skips the check; only the
+    * check's own refusal, recognized by `marker`, propagates. */
+  private def onParsed(spark: SparkSession, stmt: String, marker: String)(
+      check: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan => Unit): Unit =
+    try check(spark.sessionState.sqlParser.parsePlan(stmt))
+    catch {
+      case e: RuntimeException
+          if e.getMessage != null && e.getMessage.contains(marker) => throw e
+      case _: Exception => ()
+    }
+
+  /** An IN/EXISTS subquery with no FROM clause refuses
+    * (SubQueryUtils.checkForSubqueries → "From clause is missing in
+    * SubQuery", clientnegative/subquery_missing_from.q): Spark would
+    * resolve the lone select item as an OUTER reference and quietly
+    * turn `key in (select key)` into a tautology. Scalar subqueries
+    * (`(SELECT count(*) FROM t)`) are untouched — they carry leaves. */
+  private def checkSubqueryMissingFrom(spark: SparkSession, stmt: String): Unit = {
+    val l = stmt.toLowerCase
+    if (!(l.contains(" in") || l.contains("exists")) || !l.contains("select")) return
+    import org.apache.spark.sql.catalyst.expressions.{Exists, InSubquery}
+    import org.apache.spark.sql.catalyst.plans.logical.OneRowRelation
+    onParsed(spark, stmt, "From clause is missing") { plan =>
+      val offenders = plan.flatMap { node =>
+        node.expressions.flatMap(_.collect {
+          case e: InSubquery
+              if e.query.plan.collectLeaves()
+                .forall(_.isInstanceOf[OneRowRelation]) => e
+          case e: Exists
+              if e.plan.collectLeaves()
+                .forall(_.isInstanceOf[OneRowRelation]) => e
+        })
+      }
+      if (offenders.nonEmpty)
+        sys.error("Invalid SubQuery expression: From clause is missing " +
+          "in SubQuery (the lone select item would resolve as an outer " +
+          "reference)")
+    }
+  }
+
+  /** A MAPJOIN hint on a two-table OUTER join must leave the preserved
+    * side streamed: hinting ONLY the preserved table (so the other,
+    * null-extending side would stream) refuses like the reference
+    * (ErrorMsg 10246 "table chosen for streaming is not valid",
+    * clientnegative/smb_bucketmapjoin.q) instead of Spark's silent
+    * no-broadcast. Join CHAINS keep the reference's positive behavior
+    * (mapjoin_filter_on_outerjoin.q hints two of three tables around a
+    * RIGHT OUTER) — the guard only fires on a single-join hint scope
+    * whose sides are leaf relations. SMB exemption: under
+    * hive.optimize.bucketmapjoin.sortedmerge=true with BOTH sides
+    * bucketed AND sorted, the reference converts to a sort-merge join
+    * (no hash side at all), so any-side hints stay legal
+    * (smb_mapjoin_1.q..3.q are positive on exactly this shape; the
+    * negative smb_bucketmapjoin.q's tables are clustered but UNSORTED,
+    * which is what makes its streaming choice invalid). */
+  private def checkOuterMapjoin(spark: SparkSession, stmt: String): Unit = {
+    if (!"(?is)/\\*\\+\\s*(mapjoin|broadcastjoin|broadcast)\\b".r
+          .findFirstIn(stmt).isDefined) return
+    import org.apache.spark.sql.catalyst.plans.logical.{Join, LogicalPlan, SubqueryAlias, UnresolvedHint}
+    import org.apache.spark.sql.catalyst.plans.{FullOuter, LeftOuter, RightOuter}
+    import org.apache.spark.sql.catalyst.analysis.{UnresolvedAttribute, UnresolvedRelation}
+    def leafName(p: LogicalPlan): Option[String] = p match {
+      case SubqueryAlias(id, _) => Some(id.name.toLowerCase)
+      case r: UnresolvedRelation => Some(r.multipartIdentifier.last.toLowerCase)
+      case _ => None
+    }
+    // the underlying TABLE name of a leaf (through one alias level), for
+    // the sorted-bucket catalog probe
+    def leafTable(p: LogicalPlan): Option[String] = p match {
+      case SubqueryAlias(_, r: UnresolvedRelation) =>
+        Some(r.multipartIdentifier.mkString("."))
+      case r: UnresolvedRelation => Some(r.multipartIdentifier.mkString("."))
+      case _ => None
+    }
+    def sortedBucketed(tbl: String): Boolean = TableDesc.find(spark, tbl)
+      .exists(_.meta.bucketSpec.exists(_.sortColumnNames.nonEmpty))
+    val smbConf = spark.conf
+      .getOption("hive.optimize.bucketmapjoin.sortedmerge")
+      .exists(_.equalsIgnoreCase("true"))
+    onParsed(spark, stmt, "10246")(_.foreach {
+        case h: UnresolvedHint
+            if Set("mapjoin", "broadcastjoin", "broadcast")
+              .contains(h.name.toLowerCase) =>
+          val params = h.parameters.collect {
+            case a: UnresolvedAttribute => a.name.toLowerCase
+          }.toSet
+          h.child.collect { case j: Join => j } match {
+            case Seq(j)
+                if !(smbConf &&
+                     leafTable(j.left).exists(sortedBucketed) &&
+                     leafTable(j.right).exists(sortedBucketed)) =>
+              val sides: Seq[(Option[String], Option[String])] = j.joinType match {
+                case LeftOuter  => Seq((leafName(j.left), leafName(j.right)))
+                case RightOuter => Seq((leafName(j.right), leafName(j.left)))
+                case FullOuter  => Seq((leafName(j.left), leafName(j.right)),
+                                       (leafName(j.right), leafName(j.left)))
+                case _ => Nil
+              }
+              sides.foreach {
+                case (Some(preserved), other)
+                    if params.contains(preserved) &&
+                       !other.exists(params.contains) =>
+                  sys.error(s"MAPJOIN hint on the preserved side of an " +
+                    s"outer join: table chosen for streaming is not valid " +
+                    s"(error 10246; hint the null-extending side instead " +
+                    s"of `$preserved`)")
+                case _ => ()
+              }
+            case _ => ()
+          }
+        case _ => ()
+      })
+  }
+
+  /** NO_DROP keys are FULLY QUALIFIED (db.table, lowercased) so
+    * protecting `db.t` blocks `DROP TABLE t` under current database db
+    * and vice versa. */
+  def qualName(spark: SparkSession, table: String): String =
+    try {
+      val id = spark.sessionState.sqlParser.parseTableIdentifier(table)
+      val db = id.database.getOrElse(spark.catalog.currentDatabase)
+      s"$db.${id.table}".toLowerCase
+    } catch {
+      // 3-part names (spark_catalog.db.t) don't parse as TableIdentifier;
+      // normalize textually so the guard neither throws on a legal DROP
+      // nor misses a protected table spelled with its catalog prefix
+      case _: Exception =>
+        val parts = table.toLowerCase.replace("`", "").split('.')
+          .filterNot(_ == "spark_catalog").filter(_.nonEmpty)
+        if (parts.length >= 2) parts.takeRight(2).mkString(".")
+        else (spark.catalog.currentDatabase.toLowerCase +: parts).mkString(".")
+    }
+  def normSpec(spec: String): String =
+    specPairs(spec).map { case (k, v) => s"${k.toLowerCase}=$v" }.sorted.mkString(",")
+
+  /** ALTER TABLE ... ENABLE|DISABLE NO_DROP [CASCADE] | OFFLINE. */
+  def setProtectMode(spark: SparkSession, table: String, part: String,
+      enable: String, mode: String, cascade: String): Unit = {
+    val key = qualName(spark, table)
+    if (mode.equalsIgnoreCase("OFFLINE")) {
+      // table-level OFFLINE is ENFORCED (r17): any query or DML whose
+      // parsed plan references the table refuses with the reference's
+      // error 10113 shape (protectmode_tbl1/3/4/5.q). Partition-level
+      // OFFLINE stays a warn no-op — a partition-pruning-aware read
+      // block would need pruning results the guard runs before.
+      if (part == null) {
+        if (enable.equalsIgnoreCase("ENABLE")) offlineTables.add(key): Unit
+        else offlineTables.remove(key): Unit
+      } else
+        System.err.println(s"[graft] $enable OFFLINE on a PARTITION " +
+          "accepted as no-op (table-level OFFLINE is enforced)")
+    } else if (part == null) {
+      if (enable.equalsIgnoreCase("ENABLE")) {
+        noDropTables.add(key)
+        if (cascade != null) noDropCascade.add(key): Unit
+      } else {
+        noDropTables.remove(key)
+        noDropCascade.remove(key)
+      }
+    } else {
+      val pk = key + "/" + normSpec(part)
+      if (enable.equalsIgnoreCase("ENABLE")) noDropParts.add(pk)
+      else noDropParts.remove(pk)
+    }
+  }
+
+  // Hive bounds CHAR to [1,255] and VARCHAR to [1,65535] at type
+  // construction — DDL and CAST alike (reference: serde/.../typeinfo/
+  // BaseCharUtils.java; clientnegative/invalid_char_length_*.q,
+  // invalid_varchar_length_*.q). Spark's CharType/VarcharType accept any
+  // non-negative length, so the bound is enforced here at the statement
+  // boundary with the reference's RuntimeException message shape.
+  // Partition-value whitelist (reference: metastore MetaStoreUtils
+  // .validatePartitionNameCharacters, gated by
+  // hive.metastore.partition.name.whitelist.pattern — empty = off, the
+  // default). Every NEW partition value a DDL introduces (ADD PARTITION
+  // specs, the TARGET of a partition RENAME, static INSERT specs) must
+  // fully match the Java regex; add_partition_with_whitelist.q /
+  // alter_partition_with_whitelist.q pin the refusal text.
+  private val partSpecKvRe =
+    """(\w+)\s*=\s*(?:'([^']*)'|"([^"]*)"|([^,)\s]+))""".r
+  private val renameToPartRe =
+    """(?is)RENAME\s+TO\s+PARTITION\s*\(([^)]*)\)""".r
+  private def checkPartitionWhitelist(spark: SparkSession,
+      stmt: String): Unit = {
+    val pat = spark.conf
+      .getOption("hive.metastore.partition.name.whitelist.pattern")
+      .map(_.trim).filter(_.nonEmpty).getOrElse(return)
+    val u = stmt.toUpperCase
+    if (!u.contains("PARTITION")) return
+    val isAdd = u.matches("(?s)\\s*ALTER\\s+TABLE\\b.*\\bADD\\b.*") ||
+      u.matches("(?s)\\s*INSERT\\b.*")
+    val re = java.util.regex.Pattern.compile(pat)
+    def check(specText: String, prefix: String): Unit =
+      partSpecKvRe.findAllMatchIn(specText).foreach { m =>
+        val v = Seq(m.group(2), m.group(3), m.group(4)).find(_ != null)
+          .getOrElse("")
+        if (!re.matcher(v).matches())
+          sys.error(s"${prefix}Partition value '$v' contains a character " +
+            s"not matched by whitelist pattern '$pat'. (configure with " +
+            "hive.metastore.partition.name.whitelist.pattern)")
+      }
+    renameToPartRe.findFirstMatchIn(stmt) match {
+      case Some(m) => check(m.group(1), "Unable to rename partition. ")
+      case None if isAdd =>
+        Partitions.partGroupRe.findAllMatchIn(stmt).foreach(m => check(m.group(1), ""))
+      case None => ()
+    }
+  }
+
+  private val charLenRe = """(?i)\b(var)?char\s*\(\s*(\d+)\s*\)""".r
+
+  /** Hive window-spec parity guards — shapes Spark accepts but the
+    * reference refuses:
+    *  - `OVER (PARTITION BY ... SORT BY ...)` is a Hive PARSE error: the
+    *    window grammar pairs PARTITION BY with ORDER BY, and DISTRIBUTE
+    *    BY with SORT BY (clientnegative/ptf_negative_PartitionBySortBy.q,
+    *    "missing ) at 'sort'"). Spark silently treats SORT BY as ORDER BY
+    *    here, so a migrating script would run instead of failing.
+    *  - lag/lead with a NEGATIVE offset: GenericUDFLeadLag refuses
+    *    ("Lag amount can not be nagative" — sic,
+    *    clientnegative/windowing_ll_no_neg.q); Spark silently flips the
+    *    call into the OPPOSITE function, the worst kind of drift.
+    * Both run on the MASKED text (literals/comments blanked) so string
+    * contents can't trip them.
+    */
+  private def checkWindowDialect(stmt: String): Unit = {
+    val m = maskLiteralsAndComments(stmt)
+    val lower = m.toLowerCase
+    def balancedEnd(open: Int): Int = {
+      var depth = 0
+      var j = open
+      while (j < lower.length) {
+        lower.charAt(j) match {
+          case '(' => depth += 1
+          case ')' => depth -= 1; if (depth == 0) return j
+          case _ => ()
+        }
+        j += 1
+      }
+      -1
+    }
+    val overRe = """\bover\s*\(""".r
+    overRe.findAllMatchIn(lower).foreach { mm =>
+      val open = mm.end - 1
+      val end = balancedEnd(open)
+      if (end > 0) {
+        val span = lower.substring(open, end)
+        if ("""\bpartition\s+by\b""".r.findFirstIn(span).isDefined &&
+            """\bsort\s+by\b""".r.findFirstIn(span).isDefined)
+          sys.error("window specification: PARTITION BY pairs with ORDER " +
+            "BY (DISTRIBUTE BY pairs with SORT BY): missing ) at 'sort'")
+      }
+    }
+    val llRe = """\b(lag|lead)\s*\(""".r
+    llRe.findAllMatchIn(lower).foreach { mm =>
+      val open = mm.end - 1
+      val end = balancedEnd(open)
+      if (end > 0) {
+        // second top-level argument, if present and a negative literal
+        val args = splitAssignments(m.substring(open + 1, end))
+        if (args.length >= 2 && args(1).trim.matches("-\\s*\\d+"))
+          sys.error(s"${mm.group(1).capitalize} amount can not be " +
+            s"negative. Specified: ${args(1).trim}")
+      }
+    }
+  }
+
+  private def checkCharLengths(stmt: String): Unit =
+    charLenRe.findAllMatchIn(maskLiteralsAndComments(stmt)).foreach { m =>
+      val n = BigInt(m.group(2))
+      if (m.group(1) != null) {
+        if (n < 1 || n > 65535)
+          sys.error(s"Varchar length $n out of allowed range [1, 65535]")
+      } else if (n < 1 || n > 255)
+        sys.error(s"Char length $n out of allowed range [1, 255]")
+    }
+
+  // enforcement statement shapes (hoisted: these run per statement)
+  private val addPartAuthRe =
+    """(?is)\s*ALTER\s+TABLE\s+([\w.`]+)\s+ADD\s+(?:IF\s+NOT\s+EXISTS\s+)?PARTITION\b.*""".r
+  /** ALTER TABLE head: the authorization target of every ALTER TABLE form
+    * and the provenance-stamp target of ALTER ... SET LOCATION. */
+  val alterTableHeadRe = """(?is)\s*ALTER\s+TABLE\s+([\w.`]+)\b.*""".r
+  private val dropViewAuthRe =
+    """(?is)\s*DROP\s+VIEW\s+(?:IF\s+EXISTS\s+)?([\w.`]+)\s*;?\s*""".r
+  private val truncAuthRe = """(?is)\s*TRUNCATE\s+TABLE\s+([\w.`]+).*""".r
+
+  // TRANSFORM/MAP/REDUCE ... USING 'script' — the script URI is the
+  // gated object under sql-std (see enforceAuthorization)
+  private val transformScriptAuthRe =
+    """(?is)\b(?:TRANSFORM\s*\(|MAP\s+[^(]+?|REDUCE\s+[^(]+?)[^;]*?\bUSING\s+'([^']+)'""".r
+  /** Existence probe for the DROP enforcement gates; an unresolvable
+    * name keeps the gate (fail closed). */
+  private def authTableExists(spark: SparkSession, t: String): Boolean =
+    try spark.sessionState.catalog.tableExists(
+      spark.sessionState.sqlParser.parseTableIdentifier(t.replace("`", "")))
+    catch { case _: Exception => true }
+  // negative lookahead: INSERT OVERWRITE [LOCAL] DIRECTORY writes a
+  // filesystem path, not a table — 'DIRECTORY' must not parse as one
+  private val insertAuthRe =
+    """(?is)\s*INSERT\s+(?:OVERWRITE|INTO)\s+(?:TABLE\s+)?(?!DIRECTORY\b|LOCAL\b)([\w.`]+).*""".r
+  // every INSERT branch of a FROM-first multi-insert (genBodyPlan)
+  private val fromFirstBranchAuthRe =
+    """(?i)INSERT\s+(?:OVERWRITE|INTO)\s+(?:TABLE\s+)?(?!DIRECTORY\b|LOCAL\b)([\w.`]+)""".r
+  private val fromFirstSourceAuthRe =
+    """(?is)\s*FROM\s+([\w.`]+)\b.*""".r
+  private val ctasSelAuthRe = """(?is).*?\bAS\s+(SELECT\b.*|WITH\b.*)""".r
+
+  /** Authorization enforcement for one statement (the reference's
+    * Driver.doAuthorization step, active only under
+    * hive.security.authorization.enabled=true — operators/Auth.scala):
+    * writes need the matching privilege on their output table, reads
+    * need Select on every analyzed input. Statements Spark cannot parse
+    * (HiveQL shapes a rewrite or handler owns) skip the input walk
+    * — their write-side check still fired from the regexes here. */
+  private def enforceAuthorization(spark: SparkSession, stmt0: String): Unit = {
+    if (!Auth.enforcementEnabled(spark)) return
+    if (Auth.handles(stmt0)) return // GRANT/SHOW/... run free
+    // sql-std: a TRANSFORM script is a LOCAL_URI object no one holds
+    // privileges on — the reference refuses the whole query
+    // (authorization_disallow_transform.q: "[[SELECT] on Object
+    // [type=LOCAL_URI, name=cat]]"); admin runs free as everywhere else
+    if (Auth.sqlStdEnabled(spark) &&
+        !Auth.isAdminSession(spark)) {
+      // match against the MASKED text (literals/comments blanked,
+      // offsets preserved) so a string literal that merely CONTAINS a
+      // MAP/TRANSFORM-shaped token ("SELECT 'MAP a USING ''cat'''")
+      // cannot be falsely refused; the script name is recovered from
+      // the ORIGINAL text at the match offsets (masking blanks it)
+      transformScriptAuthRe.findFirstMatchIn(
+          maskLiteralsAndComments(stmt0)).foreach { m =>
+        val script = stmt0.substring(m.start(1), m.end(1))
+        sys.error("Permission denied: Principal [name=" +
+          Auth.currentUser(spark) + ", type=USER] does " +
+          "not have following privileges for operation QUERY [[SELECT] " +
+          s"on Object [type=LOCAL_URI, name=$script]]")
+      }
+    }
+    def nameOf(t: String): (String, String) = {
+      val p = t.replace("`", "").split("\\.")
+      if (p.length >= 2) (p(p.length - 2), p.last)
+      else (spark.catalog.currentDatabase, p.last)
+    }
+    // a write needs `priv` on its output table; `ownerOp`, when given, is
+    // the sql-std ownership gate checked first (a no-op under the legacy
+    // provider)
+    def write(priv: String, t: String, ownerOp: String = null): Unit = {
+      val (db, tb) = nameOf(t)
+      if (ownerOp != null) Auth.enforceOwnership(spark, ownerOp, db, tb)
+      Auth.enforce(spark, priv, db, tb, output = true)
+    }
+    stmt0 match {
+      case insertAuthRe(t) => write("Insert", t)
+      case updateRe(t, _, cond) =>
+        write("Update", t)
+        enforceConditionReads(spark, t, cond)
+      case updateAllRe(t, _) => write("Update", t)
+      case deleteRe(t, cond) =>
+        write("Delete", t)
+        enforceConditionReads(spark, t, cond)
+      case deleteAllRe(t) => write("Delete", t)
+      case loadDataRe(_, _, t, _) => write("Insert", t)
+      // ADD PARTITION needs Create on the TABLE (authorization_fail_2.q)
+      case addPartAuthRe(t) => write("Create", t)
+      // DROP on an ABSENT table produces no outputs in the reference's
+      // semantic analysis, so no privilege check fires: `IF EXISTS` must
+      // no-op and a plain DROP must raise its own table-not-found — a
+      // Permission denied about a ghost table is the wrong shape. The
+      // sql-std model gates DROP on ownership, the legacy model on the
+      // Drop privilege.
+      case dropTableStmtRe(t) if authTableExists(spark, t) =>
+        write("Drop", t, "DROPTABLE")
+      case dropViewAuthRe(t) if authTableExists(spark, t) =>
+        write("Drop", t, "DROPVIEW")
+      case truncAuthRe(t) => write("Update", t)
+      case renameTableRe(t, _) => write("Alter", t, "ALTERTABLE_RENAME")
+      // sql-std: every ALTER TABLE form is ownership-gated (the
+      // reference's HiveOperationType maps ALTERTABLE_* to OWNER
+      // privilege on the input — authorization_not_owner_alter_tab_
+      // serdeprop.q refuses a non-owner's SET SERDEPROPERTIES);
+      // legacy model: the Alter grant as before
+      case alterTableHeadRe(t) => write("Alter", t, "ALTERTABLE")
+      // EXPORT TABLE reads the table's FULL contents — a rewrite-owned
+      // read path the analyzed-plan walk below never sees (the statement
+      // doesn't parse as a query), so it needs its own Select case or a
+      // user with no grant at all could still exfiltrate the data
+      case exportRe(t, _, _) =>
+        val (db, tb) = nameOf(t)
+        val allCols = TableDesc.find(spark, t)
+          .map(_.meta.schema.map(_.name).toSet).getOrElse(Set.empty[String])
+        Auth.enforce(spark, "Select", db, tb, output = false, needed = allCols)
+      // IMPORT into an EXISTING table alters/appends it — the reference
+      // gates it on Alter (exim_23_import_exist_authfail.q: "No privilege
+      // 'Alter' found for outputs"); a fresh-name import creates a new
+      // table, which the table-level model leaves ungated
+      case importRe(_, t, _, _, _) if authTableExists(spark, t) => write("Alter", t)
+      // FROM-first multi-insert: every INSERT branch is a write, and the
+      // shared FROM source (when it names a table, not a subquery) a read
+      case s if s.trim.toUpperCase.startsWith("FROM") &&
+          topLevel(s.trim, "INSERT").nonEmpty =>
+        fromFirstBranchAuthRe.findAllMatchIn(s).foreach(m => write("Insert", m.group(1)))
+        s match {
+          case fromFirstSourceAuthRe(src) =>
+            val (db, tb) = nameOf(src)
+            Auth.enforce(spark, "Select", db, tb, output = false)
+          case _ => ()
+        }
+      case _ => ()
+    }
+    // the read side: analyze the QUERY part (a command's inner query is a
+    // constructor field, not a traversed child, so INSERT/CTAS hand their
+    // SELECT tail to the walk directly)
+    val head = stmt0.trim.takeWhile(!_.isWhitespace).toUpperCase
+    val queryPart: Option[String] = stmt0 match {
+      case _ if head == "SELECT" || head == "WITH" => Some(stmt0)
+      case insertBranchRe(_, _, _, sel) => Some(sel)
+      case _ if stmt0.trim.toUpperCase
+          .matches("(?s)CREATE\\s+(?:TEMPORARY\\s+)?(?:EXTERNAL\\s+)?TABLE\\b.*\\bAS\\s+(SELECT|WITH)\\b.*") =>
+        stmt0 match { case ctasSelAuthRe(sel) => Some(sel); case _ => None }
+      case _ => None
+    }
+    queryPart.foreach { q =>
+      authInputColumns(spark, q.trim.stripSuffix(";")).foreach { case (n, cols) =>
+        val (db, tb) = n.split("@") match {
+          case Array(d, t) => (d, t)
+          case Array(t) => (spark.catalog.currentDatabase, t)
+        }
+        Auth.enforce(spark, "Select", db, tb,
+          output = false, needed = cols)
+      }
+    }
+  }
+
+  /** Read entities of a query for enforcement — FAIL CLOSED (r14 verdict
+    * "What's wrong" #3): a statement the analyzer rejects as written gets
+    * one retry through the engine's own dialect rewrites; if it still
+    * cannot be analyzed, the original analysis error is raised so
+    * enforcement DENIES instead of silently skipping the Select checks
+    * (the reference's SemanticAnalyzer fails the statement before any
+    * authorization decision, never around it). Only reached when
+    * hive.security.authorization.enabled=true. */
+  private def authInputColumns(spark: SparkSession,
+      q: String): Seq[(String, Set[String])] =
+    try queryInputColumns(spark, q)
+    catch { case e1: Exception =>
+      try queryInputColumns(spark, Rewrites.applyAll(spark, Rewrites.queryShapes, q))
+      catch { case _: Exception => throw e1 }
+    }
+
+  /** UPDATE/DELETE are rewrite-owned (the statement never reaches the
+    * analyzed-plan walk), but their WHERE clause can read OTHER tables
+    * through subqueries — a read path that must not fail open. Analyze
+    * the condition as a query over the target and Select-check every
+    * input EXCEPT the target itself (the target's access is governed by
+    * the Update/Delete write privilege, as in the reference's legacy
+    * provider where the updated table is a WriteEntity). */
+  private def enforceConditionReads(spark: SparkSession, target: String,
+      cond: String): Unit = {
+    if (!cond.toUpperCase.contains("SELECT")) return // no subquery: no reads
+    val tgt = target.replace("`", "")
+    val tgtName = tgt.split("\\.").last
+    // fail CLOSED like the SELECT walk: an unanalyzable WHERE subquery
+    // denies with the analysis error instead of skipping its Select checks
+    val inputs = authInputColumns(spark, s"SELECT 1 FROM $tgt WHERE $cond")
+    inputs.foreach { case (n, cols) =>
+      val (db, tb) = n.split("@") match {
+        case Array(d, t) => (d, t)
+        case Array(t) => (spark.catalog.currentDatabase, t)
+      }
+      if (!tb.equalsIgnoreCase(tgtName))
+        Auth.enforce(spark, "Select", db, tb,
+          output = false, needed = cols)
+    }
+  }
+
+  /** Input tables of a query WITH the columns the plan actually touches
+    * per table (plan-wide referenced attribute ids intersected with each
+    * leaf's output) — the reference's per-column read entities that
+    * column-level grants check against. */
+  private def queryInputColumns(spark: SparkSession,
+      q: String): Seq[(String, Set[String])] = {
+    import org.apache.spark.sql.catalyst.plans.logical.{SubqueryAlias, View}
+    val analyzed = analyzeOnly(spark, q).analyzed
+    // leaf relations carry their own output attributes as constructor
+    // fields (LogicalRelation.output), which `expressions` reports —
+    // counting those would mark every column of every table as "used".
+    // collectWithSubqueries, not collect: IN/EXISTS/scalar subqueries
+    // hold their plans inside EXPRESSIONS, so a child-only walk would
+    // fail-open the tables a WHERE-subquery reads
+    val refs = analyzed.collectWithSubqueries {
+      case n if !n.isInstanceOf[
+          org.apache.spark.sql.catalyst.plans.logical.LeafNode] =>
+        n.expressions.flatMap(_.references.map(_.exprId))
+    }.flatten.toSet
+    val acc = scala.collection.mutable.Map.empty[String, Set[String]]
+    def add(segs: Seq[String],
+        plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Unit = {
+      val keep = segs.filter(x => x.nonEmpty && x != "spark_catalog")
+      val name = if (keep.length >= 2) keep.takeRight(2).mkString("@")
+        else keep.mkString
+      val used = plan.output.filter(a => refs.contains(a.exprId))
+        .map(_.name).toSet
+      acc.update(name, acc.getOrElse(name, Set.empty) ++ used)
+    }
+    // only aliases wrapping an ACTUAL stored relation are read entities —
+    // a table-free derived table (`FROM (SELECT 1) t`), aliased VALUES
+    // (LocalRelation), or range() TVF has no table to authorize, and the
+    // reference only emits ReadEntity for real tables/views
+    def isStoredRelation(
+        p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Boolean =
+      p match {
+        case _: org.apache.spark.sql.execution.datasources.LogicalRelation => true
+        case _: org.apache.spark.sql.catalyst.catalog.HiveTableRelation => true
+        case _: org.apache.spark.sql.catalyst.catalog.UnresolvedCatalogRelation => true
+        case _: org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation => true
+        case _: View => true
+        case _ => false
+      }
+    analyzed.collectWithSubqueries {
+      case v: View =>
+        add(v.desc.identifier.database.toSeq :+ v.desc.identifier.table, v)
+      case sa: SubqueryAlias
+          if !sa.child.exists(_.isInstanceOf[SubqueryAlias]) &&
+            sa.child.exists(isStoredRelation) =>
+        add(sa.identifier.qualifier :+ sa.identifier.name, sa)
+    }
+    acc.toSeq
+  }
+}

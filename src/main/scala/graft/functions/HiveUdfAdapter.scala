@@ -32,7 +32,7 @@ import scala.jdk.CollectionConverters._
   * instance and its ObjectInspectors re-initialize lazily per JVM from
   * the context classloader, which ADD JAR / USING JAR extends on the
   * driver and every executor — the same late-binding contract as
-  * Engine.JarUdfCall. Values cross the boundary in Hive's writable form
+  * frontend.Functions.JarUdfCall. Values cross the boundary in Hive's writable form
   * (Text/IntWritable/...), the representation Hive's own runtime feeds
   * UDFs, so third-party code that pattern-matches on writables (common
   * in the wild) works; foldable arguments are presented as

@@ -16,17 +16,14 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, IntegerType
   * token sets are sorted ONCE per document in the signing projection),
   * the intersection COUNT is a single merge scan: O(|a|+|b|) long
   * comparisons, zero allocation, whole-stage-codegen'd (not a
-  * CodegenFallback HOF — the d03 lesson). `sorted_overlap` is the same
-  * scan with an any-match early exit, used for the exact prefix-filter
-  * bound inside the band join.
+  * CodegenFallback HOF — the d03 lesson).
   *
   * Contract: both arrays MUST be sorted ascending with nulls (if any)
   * LAST — `array_sort`'s order. The merge scan stops at the first null
   * element (a null can never merge-match; the dedup token sets are
   * xxhash64 outputs and contain none). On null-free distinct sorted
   * inputs `sorted_intersect_count(a, b)` equals
-  * `size(array_intersect(a, b))` and `sorted_overlap(a, b)` equals
-  * `arrays_overlap(a, b)`; null array → null (both built-ins agree).
+  * `size(array_intersect(a, b))`; null array → null (as the built-in).
   */
 case class SortedIntersectCount(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -180,76 +177,4 @@ case class SortedIntersectAtLeast(left: Expression, right: Expression,
   override protected def withNewChildrenInternal(newFirst: Expression,
       newSecond: Expression, newThird: Expression): SortedIntersectAtLeast =
     copy(left = newFirst, right = newSecond, k = newThird)
-}
-
-/** True iff two SORTED array<bigint> columns share at least one element —
-  * merge scan with early exit; see [[SortedIntersectCount]] for the
-  * sortedness/null-element contract. Rides in the LSH band-join
-  * condition as the exact prefix-filter bound (a pair at jaccard >= t
-  * must share an element within each side's first |S|-ceil(t'|S|)+1
-  * sorted elements), so infeasible candidates never reach the candidate
-  * distinct exchange.
-  */
-case class SortedOverlap(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(dt: DataType) = dt match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      "sorted_overlap(a, b) takes two array<bigint>, " +
-        s"got (${left.dataType}, ${right.dataType})")
-  }
-
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = left.nullable || right.nullable
-  override def prettyName: String = "sorted_overlap"
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val nx = x.numElements()
-    val ny = y.numElements()
-    var i = 0
-    var j = 0
-    while (i < nx && j < ny && !x.isNullAt(i) && !y.isNullAt(j)) {
-      val xv = x.getLong(i)
-      val yv = y.getLong(j)
-      if (xv < yv) i += 1
-      else if (xv > yv) j += 1
-      else return java.lang.Boolean.TRUE
-    }
-    java.lang.Boolean.FALSE
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (x, y) => {
-      val i = ctx.freshName("i")
-      val j = ctx.freshName("j")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val xv = ctx.freshName("xv")
-      val yv = ctx.freshName("yv")
-      val found = ctx.freshName("found")
-      s"""
-      final int $nx = $x.numElements();
-      final int $ny = $y.numElements();
-      int $i = 0; int $j = 0; boolean $found = false;
-      while ($i < $nx && $j < $ny && !$x.isNullAt($i) && !$y.isNullAt($j)) {
-        final long $xv = $x.getLong($i);
-        final long $yv = $y.getLong($j);
-        if ($xv < $yv) { $i++; }
-        else if ($xv > $yv) { $j++; }
-        else { $found = true; break; }
-      }
-      ${ev.value} = $found;
-      """
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedOverlap =
-    copy(left = newLeft, right = newRight)
 }

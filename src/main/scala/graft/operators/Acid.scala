@@ -143,7 +143,8 @@ object Acid {
       // partitioned table the append is partition-aware so inserted rows
       // land under their partition directories (a flat root file would
       // lose the partition values on read)
-      val w = inserts.write.mode("append").options(options)
+      val w = inserts.select(cols.map(c => typed(df, partitionCols, c, col(c))): _*)
+        .write.mode("append").options(options)
       val wp =
         if (partitionCols.isEmpty) w
         else if (format.startsWith("graft-"))
@@ -178,12 +179,13 @@ object Acid {
       // cannot express
       val merged = kept
         .select(cols.map { c =>
-          (if (setPostJoin.contains(c))
-             when(coalesce(src("__src_matched"), lit(false)),
-               expr(setPostJoin(c))).otherwise(survivors(c))
-           else if (setFromSource.contains(c))
-             when(src("__src_matched"), src(s"__src_$c")).otherwise(survivors(c))
-           else survivors(c)).as(c)
+          typed(df, partitionCols, c,
+            if (setPostJoin.contains(c))
+              when(coalesce(src("__src_matched"), lit(false)),
+                expr(setPostJoin(c))).otherwise(survivors(c))
+            else if (setFromSource.contains(c))
+              when(src("__src_matched"), src(s"__src_$c")).otherwise(survivors(c))
+            else survivors(c))
         }: _*)
       swapIn(spark, path, affected, merged, format, partitionCols, options)
     }
@@ -277,6 +279,18 @@ object Acid {
     }
   }
 
+  /** Column `c` of a rewrite or append, cast to the loaded table's type.
+    * Coercion gives a written value whatever type its expression has (an
+    * INT source value, or the wider side of a CASE), and a writer that
+    * takes its column types from the frame (graft-rcfile's columns.types)
+    * would store those bytes under the table's declared type — 48 read
+    * back as 7.8e-77. Partition columns are directory names and keep
+    * their values. Where the type already matches, the cast is a no-op. */
+  private def typed(table: DataFrame, partitionCols: Seq[String], c: String,
+      e: Column): Column =
+    (if (partitionCols.exists(_.equalsIgnoreCase(c))) e
+     else e.cast(table.schema(c).dataType)).as(c)
+
   private def load(spark: SparkSession, path: String, format: String,
                    schema: StructType,
                    partitionCols: Seq[String] = Nil,
@@ -306,7 +320,8 @@ object Acid {
       if (identityKept)
         // UPDATE: every row survives; mutated columns flip under cond
         survivors.select(cols.map { c =>
-          (if (set.contains(c)) when(cond, set(c)).otherwise(col(c)) else col(c)).as(c)
+          typed(df, partitionCols, c,
+            if (set.contains(c)) when(cond, set(c)).otherwise(col(c)) else col(c))
         }: _*)
       else
         // DELETE: keep rows where cond is false or null (SQL semantics)

@@ -47,11 +47,13 @@ object Archive {
   private def decodeEntry(e: String): String = e.replace("%3B", ";")
 
   def entriesOf(spark: SparkSession, table: String): Seq[String] =
-    try spark.sessionState.catalog.getTableMetadata(
-        spark.sessionState.sqlParser.parseTableIdentifier(table))
-      .properties.get(PropKey).toSeq
-      .flatMap(_.split(";").toSeq.filter(_.nonEmpty).map(decodeEntry))
+    try parseEntries(spark.sessionState.catalog.getTableMetadata(
+        spark.sessionState.sqlParser.parseTableIdentifier(table)).properties)
     catch { case _: Exception => Nil }
+
+  def parseEntries(props: Map[String, String]): Seq[String] =
+    props.get(PropKey).toSeq
+      .flatMap(_.split(";").toSeq.filter(_.nonEmpty).map(decodeEntry))
 
   private def writeEntries(spark: SparkSession, table: String,
       entries: Seq[String]): Unit = {

@@ -31,7 +31,7 @@ import scala.jdk.CollectionConverters._
   *    input, writes the matching output privilege, duplicate grants
   *    error — the legacy DefaultHiveAuthorizationProvider contract
   *    (clientnegative/authorization_fail_*.q), wired in
-  *    Engine.enforceAuthorization. `admin` role bypasses. Column-level
+  *    frontend.Guards.enforceAuthorization. `admin` role bypasses. Column-level
   *    grants enforce per column: `select(key)` admits reads touching
   *    only `key` (the analyzed plan's per-table referenced columns)
   *    and refuses anything wider — authorization_1.q's contract.

@@ -185,7 +185,7 @@ object HiveSemantics {
 
     /** Table property stamped by the metadata-only string-family CHANGE
       * COLUMN branch when the new type can be narrower than stored values
-      * (Engine.ddlImpl): gates the read-side truncation clamp. */
+      * (frontend.Ddl.changeColumn): gates the read-side truncation clamp. */
     val NarrowedProp = "graft.char.narrowed"
 
     /** Stamp NarrowedProp on `table` when its schema declares

@@ -166,7 +166,7 @@ object Round7Queries {
     // ---- legacy Hive CREATE TABLE DDL text: ROW FORMAT DELIMITED +
     //      STORED AS TEXTFILE (the statement every clientpositive .q
     //      opens with — LazySimpleSerDe \001/\N defaults) rewritten by
-    //      Engine.rewriteHiveCreate onto datasource DDL, then written and
+    //      frontend.Rewrites.rewriteHiveCreate onto datasource DDL, then written and
     //      read back through the same table. STORED AS PARQUET covered in
     //      the same script. ----
     Q("q141_hive_create_ddl", (s, d) => {

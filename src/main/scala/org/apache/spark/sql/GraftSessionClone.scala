@@ -1,7 +1,7 @@
 package org.apache.spark.sql
 
 /** Accessor for the `private[sql]` `SparkSession.cloneSession` — graft's
-  * `Engine.insertWithHiveCasts` retries a statement under Hive's permissive
+  * `frontend.Dml.insertWithHiveCasts` retries a statement under Hive's permissive
   * store-assignment policy, and doing that on a CLONED session (same shared
   * catalog, snapshotted temp views + conf) keeps the override truly
   * statement-scoped instead of briefly flipping the shared session conf for

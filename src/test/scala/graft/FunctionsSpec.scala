@@ -7,6 +7,20 @@ import org.apache.spark.sql.functions._
 class FunctionsSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Force doGenCode (no interpreted fallback) for `body`, then restore
+    * whatever the session had before. */
+  private def codegenOnly(body: => Unit): Unit = {
+    val keys = Seq("spark.sql.codegen.factoryMode", "spark.sql.codegen.fallback")
+    val saved = keys.map(k => k -> spark.conf.getOption(k))
+    spark.conf.set(keys(0), "CODEGEN_ONLY")
+    spark.conf.set(keys(1), "false")
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("field() returns 1-based index, 0 on miss, 0 on null needle") {
     Engine.install(spark)
     val df = Seq(("b", "x"), ("z", "y"), (null, "z")).toDF("needle", "pad")
@@ -26,10 +40,7 @@ class FunctionsSpec extends SparkSpec {
     Engine.install(spark)
     val e = graft.operators.Similarity.prep(Tables.t(spark, sf, "embeddings"))
     e.createOrReplaceTempView("dot_spec_e")
-    // force doGenCode (no interpreted fallback) for the assertion
-    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
+    codegenOnly {
       // same accumulation order → exact equality, not approximate
       val diff = spark.sql(
         """SELECT dot_product(a.emb, b.emb) AS fused,
@@ -66,34 +77,25 @@ class FunctionsSpec extends SparkSpec {
       assert(edge.getDouble(4) == 25.0)
       assert(edge.getLong(5) == 39L)
       assert(edge.isNullAt(6))
-    } finally {
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-      spark.conf.set("spark.sql.codegen.fallback", "true")
     }
   }
 
-  test("sorted_intersect_count/sorted_overlap equal the built-in set ops " +
-      "on sorted inputs (codegen only)") {
+  test("sorted_intersect_count/atleast equal the built-in set ops (codegen only)") {
     Engine.install(spark)
     // randomized sorted distinct long sets (fixed seed), the dedup tset
-    // shape: parity with array_intersect/arrays_overlap pinned exactly
+    // shape: parity with array_intersect pinned exactly
     val rnd = new scala.util.Random(42)
     val sets = (0 until 60).map { i =>
       val n = 1 + rnd.nextInt(40)
       (i.toLong, Seq.fill(n)(rnd.nextInt(60).toLong).distinct.sorted)
     }
     sets.toDF("id", "tset").createOrReplaceTempView("sorted_spec_t")
-    spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
+    codegenOnly {
       val bad = spark.sql(
         """SELECT sorted_intersect_count(a.tset, b.tset) AS fused,
-                  size(array_intersect(a.tset, b.tset)) AS builtin,
-                  sorted_overlap(a.tset, b.tset) AS fo,
-                  arrays_overlap(a.tset, b.tset) AS bo
+                  size(array_intersect(a.tset, b.tset)) AS builtin
            FROM sorted_spec_t a JOIN sorted_spec_t b ON a.id < b.id""")
-        .filter(col("fused") =!= col("builtin") || col("fo") =!= col("bo"))
-        .count()
+        .filter(col("fused") =!= col("builtin")).count()
       assert(bad == 0)
       // thresholded early-abort variant: equivalent to (count >= k) for
       // every k in a range spanning the abort and the early-true paths
@@ -105,21 +107,15 @@ class FunctionsSpec extends SparkSpec {
            WHERE a.id < b.id""")
         .filter(col("fused") =!= col("builtin")).count()
       assert(badK == 0)
-      // edges: empty arrays, null array, disjoint
+      // edges: empty arrays, null array
       val edge = spark.sql(
         """SELECT sorted_intersect_count(CAST(array() AS ARRAY<BIGINT>),
                     array(1L, 2L)) AS a,
                   sorted_intersect_count(CAST(NULL AS ARRAY<BIGINT>),
-                    array(1L)) AS b,
-                  sorted_overlap(array(1L, 3L), array(2L, 4L)) AS c,
-                  sorted_overlap(array(1L, 3L), array(3L, 4L)) AS d""")
+                    array(1L)) AS b""")
         .collect().head
       assert(edge.getInt(0) == 0)
       assert(edge.isNullAt(1))
-      assert(!edge.getBoolean(2) && edge.getBoolean(3))
-    } finally {
-      spark.conf.set("spark.sql.codegen.factoryMode", "FALLBACK")
-      spark.conf.set("spark.sql.codegen.fallback", "true")
     }
   }
 

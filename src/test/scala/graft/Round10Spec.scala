@@ -145,7 +145,7 @@ class Round10Spec extends SparkSpec {
 
   // ---- partitioned graft-seq / graft-avro: layout + DML (r9 verdict #6) --
 
-  for (fmt <- Seq("graft-seq", "graft-avro")) {
+  for (fmt <- Seq("graft-seq", "graft-avro", "graft-rcfile")) {
     test(s"partitioned $fmt: insert routes, overwrite replaces, reads prune") {
       val base = Files.createTempDirectory("r10_part").toString + "/t"
       spark.sql("DROP TABLE IF EXISTS r10_pt")
@@ -175,21 +175,26 @@ class Round10Spec extends SparkSpec {
     test(s"partitioned $fmt: CoW UPDATE/DELETE/MERGE keep the layout") {
       val base = Files.createTempDirectory("r10_pdml").toString + "/t"
       spark.sql("DROP TABLE IF EXISTS r10_pdml")
-      spark.sql(s"""CREATE TABLE r10_pdml (id INT, s STRING) USING `$fmt`
+      spark.sql(s"""CREATE TABLE r10_pdml (id INT, s STRING, d DOUBLE) USING `$fmt`
                     PARTITIONED BY (p STRING) LOCATION '$base'""")
-      spark.sql("INSERT INTO r10_pdml VALUES (1,'a','x'), (2,'b','x'), (3,'c','y')")
+      spark.sql("INSERT INTO r10_pdml VALUES " +
+        "(1,'a',1.5,'x'), (2,'b',2.5,'x'), (3,'c',3.5,'y')")
       Engine.ddl(spark, "UPDATE r10_pdml SET s = concat('U_', s) WHERE p = 'x' AND id = 2")
       Engine.ddl(spark, "DELETE FROM r10_pdml WHERE id = 3")
       spark.sql("DROP TABLE IF EXISTS r10_pdml_src")
       spark.sql(s"""CREATE TABLE r10_pdml_src USING parquet
         LOCATION '${Files.createTempDirectory("r10_pdml_src")}/s' AS
-        SELECT 1 AS id, 'M1' AS s, 'x' AS p UNION ALL SELECT 9, 'M9', 'z'""")
+        SELECT 1 AS id, 'M1' AS s, 11 AS d, 'x' AS p
+        UNION ALL SELECT 9, 'M9', 48, 'z'""")
+      // the source's d is INT: every MERGE write casts to the table's
+      // DOUBLE (the RCFile writer takes its column types from the frame)
       Engine.ddl(spark, """MERGE INTO r10_pdml t USING r10_pdml_src v ON t.id = v.id
-        WHEN MATCHED THEN UPDATE SET s = v.s
-        WHEN NOT MATCHED THEN INSERT VALUES (v.id, v.s, v.p)""")
-      val got = spark.table("r10_pdml").orderBy("id")
-        .collect().map(r => (r.getInt(0), r.getString(1), r.getString(2))).toSeq
-      assert(got == Seq((1, "M1", "x"), (2, "U_b", "x"), (9, "M9", "z")), got)
+        WHEN MATCHED THEN UPDATE SET s = v.s, d = v.d
+        WHEN NOT MATCHED THEN INSERT VALUES (v.id, v.s, v.d, v.p)""")
+      val got = spark.table("r10_pdml").orderBy("id").collect()
+        .map(r => (r.getInt(0), r.getString(1), r.getDouble(2), r.getString(3))).toSeq
+      assert(got == Seq((1, "M1", 11.0, "x"), (2, "U_b", 2.5, "x"),
+        (9, "M9", 48.0, "z")), got)
       // rewritten + merge-inserted files landed INSIDE partition dirs:
       // the new z partition exists, nothing flattened to the root
       val root = new java.io.File(base)

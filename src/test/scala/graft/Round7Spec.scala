@@ -11,7 +11,7 @@ class Round7Spec extends SparkSpec {
   // ---- TABLESAMPLE(BUCKET x OUT OF y ON cols) text rewrite ----
 
   test("rewriteBucketSample rewrites the ON-cols form into a Hive-hash filter") {
-    val got = Engine.rewriteBucketSample(
+    val got = frontend.Rewrites.rewriteBucketSample(
       "SELECT * FROM src TABLESAMPLE(BUCKET 1 OUT OF 2 ON key) WHERE v > 0")
     // (hash & Int.MaxValue) % y — ObjectInspectorUtils.getBucketNumber;
     // the registered `hash` is the exact 32-bit Hive chain, and the mask
@@ -22,7 +22,7 @@ class Round7Spec extends SparkSpec {
   }
 
   test("rewriteBucketSample keeps an explicit alias and combines columns Hive-style") {
-    val got = Engine.rewriteBucketSample(
+    val got = frontend.Rewrites.rewriteBucketSample(
       "SELECT s.k FROM src TABLESAMPLE(BUCKET 3 OUT OF 5 ON k, v) AS s")
     assert(got.contains("((hash(k, v) & 2147483647) % 5) = 2"), got)
     assert(got.contains(") AS s"), got)
@@ -30,7 +30,7 @@ class Round7Spec extends SparkSpec {
 
   test("rewriteBucketSample leaves the ON-less form for Spark's native parser") {
     val q = "SELECT * FROM src TABLESAMPLE(BUCKET 1 OUT OF 4)"
-    assert(Engine.rewriteBucketSample(q) == q)
+    assert(frontend.Rewrites.rewriteBucketSample(q) == q)
   }
 
   test("TABLESAMPLE BUCKET ON through Engine.sql selects exactly the bucket") {
@@ -149,7 +149,7 @@ class Round7Spec extends SparkSpec {
   // ---- legacy Hive CREATE TABLE DDL rewrite ----
 
   test("rewriteHiveCreate maps TEXTFILE + delimiters onto csv options") {
-    val got = Engine.rewriteHiveCreate(
+    val got = frontend.Rewrites.rewriteHiveCreate(
       """CREATE TABLE t1 (a STRING, b INT)
         |ROW FORMAT DELIMITED FIELDS TERMINATED BY '\t' NULL DEFINED AS 'NUL'
         |STORED AS TEXTFILE""".stripMargin)
@@ -161,7 +161,7 @@ class Round7Spec extends SparkSpec {
   }
 
   test("rewriteHiveCreate anchors USING after the schema, before clauses") {
-    val got = Engine.rewriteHiveCreate(
+    val got = frontend.Rewrites.rewriteHiveCreate(
       "CREATE EXTERNAL TABLE t2 (k INT) PARTITIONED BY (p INT) STORED AS PARQUET LOCATION '/tmp/x'")
     assert("(?is)\\(k INT\\)\\s+USING parquet\\s+PARTITIONED BY".r
       .findFirstIn(got).nonEmpty, got)
@@ -170,25 +170,25 @@ class Round7Spec extends SparkSpec {
   }
 
   test("rewriteHiveCreate decodes octal delimiters and leaves non-Hive DDL alone") {
-    val oct = Engine.rewriteHiveCreate(
+    val oct = frontend.Rewrites.rewriteHiveCreate(
       "CREATE TABLE t3 (a STRING) ROW FORMAT DELIMITED FIELDS TERMINATED BY '\\001' STORED AS TEXTFILE")
     assert(oct.contains("sep = '\u0001'"), oct)
     val plain = "CREATE TABLE t4 (a STRING) USING parquet"
-    assert(Engine.rewriteHiveCreate(plain) == plain)
+    assert(frontend.Rewrites.rewriteHiveCreate(plain) == plain)
     // round 8: SEQUENCEFILE maps to the DSv2 source; round 10: RCFILE too
     val seq = "CREATE TABLE t5 (a STRING) STORED AS SEQUENCEFILE"
-    assert(Engine.rewriteHiveCreate(seq).contains("USING `graft-seq`"))
+    assert(frontend.Rewrites.rewriteHiveCreate(seq).contains("USING `graft-seq`"))
     val rc = "CREATE TABLE t6 (a STRING) STORED AS RCFILE"
-    assert(Engine.rewriteHiveCreate(rc).contains("USING `graft-rcfile`"))
+    assert(frontend.Rewrites.rewriteHiveCreate(rc).contains("USING `graft-rcfile`"))
   }
 
   test("rewriteHiveInsertDir maps directory writes onto USING providers") {
-    val got = Engine.rewriteHiveInsertDir(
+    val got = frontend.Rewrites.rewriteHiveInsertDir(
       "INSERT OVERWRITE DIRECTORY '/tmp/out' ROW FORMAT DELIMITED FIELDS TERMINATED BY ',' STORED AS TEXTFILE SELECT 1")
     assert(got.contains("USING csv"), got)
     assert(got.contains("sep = ','"), got)
     assert(got.endsWith(" SELECT 1"), got)
-    val par = Engine.rewriteHiveInsertDir(
+    val par = frontend.Rewrites.rewriteHiveInsertDir(
       "INSERT OVERWRITE DIRECTORY '/tmp/out2' STORED AS PARQUET SELECT 2 AS v")
     assert(par.contains("'/tmp/out2' USING parquet SELECT 2 AS v"), par)
   }
@@ -284,21 +284,21 @@ class Round7Spec extends SparkSpec {
   }
 
   test("rewritePtfNoop turns noop(on tab partition/order) into distribute/sort") {
-    val got = Engine.rewritePtfNoop(
+    val got = frontend.Rewrites.rewritePtfNoop(
       "SELECT * FROM noop(on part partition by p_brand order by p_name)")
     assert(got ==
       "SELECT * FROM (SELECT * FROM part DISTRIBUTE BY p_brand SORT BY p_name) part")
   }
 
   test("rewritePtfNoop keeps subquery aliases and the trailing call alias") {
-    val got = Engine.rewritePtfNoop(
+    val got = frontend.Rewrites.rewritePtfNoop(
       "FROM noop (on (select * from part p1) j distribute by j.p_brand sort by j.p_name) abc WHERE x")
     assert(got ==
       "FROM (SELECT * FROM (select * from part p1) j distribute by j.p_brand sort by j.p_name) abc WHERE x")
   }
 
   test("rewritePtfNoop leaves trailing SQL keywords outside the alias") {
-    val got = Engine.rewritePtfNoop(
+    val got = frontend.Rewrites.rewritePtfNoop(
       "FROM noopwithmap(on part partition by p_brand) WHERE p_size < 10")
     assert(got ==
       "FROM (SELECT * FROM part DISTRIBUTE BY p_brand) part WHERE p_size < 10")
@@ -345,7 +345,7 @@ class Round7Spec extends SparkSpec {
   test("ON-less TABLESAMPLE BUCKET leaves non-bucketed tables to Spark") {
     val s = "SELECT * FROM nation TABLESAMPLE (BUCKET 1 OUT OF 2) t"
     // nation is a temp view with no bucket spec -> statement unchanged
-    assert(Engine.rewriteBucketSampleNoOn(spark, s) == s)
+    assert(frontend.Rewrites.rewriteBucketSampleNoOn(spark, s) == s)
   }
 
   test("ORC scan pushes filters like parquet (orc_predicate_pushdown parity)") {

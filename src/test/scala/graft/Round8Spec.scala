@@ -235,7 +235,7 @@ class Round8Spec extends SparkSpec {
 
   test("rewriteTransformDelims restores Hive's TAB script contract") {
     val tab = "ROW FORMAT DELIMITED FIELDS TERMINATED BY '\\t'"
-    def n(s: String) = Engine.rewriteTransformDelims(s)
+    def n(s: String) = frontend.Rewrites.rewriteTransformDelims(s)
       .split(java.util.regex.Pattern.quote(tab), -1).length - 1
 
     assert(n("SELECT TRANSFORM(a, b) USING 'cut -f1' AS (x, y) FROM t") == 2)
@@ -247,15 +247,15 @@ class Round8Spec extends SparkSpec {
     // both sides explicit: untouched
     val explicit = "SELECT TRANSFORM(a) ROW FORMAT DELIMITED FIELDS TERMINATED BY '|' " +
       "USING 'cat' AS (x) ROW FORMAT DELIMITED FIELDS TERMINATED BY '|' FROM t"
-    assert(Engine.rewriteTransformDelims(explicit) == explicit)
+    assert(frontend.Rewrites.rewriteTransformDelims(explicit) == explicit)
     // higher-order transform and the map() constructor are not script forms
     val hof = "SELECT transform(arr, x -> x + 1) AS y FROM t"
-    assert(Engine.rewriteTransformDelims(hof) == hof)
+    assert(frontend.Rewrites.rewriteTransformDelims(hof) == hof)
     val ctor = "SELECT map('k', v) AS m FROM t WHERE v > 0"
-    assert(Engine.rewriteTransformDelims(ctor) == ctor)
+    assert(frontend.Rewrites.rewriteTransformDelims(ctor) == ctor)
     // TRANSFORM inside a string literal is untouched
     val lit = "SELECT 'TRANSFORM(a) USING cat' AS s FROM t"
-    assert(Engine.rewriteTransformDelims(lit) == lit)
+    assert(frontend.Rewrites.rewriteTransformDelims(lit) == lit)
   }
 
   test("field-positional scripts see TAB fields (cut -f1 Hive parity)") {

@@ -284,13 +284,13 @@ class Round9Spec extends SparkSpec {
   test("qualified virtual columns rewrite into the table's FROM entry") {
     val in = "SELECT t3.BLOCK__OFFSET__INSIDE__FILE, t3.key FROM src t1 " +
       "JOIN src t3 ON t1.key = t3.key"
-    val out = Engine.rewriteVirtualColumns(in)
+    val out = frontend.Rewrites.rewriteVirtualColumns(in)
     // the vcol becomes a projected column of a subquery replacing `src t3`
     assert(out.contains("(SELECT *, input_file_block_start() AS graft_vc_off FROM src) t3"), out)
     assert(out.contains("t3.graft_vc_off"), out)
     assert(!out.contains("t3.input_file_block_start"), out)
     // bare (unqualified) refs keep the direct function mapping
-    assert(Engine.rewriteVirtualColumns("SELECT INPUT__FILE__NAME FROM src")
+    assert(frontend.Rewrites.rewriteVirtualColumns("SELECT INPUT__FILE__NAME FROM src")
       .contains("input_file_name()"))
   }
 
