@@ -1,8 +1,15 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.GraftColumnBridge.{toColumn, toExpression}
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.logical.Project
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions.{round => _, _}
+import graft.functions.{SortedIntersectAtLeast, SortedIntersectCount}
 import graft.queries.Fns.round
+import graft.tools.Checkpoints
 
 /** Large-scale near-duplicate detection built entirely from codegen'd Spark
   * built-ins — no UDFs, so every stage stays inside whole-stage codegen and
@@ -63,39 +70,48 @@ object Dedup {
     */
   private def signaturesFromSets(tsets: DataFrame, numHashes: Int,
                                  preHashed: Boolean = false,
-                                 withSize: Boolean = false): DataFrame = {
+                                 withSize: Boolean = false,
+                                 keepSet: Boolean = false): DataFrame = {
     // two-step projection: hbs is a higher-order function over the set, so
     // CollapseProject keeps the Projects separate (non-cheap producer used
     // numHashes times) and hbs is computed once per row, not once per
     // signature component. `preHashed` callers already store the hb values
     // themselves (shingle-hash sets), so the inner rehash is skipped.
     // `withSize` carries |tset| as `sz` so exact-confirm callers can apply
-    // the size-ratio bound AT the band join (see bandCandidates).
-    // NOTE (r18, the d03 lesson applied): the exact PREFIX-FILTER bound
-    // (Bayardo et al., Scaling Up All Pairs Similarity Search — carry the
-    // first |tset| - ceil(t'|tset|) + 1 sorted elements and require the
-    // band-join pair's prefixes to overlap) was implemented here, measured
-    // on the 30× ScaleBoard probe, and REJECTED: on w=1 vocabulary sets
-    // two same-shard documents share so many common words that the
-    // hash-random prefixes almost always intersect (the filter cut few
-    // candidates), while the per-band prefix arrays inflated the banded
-    // tables ~10× in bytes — d11 30× shuffle records rose 89.05M → 93.70M
-    // and wall 55 → 99 s. Effective prefix filtering needs df-ordered
-    // tokens (rarest first), which would reintroduce the full corpus
-    // explode + token-df shuffle the r17 narrow signing removed. The
-    // sorted tsets stay (they make the confirm a merge scan —
-    // sorted_intersect_count); the band join keeps only the size-ratio
-    // bound, whose 4 bytes/row are free.
+    // the size-ratio bound AT the band join (see bandCandidates); `keepSet`
+    // carries the set itself for callers that confirm from the same table.
+    // (The prefix-filter bound was measured and rejected, r18: hash-ordered
+    // prefixes of vocabulary sets almost always overlap.)
+    val carried = (if (keepSet) Seq(col("tset")) else Nil) ++
+      (if (withSize) Seq(size(col("tset")).as("sz")) else Nil)
     val hb = tsets.filter(size(col("tset")) >= 1)
-      .select(col("doc_id") +:
-        (if (withSize) Seq(size(col("tset")).as("sz")) else Nil) :+
+      .select(col("doc_id") +: carried :+
         (if (preHashed) col("tset")
          else expr("transform(tset, h -> xxhash64(h))")).as("hbs"): _*)
-    hb.select((col("doc_id") +:
-      (if (withSize) Seq(col("sz")) else Nil)) ++
+    hb.select(hb.columns.filter(_ != "hbs").toSeq.map(col) ++
       (0 until numHashes).map(i =>
         expr(s"array_min(transform(hbs, v -> xxhash64($i, v)))").as(s"mh$i")): _*)
   }
+
+  /** Sorted, distinct, hash-encoded token sets `(doc_id, tset)` — the w=1
+    * shingles both exact-confirm chains sign and confirm from. Set jaccard
+    * is hash-invariant (collisions are 2^-64), so the confirm ships 8-byte
+    * ints instead of strings; sorting once per document makes its
+    * intersection a merge scan (sorted_intersect_count) and changes no
+    * set-valued result. */
+  private def tokenSets(docs: DataFrame): DataFrame =
+    docs.select(col("doc_id"),
+      expr("array_sort(array_distinct(transform(split(text, ' '), t -> xxhash64(t))))")
+        .as("tset"))
+
+  // the sorted-set kernels as Columns over their Catalyst expressions: no
+  // function-registry lookup, so the operators run on any session, not
+  // only on one Engine.install populated
+  private def sortedIntersectCount(a: Column, b: Column): Column =
+    toColumn(SortedIntersectCount(toExpression(a), toExpression(b)))
+
+  private def sortedIntersectAtLeast(a: Column, b: Column, k: Column): Column =
+    toColumn(SortedIntersectAtLeast(toExpression(a), toExpression(b), toExpression(k)))
 
   /** LSH band candidate pairs (da < db, distinct): the equi-join that
     * replaces all-pairs comparison. Shuffle is O(docs × bands).
@@ -232,7 +248,6 @@ object Dedup {
     */
   def confirmedPairs(docs: DataFrame, numHashes: Int = 64, bands: Int = 16,
                      minJaccard: Double = 0.85): DataFrame = {
-    import graft.tools.Checkpoints
     // ONE scan of the corpus: the checkpointed distinct-token sets feed
     // both the MinHash signatures (the w=1 shingles ARE the token sets)
     // and the two aliased sides of the exact-jaccard confirm join. Spark
@@ -241,18 +256,7 @@ object Dedup {
     // 100 TB a full extra pass (the reference's shared-work elimination:
     // optimizer/correlation/CorrelationOptimizer.java). Checkpoint storage
     // is released by the harness sweep after the consuming action.
-    // tokens are dictionary-encoded to 64-bit hashes BEFORE anything is
-    // shuffled: set jaccard is hash-invariant (collisions are 2^-64), the
-    // confirm join then ships 8-byte ints instead of strings, and the
-    // intersection compares longs — on skewed corpora (huge candidate
-    // sets) the string shuffle is the dominant cost. r18: the set is
-    // SORTED once per document here, so the confirm's intersection is a
-    // zero-allocation merge scan (sorted_intersect_count) and the band
-    // join can apply the exact prefix-filter bound — set semantics are
-    // order-invariant, so sorting changes no downstream value.
-    val tsets = Checkpoints.local(docs.select(col("doc_id"),
-      expr("array_sort(array_distinct(transform(split(text, ' '), t -> xxhash64(t))))")
-        .as("tset")))
+    val tsets = Checkpoints.local(tokenSets(docs))
     // narrow signature over the checkpointed token sets (r17): the old
     // explode + 64-min group-by — a full corpus shuffle — and its second
     // checkpoint are gone; minhashCandidates cuts the (much smaller)
@@ -288,8 +292,7 @@ object Dedup {
       // |a|+|b| — the dominant CPU term of the fused confirm stage at
       // 30x. Survivors (true near-dups, few) pay one extra scan before
       // the exact count below.
-      .filter(call_function("sorted_intersect_atleast",
-        col("ta.tset"), col("tb.tset"),
+      .filter(sortedIntersectAtLeast(col("ta.tset"), col("tb.tset"),
         ceil(lit(tp) * (size(col("ta.tset")) + size(col("tb.tset"))) /
           lit(1.0 + tp)).cast("int")))
       // merge-scan intersection count over the sorted sets (r18): same
@@ -297,8 +300,7 @@ object Dedup {
       // codegen'd O(|a|+|b|) pass with no per-pair hash set or output
       // array — the confirm's innermost loop at 100 TB
       .withColumn("inter",
-        call_function("sorted_intersect_count",
-          col("ta.tset"), col("tb.tset")).cast("long"))
+        sortedIntersectCount(col("ta.tset"), col("tb.tset")).cast("long"))
       .withColumn("jac", round(col("inter") /
         (size(col("ta.tset")) + size(col("tb.tset")) - col("inter")), 4))
       .filter(col("jac") >= minJaccard)
@@ -338,7 +340,6 @@ object Dedup {
   @volatile var lastClusterIterations: Int = 0
 
   def clusters(pairs: DataFrame, maxIters: Int = 25): DataFrame = {
-    import graft.tools.Checkpoints
     val edges = Checkpoints.cut(
       pairs.select(col("da").as("u"), col("db").as("v"))
         .union(pairs.select(col("db").as("u"), col("da").as("v")))
@@ -498,45 +499,48 @@ object Dedup {
     * exact-jaccard chain as `confirmedPairs`, but the band join is
     * batch-vs-corpus instead of a self-join.
     *
-    * Scale design: at 100 TB the corpus signature/band table is computed
-    * ONCE and persisted partitioned by (band, bh); each increment signs
-    * only the (much smaller) batch and equi-joins it against the index —
-    * nothing here rescans the corpus per increment except the candidate
-    * confirm, which touches only colliding documents. Guarantee: with
-    * w=1 token shingles, 64 hashes / 16 bands, a pair at jaccard 0.85
-    * collides in >=1 band with p ≈ 0.99997 (see `resolve`), so the output
-    * equals the exact cross-comparison the oracle runs.
+    * Corpus index: when the corpus is a bare file scan (its analyzed plan
+    * is a `HadoopFsRelation` with no partition columns, optionally under a
+    * Project of attributes), it is split into one piece per listed file,
+    * keyed by (path, length, modification time) — the identity Spark's
+    * file-status cache uses — plus the hash and band counts. Each piece's
+    * sorted token sets, sizes and band hashes are built once and held in
+    * an eager checkpoint for the rest of the session (durable under
+    * `spark.graft.checkpointDir`; `Checkpoints.sweep` leaves them alone).
+    * A call builds only the pieces of files it has not seen and releases
+    * those whose files left the corpus, so a file rewritten in place is a
+    * new key and never answers from stale bands. An ingest that appends
+    * each increment's survivors as a new file therefore signs, per call,
+    * only the batch and that one file. Any other corpus (filtered reads,
+    * in-memory frames) is one unkeyed piece built for that call alone.
+    * A returned frame reads the pieces it was built from: consume it
+    * before the next call over a different file set or a sweep.
+    *
+    * Guarantee: with w=1 token shingles, 64 hashes / 16 bands, a pair at
+    * jaccard 0.85 collides in >=1 band with p ≈ 0.99997 (see `resolve`),
+    * so the output equals the exact cross-comparison the oracle runs.
     */
   def dedupIncrement(corpus: DataFrame, batch: DataFrame,
                      numHashes: Int = 64, bands: Int = 16,
                      minJaccard: Double = 0.85): DataFrame = {
-    import graft.tools.Checkpoints
-    // same hash-encoded SORTED token sets as confirmedPairs (r18):
-    // jaccard-invariant, int arrays (not strings) through the
-    // candidate-confirm shuffle; sorted once per doc so the confirm is a
-    // merge scan and the band join carries the prefix-filter bound
-    def tsets(df: DataFrame) = Checkpoints.local(df.select(col("doc_id"),
-      expr("array_sort(array_distinct(transform(split(text, ' '), t -> xxhash64(t))))")
-        .as("tset")))
-    // narrow signatures (r17): computed as a projection over the
-    // checkpointed token sets — the per-side explode + 64-min group-by
-    // shuffle is gone; each side is banded once and the band join is the
-    // only wide stage left before the confirm.
-    def sig(t: DataFrame) = signaturesFromSets(t, numHashes, withSize = true)
-    val ct = tsets(corpus)
-    val bt = tsets(batch)
-    val cband = bandize(sig(ct), numHashes, bands)
-      .withColumnRenamed("doc_id", "c_id").withColumnRenamed("sz", "c_sz")
-    val bband = bandize(sig(bt), numHashes, bands)
+    val bt = Checkpoints.local(tokenSets(batch))
+    val (index, corpusSigned) = corpusIndex(corpus, numHashes, bands)
+    lastIncrementSignedDocs = Checkpoints.rows(bt) + corpusSigned
+    val ct = index.select(col("doc_id"), col("tset"))
+    val cband = index.select(col("doc_id").as("c_id"), col("sz").as("c_sz"),
+      posexplode(col("bhs")).as(Seq("band", "bh")))
+    // narrow signatures (r17): a projection over the checkpointed batch
+    // token sets, banded once; the band join is the only wide stage left
+    // before the confirm
+    val bband = bandize(signaturesFromSets(bt, numHashes, withSize = true),
+      numHashes, bands)
       .withColumnRenamed("doc_id", "b_id").withColumnRenamed("sz", "b_sz")
     // exact size-ratio bound IN the band join (r17, see bandCandidates):
     // on vocabulary token sets the bands admit most cross pairs, so the
     // candidate volume — not the signing — is the dominant scale term;
     // pairs the exact confirm below would discard on sizes alone never
-    // materialize. Output-identical (the bound is exact; the
-    // prefix-filter variant was measured and rejected — see
-    // signaturesFromSets). NO candidate distinct (r18): a pair colliding
-    // in k bands confirms identically k times and the final b_id distinct
+    // materialize. NO candidate distinct (r18): a pair colliding in k
+    // bands confirms identically k times and the final b_id distinct
     // already dedupes — the removed pre-confirm distinct exchange owned
     // 95% of this operator's 30× shuffle records (StageProbe: 84.66M of
     // 89.05M, raw collisions at k̄≈3.7 rows per colliding pair).
@@ -561,13 +565,11 @@ object Dedup {
         lit(tp) * greatest(size(col("tb.tset")), size(col("tc.tset"))))
       // thresholded early-abort intersection bound before the exact count
       // (r18) — see confirmedPairs; exact, never drops a passing pair
-      .filter(call_function("sorted_intersect_atleast",
-        col("tb.tset"), col("tc.tset"),
+      .filter(sortedIntersectAtLeast(col("tb.tset"), col("tc.tset"),
         ceil(lit(tp) * (size(col("tb.tset")) + size(col("tc.tset"))) /
           lit(1.0 + tp)).cast("int")))
       .withColumn("inter",
-        call_function("sorted_intersect_count",
-          col("tb.tset"), col("tc.tset")).cast("long"))
+        sortedIntersectCount(col("tb.tset"), col("tc.tset")).cast("long"))
       .withColumn("jac", round(col("inter") /
         (size(col("tb.tset")) + size(col("tc.tset")) - col("inter")), 4))
       .filter(col("jac") >= minJaccard)
@@ -578,25 +580,103 @@ object Dedup {
       .join(dup, col("doc_id") === dup("b_id"), "left_anti")
   }
 
+  /** Batch docs plus not-yet-indexed corpus docs the most recent
+    * `dedupIncrement` call tokenized and signed — the per-call signing
+    * work the corpus index saves. */
+  @volatile var lastIncrementSignedDocs: Long = 0L
+
+  /** One corpus file as read by a `dedupIncrement` call, plus the
+    * signature shape its piece was built for. */
+  private final case class PieceKey(path: String, length: Long, modified: Long,
+                                    numHashes: Int, bands: Int)
+
+  /** Per-session corpus index pieces, see `dedupIncrement`. A session's
+    * map is locked while a call refreshes it; its pieces are released only
+    * by later calls on that session. */
+  private val indexes = mutable.Map.empty[SparkSession, mutable.Map[PieceKey, DataFrame]]
+
+  /** The corpus as `(doc_id, tset, sz, bhs)` rows — its sorted token sets,
+    * their sizes and the docs' band hashes — unioned from index pieces,
+    * plus how many corpus docs this call had to sign. */
+  private def corpusIndex(corpus: DataFrame, numHashes: Int,
+                          bands: Int): (DataFrame, Long) = {
+    def piece(docs: DataFrame, cp: DataFrame => DataFrame): (DataFrame, Long) = {
+      val p = cp(signaturesFromSets(tokenSets(docs), numHashes,
+        withSize = true, keepSet = true)
+        .select(col("doc_id"), col("tset"), col("sz"),
+          array(bandHashes(numHashes, bands): _*).as("bhs")))
+      (p, Checkpoints.rows(p))
+    }
+    val indexed = corpusFiles(corpus).map { files =>
+      val held = indexes.synchronized(
+        indexes.getOrElseUpdate(corpus.sparkSession, mutable.Map.empty))
+      held.synchronized {
+        val want = files.map { case (path, len, mtime, read) =>
+          PieceKey(path, len, mtime, numHashes, bands) -> read }.toMap
+        (held.keySet -- want.keySet).foreach(k => Checkpoints.release(held.remove(k).get))
+        val signed = want.toSeq.map { case (k, read) =>
+          if (held.contains(k)) 0L
+          else { val (p, n) = piece(read(), Checkpoints.held); held(k) = p; n }
+        }.sum
+        (want.keys.toSeq.sortBy(_.path).map(held), signed)
+      }
+    }
+    indexed match {
+      case Some((pieces, signed)) if pieces.nonEmpty => (pieces.reduce(_ union _), signed)
+      case _ => piece(corpus, Checkpoints.local)
+    }
+  }
+
+  /** The files of a bare file-scan corpus — a `HadoopFsRelation` with no
+    * partition columns, optionally under a Project of attributes — as
+    * (path, length, modification time, reader of that file alone), from
+    * the listing the frame was created with. None for any other plan, and
+    * when a file path holds glob characters. */
+  private def corpusFiles(corpus: DataFrame)
+      : Option[Seq[(String, Long, Long, () => DataFrame)]] = {
+    val relation = corpus.queryExecution.analyzed match {
+      case Project(list, lr: LogicalRelation) if list.forall(_.isInstanceOf[Attribute]) =>
+        Some(lr.relation)
+      case lr: LogicalRelation => Some(lr.relation)
+      case _ => None
+    }
+    relation.collect { case fs: HadoopFsRelation if fs.partitionSchema.isEmpty =>
+      // the piece reader names its one file itself
+      val opts = fs.options.filter { case (k, _) =>
+        !Set("path", "paths", "basepath")(k.toLowerCase) }
+      val reader = corpus.sparkSession.read.format(fs.fileFormat.getClass.getName)
+        .schema(fs.dataSchema).options(opts)
+      fs.location.listFiles(Nil, Nil).flatMap(_.files).map { f =>
+        val path = f.getPath.toString
+        (path, f.getLen, f.getModificationTime, () => reader.load(path))
+      }
+    }
+      // load() expands glob patterns: a path holding glob characters
+      // could read other files under its key
+      .filter(_.forall { case (path, _, _, _) => !path.exists("{}[]*?\\".contains(_)) })
+  }
+
+  /** The band hashes of a signature table (`mh0` … `mh{numHashes-1}`):
+    * band b hashes its r = numHashes / bands consecutive components. */
+  private def bandHashes(numHashes: Int, bands: Int): Seq[Column] = {
+    val r = numHashes / bands
+    // xxhash64 (native, never re-registered): the SQL-name `hash` resolves
+    // to HiveHash for script parity (Engine.install), but the band hash is
+    // an internal detail that must not shift with the registry
+    (0 until bands).map(b =>
+      xxhash64((b * r until (b + 1) * r).map(i => col(s"mh$i")): _*))
+  }
+
   /** Explode a signature table into (doc_id, band, bh) band-bucket rows —
     * the LSH index layout both the self-join and the incremental
     * batch-vs-corpus join consume.
     */
   private def bandize(sig: DataFrame, numHashes: Int, bands: Int): DataFrame = {
-    val r = numHashes / bands
     // an `sz` column (exact size-ratio bound, see bandCandidates) rides
     // along when the signature table carries one
     val keep = if (sig.columns.contains("sz")) Seq(col("sz")) else Nil
-    // xxhash64 (native, never re-registered): the SQL-name `hash` resolves
-    // to HiveHash for script parity (Engine.install), but the band hash is
-    // an internal detail that must not shift with the registry
-    val bandCols = (0 until bands).map { b =>
-      struct(lit(b).as("band"),
-        xxhash64((b * r until (b + 1) * r).map(i => col(s"mh$i")): _*).as("bh"))
-    }
-    sig.select(col("doc_id") +: keep :+ explode(array(bandCols: _*)).as("bb"): _*)
-      .select(col("doc_id") +: keep :+
-        col("bb.band").as("band") :+ col("bb.bh").as("bh"): _*)
+    sig.select(col("doc_id") +: keep :+
+      posexplode(array(bandHashes(numHashes, bands): _*)).as(Seq("band", "bh")): _*)
   }
 
   /** Benchmark decontamination: drop every document that shares ANY
@@ -650,7 +730,6 @@ object Dedup {
     * Output: (doc_id, n_tokens, n_removed, clean_text).
     */
   def removeDuplicateSpans(docs: DataFrame, n: Int): DataFrame = {
-    import graft.tools.Checkpoints
     val ws = docs.select(col("doc_id"), split(col("text"), " ").as("ws"))
     // position-stamped window hashes; docs shorter than n emit none
     val occ = Checkpoints.local(ws.filter(size(col("ws")) >= n)

@@ -215,10 +215,11 @@ object Round6Queries {
              GROUP BY 1, 2""")),
 
     // ---- incremental dedup: a new crawl batch deduped AGAINST the
-    //      existing corpus through the corpus's MinHash band index (the
-    //      per-increment ingest path — the corpus is signed once, only the
-    //      batch is signed per increment). Oracle = the exact batch-vs-
-    //      corpus cross comparison the banding provably reproduces. ----
+    //      existing corpus by a batch-vs-corpus MinHash band join. The
+    //      corpus here is a filtered read, not a bare file scan, so it is
+    //      signed per call as one unkeyed piece (no per-file index). Oracle
+    //      = the exact batch-vs-corpus cross comparison the banding
+    //      provably reproduces. ----
     Q("d11_dedup_incremental", (s, d) => {
       val docs = t(s, d, "documents")
       Dedup.dedupIncrement(

@@ -44,7 +44,13 @@ object Checkpoints {
     * .referenceTracking.cleanCheckpoints=true — point the dir at
     * job-scoped scratch space.
     */
-  def local(df: DataFrame): DataFrame = {
+  def local(df: DataFrame): DataFrame = checkpoint(df, swept = true)
+
+  /** [[local]] for storage its owner keeps across queries: [[sweep]]
+    * leaves it alone, and the owner frees it with [[release]]. */
+  def held(df: DataFrame): DataFrame = checkpoint(df, swept = false)
+
+  private def checkpoint(df: DataFrame, swept: Boolean): DataFrame = {
     val spark = df.sparkSession
     spark.conf.getOption("spark.graft.checkpointDir").filter(_.nonEmpty) match {
       case Some(dir) =>
@@ -55,7 +61,7 @@ object Checkpoints {
         df.checkpoint()
       case None =>
         val cp = df.localCheckpoint()
-        rddOf(cp).foreach(live.add)
+        if (swept) rddOf(cp).foreach(live.add)
         cp
     }
   }
@@ -64,6 +70,9 @@ object Checkpoints {
     * the separate name keeps call-site intent readable (per-iteration
     * cuts vs one-shot staging). */
   def cut(df: DataFrame): DataFrame = local(df)
+
+  /** Row count of a checkpoint: one narrow pass over its stored rows. */
+  def rows(cp: DataFrame): Long = rddOf(cp).fold(cp.count())(_.count())
 
   /** Unpersist one checkpointed DataFrame's storage (safe on non-checkpoints
     * and double-release: unpersist is idempotent). Non-blocking — block

@@ -27,8 +27,8 @@ import scala.util.{Failure, Try}
 object Pools {
   /** Small fixed pool: enough in-flight jobs to back-fill a task tail,
     * few enough not to fight for executors (guide §2.6: "2-3 jobs in
-    * flight is plenty"). Bodies are leaf Spark actions — they never
-    * submit back into this pool, so a fixed size cannot deadlock.
+    * flight is plenty"). A body that submits back into this pool runs the
+    * inner work inline (see [[submit]]), so a fixed size cannot deadlock.
     */
   lazy val jobs: ExecutionContext = ExecutionContext.fromExecutorService(
     java.util.concurrent.Executors.newFixedThreadPool(4,
@@ -41,9 +41,13 @@ object Pools {
         }
       }))
 
-  /** Submit one independent job body onto the shared pool. */
+  /** Submit one independent job body onto the shared pool. Called from a
+    * pool thread, the body runs inline on the caller instead: a pool body
+    * blocking on work queued behind itself and three like it would
+    * otherwise wait forever. */
   def submit[T](body: => T): Future[T] =
-    Future(blocking(body))(jobs)
+    if (Thread.currentThread.getName.startsWith("graft-overlap-")) Future.fromTry(Try(body))
+    else Future(blocking(body))(jobs)
 
   /** Settle ALL futures (no early return), then rethrow the FIRST
     * failure in sequence order. Guarantees no submitted write outlives
