@@ -4,26 +4,20 @@ import java.util.{Map => JMap}
 
 import scala.collection.JavaConverters._
 
-import org.apache.avro.file.DataFileReader
+import org.apache.avro.file.{DataFileReader, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.avro.mapred.FsInput
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.sources.Avro
 
-/** DataSource V2 registration of the Avro container-file source/sink:
+/** graft-avro: the Avro container-file source and sink —
   * `spark.read.format("graft-avro").load(dir)` /
   * `df.write.format("graft-avro").mode("overwrite").save(dir)` /
   * `CREATE TABLE t USING `graft-avro` LOCATION ...`.
@@ -34,70 +28,36 @@ import graft.sources.Avro
   * that registration, layered over the same schema/value mapping as
   * [[graft.sources.Avro]].
   *
-  * Scale design beyond the programmatic path:
-  *   - one InputPartition per container file (executor-side streaming
-  *     decode, no driver funnel);
-  *   - REAL projection pushdown: the pruned Spark schema is converted back
-  *     to an Avro reader schema and handed to the datum reader, so Avro's
-  *     schema-resolution machinery skips decoding the dropped columns —
-  *     the scan does less work, not just the plan above it;
-  *   - writers emit task-unique file names directly (job-level commit is a
-  *     no-op; abort deletes the task's file). Honest caveat: like the
-  *     reference's MoveTask-era sinks, a crash between task commits can
-  *     leave partial files — a manifest/commit-log layer would close that.
+  * The codec owns the container: only `.avro` files list; splits align to
+  * block sync markers; projection pushdown is REAL — the pruned Spark
+  * schema becomes the Avro reader schema, so Avro's schema resolution
+  * skips decoding the dropped columns; and `forWrite` checks that every
+  * data column maps to Avro before the write deletes anything. Table,
+  * scan and write machinery is [[FileTable]]'s, including job abort: the
+  * files of tasks that committed before a failure are deleted. Honest
+  * caveat: an INSERT OVERWRITE's full-table or static-partition delete
+  * runs before the job and is not undone by a failure.
   */
-class AvroDataSource extends TableProvider with DataSourceRegister {
+class AvroDataSource extends FileTableProvider {
   override def shortName(): String = "graft-avro"
 
-  private def pathOf(options: CaseInsensitiveStringMap): String = {
-    val p = options.get("path")
-    require(p != null, "graft-avro requires a path")
-    p
-  }
+  override protected def inferSchema(dir: String,
+      options: CaseInsensitiveStringMap): StructType = AvroV2Util.inferSchema(dir)
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    AvroV2Util.inferSchema(pathOf(options))
-
-  override def supportsExternalMetadata(): Boolean = true
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: JMap[String, String]): Table = {
-    // a catalog CREATE TABLE (no data access yet) probes getTable without
-    // a path — the managed location only exists in the catalog entry;
-    // read/write-time invocations always carry path (or location), so the
-    // pathless Table is a capability/schema carrier only
-    val p = Option(properties.get("path"))
-      .orElse(Option(properties.get("location"))).getOrElse("")
-    // partition columns from the catalog's transforms (SQL tables) or the
-    // `partitions` option (programmatic reads/writes, e.g. CoW DML)
-    val partCols =
-      if (partitioning.nonEmpty) PartLayout.partColNames(partitioning)
-      else Option(properties.get("partitions")).toSeq
-        .flatMap(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
-    AvroTable(p, schema, partCols)
-  }
+  override protected def codec(properties: JMap[String, String]): FileCodec = AvroCodec
 }
 
 object AvroV2Util {
   def inferSchema(dir: String): StructType = {
-    val conf = FileSplits.hadoopConf()
-    val root = new Path(dir)
-    val fs = root.getFileSystem(conf)
-    val files = fs.globStatus(new Path(root, "*.avro"))
-    require(files != null && files.nonEmpty, s"no .avro files under $dir")
+    val files = FileSplits.listFilesWithLen(dir).map(_._1).filter(AvroCodec.keep)
+    require(files.nonEmpty, s"no .avro files under $dir")
     val r = new DataFileReader[GenericRecord](
-      new FsInput(files.head.getPath, conf), new GenericDatumReader[GenericRecord]())
+      new FsInput(new Path(files.head), FileSplits.hadoopConf()),
+      new GenericDatumReader[GenericRecord]())
     val avro = try r.getSchema finally r.close()
     StructType(avro.getFields.asScala.map { f =>
       StructField(f.name, Avro.toSparkType(f.schema()), nullable = true)
     }.toArray)
-  }
-
-  def listFiles(dir: String): Seq[String] = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(FileSplits.hadoopConf())
-    Option(fs.globStatus(new Path(root, "*.avro"))).toSeq.flatten
-      .map(_.getPath.toString).sorted
   }
 
   /** Scale of an Avro field's decimal logical type (through a [null, T]
@@ -230,131 +190,30 @@ object AvroV2Util {
   }
 }
 
-case class AvroTable(path: String, tableSchema: StructType,
-    partCols: Seq[String] = Nil)
-    extends Table with SupportsRead with SupportsWrite
-    with SupportsMetadataColumns {
-  override def name(): String = s"graft-avro:$path"
-  override def schema(): StructType = tableSchema
-  override def partitioning(): Array[Transform] =
-    PartLayout.identityTransforms(partCols)
-  override def metadataColumns(): Array[MetadataColumn] =
-    Array(FileMetadataColumn)
-  override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE, TableCapability.OVERWRITE_BY_FILTER,
-      TableCapability.OVERWRITE_DYNAMIC).asJava
+/** The Avro codec. */
+case object AvroCodec extends FileCodec {
+  override def name: String = "graft-avro"
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new AvroScanBuilder(path, tableSchema, partCols)
+  override def keep(file: String): Boolean = file.endsWith(".avro")
 
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new AvroWriteBuilder(path, info.schema(), partCols)
-}
-
-class AvroScanBuilder(path: String, full: StructType, partCols: Seq[String])
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with org.apache.spark.sql.connector.read.SupportsPushDownFilters {
-  private var required: StructType = full
-  private var prune: Seq[org.apache.spark.sql.sources.Filter] = Nil
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-  // partition pruning only (see SeqScanBuilder): all filters stay
-  // post-scan, the listing just skips non-matching directories
-  override def pushFilters(filters: Array[org.apache.spark.sql.sources.Filter])
-      : Array[org.apache.spark.sql.sources.Filter] = {
-    prune = filters.toSeq.filter {
-      case org.apache.spark.sql.sources.EqualTo(a, _) => partCols.contains(a)
-      case org.apache.spark.sql.sources.In(a, _) => partCols.contains(a)
-      case _ => false
-    }
-    filters
-  }
-  override def pushedFilters(): Array[org.apache.spark.sql.sources.Filter] =
-    Array.empty
-  override def build(): Scan = AvroScan(path, required, partCols, prune)
-}
-
-case class AvroScan(path: String, required: StructType,
-    partCols: Seq[String], prune: Seq[org.apache.spark.sql.sources.Filter])
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-avro ReadSchema: ${required.fieldNames.mkString(",")}" +
-      (if (prune.nonEmpty) s" PartitionPrune: ${prune.mkString(",")}" else "")
-
-  override def planInputPartitions(): Array[InputPartition] = {
-    // byte-range splits aligned to Avro block sync markers at read time
-    // (DataFileReader.sync/pastSync — the same convention Avro's own
-    // Hadoop input format uses)
-    val target = FileSplits.targetBytes
-    val listed: Seq[(String, Long, Map[String, String])] =
-      if (partCols.isEmpty)
-        FileSplits.listFilesWithLen(path)
-          .filter(_._1.endsWith(".avro"))
-          .map { case (f, len) => (f, len, Map.empty[String, String]) }
-      else {
-        val root = new Path(path)
-        PartLayout.listPartitionedFilesWithLen(root,
-          root.getFileSystem(FileSplits.hadoopConf()), partCols, _.endsWith(".avro"),
-          spec => PartPrune.accepts(prune, spec, PartLayout.partTypes(required, partCols)))
-      }
-    listed.flatMap { case (f, len, spec) =>
-      FileSplits.forFile(f, len, target).map { case (start, length) =>
-        AvroFilePartition(f, spec, start, length): InputPartition
-      }
-    }.toArray
-  }
-
-  override def createReaderFactory(): PartitionReaderFactory =
-    AvroReaderFactory(required.json, partCols, FileSplits.confOverlay())
-}
-
-/** One byte-range of one Avro container file ((0, Long.MaxValue) = the
-  * whole file); the reader aligns to block sync markers. */
-case class AvroFilePartition(file: String, partSpec: Map[String, String],
-    start: Long = 0L, length: Long = Long.MaxValue) extends InputPartition
-
-case class AvroReaderFactory(requiredJson: String,
-    partCols: Seq[String],
-    confOverlay: Map[String, String] = Map.empty)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[AvroFilePartition]
-    val file = p.file
-    val full = DataType.fromJson(requiredJson).asInstanceOf[StructType]
-    // _metadata is answered from the partition's file path and partition
-    // columns from the directory spec — neither is ever decoded; strip
-    // both from the Avro reader schema before schema resolution
-    val required = StructType(
-      full.fields.filterNot(f => f.name == FileMetadataColumn.NAME ||
-        partCols.contains(f.name)))
-    val partVal: Map[String, Any] = full.fields
-      .filter(f => partCols.contains(f.name))
-      .map(f => f.name -> p.partSpec.get(f.name)
-        .map(v => PartLayout.castValue(v, f.dataType)).orNull).toMap
-    val metaRow = FileMetadataColumn.rowFor(file)
-    // Pushdown is real: the pruned reader schema goes into Avro's schema
-    // resolution, so dropped columns are skipped during decode.
-    val readerSchema = Avro.toAvroSchema(required)
-    // writer schema is set from the file header by DataFileReader;
-    // the expected (reader) schema is the pruned one
+  override def open(split: FileSplit, conf: Configuration, cells: Cells): CellReader = {
+    // Pushdown is real: the wanted fields become the Avro reader schema,
+    // so schema resolution skips the dropped columns during decode (the
+    // writer schema comes from the file header)
     val reader = new DataFileReader[GenericRecord](
-      new FsInput(new Path(file), FileSplits.buildConf(confOverlay)),
-      new GenericDatumReader[GenericRecord](null, readerSchema))
+      new FsInput(new Path(split.file), conf),
+      new GenericDatumReader[GenericRecord](null,
+        Avro.toAvroSchema(StructType(cells.fields))))
     // sync-aligned byte range (Avro's own Hadoop reader convention):
     // seek to the first block sync after `start`, stop once past `end`
-    val rangeEnd =
-      if (p.length == Long.MaxValue) Long.MaxValue else p.start + p.length
-    reader.sync(p.start)
-    val fields = full.fields
+    reader.sync(split.start)
+    val types = cells.fields.map(_.dataType)
     // Avro schema resolution ignores LOGICAL types: a decimal field's
     // bytes resolve even when the FILE was written at a different scale
     // than the catalog declares (schema evolution / external files).
     // Interpret unscaled bytes at the WRITER's scale, then rescale — the
     // reference's AvroDeserializer does the same via the writer schema.
-    val writerScale: Array[Int] = fields.map { f =>
+    val writerScale: Array[Int] = cells.fields.map { f =>
       f.dataType match {
         case dec: DecimalType =>
           Option(reader.getSchema.getField(f.name))
@@ -363,166 +222,57 @@ case class AvroReaderFactory(requiredJson: String,
         case _ => -1
       }
     }
-    new PartitionReader[InternalRow] {
+    new CellReader {
       override def next(): Boolean =
-        reader.hasNext && !reader.pastSync(rangeEnd)
-      override def get(): InternalRow = {
+        reader.hasNext && !reader.pastSync(split.end)
+      override def decode(row: Array[Any]): Unit = {
         val rec = reader.next()
-        val vals = new Array[Any](fields.length)
         var i = 0
-        while (i < fields.length) {
-          vals(i) =
-            if (fields(i).name == FileMetadataColumn.NAME) metaRow
-            else if (partVal.contains(fields(i).name)) partVal(fields(i).name)
-            else if (writerScale(i) >= 0)
-              AvroV2Util.toInternalDecimal(rec.get(fields(i).name),
-                fields(i).dataType.asInstanceOf[DecimalType], writerScale(i))
-            else AvroV2Util.toInternal(rec.get(fields(i).name), fields(i).dataType)
+        while (i < types.length) {
+          row(cells.slot(i)) =
+            if (writerScale(i) >= 0)
+              AvroV2Util.toInternalDecimal(rec.get(i),
+                types(i).asInstanceOf[DecimalType], writerScale(i))
+            else AvroV2Util.toInternal(rec.get(i), types(i))
           i += 1
         }
-        new GenericInternalRow(vals)
       }
       override def close(): Unit = reader.close()
     }
   }
-}
 
-class AvroWriteBuilder(path: String, schema: StructType,
-    partCols: Seq[String] = Nil)
-    extends WriteBuilder with SupportsTruncate
-    with org.apache.spark.sql.connector.write.SupportsOverwrite
-    with org.apache.spark.sql.connector.write.SupportsDynamicOverwrite {
-  // same mode lattice as SeqWriteBuilder: NONE append / ALL truncate /
-  // DYNAMIC replace-written-partitions / STATIC replace-named-partitions
-  private var mode = "NONE"
-  private var staticSpec: Map[String, String] = Map.empty
-  override def truncate(): WriteBuilder = { mode = "ALL"; this }
-  override def overwrite(
-      filters: Array[org.apache.spark.sql.sources.Filter]): WriteBuilder = {
-    val real = filters.filterNot(_ == org.apache.spark.sql.sources.AlwaysTrue)
-    if (real.isEmpty) { mode = "ALL"; return this }
-    // a pushed ROW filter would demand partial overwrite this writer
-    // can't honor — fail loudly, never truncate; partition-column
-    // equalities become a static partition overwrite
-    val specs = real.map {
-      case org.apache.spark.sql.sources.EqualTo(a, v) if partCols.contains(a) =>
-        a -> String.valueOf(v)
-      // the planner pushes static PARTITION (p=v) specs as null-safe
-      // equality; a NULL value names the default partition directory
-      case org.apache.spark.sql.sources.EqualNullSafe(a, v) if partCols.contains(a) =>
-        a -> (if (v == null) PartLayout.NULL_DIR else String.valueOf(v))
-      case f => sys.error(
-        s"graft-avro supports only full-table or partition-equality overwrite, got: $f")
-    }
-    mode = "STATIC"; staticSpec = specs.toMap; this
+  /** Fails fast on a column Avro cannot carry, before the write's
+    * pre-delete: a mid-write schema error must not destroy existing data. */
+  override def forWrite(data: StructType): FileCodec = {
+    Avro.toAvroSchema(data): Unit
+    this
   }
-  override def overwriteDynamicPartitions(): WriteBuilder = {
-    mode = if (partCols.isEmpty) "ALL" else "DYNAMIC"; this
-  }
-  override def build(): Write = {
-    // fail fast on unsupported types HERE, before BatchWrite truncates the
-    // destination — a mid-write schema error must not destroy existing
-    // data (partition columns never land in the files, so validate the
-    // data projection only)
-    Avro.toAvroSchema(StructType(
-      schema.fields.filterNot(f => partCols.contains(f.name)))): Unit
-    new Write {
-      override def toBatch: BatchWrite =
-        AvroBatchWrite(path, schema.json, partCols, mode, staticSpec)
-    }
-  }
-}
 
-case class AvroBatchWrite(path: String, schemaJson: String,
-    partCols: Seq[String], mode: String, staticSpec: Map[String, String])
-    extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(FileSplits.hadoopConf())
-    mode match {
-      case "ALL" => if (fs.exists(p)) fs.delete(p, true): Unit
-      case "STATIC" =>
-        // value-matched delete (hr=1 also replaces a dir spelled hr=01)
-        PartLayout.deleteMatchingPartitions(p, fs, partCols, staticSpec,
-          PartLayout.partTypes(
-            DataType.fromJson(schemaJson).asInstanceOf[StructType], partCols))
-      case _ => ()
-    }
-    fs.mkdirs(p): Unit
-    AvroWriterFactory(path, schemaJson, partCols, FileSplits.confOverlay())
-  }
-  override def commit(messages: Array[WriterCommitMessage]): Unit =
-    if (mode == "DYNAMIC") {
-      val p = new Path(path)
-      val fs = p.getFileSystem(FileSplits.hadoopConf())
-      val msgs = messages.toSeq.collect { case m: PartWriteMessage => m }
-      PartLayout.commitDynamicOverwrite(p, fs,
-        msgs.flatMap(_.partDirs).toSet, msgs.flatMap(_.files).toSet,
-        partCols, PartLayout.partTypes(
-          DataType.fromJson(schemaJson).asInstanceOf[StructType], partCols))
-    }
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-case class AvroWriterFactory(path: String, schemaJson: String,
-    partCols: Seq[String],
-    confOverlay: Map[String, String] = Map.empty) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
-    val sparkSchema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    // container records carry only the data columns; partition values
-    // become the directory path (Hive layout)
-    val dataFields = sparkSchema.fields.zipWithIndex
-      .filterNot { case (f, _) => partCols.contains(f.name) }
-    val avroSchema = Avro.toAvroSchema(StructType(dataFields.map(_._1)))
-    val partOrds = partCols.map(c =>
-      sparkSchema.fieldIndex(c) -> sparkSchema(sparkSchema.fieldIndex(c)).dataType)
-    // uuid guards against (partitionId, taskId) reuse across separate
-    // append jobs — fs.create(overwrite) would silently clobber otherwise
-    val uid = java.util.UUID.randomUUID().toString.take(8)
-    val conf = FileSplits.buildConf(confOverlay)
-    val fs = new Path(path).getFileSystem(conf)
-    new DataWriter[InternalRow] {
-      // one open container per touched partition (dynamic-insert shape)
-      private val writers = scala.collection.mutable.LinkedHashMap[String,
-        (org.apache.avro.file.DataFileWriter[GenericRecord], Path)]()
-      private var seq = 0
-      private def writerFor(rel: String) =
-        writers.getOrElseUpdate(rel, {
-          val dir = if (rel.isEmpty) new Path(path) else new Path(path, rel)
-          fs.mkdirs(dir): Unit
-          seq += 1
-          val file = new Path(dir, f"part-$partitionId%05d-$taskId-$uid-$seq%03d.avro")
-          val w = new org.apache.avro.file.DataFileWriter[GenericRecord](
-            new GenericDatumWriter[GenericRecord](avroSchema))
-          w.setCodec(org.apache.avro.file.CodecFactory.deflateCodec(6))
-          w.create(avroSchema, fs.create(file, true)): Unit
-          (w, file)
-        })._1
-      override def write(row: InternalRow): Unit = {
-        val rel =
-          if (partCols.isEmpty) ""
-          else PartLayout.partPath(row, partCols, partOrds)
-        val rec = new GenericData.Record(avroSchema)
-        var j = 0
-        while (j < dataFields.length) {
-          val (f, i) = dataFields(j)
-          rec.put(j, AvroV2Util.fromInternal(row, i, f.dataType,
-            avroSchema.getFields.get(j).schema()))
-          j += 1
+  override def encoder(data: StructType, ord: Array[Int], conf: Configuration,
+      zone: java.time.ZoneId): RowEncoder = new RowEncoder {
+    private val avroSchema = Avro.toAvroSchema(data)
+    private val types = data.fields.map(_.dataType)
+    private val fieldSchemas = avroSchema.getFields.asScala.map(_.schema()).toArray
+    // one record container reused across rows: DataFileWriter.append
+    // encodes it before returning
+    private val rec = new GenericData.Record(avroSchema)
+    override def extension: String = ".avro"
+    override def create(fs: FileSystem, file: Path): RowAppender = {
+      val w = new DataFileWriter[GenericRecord](
+        new GenericDatumWriter[GenericRecord](avroSchema))
+      w.setCodec(org.apache.avro.file.CodecFactory.deflateCodec(6))
+      w.create(avroSchema, fs.create(file, true)): Unit
+      new RowAppender {
+        override def append(row: InternalRow): Unit = {
+          var j = 0
+          while (j < ord.length) {
+            rec.put(j, AvroV2Util.fromInternal(row, ord(j), types(j), fieldSchemas(j)))
+            j += 1
+          }
+          w.append(rec)
         }
-        writerFor(rel).append(rec): Unit
+        override def close(): Unit = w.close()
       }
-      override def commit(): WriterCommitMessage = {
-        writers.values.foreach(_._1.close())
-        PartWriteMessage(writers.values.map(_._2.toString).toSeq,
-          writers.keys.toSeq)
-      }
-      override def abort(): Unit = {
-        writers.values.foreach { case (w, f) =>
-          w.close(); fs.delete(f, false): Unit
-        }
-      }
-      override def close(): Unit = ()
     }
   }
 }

@@ -2,6 +2,7 @@ package graft.sources.v2
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.connector.read.InputPartition
 
 /** Byte-range split planning for the graft DSv2 container sources.
   *
@@ -88,6 +89,16 @@ object FileSplits {
     if (!isSplittable(file) || len <= target) Seq((0L, if (len <= 0) Long.MaxValue else len))
     else ranges(len, target)
 
+  /** Splits for listed (file, length, partition spec) triples. */
+  def plan(listed: Seq[(String, Long, Map[String, String])]): Array[InputPartition] = {
+    val target = targetBytes
+    listed.flatMap { case (f, len, spec) =>
+      forFile(f, len, target).map { case (start, length) =>
+        FileSplit(f, spec, start, length): InputPartition
+      }
+    }.toArray
+  }
+
   /** Flat-directory listing with lengths (the split planner's input). */
   def listFilesWithLen(dir: String): Seq[(String, Long)] = {
     val root = new Path(dir)
@@ -97,4 +108,14 @@ object FileSplits {
         !st.getPath.getName.startsWith("."))
       .map(st => st.getPath.toString -> st.getLen).sortBy(_._1)
   }
+}
+
+/** One byte-range of one data file, with the partition values its
+  * directory names. `start`/`length` bound the range; the reader aligns
+  * to the format's record boundary (sync marker / newline). A
+  * (0, Long.MaxValue) range is the whole file. */
+case class FileSplit(file: String, partSpec: Map[String, String],
+    start: Long = 0L, length: Long = Long.MaxValue) extends InputPartition {
+  /** Exclusive end of the range. */
+  def end: Long = if (length == Long.MaxValue) Long.MaxValue else start + length
 }

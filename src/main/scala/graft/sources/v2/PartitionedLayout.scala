@@ -7,7 +7,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Hive partition-directory layout (`p1=v1/p2=v2/part-*`) for the graft
-  * DSv2 sources, shared by graft-seq and graft-avro.
+  * DSv2 file table ([[FileTable]]) and the partition statements.
   *
   * Reference shape: partition values live in directory names, never in
   * the data files (ql/.../metadata/Partition.java + common/FileUtils.java
@@ -309,6 +309,6 @@ object PartLayout {
 }
 
 /** Commit message carrying the files + partition dirs a task wrote — the
-  * ingredient for dynamic-partition overwrite commits. */
+  * ingredient for dynamic-partition overwrite commits and job abort. */
 case class PartWriteMessage(files: Seq[String], partDirs: Seq[String])
     extends org.apache.spark.sql.connector.write.WriterCommitMessage

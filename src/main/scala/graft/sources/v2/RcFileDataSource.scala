@@ -2,25 +2,18 @@ package graft.sources.v2
 
 import java.util.{Map => JMap}
 
-import scala.collection.JavaConverters._
-
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.hive.ql.io.RCFile
-import org.apache.hadoop.hive.serde2.columnar.{BytesRefArrayWritable, BytesRefWritable}
+import org.apache.hadoop.hive.serde2.columnar.BytesRefArrayWritable
+import org.apache.hadoop.hive.serde2.objectinspector.{PrimitiveObjectInspector, StructObjectInspector}
 import org.apache.hadoop.io.LongWritable
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsDynamicOverwrite, SupportsOverwrite, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** DataSource V2 for Hive's RCFile columnar container, so
+/** graft-rcfile: Hive's RCFile columnar container, so
   * `CREATE TABLE ... STORED AS RCFILE` statements run natively against
   * the genuine on-disk format (reference: ql/src/java/.../io/RCFile.java;
   * row groups of column-major buffers behind a SequenceFile-style header).
@@ -28,42 +21,28 @@ import org.apache.spark.unsafe.types.UTF8String
   * (hive-exec-core), so files written here are byte-interoperable with
   * Hive-written RCFile data and vice versa.
   *
-  * Cells encode through the REAL columnar serde classes: bare
-  * `STORED AS RCFILE` uses the reference's default
+  * Cells encode through the REAL columnar serde named by the table's
+  * `serde` property: bare `STORED AS RCFILE` uses the reference's default
   * LazyBinaryColumnarSerDe (HiveConf.java:770 — binary cells), an
   * explicit `ROW FORMAT SERDE ColumnarSerDe` the text contract; either
   * way graft-written files are cell-byte-identical to Hive-written ones.
   *
-  * Scale design: one InputPartition per container file; column pruning is
-  * pushed to the STORAGE layer (`hive.io.file.readcolumn.ids`), so
+  * The codec owns the container: splits align to sync markers, and column
+  * pruning reaches the STORAGE layer (`hive.io.file.readcolumn.ids`), so
   * unprojected columns are never decompressed — the point of RCFile — and
   * a `SELECT count(*)` reads row counts from group headers without
-  * touching any column buffer. Partitioned tables share the Hive `p=v`
-  * layout machinery ([[PartLayout]]): listing-time pruning, dynamic /
-  * static overwrite, NULL sentinel, `_metadata.file_path` for CoW DML.
+  * touching any column buffer. Table, scan and write machinery is
+  * [[FileTable]]'s.
   */
-class RcFileDataSource extends TableProvider with DataSourceRegister {
+class RcFileDataSource extends FileTableProvider {
   override def shortName(): String = "graft-rcfile"
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    RcV2Util.inferSchema(Option(options.get("path")).getOrElse(
-      sys.error("graft-rcfile requires a path to infer a schema")))
+  override protected def inferSchema(dir: String,
+      options: CaseInsensitiveStringMap): StructType = RcV2Util.inferSchema(dir)
 
-  override def supportsExternalMetadata(): Boolean = true
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: JMap[String, String]): Table = {
-    val p = Option(properties.get("path"))
-      .orElse(Option(properties.get("location"))).getOrElse("")
-    val partCols =
-      if (partitioning.nonEmpty) PartLayout.partColNames(partitioning)
-      else Option(properties.get("partitions")).toSeq
-        .flatMap(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
-    RcTable(p, schema, partCols,
-      Option(properties.get("serde")).getOrElse(RcV2Util.DEFAULT_SERDE),
-      Option(properties.get("compress.codec")).map("compress.codec" -> _)
-        .toMap)
-  }
+  override protected def codec(properties: JMap[String, String]): FileCodec =
+    RcCodec(Option(properties.get("serde")).getOrElse(RcV2Util.DEFAULT_SERDE),
+      Option(properties.get("compress.codec")).map("compress.codec" -> _).toMap)
 }
 
 object RcV2Util {
@@ -73,18 +52,6 @@ object RcV2Util {
     * the text-cell contract instead. Both run through the REAL serde
     * classes below, so cell bytes are Hive-identical either way. */
   val DEFAULT_SERDE = "org.apache.hadoop.hive.serde2.columnar.LazyBinaryColumnarSerDe"
-
-  /** Projection conf the RCFile reader honors (ColumnProjectionUtils
-    * keys): read.all=false + the explicit id list means skipped columns'
-    * buffers are never decompressed. An EMPTY id list (count(*)) still
-    * iterates rows — row counts live in the group key headers. */
-  def projectionConf(ids: Seq[Int],
-      overlay: Map[String, String] = Map.empty): Configuration = {
-    val conf = FileSplits.buildConf(overlay)
-    conf.setBoolean("hive.io.file.read.all.columns", false)
-    conf.set("hive.io.file.readcolumn.ids", ids.mkString(","))
-    conf
-  }
 
   /** Hive type-string for the serde's `columns.types` property. */
   def hiveTypeName(dt: DataType): String = dt match {
@@ -206,7 +173,7 @@ object RcV2Util {
     * columns c0..cN — Hive tables always carry a declared schema, so this
     * is a programmatic-read convenience only. */
   def inferSchema(dir: String): StructType = {
-    val files = SeqV2Util.listFiles(dir)
+    val files = FileSplits.listFilesWithLen(dir).map(_._1)
     require(files.nonEmpty, s"no files under $dir")
     val p = new Path(files.head)
     val conf = FileSplits.hadoopConf()
@@ -221,300 +188,95 @@ object RcV2Util {
 
 }
 
-case class RcTable(path: String, tableSchema: StructType,
-    partCols: Seq[String] = Nil,
-    serde: String = RcV2Util.DEFAULT_SERDE,
-    props: Map[String, String] = Map.empty)
-    extends Table with SupportsRead with SupportsWrite
-    with SupportsMetadataColumns {
-  override def name(): String = s"graft-rcfile:$path"
-  override def schema(): StructType = tableSchema
-  override def partitioning(): Array[Transform] =
-    PartLayout.identityTransforms(partCols)
-  override def metadataColumns(): Array[MetadataColumn] =
-    Array(FileMetadataColumn)
-  override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE, TableCapability.OVERWRITE_BY_FILTER,
-      TableCapability.OVERWRITE_DYNAMIC).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new RcScanBuilder(path, tableSchema, partCols, serde)
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new RcWriteBuilder(path, info.schema(), partCols, serde, props)
-}
+/** The RCFile codec. `outputCodec` is the job's output compression, fixed
+  * by [[forWrite]] from `props` and the session. */
+case class RcCodec(serde: String = RcV2Util.DEFAULT_SERDE,
+    props: Map[String, String] = Map.empty,
+    outputCodec: Option[String] = None) extends FileCodec {
+  override def name: String = "graft-rcfile"
 
-class RcScanBuilder(path: String, full: StructType, partCols: Seq[String],
-    serde: String)
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with org.apache.spark.sql.connector.read.SupportsPushDownFilters {
-  private var required: StructType = full
-  private var prune: Seq[Filter] = Nil
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-  // same contract as SeqScanBuilder: partition equality/IN filters are
-  // remembered for listing-time pruning only; every filter is returned
-  // for Spark to re-evaluate post-scan
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    prune = filters.toSeq.filter {
-      case org.apache.spark.sql.sources.EqualTo(a, _) => partCols.contains(a)
-      case org.apache.spark.sql.sources.In(a, _) => partCols.contains(a)
-      case _ => false
-    }
-    filters
-  }
-  override def pushedFilters(): Array[Filter] = Array.empty
-  override def build(): Scan =
-    RcScan(path, full, required, partCols, prune, serde)
-}
-
-case class RcScan(path: String, full: StructType, required: StructType,
-    partCols: Seq[String], prune: Seq[Filter], serde: String)
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-rcfile ReadSchema: ${required.fieldNames.mkString(",")}" +
-      (if (prune.nonEmpty) s" PartitionPrune: ${prune.mkString(",")}" else "")
-  override def planInputPartitions(): Array[InputPartition] = {
-    // byte-range splits aligned to RCFile sync markers at read time —
-    // RCFileInputFormat's FileInputFormat block-split parallelism
-    val target = FileSplits.targetBytes
-    val listed: Seq[(String, Long, Map[String, String])] =
-      if (partCols.isEmpty)
-        FileSplits.listFilesWithLen(path).map { case (f, len) =>
-          (f, len, Map.empty[String, String]) }
-      else {
-        val root = new Path(path)
-        PartLayout.listPartitionedFilesWithLen(root,
-          root.getFileSystem(FileSplits.hadoopConf()), partCols, _ => true,
-          spec => PartPrune.accepts(prune, spec, PartLayout.partTypes(full, partCols)))
-      }
-    listed.flatMap { case (f, len, spec) =>
-      FileSplits.forFile(f, len, target).map { case (start, length) =>
-        SeqFilePartition(f, spec, start, length): InputPartition
-      }
-    }.toArray
-  }
-  override def createReaderFactory(): PartitionReaderFactory =
-    RcReaderFactory(full.json, required.json, partCols,
-      org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone, serde,
-      FileSplits.confOverlay())
-}
-
-case class RcReaderFactory(fullJson: String, requiredJson: String,
-    partCols: Seq[String], sessionTz: String, serde: String,
-    confOverlay: Map[String, String] = Map.empty)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[SeqFilePartition]
-    val file = p.file
-    val full = DataType.fromJson(fullJson).asInstanceOf[StructType]
-    val required = DataType.fromJson(requiredJson).asInstanceOf[StructType]
-    val zone = java.time.ZoneId.of(sessionTz)
-    // data columns (the stored layout) are full minus partition columns,
-    // in declaration order; required fields resolve to a stored column id
-    // (>= 0), the _metadata struct (-1), or a partition ordinal (-2 - k)
-    val dataFields = full.fields.filterNot(f => partCols.contains(f.name))
-    val posOf = dataFields.map(_.name).zipWithIndex.toMap
-    val fieldPos = required.fields.map { f =>
-      if (f.name == FileMetadataColumn.NAME) -1
-      else if (partCols.contains(f.name)) -2 - partCols.indexOf(f.name)
-      else posOf(f.name)
-    }
-    val types = required.fields.map(_.dataType)
-    val partVals = partCols.map(c =>
-      p.partSpec.get(c).map(v => PartLayout.castValue(v,
-        full(full.fieldIndex(c)).dataType)).orNull).toArray
-    val metaRow = FileMetadataColumn.rowFor(file)
-    // storage-level pruning: only the projected stored-column ids are
-    // decompressed by the container reader
-    val conf = RcV2Util.projectionConf(
-      fieldPos.filter(_ >= 0).sorted.toSeq, confOverlay)
-    val fsPath = new Path(file)
+  override def open(split: FileSplit, conf: Configuration, cells: Cells): CellReader = {
+    // storage-level pruning (ColumnProjectionUtils keys): read.all=false
+    // plus the explicit id list means skipped columns' buffers are never
+    // decompressed. An EMPTY id list (count(*)) still iterates rows — row
+    // counts live in the group key headers.
+    conf.setBoolean("hive.io.file.read.all.columns", false)
+    conf.set("hive.io.file.readcolumn.ids", cells.pos.sorted.mkString(","))
+    val fsPath = new Path(split.file)
     val reader = new RCFile.Reader(fsPath.getFileSystem(conf), fsPath, conf)
     // sync-aligned byte range (RCFileRecordReader convention): seek to
     // the first sync after `start`; a row group whose preceding sync sits
     // at or past `end` belongs to the next split's reader
-    val end = if (p.length == Long.MaxValue) Long.MaxValue else p.start + p.length
-    if (p.start > 0) reader.sync(p.start)
+    if (split.start > 0) reader.sync(split.start)
     val rowId = new LongWritable()
-    val row = new BytesRefArrayWritable()
+    val cols = new BytesRefArrayWritable()
     // the REAL columnar serde (text or binary cells — whatever the table
     // declared) decodes each projected cell; initialized against the
     // DATA schema, exactly as the reference's RCFileRecordReader pairs
     // with ColumnarSerDeBase
-    val serdeInst = RcV2Util.newSerde(serde,
-      StructType(dataFields.toSeq.map(f => f.copy())))
-    val soi = serdeInst.getObjectInspector
-      .asInstanceOf[org.apache.hadoop.hive.serde2.objectinspector.StructObjectInspector]
-    val refs = soi.getAllStructFieldRefs
-    new PartitionReader[InternalRow] {
-      private var hasRow = false
-      override def next(): Boolean = {
-        hasRow = reader.next(rowId) && reader.lastSeenSyncPos() < end
-        hasRow
-      }
-      override def get(): InternalRow = {
-        reader.getCurrentRow(row)
-        val struct = serdeInst.deserialize(row)
-        val vals = new Array[Any](types.length)
+    val serdeInst = RcV2Util.newSerde(serde, cells.data)
+    val soi = serdeInst.getObjectInspector.asInstanceOf[StructObjectInspector]
+    val refs = cells.pos.map(soi.getAllStructFieldRefs.get(_))
+    val ois = refs.map(_.getFieldObjectInspector.asInstanceOf[PrimitiveObjectInspector])
+    val types = cells.fields.map(_.dataType)
+    new CellReader {
+      override def next(): Boolean =
+        reader.next(rowId) && reader.lastSeenSyncPos() < split.end
+      override def decode(row: Array[Any]): Unit = {
+        reader.getCurrentRow(cols)
+        val struct = serdeInst.deserialize(cols)
         var i = 0
-        while (i < types.length) {
-          vals(i) =
-            if (fieldPos(i) == -1) metaRow
-            else if (fieldPos(i) <= -2) partVals(-2 - fieldPos(i))
-            else {
-              val ref = refs.get(fieldPos(i))
-              val data = soi.getStructFieldData(struct, ref)
-              if (data == null) null
-              else RcV2Util.hiveJavaToCatalyst(
-                ref.getFieldObjectInspector
-                  .asInstanceOf[org.apache.hadoop.hive.serde2.objectinspector.PrimitiveObjectInspector]
-                  .getPrimitiveJavaObject(data),
-                types(i), zone)
-            }
+        while (i < refs.length) {
+          val data = soi.getStructFieldData(struct, refs(i))
+          row(cells.slot(i)) =
+            if (data == null) null
+            else RcV2Util.hiveJavaToCatalyst(ois(i).getPrimitiveJavaObject(data),
+              types(i), cells.zone)
           i += 1
         }
-        new GenericInternalRow(vals)
       }
       override def close(): Unit = reader.close()
     }
   }
-}
 
-class RcWriteBuilder(path: String, schema: StructType, partCols: Seq[String],
-    serde: String, props: Map[String, String] = Map.empty)
-    extends WriteBuilder with SupportsTruncate with SupportsOverwrite
-    with SupportsDynamicOverwrite {
-  private var mode = "NONE"
-  private var staticSpec: Map[String, String] = Map.empty
-  override def truncate(): WriteBuilder = { mode = "ALL"; this }
-  override def overwrite(filters: Array[Filter]): WriteBuilder = {
-    val real = filters.filterNot(_ == org.apache.spark.sql.sources.AlwaysTrue)
-    if (real.isEmpty) { mode = "ALL"; return this }
-    val specs = real.map {
-      case org.apache.spark.sql.sources.EqualTo(a, v) if partCols.contains(a) =>
-        a -> String.valueOf(v)
-      case org.apache.spark.sql.sources.EqualNullSafe(a, v) if partCols.contains(a) =>
-        a -> (if (v == null) PartLayout.NULL_DIR else String.valueOf(v))
-      case f => sys.error(
-        s"graft-rcfile supports only full-table or partition-equality overwrite, got: $f")
-    }
-    mode = "STATIC"; staticSpec = specs.toMap; this
-  }
-  override def overwriteDynamicPartitions(): WriteBuilder = {
-    mode = if (partCols.isEmpty) "ALL" else "DYNAMIC"; this
-  }
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite = RcBatchWrite(path, schema.json,
-      partCols, mode, staticSpec,
-      org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone, serde,
-      TextV2Util.effectiveOutputCodec(props))
-  }
-}
+  override def forWrite(data: StructType): FileCodec =
+    copy(outputCodec = TextV2Util.effectiveOutputCodec(props))
 
-case class RcBatchWrite(path: String, schemaJson: String,
-    partCols: Seq[String], mode: String, staticSpec: Map[String, String],
-    sessionTz: String, serde: String,
-    outputCodec: Option[String] = None) extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(FileSplits.hadoopConf())
-    mode match {
-      case "ALL" => if (fs.exists(p)) fs.delete(p, true): Unit
-      case "STATIC" =>
-        PartLayout.deleteMatchingPartitions(p, fs, partCols, staticSpec,
-          PartLayout.partTypes(
-            DataType.fromJson(schemaJson).asInstanceOf[StructType], partCols))
-      case _ => ()
-    }
-    fs.mkdirs(p): Unit
-    RcWriterFactory(path, schemaJson, partCols, sessionTz, serde,
-      outputCodec, FileSplits.confOverlay())
-  }
-  override def commit(messages: Array[WriterCommitMessage]): Unit =
-    if (mode == "DYNAMIC") {
-      val p = new Path(path)
-      val fs = p.getFileSystem(FileSplits.hadoopConf())
-      val msgs = messages.toSeq.collect { case m: PartWriteMessage => m }
-      PartLayout.commitDynamicOverwrite(p, fs,
-        msgs.flatMap(_.partDirs).toSet, msgs.flatMap(_.files).toSet,
-        partCols, PartLayout.partTypes(
-          DataType.fromJson(schemaJson).asInstanceOf[StructType], partCols))
-    }
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-case class RcWriterFactory(path: String, schemaJson: String,
-    partCols: Seq[String], sessionTz: String, serde: String,
-    outputCodec: Option[String] = None,
-    confOverlay: Map[String, String] = Map.empty)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
-    val sparkSchema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    val dataIdx = sparkSchema.fields.zipWithIndex
-      .filterNot { case (f, _) => partCols.contains(f.name) }.map(_._2)
-    val types = sparkSchema.fields.map(_.dataType)
-    val partOrds = partCols.map(c =>
-      sparkSchema.fieldIndex(c) -> sparkSchema(sparkSchema.fieldIndex(c)).dataType)
-    val zone = java.time.ZoneId.of(sessionTz)
-    val uid = java.util.UUID.randomUUID().toString.take(8)
+  override def encoder(data: StructType, ord: Array[Int], conf: Configuration,
+      zone: java.time.ZoneId): RowEncoder = new RowEncoder {
     // the container requires the column count up front (it sizes the
     // per-group column buffers — RCFile.Writer's row-group machinery)
-    val conf = FileSplits.buildConf(confOverlay)
-    conf.setInt(RCFile.COLUMN_NUMBER_CONF_STR, dataIdx.length)
-    val fs = new Path(path).getFileSystem(conf)
-    new DataWriter[InternalRow] {
-      private val writers =
-        scala.collection.mutable.LinkedHashMap[String, (RCFile.Writer, Path)]()
-      private var seq = 0
-      private def writerFor(rel: String): RCFile.Writer =
-        writers.getOrElseUpdate(rel, {
-          val dir = if (rel.isEmpty) new Path(path) else new Path(path, rel)
-          fs.mkdirs(dir): Unit
-          seq += 1
-          val file = new Path(dir, f"part-$partitionId%05d-$taskId-$uid-$seq%03d.rc")
-          // hive.exec.compress.output parity: RCFile compresses its
-          // key/value sections internally (RCFile.Writer's codec arg —
-          // the reference's RCFileOutputFormat.getRecordWriter path);
-          // the file stays sync-splittable and self-describing
-          (new RCFile.Writer(fs, conf, file, null,
-            outputCodec.map(TextV2Util.newCodec(_, conf)).orNull), file)
-        })._1
-      // the REAL serde (text or binary cells, per the table's DDL)
-      // serializes each row; RCFile.Writer.append copies the returned
-      // buffer into its column buffers, so the serde's reuse is safe
-      private val dataSchema = StructType(
-        dataIdx.toSeq.map(i => sparkSchema.fields(i)))
-      private val serdeInst = RcV2Util.newSerde(serde, dataSchema)
-      private val oi = RcV2Util.standardOI(dataSchema)
-      // r18 write-loop allocation cut: the row ArrayList and partition
-      // path were rebuilt per ROW; both are reused (serialize() encodes
-      // the cells before append returns — the serde comment above — so
-      // clearing the list afterwards is safe).
-      private val jrow = new java.util.ArrayList[Object](dataIdx.length)
-      private val relCache =
-        if (partCols.isEmpty) null
-        else new PartLayout.PartPathCache(partCols, partOrds)
-      override def write(row: InternalRow): Unit = {
-        val rel = if (relCache == null) "" else relCache.relFor(row)
-        jrow.clear()
-        dataIdx.foreach { i =>
-          jrow.add(RcV2Util.toHiveJava(row, i, types(i), zone)): Unit
+    conf.setInt(RCFile.COLUMN_NUMBER_CONF_STR, ord.length)
+    private val types = data.fields.map(_.dataType)
+    // the REAL serde (text or binary cells, per the table's DDL)
+    // serializes each row; RCFile.Writer.append copies the returned
+    // buffer into its column buffers, so the serde's reuse is safe
+    private val serdeInst = RcV2Util.newSerde(serde, data)
+    private val oi = RcV2Util.standardOI(data)
+    // r18 write-loop allocation cut: the row ArrayList is reused
+    // (serialize() encodes the cells before append returns, so clearing
+    // the list afterwards is safe)
+    private val jrow = new java.util.ArrayList[Object](ord.length)
+    override def extension: String = ".rc"
+    override def create(fs: FileSystem, file: Path): RowAppender = {
+      // hive.exec.compress.output parity: RCFile compresses its key/value
+      // sections internally (RCFile.Writer's codec arg — the reference's
+      // RCFileOutputFormat.getRecordWriter path); the file stays
+      // sync-splittable and self-describing
+      val w = new RCFile.Writer(fs, conf, file, null,
+        outputCodec.map(TextV2Util.newCodec(_, conf)).orNull)
+      new RowAppender {
+        override def append(row: InternalRow): Unit = {
+          jrow.clear()
+          var j = 0
+          while (j < ord.length) {
+            jrow.add(RcV2Util.toHiveJava(row, ord(j), types(j), zone))
+            j += 1
+          }
+          w.append(serdeInst.serialize(jrow, oi))
         }
-        writerFor(rel).append(serdeInst.serialize(jrow, oi))
+        override def close(): Unit = w.close()
       }
-      override def commit(): WriterCommitMessage = {
-        writers.values.foreach(_._1.close())
-        PartWriteMessage(writers.values.map(_._2.toString).toSeq,
-          writers.keys.toSeq)
-      }
-      override def abort(): Unit = {
-        writers.values.foreach { case (w, f) =>
-          w.close(); fs.delete(f, false): Unit
-        }
-      }
-      override def close(): Unit = ()
     }
   }
 }

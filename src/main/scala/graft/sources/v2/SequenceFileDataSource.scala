@@ -2,79 +2,37 @@ package graft.sources.v2
 
 import java.util.{Map => JMap}
 
-import scala.collection.JavaConverters._
-
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.io.{BytesWritable, SequenceFile, Text}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsDynamicOverwrite, SupportsOverwrite, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
-/** DataSource V2 registration of the Hive SequenceFile text layout, so
-  * `CREATE TABLE ... STORED AS SEQUENCEFILE` statements run natively:
+/** graft-seq: Hive's SequenceFile text layout, so `CREATE TABLE ...
+  * STORED AS SEQUENCEFILE` statements run natively.
   * SequenceFile<BytesWritable, Text> whose value is a
   * LazySimpleSerDe-delimited line (\x01 separators, `\N` NULLs, key
   * ignored) — the same byte contract as the programmatic
   * [[graft.sources.SequenceFileText]] path (reference:
   * io/HiveSequenceFileOutputFormat.java + serde2/lazy/LazySimpleSerDe.java).
   *
-  * Scale design: one InputPartition per container file (SequenceFile
-  * block compression keeps files splittable in principle; per-file tasks
-  * match the reference's CombineHiveInputFormat floor), executor-side
-  * parse/serialize, task-unique output files with no driver funnel.
-  * Column pruning drops the parse work for unused fields (the line still
-  * splits once; only required fields convert).
+  * The codec owns the container: splits align to sync markers
+  * (SequenceFileRecordReader convention), each line splits once and only
+  * the required fields convert, and `compress.type`/`compress.codec`
+  * (or the session's output-compression SET values) pick the container's
+  * internal compression. Table, scan and write machinery is [[FileTable]]'s.
   */
-/** `_metadata.file_path` for the graft DSv2 sources, mirroring the shape
-  * FileFormat sources expose, so the copy-on-write DML engine
-  * ([[graft.operators.Acid]]) can locate affected files on graft-seq /
-  * graft-avro tables exactly as it does on parquet/orc ones. */
-object FileMetadataColumn extends MetadataColumn {
-  val NAME = "_metadata"
-  val schema: StructType =
-    StructType(Seq(StructField("file_path", StringType, nullable = false)))
-  override def name(): String = NAME
-  override def dataType(): DataType = schema
-  override def isNullable: Boolean = false
-  /** Pre-built nested row for a reader pinned to one file. */
-  def rowFor(file: String): InternalRow =
-    new GenericInternalRow(Array[Any](UTF8String.fromString(file)))
-}
-
-class SequenceFileDataSource extends TableProvider with DataSourceRegister {
+class SequenceFileDataSource extends FileTableProvider {
   override def shortName(): String = "graft-seq"
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    SeqV2Util.inferSchema(Option(options.get("path")).getOrElse(
-      sys.error("graft-seq requires a path to infer a schema")))
+  override protected def inferSchema(dir: String,
+      options: CaseInsensitiveStringMap): StructType = SeqV2Util.inferSchema(dir)
 
-  override def supportsExternalMetadata(): Boolean = true
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: JMap[String, String]): Table = {
-    val p = Option(properties.get("path"))
-      .orElse(Option(properties.get("location"))).getOrElse("")
-    // partition columns come from the catalog's transforms (SQL tables) or
-    // the `partitions` option (programmatic path reads/writes, e.g. the
-    // copy-on-write DML engine reading a partitioned table directory)
-    val partCols =
-      if (partitioning.nonEmpty) PartLayout.partColNames(partitioning)
-      else Option(properties.get("partitions")).toSeq
-        .flatMap(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
-    SeqTable(p, schema, partCols,
-      Option(properties.get("compress.codec")).map("compress.codec" -> _)
-        .toMap ++
-      Option(properties.get("compress.type")).map("compress.type" -> _))
-  }
+  override protected def codec(properties: JMap[String, String]): FileCodec =
+    SeqCodec(Seq("compress.codec", "compress.type")
+      .flatMap(k => Option(properties.get(k)).map(k -> _)).toMap)
 }
 
 object SeqV2Util {
@@ -111,20 +69,11 @@ object SeqV2Util {
     }
   }
 
-  def listFiles(dir: String): Seq[String] = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(FileSplits.hadoopConf())
-    Option(fs.listStatus(root)).toSeq.flatten
-      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
-        !st.getPath.getName.startsWith("."))
-      .map(_.getPath.toString).sorted
-  }
-
   /** Schema-less reads see string columns c0..cN (field count from the
     * first line) — Hive tables always carry a declared schema, so this is
     * a programmatic-read convenience only. */
   def inferSchema(dir: String): StructType = {
-    val files = listFiles(dir)
+    val files = FileSplits.listFilesWithLen(dir).map(_._1)
     require(files.nonEmpty, s"no files under $dir")
     val r = new SequenceFile.Reader(FileSplits.hadoopConf(),
       SequenceFile.Reader.file(new Path(files.head)))
@@ -198,333 +147,87 @@ object SeqV2Util {
   }
 }
 
-case class SeqTable(path: String, tableSchema: StructType,
-    partCols: Seq[String] = Nil, props: Map[String, String] = Map.empty)
-    extends Table with SupportsRead with SupportsWrite
-    with SupportsMetadataColumns {
-  override def name(): String = s"graft-seq:$path"
-  override def schema(): StructType = tableSchema
-  override def partitioning(): Array[Transform] =
-    PartLayout.identityTransforms(partCols)
-  override def metadataColumns(): Array[MetadataColumn] =
-    Array(FileMetadataColumn)
-  override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE, TableCapability.OVERWRITE_BY_FILTER,
-      TableCapability.OVERWRITE_DYNAMIC).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new SeqScanBuilder(path, tableSchema, partCols)
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new SeqWriteBuilder(path, info.schema(), partCols, props)
-}
+/** The SequenceFile codec. `outputCodec`/`compressType` are the job's
+  * output compression, fixed by [[forWrite]] from `props` and the session. */
+case class SeqCodec(props: Map[String, String] = Map.empty,
+    outputCodec: Option[String] = None, compressType: String = "RECORD")
+    extends FileCodec {
+  override def name: String = "graft-seq"
 
-class SeqScanBuilder(path: String, full: StructType, partCols: Seq[String])
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with org.apache.spark.sql.connector.read.SupportsPushDownFilters {
-  private var required: StructType = full
-  private var prune: Seq[Filter] = Nil
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-  /** Partition pruning: remember equality/IN filters on partition columns
-    * to skip whole directories at listing time. Everything is returned as
-    * post-scan (pushedFilters stays empty) so Spark re-evaluates each
-    * filter — pruning is purely a listing optimization, never a
-    * correctness dependency. */
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    prune = filters.toSeq.filter {
-      case org.apache.spark.sql.sources.EqualTo(a, _) => partCols.contains(a)
-      case org.apache.spark.sql.sources.In(a, _) => partCols.contains(a)
-      case _ => false
-    }
-    filters
-  }
-  override def pushedFilters(): Array[Filter] = Array.empty
-  override def build(): Scan = SeqScan(path, full, required, partCols, prune)
-}
-
-object PartPrune {
-  /** Directory-spec predicate from the remembered partition filters: a
-    * spec (so far) passes unless some filter names one of its columns
-    * with a value set that excludes the directory's value. `types` is
-    * the declared partition-column type map (PartLayout.partTypes) —
-    * numeric columns match by value (directory hr=01 must survive a
-    * hr=1 filter), string columns by exact text. */
-  def accepts(filters: Seq[Filter], spec: Map[String, String],
-      types: Map[String, org.apache.spark.sql.types.DataType]): Boolean = {
-    def dt(a: String) = types.getOrElse(a.toLowerCase,
-      org.apache.spark.sql.types.StringType)
-    filters.forall {
-      case org.apache.spark.sql.sources.EqualTo(a, v) =>
-        spec.get(a).forall(s => PartLayout.valueEq(s, String.valueOf(v), dt(a)))
-      case org.apache.spark.sql.sources.In(a, vs) =>
-        spec.get(a).forall(s =>
-          vs.exists(v => PartLayout.valueEq(s, String.valueOf(v), dt(a))))
-      case _ => true
-    }
-  }
-}
-
-case class SeqScan(path: String, full: StructType, required: StructType,
-    partCols: Seq[String], prune: Seq[Filter])
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-seq ReadSchema: ${required.fieldNames.mkString(",")}" +
-      (if (prune.nonEmpty) s" PartitionPrune: ${prune.mkString(",")}" else "")
-  override def planInputPartitions(): Array[InputPartition] = {
-    // block-style byte-range splits (sync-marker aligned at read time) —
-    // the reference's FileInputFormat parallelism, not one task per file
-    val target = FileSplits.targetBytes
-    val listed: Seq[(String, Long, Map[String, String])] =
-      if (partCols.isEmpty)
-        FileSplits.listFilesWithLen(path).map { case (f, len) =>
-          (f, len, Map.empty[String, String]) }
-      else {
-        val root = new Path(path)
-        PartLayout.listPartitionedFilesWithLen(root,
-          root.getFileSystem(FileSplits.hadoopConf()), partCols, _ => true,
-          spec => PartPrune.accepts(prune, spec, PartLayout.partTypes(full, partCols)))
-      }
-    listed.flatMap { case (f, len, spec) =>
-      FileSplits.forFile(f, len, target).map { case (start, length) =>
-        SeqFilePartition(f, spec, start, length): InputPartition
-      }
-    }.toArray
-  }
-  override def createReaderFactory(): PartitionReaderFactory =
-    SeqReaderFactory(full.json, required.json, partCols,
-      org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone,
-      FileSplits.confOverlay())
-}
-
-/** One byte-range of one container file. `start`/`length` bound the
-  * range; the reader aligns to the format's record boundary (sync
-  * marker / newline). A (0, Long.MaxValue) range is the whole file. */
-case class SeqFilePartition(file: String, partSpec: Map[String, String],
-    start: Long = 0L, length: Long = Long.MaxValue) extends InputPartition
-
-case class SeqReaderFactory(fullJson: String, requiredJson: String,
-    partCols: Seq[String], sessionTz: String,
-    confOverlay: Map[String, String] = Map.empty)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[SeqFilePartition]
-    val file = p.file
-    val full = DataType.fromJson(fullJson).asInstanceOf[StructType]
-    val required = DataType.fromJson(requiredJson).asInstanceOf[StructType]
-    val zone = java.time.ZoneId.of(sessionTz)
-    // field position in the LINE for each required column (partition
-    // columns never appear in lines — the data layout is full minus
-    // partCols, in declaration order); -1 marks the _metadata struct,
-    // -2 - k marks partition column k (answered from the directory spec)
-    val dataFields = full.fields.filterNot(f => partCols.contains(f.name))
-    val posOf = dataFields.map(_.name).zipWithIndex.toMap
-    val fieldPos = required.fields.map { f =>
-      if (f.name == FileMetadataColumn.NAME) -1
-      else if (partCols.contains(f.name)) -2 - partCols.indexOf(f.name)
-      else posOf(f.name)
-    }
-    val types = required.fields.map(_.dataType)
-    // partition values cast once per FILE, not per row
-    val partVals = partCols.map(c =>
-      p.partSpec.get(c).map(v => PartLayout.castValue(v,
-        full(full.fieldIndex(c)).dataType)).orNull).toArray
-    val metaRow = FileMetadataColumn.rowFor(file)
-    val reader = new SequenceFile.Reader(FileSplits.buildConf(confOverlay),
-      SequenceFile.Reader.file(new Path(file)))
+  override def open(split: FileSplit, conf: Configuration, cells: Cells): CellReader = {
+    val reader = new SequenceFile.Reader(conf, SequenceFile.Reader.file(new Path(split.file)))
     // sync-aligned byte range (SequenceFileRecordReader convention): seek
     // to the first sync after `start`; a record read from a position at or
     // past `end` with a sync seen belongs to the NEXT split's reader
-    val end = if (p.length == Long.MaxValue) Long.MaxValue else p.start + p.length
-    if (p.start > 0) reader.sync(p.start)
+    if (split.start > 0) reader.sync(split.start)
     val key = new BytesWritable()
     val value = new Text()
-    new PartitionReader[InternalRow] {
-      private var hasRow = false
+    val types = cells.fields.map(_.dataType)
+    new CellReader {
       override def next(): Boolean = {
         val pos = reader.getPosition
-        hasRow = reader.next(key, value) &&
-          !(pos >= end && reader.syncSeen())
-        hasRow
+        reader.next(key, value) && !(pos >= split.end && reader.syncSeen())
       }
-      override def get(): InternalRow = {
+      override def decode(row: Array[Any]): Unit = {
         val parts = value.toString.split(SeqV2Util.SEP, -1)
-        val vals = new Array[Any](types.length)
         var i = 0
         while (i < types.length) {
-          vals(i) =
-            if (fieldPos(i) == -1) metaRow
-            else if (fieldPos(i) <= -2) partVals(-2 - fieldPos(i))
-            else if (fieldPos(i) < parts.length)
-              SeqV2Util.parse(parts(fieldPos(i)), types(i), zone)
-            else null // short line: LazySimpleSerDe pads missing fields NULL
+          val p = cells.pos(i)
+          // a short line: LazySimpleSerDe pads missing fields NULL
+          row(cells.slot(i)) =
+            if (p < parts.length) SeqV2Util.parse(parts(p), types(i), cells.zone) else null
           i += 1
         }
-        new GenericInternalRow(vals)
       }
       override def close(): Unit = reader.close()
     }
   }
-}
 
-class SeqWriteBuilder(path: String, schema: StructType, partCols: Seq[String],
-    props: Map[String, String] = Map.empty)
-    extends WriteBuilder with SupportsTruncate with SupportsOverwrite
-    with SupportsDynamicOverwrite {
-  // NONE = plain append; ALL = truncate-and-write; DYNAMIC = replace only
-  // the partitions this write produces rows for (Hive nonstrict INSERT
-  // OVERWRITE); STATIC = replace exactly the partitions named by
-  // equality filters on partition columns
-  private var mode = "NONE"
-  private var staticSpec: Map[String, String] = Map.empty
-  override def truncate(): WriteBuilder = { mode = "ALL"; this }
-  override def overwrite(filters: Array[Filter]): WriteBuilder = {
-    val real = filters.filterNot(_ == org.apache.spark.sql.sources.AlwaysTrue)
-    if (real.isEmpty) { mode = "ALL"; return this }
-    // static partition overwrite: every filter must be an equality on a
-    // partition column; a pushed ROW filter would demand partial
-    // overwrite this writer can't honor — fail loudly, never truncate
-    val specs = real.map {
-      case org.apache.spark.sql.sources.EqualTo(a, v) if partCols.contains(a) =>
-        a -> String.valueOf(v)
-      // the planner pushes static PARTITION (p=v) specs as null-safe
-      // equality; a NULL value names the default partition directory
-      case org.apache.spark.sql.sources.EqualNullSafe(a, v) if partCols.contains(a) =>
-        a -> (if (v == null) PartLayout.NULL_DIR else String.valueOf(v))
-      case f => sys.error(
-        s"graft-seq supports only full-table or partition-equality overwrite, got: $f")
-    }
-    mode = "STATIC"; staticSpec = specs.toMap; this
-  }
-  override def overwriteDynamicPartitions(): WriteBuilder = {
-    mode = if (partCols.isEmpty) "ALL" else "DYNAMIC"; this
-  }
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite = SeqBatchWrite(path, schema.json,
-      partCols, mode, staticSpec,
-      org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone,
-      TextV2Util.effectiveOutputCodec(props),
-      SeqV2Util.effectiveCompressType(props))
-  }
-}
+  override def forWrite(data: StructType): FileCodec = copy(
+    outputCodec = TextV2Util.effectiveOutputCodec(props),
+    compressType = SeqV2Util.effectiveCompressType(props))
 
-case class SeqBatchWrite(path: String, schemaJson: String,
-    partCols: Seq[String], mode: String, staticSpec: Map[String, String],
-    sessionTz: String, outputCodec: Option[String] = None,
-    compressType: String = "RECORD") extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(FileSplits.hadoopConf())
-    mode match {
-      case "ALL" => if (fs.exists(p)) fs.delete(p, true): Unit
-      case "STATIC" =>
-        // delete every directory naming the same LOGICAL partitions
-        // (value match, not spelling — hr=1 must also replace hr=01)
-        PartLayout.deleteMatchingPartitions(p, fs, partCols, staticSpec,
-          PartLayout.partTypes(
-            DataType.fromJson(schemaJson).asInstanceOf[StructType], partCols))
-      case _ => ()
-    }
-    fs.mkdirs(p): Unit
-    SeqWriterFactory(path, schemaJson, partCols, sessionTz, outputCodec,
-      compressType, FileSplits.confOverlay())
-  }
-  override def commit(messages: Array[WriterCommitMessage]): Unit =
-    if (mode == "DYNAMIC") {
-      val p = new Path(path)
-      val fs = p.getFileSystem(FileSplits.hadoopConf())
-      val msgs = messages.toSeq.collect { case m: PartWriteMessage => m }
-      PartLayout.commitDynamicOverwrite(p, fs,
-        msgs.flatMap(_.partDirs).toSet, msgs.flatMap(_.files).toSet,
-        partCols, PartLayout.partTypes(
-          DataType.fromJson(schemaJson).asInstanceOf[StructType], partCols))
-    }
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-case class SeqWriterFactory(path: String, schemaJson: String,
-    partCols: Seq[String], sessionTz: String,
-    outputCodec: Option[String] = None, compressType: String = "RECORD",
-    confOverlay: Map[String, String] = Map.empty)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
-    val sparkSchema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    // lines carry only the data columns; partition values become the
-    // directory path (Hive layout — Partition.java / FileSinkOperator's
-    // dynamic-partition writers)
-    val dataIdx = sparkSchema.fields.zipWithIndex
-      .filterNot { case (f, _) => partCols.contains(f.name) }.map(_._2)
-    val types = sparkSchema.fields.map(_.dataType)
-    val partOrds = partCols.map(c =>
-      sparkSchema.fieldIndex(c) -> sparkSchema(sparkSchema.fieldIndex(c)).dataType)
-    val zone = java.time.ZoneId.of(sessionTz)
-    val uid = java.util.UUID.randomUUID().toString.take(8)
-    val conf = FileSplits.buildConf(confOverlay)
-    val fs = new Path(path).getFileSystem(conf)
-    val emptyKey = new BytesWritable(Array.emptyByteArray)
-    new DataWriter[InternalRow] {
-      // one open container per touched partition (dynamic-insert shape);
-      // key "" is the unpartitioned root
-      private val writers =
-        scala.collection.mutable.LinkedHashMap[String, (SequenceFile.Writer, Path)]()
-      private var seq = 0
-      private def writerFor(rel: String): SequenceFile.Writer =
-        writers.getOrElseUpdate(rel, {
-          val dir = if (rel.isEmpty) new Path(path) else new Path(path, rel)
-          seq += 1
-          val file = new Path(dir, f"part-$partitionId%05d-$taskId-$uid-$seq%03d.seq")
-          // hive.exec.compress.output parity: the container compresses
-          // internally (RECORD or BLOCK, FileSinkOperator via
-          // SequenceFileOutputFormat.getOutputCompressionType) — the file
-          // keeps its name, stays sync-splittable, and readers discover
-          // the codec from the header
-          val compressOpt = outputCodec match {
-            case Some(c) => SequenceFile.Writer.compression(
-              SequenceFile.CompressionType.valueOf(compressType),
-              TextV2Util.newCodec(c, conf))
-            case None => SequenceFile.Writer.compression(
-              SequenceFile.CompressionType.NONE)
+  override def encoder(data: StructType, ord: Array[Int], conf: Configuration,
+      zone: java.time.ZoneId): RowEncoder = new RowEncoder {
+    private val types = data.fields.map(_.dataType)
+    private val emptyKey = new BytesWritable(Array.emptyByteArray)
+    // r18 write-loop allocation cut: the StringBuilder and the Text
+    // container are reused across rows (Writer.append serializes the Text
+    // before returning, the standard Hadoop discipline), leaving the
+    // rendered cell strings as the loop's only allocations.
+    private val sb = new java.lang.StringBuilder
+    private val txt = new Text
+    override def extension: String = ".seq"
+    override def create(fs: FileSystem, file: Path): RowAppender = {
+      // hive.exec.compress.output parity: the container compresses
+      // internally (RECORD or BLOCK, FileSinkOperator via
+      // SequenceFileOutputFormat.getOutputCompressionType) — the file keeps
+      // its name, stays sync-splittable, and readers discover the codec
+      // from the header
+      val compressOpt = outputCodec match {
+        case Some(c) => SequenceFile.Writer.compression(
+          SequenceFile.CompressionType.valueOf(compressType),
+          TextV2Util.newCodec(c, conf))
+        case None => SequenceFile.Writer.compression(
+          SequenceFile.CompressionType.NONE)
+      }
+      val w = SequenceFile.createWriter(conf, SequenceFile.Writer.file(file),
+        SequenceFile.Writer.keyClass(classOf[BytesWritable]),
+        SequenceFile.Writer.valueClass(classOf[Text]), compressOpt)
+      new RowAppender {
+        override def append(row: InternalRow): Unit = {
+          sb.setLength(0)
+          var j = 0
+          while (j < ord.length) {
+            if (j > 0) sb.append(SeqV2Util.SEP)
+            sb.append(SeqV2Util.render(row, ord(j), types(j), zone))
+            j += 1
           }
-          (SequenceFile.createWriter(conf, SequenceFile.Writer.file(file),
-            SequenceFile.Writer.keyClass(classOf[BytesWritable]),
-            SequenceFile.Writer.valueClass(classOf[Text]),
-            compressOpt), file)
-        })._1
-      // r18 write-loop allocation cut: the StringBuilder, the Text
-      // container, and the partition path were rebuilt per ROW; all
-      // three are reused across rows (Writer.append serializes the Text
-      // before returning, so container reuse is the standard Hadoop
-      // discipline), leaving the rendered cell strings as the loop's
-      // only allocations.
-      private val sb = new java.lang.StringBuilder
-      private val txt = new Text
-      private val relCache =
-        if (partCols.isEmpty) null
-        else new PartLayout.PartPathCache(partCols, partOrds)
-      override def write(row: InternalRow): Unit = {
-        val rel = if (relCache == null) "" else relCache.relFor(row)
-        sb.setLength(0)
-        var first = true
-        dataIdx.foreach { i =>
-          if (!first) sb.append(SeqV2Util.SEP): Unit
-          first = false
-          sb.append(SeqV2Util.render(row, i, types(i), zone)): Unit
+          txt.set(sb.toString)
+          w.append(emptyKey, txt)
         }
-        txt.set(sb.toString)
-        writerFor(rel).append(emptyKey, txt): Unit
+        override def close(): Unit = w.close()
       }
-      override def commit(): WriterCommitMessage = {
-        writers.values.foreach(_._1.close())
-        PartWriteMessage(writers.values.map(_._2.toString).toSeq,
-          writers.keys.toSeq)
-      }
-      override def abort(): Unit = {
-        writers.values.foreach { case (w, f) =>
-          w.close(); fs.delete(f, false): Unit
-        }
-      }
-      override def close(): Unit = ()
     }
   }
 }

@@ -5,21 +5,16 @@ import java.util.{Map => JMap}
 import scala.collection.JavaConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.hadoop.io.Text
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
-import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
-import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsDynamicOverwrite, SupportsOverwrite, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.unsafe.types.UTF8String
 
-/** DataSource V2 for Hive text tables through the REAL LazySimpleSerDe
+/** graft-text: Hive text tables through the REAL LazySimpleSerDe
   * (reference: serde/src/java/.../lazy/LazySimpleSerDe.java) — the path
   * `STORED AS TEXTFILE` takes when the csv datasource cannot express the
   * table: complex column types (array/map/struct/uniontype — the serde's
@@ -28,41 +23,29 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * decode in Hive and vice versa, because the SAME serde class encodes
   * them.
   *
-  * Options (the serde's own property names): `field.delim`,
+  * Table properties (the serde's own names): `field.delim`,
   * `collection.delim`, `mapkey.delim`, `escape.delim`,
   * `serialization.null.format`; plus `compress.codec` (or session
   * `SET hive.exec.compress.output=true` [+ codec conf]) for compressed
   * text OUTPUT, FileSinkOperator-style.
   *
-  * Scale design: uncompressed files split into newline-aligned
-  * byte-range InputPartitions ([[FileSplits]]); gzip-style codecs are
-  * supported via the Hadoop codec factory — such files are inherently
-  * unsplittable, exactly as in the reference; LazySimpleSerDe decodes
-  * fields LAZILY, so unprojected columns are never materialized.
-  * Partitioned tables share the Hive `p=v` layout machinery
-  * ([[PartLayout]]); `_metadata.file_path` serves the CoW DML engine.
+  * The codec owns the line stream: uncompressed splits align to newlines
+  * (LineRecordReader convention); gzip-style files decompress through
+  * the Hadoop codec factory and are unsplittable, exactly as in the
+  * reference; LazySimpleSerDe decodes fields LAZILY, so unprojected
+  * columns are never materialized. Table, scan and write machinery is
+  * [[FileTable]]'s.
   */
-class TextDataSource extends TableProvider with DataSourceRegister {
+class TextDataSource extends FileTableProvider {
   override def shortName(): String = "graft-text"
 
-  override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    TextV2Util.inferSchema(
-      Option(options.get("path")).getOrElse(
-        sys.error("graft-text requires a path to infer a schema")),
+  override protected def inferSchema(dir: String,
+      options: CaseInsensitiveStringMap): StructType =
+    TextV2Util.inferSchema(dir,
       Option(options.get("field.delim")).getOrElse("\u0001"))
 
-  override def supportsExternalMetadata(): Boolean = true
-
-  override def getTable(schema: StructType, partitioning: Array[Transform],
-                        properties: JMap[String, String]): Table = {
-    val p = Option(properties.get("path"))
-      .orElse(Option(properties.get("location"))).getOrElse("")
-    val partCols =
-      if (partitioning.nonEmpty) PartLayout.partColNames(partitioning)
-      else Option(properties.get("partitions")).toSeq
-        .flatMap(_.split(",").toSeq.map(_.trim).filter(_.nonEmpty))
-    TextTable(p, schema, partCols, TextV2Util.serdeProps(properties))
-  }
+  override protected def codec(properties: JMap[String, String]): FileCodec =
+    TextCodec(TextV2Util.serdeProps(properties))
 }
 
 object TextV2Util {
@@ -275,7 +258,7 @@ object TextV2Util {
     * field count — tables always carry a declared schema, so this is a
     * programmatic-read convenience only. */
   def inferSchema(dir: String, fieldDelim: String): StructType = {
-    val files = SeqV2Util.listFiles(dir)
+    val files = FileSplits.listFilesWithLen(dir).map(_._1)
     require(files.nonEmpty, s"no files under $dir")
     val p = new Path(files.head)
     val conf = FileSplits.hadoopConf()
@@ -302,304 +285,101 @@ object TextV2Util {
   }
 }
 
-case class TextTable(path: String, tableSchema: StructType,
-    partCols: Seq[String], props: Map[String, String])
-    extends Table with SupportsRead with SupportsWrite
-    with SupportsMetadataColumns {
-  override def name(): String = s"graft-text:$path"
-  override def schema(): StructType = tableSchema
-  override def partitioning(): Array[Transform] =
-    PartLayout.identityTransforms(partCols)
-  override def metadataColumns(): Array[MetadataColumn] =
-    Array(FileMetadataColumn)
-  override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE, TableCapability.OVERWRITE_BY_FILTER,
-      TableCapability.OVERWRITE_DYNAMIC).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new TextScanBuilder(path, tableSchema, partCols, props)
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new TextWriteBuilder(path, info.schema(), partCols, props)
-}
+/** The text codec. `props` are the serde options; `outputCodec` is the
+  * job's output compression, fixed by [[forWrite]]. */
+case class TextCodec(props: Map[String, String] = Map.empty,
+    outputCodec: Option[String] = None) extends FileCodec {
+  override def name: String = "graft-text"
 
-class TextScanBuilder(path: String, full: StructType, partCols: Seq[String],
-    props: Map[String, String])
-    extends ScanBuilder with SupportsPushDownRequiredColumns
-    with org.apache.spark.sql.connector.read.SupportsPushDownFilters {
-  private var required: StructType = full
-  private var prune: Seq[Filter] = Nil
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-  // partition equality/IN filters prune the directory listing only;
-  // every filter is returned for Spark to re-evaluate post-scan
-  override def pushFilters(filters: Array[Filter]): Array[Filter] = {
-    prune = filters.toSeq.filter {
-      case org.apache.spark.sql.sources.EqualTo(a, _) => partCols.contains(a)
-      case org.apache.spark.sql.sources.In(a, _) => partCols.contains(a)
-      case _ => false
-    }
-    filters
-  }
-  override def pushedFilters(): Array[Filter] = Array.empty
-  override def build(): Scan = TextScan(path, full, required, partCols, prune, props)
-}
-
-case class TextScan(path: String, full: StructType, required: StructType,
-    partCols: Seq[String], prune: Seq[Filter], props: Map[String, String])
-    extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-text ReadSchema: ${required.fieldNames.mkString(",")}" +
-      (if (prune.nonEmpty) s" PartitionPrune: ${prune.mkString(",")}" else "")
-  override def planInputPartitions(): Array[InputPartition] = {
-    // newline-boundary byte ranges for uncompressed text (the
-    // LineRecordReader convention); suffix-compressed files (gzip —
-    // standard Hive practice) stay one split each
-    val target = FileSplits.targetBytes
-    val listed: Seq[(String, Long, Map[String, String])] =
-      if (partCols.isEmpty)
-        FileSplits.listFilesWithLen(path).map { case (f, len) =>
-          (f, len, Map.empty[String, String]) }
-      else {
-        val root = new Path(path)
-        PartLayout.listPartitionedFilesWithLen(root,
-          root.getFileSystem(FileSplits.hadoopConf()), partCols, _ => true,
-          spec => PartPrune.accepts(prune, spec, PartLayout.partTypes(full, partCols)))
-      }
-    listed.flatMap { case (f, len, spec) =>
-      FileSplits.forFile(f, len, target).map { case (start, length) =>
-        SeqFilePartition(f, spec, start, length): InputPartition
-      }
-    }.toArray
-  }
-  override def createReaderFactory(): PartitionReaderFactory =
-    TextReaderFactory(full.json, required.json, partCols,
-      org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone, props,
-      FileSplits.confOverlay())
-}
-
-case class TextReaderFactory(fullJson: String, requiredJson: String,
-    partCols: Seq[String], sessionTz: String, props: Map[String, String],
-    confOverlay: Map[String, String] = Map.empty)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[SeqFilePartition]
-    val full = DataType.fromJson(fullJson).asInstanceOf[StructType]
-    val required = DataType.fromJson(requiredJson).asInstanceOf[StructType]
-    val zone = java.time.ZoneId.of(sessionTz)
-    val dataFields = full.fields.filterNot(f => partCols.contains(f.name))
-    val posOf = dataFields.map(_.name).zipWithIndex.toMap
-    val fieldPos = required.fields.map { f =>
-      if (f.name == FileMetadataColumn.NAME) -1
-      else if (partCols.contains(f.name)) -2 - partCols.indexOf(f.name)
-      else posOf(f.name)
-    }
-    val types = required.fields.map(_.dataType)
-    val partVals = partCols.map(c =>
-      p.partSpec.get(c).map(v => PartLayout.castValue(v,
-        full(full.fieldIndex(c)).dataType)).orNull).toArray
-    val metaRow = FileMetadataColumn.rowFor(p.file)
-    val conf = FileSplits.buildConf(confOverlay)
-    val serde = TextV2Util.newSerde(
-      StructType(dataFields.toSeq.map(_.copy())), props)
+  override def open(split: FileSplit, conf: Configuration, cells: Cells): CellReader = {
+    val serde = TextV2Util.newSerde(cells.data, props)
     val soi = serde.getObjectInspector
       .asInstanceOf[org.apache.hadoop.hive.serde2.objectinspector.StructObjectInspector]
-    val refs = soi.getAllStructFieldRefs
+    val refs = cells.pos.map(soi.getAllStructFieldRefs.get(_))
+    val types = cells.fields.map(_.dataType)
     // Newline-aligned byte range (LineRecordReader convention): a line
     // belongs to the split containing its FIRST byte. A non-zero start
     // seeks then discards the partial line (the previous split read it —
     // it reads through the first line ENDING past its end); compressed
     // streams are never range-split, and their decompressed position is
     // unbounded, so their end is +inf.
-    val fsPath = new Path(p.file)
+    val fsPath = new Path(split.file)
     val rawFs = fsPath.getFileSystem(conf)
     val codec = Option(
       new org.apache.hadoop.io.compress.CompressionCodecFactory(conf)
         .getCodec(fsPath))
-    val end: Long = codec match {
-      case Some(_) => Long.MaxValue
-      case None =>
-        if (p.length == Long.MaxValue) Long.MaxValue else p.start + p.length
-    }
-    var pos: Long = p.start
+    val end = if (codec.isDefined) Long.MaxValue else split.end
+    var pos: Long = split.start
     val lr = codec match {
       case Some(c) =>
         new org.apache.hadoop.util.LineReader(c.createInputStream(rawFs.open(fsPath)))
       case None =>
         val s = rawFs.open(fsPath)
-        if (p.start > 0) s.seek(p.start)
+        if (split.start > 0) s.seek(split.start)
         val r = new org.apache.hadoop.util.LineReader(s)
-        if (p.start > 0) pos += r.readLine(new Text())
+        if (split.start > 0) pos += r.readLine(new Text())
         r
     }
     val line = new Text()
-    new PartitionReader[InternalRow] {
-      override def next(): Boolean = {
-        if (pos > end) false
-        else {
+    new CellReader {
+      override def next(): Boolean =
+        pos <= end && {
           val n = lr.readLine(line)
           pos += n
           n > 0
         }
-      }
-      override def get(): InternalRow = {
+      override def decode(row: Array[Any]): Unit = {
         val struct = serde.deserialize(line)
-        val vals = new Array[Any](types.length)
         var i = 0
-        while (i < types.length) {
-          vals(i) =
-            if (fieldPos(i) == -1) metaRow
-            else if (fieldPos(i) <= -2) partVals(-2 - fieldPos(i))
-            else {
-              val ref = refs.get(fieldPos(i))
-              TextV2Util.fromHive(soi.getStructFieldData(struct, ref),
-                ref.getFieldObjectInspector, types(i), zone)
-            }
+        while (i < refs.length) {
+          row(cells.slot(i)) = TextV2Util.fromHive(
+            soi.getStructFieldData(struct, refs(i)),
+            refs(i).getFieldObjectInspector, types(i), cells.zone)
           i += 1
         }
-        new GenericInternalRow(vals)
       }
       override def close(): Unit = lr.close()
     }
   }
-}
 
-class TextWriteBuilder(path: String, schema: StructType, partCols: Seq[String],
-    props: Map[String, String])
-    extends WriteBuilder with SupportsTruncate with SupportsOverwrite
-    with SupportsDynamicOverwrite {
-  private var mode = "NONE"
-  private var staticSpec: Map[String, String] = Map.empty
-  override def truncate(): WriteBuilder = { mode = "ALL"; this }
-  override def overwrite(filters: Array[Filter]): WriteBuilder = {
-    val real = filters.filterNot(_ == org.apache.spark.sql.sources.AlwaysTrue)
-    if (real.isEmpty) { mode = "ALL"; return this }
-    val specs = real.map {
-      case org.apache.spark.sql.sources.EqualTo(a, v) if partCols.contains(a) =>
-        a -> String.valueOf(v)
-      case org.apache.spark.sql.sources.EqualNullSafe(a, v) if partCols.contains(a) =>
-        a -> (if (v == null) PartLayout.NULL_DIR else String.valueOf(v))
-      case f => sys.error(
-        s"graft-text supports only full-table or partition-equality overwrite, got: $f")
-    }
-    mode = "STATIC"; staticSpec = specs.toMap; this
-  }
-  override def overwriteDynamicPartitions(): WriteBuilder = {
-    mode = if (partCols.isEmpty) "ALL" else "DYNAMIC"; this
-  }
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite = TextBatchWrite(path, schema.json,
-      partCols, mode, staticSpec,
-      org.apache.spark.sql.internal.SQLConf.get.sessionLocalTimeZone, props,
-      TextV2Util.effectiveOutputCodec(props))
-  }
-}
+  override def forWrite(data: StructType): FileCodec =
+    copy(outputCodec = TextV2Util.effectiveOutputCodec(props))
 
-case class TextBatchWrite(path: String, schemaJson: String,
-    partCols: Seq[String], mode: String, staticSpec: Map[String, String],
-    sessionTz: String, props: Map[String, String],
-    outputCodec: Option[String]) extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(FileSplits.hadoopConf())
-    mode match {
-      case "ALL" => if (fs.exists(p)) fs.delete(p, true): Unit
-      case "STATIC" =>
-        PartLayout.deleteMatchingPartitions(p, fs, partCols, staticSpec,
-          PartLayout.partTypes(
-            DataType.fromJson(schemaJson).asInstanceOf[StructType], partCols))
-      case _ => ()
-    }
-    fs.mkdirs(p): Unit
-    TextWriterFactory(path, schemaJson, partCols, sessionTz, props,
-      outputCodec, FileSplits.confOverlay())
-  }
-  override def commit(messages: Array[WriterCommitMessage]): Unit =
-    if (mode == "DYNAMIC") {
-      val p = new Path(path)
-      val fs = p.getFileSystem(FileSplits.hadoopConf())
-      val msgs = messages.toSeq.collect { case m: PartWriteMessage => m }
-      PartLayout.commitDynamicOverwrite(p, fs,
-        msgs.flatMap(_.partDirs).toSet, msgs.flatMap(_.files).toSet,
-        partCols, PartLayout.partTypes(
-          DataType.fromJson(schemaJson).asInstanceOf[StructType], partCols))
-    }
-  override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-}
-
-case class TextWriterFactory(path: String, schemaJson: String,
-    partCols: Seq[String], sessionTz: String, props: Map[String, String],
-    outputCodec: Option[String],
-    confOverlay: Map[String, String] = Map.empty) extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
-    val sparkSchema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    val dataIdx = sparkSchema.fields.zipWithIndex
-      .filterNot { case (f, _) => partCols.contains(f.name) }.map(_._2)
-    val partOrds = partCols.map(c =>
-      sparkSchema.fieldIndex(c) -> sparkSchema(sparkSchema.fieldIndex(c)).dataType)
-    val zone = java.time.ZoneId.of(sessionTz)
-    val uid = java.util.UUID.randomUUID().toString.take(8)
-    val conf = FileSplits.buildConf(confOverlay)
-    val fs = new Path(path).getFileSystem(conf)
-    val dataSchema = StructType(dataIdx.toSeq.map(i => sparkSchema.fields(i)))
-    val serde = TextV2Util.newSerde(dataSchema, props)
-    val oi = org.apache.hadoop.hive.serde2.objectinspector.ObjectInspectorFactory
-      .getStandardStructObjectInspector(
-        dataSchema.fieldNames.toSeq.asJava,
-        dataSchema.fields.toSeq.map(f => TextV2Util.javaOI(f.dataType)).asJava)
-    val newline = "\n".getBytes("UTF-8")
+  override def encoder(data: StructType, ord: Array[Int], conf: Configuration,
+      zone: java.time.ZoneId): RowEncoder = new RowEncoder {
+    private val types = data.fields.map(_.dataType)
+    private val serde = TextV2Util.newSerde(data, props)
+    private val oi = TextV2Util.javaOI(data)
+    private val newline = "\n".getBytes("UTF-8")
     // hive.exec.compress.output parity (FileSinkOperator wraps the text
     // stream in the configured codec and suffixes the file; the read path
     // resolves the codec back from the suffix via CompressionCodecFactory)
-    val codec = outputCodec.map(TextV2Util.newCodec(_, conf))
-    val ext = ".txt" + codec.map(_.getDefaultExtension).getOrElse("")
-    new DataWriter[InternalRow] {
-      private val writers = scala.collection.mutable
-        .LinkedHashMap[String, (java.io.OutputStream, Path)]()
-      private var seq = 0
-      private def writerFor(rel: String): java.io.OutputStream =
-        writers.getOrElseUpdate(rel, {
-          val dir = if (rel.isEmpty) new Path(path) else new Path(path, rel)
-          fs.mkdirs(dir): Unit
-          seq += 1
-          val file = new Path(dir, f"part-$partitionId%05d-$taskId-$uid-$seq%03d$ext")
-          val raw = fs.create(file, false)
-          (codec.map(_.createOutputStream(raw): java.io.OutputStream)
-            .getOrElse(raw), file)
-        })._1
-      // r18 write-loop allocation cut: row ArrayList + partition path
-      // reused across rows (serialize() copies into the serde's own Text
-      // whose bytes are written out immediately below).
-      private val jrow = new java.util.ArrayList[Object](dataIdx.length)
-      private val relCache =
-        if (partCols.isEmpty) null
-        else new PartLayout.PartPathCache(partCols, partOrds)
-      override def write(row: InternalRow): Unit = {
-        val rel = if (relCache == null) "" else relCache.relFor(row)
-        jrow.clear()
-        dataIdx.foreach { i =>
-          jrow.add(TextV2Util.toHiveValue(
-            if (row.isNullAt(i)) null
-            else row.get(i, sparkSchema.fields(i).dataType),
-            sparkSchema.fields(i).dataType, zone)): Unit
+    private val codec = outputCodec.map(TextV2Util.newCodec(_, conf))
+    // r18 write-loop allocation cut: the row ArrayList is reused
+    // (serialize() copies into the serde's own Text, whose bytes are
+    // written out immediately)
+    private val jrow = new java.util.ArrayList[Object](ord.length)
+    override val extension: String =
+      ".txt" + codec.map(_.getDefaultExtension).getOrElse("")
+    override def create(fs: FileSystem, file: Path): RowAppender = {
+      val raw = fs.create(file, false)
+      val out = codec.map(_.createOutputStream(raw): java.io.OutputStream).getOrElse(raw)
+      new RowAppender {
+        override def append(row: InternalRow): Unit = {
+          jrow.clear()
+          var j = 0
+          while (j < ord.length) {
+            val i = ord(j)
+            jrow.add(TextV2Util.toHiveValue(
+              if (row.isNullAt(i)) null else row.get(i, types(j)), types(j), zone))
+            j += 1
+          }
+          val text = serde.serialize(jrow, oi).asInstanceOf[Text]
+          out.write(text.getBytes, 0, text.getLength)
+          out.write(newline)
         }
-        val text = serde.serialize(jrow, oi).asInstanceOf[Text]
-        val out = writerFor(rel)
-        out.write(text.getBytes, 0, text.getLength)
-        out.write(newline)
+        override def close(): Unit = out.close()
       }
-      override def commit(): WriterCommitMessage = {
-        writers.values.foreach(_._1.close())
-        PartWriteMessage(writers.values.map(_._2.toString).toSeq,
-          writers.keys.toSeq)
-      }
-      override def abort(): Unit = {
-        writers.values.foreach { case (w, f) =>
-          w.close(); fs.delete(f, false): Unit
-        }
-      }
-      override def close(): Unit = ()
     }
   }
 }

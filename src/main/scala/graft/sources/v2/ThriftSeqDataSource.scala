@@ -44,7 +44,7 @@ import org.apache.thrift.protocol.{TBinaryProtocol, TCompactProtocol, TProtocolF
   * Strings, structs and containers are genuinely nullable (their write
   * is null-guarded) and pass through.
   *
-  * Scale design: one InputPartition per container file; thrift records
+  * Scale design: sync-aligned byte-range splits ([[FileSplit]]); thrift records
   * are row-serialized so each record deserializes once, but only the
   * REQUIRED top-level fields convert to Catalyst values (projection
   * prunes conversion, not deserialization). Writes serialize per task
@@ -301,12 +301,8 @@ case class ThriftScan(path: String, full: StructType, required: StructType,
   override def planInputPartitions(): Array[InputPartition] = {
     // SequenceFile sync markers make the container splittable (same
     // convention as graft-seq): byte ranges at Spark's scan target size
-    val target = FileSplits.targetBytes
-    FileSplits.listFilesWithLen(path).flatMap { case (f, len) =>
-      FileSplits.forFile(f, len, target).map { case (start, length) =>
-        SeqFilePartition(f, Map.empty[String, String], start, length): InputPartition
-      }
-    }.toArray
+    FileSplits.plan(FileSplits.listFilesWithLen(path).map { case (f, len) =>
+      (f, len, Map.empty[String, String]) })
   }
   override def createReaderFactory(): PartitionReaderFactory =
     ThriftReaderFactory(required.json, thriftClass, protocol,
@@ -318,7 +314,7 @@ case class ThriftReaderFactory(requiredJson: String,
     confOverlay: Map[String, String] = Map.empty)
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val part = partition.asInstanceOf[SeqFilePartition]
+    val part = partition.asInstanceOf[FileSplit]
     val file = part.file
     val required = DataType.fromJson(requiredJson).asInstanceOf[StructType]
     // resolve by NAME against the thrift metadata (an external schema may
@@ -335,14 +331,12 @@ case class ThriftReaderFactory(requiredJson: String,
       .asInstanceOf[org.apache.hadoop.io.Writable]
     val value = new BytesWritable()
     // sync-aligned byte range (SequenceFileRecordReader convention)
-    val end =
-      if (part.length == Long.MaxValue) Long.MaxValue else part.start + part.length
     if (part.start > 0) reader.sync(part.start)
     new PartitionReader[InternalRow] {
       private var hasRow = false
       override def next(): Boolean = {
         val pos = reader.getPosition
-        hasRow = reader.next(key, value) && !(pos >= end && reader.syncSeen())
+        hasRow = reader.next(key, value) && !(pos >= part.end && reader.syncSeen())
         hasRow
       }
       override def get(): InternalRow = {

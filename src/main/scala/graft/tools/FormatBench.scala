@@ -45,7 +45,8 @@ object FormatBench {
       "graft-text" -> Map.empty, // LazySimpleSerDe lines (lazy field decode)
       "graft-rcfile" -> Map.empty, // binary (LazyBinaryColumnarSerDe)
       "graft-rcfile-text" -> Map(
-        "serde" -> "org.apache.hadoop.hive.serde2.columnar.ColumnarSerDe"))
+        "serde" -> "org.apache.hadoop.hive.serde2.columnar.ColumnarSerDe"),
+      "graft-avro" -> Map.empty) // reader-schema projection
 
     // warm-up: pay JVM/codegen/committer start-up outside every timing
     // (the first-timed format otherwise absorbs it all)

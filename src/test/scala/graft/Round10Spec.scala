@@ -43,21 +43,18 @@ class Round10Spec extends SparkSpec {
 
   // ---- DSv2 overwrite refuses a pushed row filter ------------------------
 
-  test("graft-avro/graft-seq overwrite(filters) rejects real filters") {
+  test("graft file formats: overwrite(filters) rejects real filters") {
+    import org.apache.spark.sql.sources.{AlwaysTrue, EqualTo, Filter}
     val schema = org.apache.spark.sql.types.StructType.fromDDL("id INT")
-    val avroB = new sources.v2.AvroWriteBuilder("/tmp/never", schema)
-    // AlwaysTrue (whole-table) is the planner's no-op filter: accepted
-    avroB.overwrite(Array[org.apache.spark.sql.sources.Filter](org.apache.spark.sql.sources.AlwaysTrue))
-    // a pushed ROW filter (id is not a partition column) must fail loudly
-    val e1 = intercept[RuntimeException](
-      avroB.overwrite(Array[org.apache.spark.sql.sources.Filter](org.apache.spark.sql.sources.EqualTo("id", 1))))
-    assert(e1.getMessage.contains("partition-equality overwrite"))
-
-    val seqB = new sources.v2.SeqWriteBuilder("/tmp/never", schema, Nil)
-    seqB.overwrite(Array[org.apache.spark.sql.sources.Filter](org.apache.spark.sql.sources.AlwaysTrue))
-    val e2 = intercept[RuntimeException](
-      seqB.overwrite(Array[org.apache.spark.sql.sources.Filter](org.apache.spark.sql.sources.EqualTo("id", 1))))
-    assert(e2.getMessage.contains("partition-equality overwrite"))
+    for (codec <- Seq[sources.v2.FileCodec](sources.v2.SeqCodec(),
+        sources.v2.RcCodec(), sources.v2.TextCodec(), sources.v2.AvroCodec)) {
+      val b = new sources.v2.FileWriteBuilder("/tmp/never", schema, Nil, codec)
+      // AlwaysTrue (whole-table) is the planner's no-op filter: accepted
+      b.overwrite(Array[Filter](AlwaysTrue))
+      // a pushed ROW filter (id is not a partition column) must fail loudly
+      val e = intercept[RuntimeException](b.overwrite(Array[Filter](EqualTo("id", 1))))
+      assert(e.getMessage.contains("partition-equality overwrite"), codec.name)
+    }
   }
 
   // ---- Hive compare-via-double (FunctionRegistry.java:702) ---------------
@@ -143,9 +140,9 @@ class Round10Spec extends SparkSpec {
       .collect()(0).getLong(0) == 3)
   }
 
-  // ---- partitioned graft-seq / graft-avro: layout + DML (r9 verdict #6) --
+  // ---- partitioned graft file formats: layout + DML (r9 verdict #6) ----
 
-  for (fmt <- Seq("graft-seq", "graft-avro", "graft-rcfile")) {
+  for (fmt <- Seq("graft-seq", "graft-avro", "graft-rcfile", "graft-text")) {
     test(s"partitioned $fmt: insert routes, overwrite replaces, reads prune") {
       val base = Files.createTempDirectory("r10_part").toString + "/t"
       spark.sql("DROP TABLE IF EXISTS r10_pt")

@@ -247,7 +247,7 @@ class Round9Spec extends SparkSpec {
 
       // the on-disk text is the SESSION wall clock (Hive renders the
       // reader's zone), regardless of what the JVM default zone is
-      val file = graft.sources.v2.SeqV2Util.listFiles(dir).head
+      val file = graft.sources.v2.FileSplits.listFilesWithLen(dir).head._1
       val r = new org.apache.hadoop.io.SequenceFile.Reader(
         new org.apache.hadoop.conf.Configuration(),
         org.apache.hadoop.io.SequenceFile.Reader.file(
