@@ -21,6 +21,10 @@ import org.apache.spark.sql.functions._
   * Scale notes:
   *  - the matching-file scan pushes `cond` down to parquet, so row groups
   *    that can't match are skipped;
+  *  - the survivors scan (and MERGE's anti-join and [[mergeFiles]]) filters
+  *    on `_metadata.file_path IN (affected)`, which both parquet and the
+  *    graft file tables prune at listing, so it reads only the affected
+  *    files;
   *  - the only driver-side collect is the affected FILE list (metadata, not
   *    rows — same order of magnitude as a lakehouse commit log entry);
   *  - rewrite cost is proportional to affected files, not table size.
@@ -42,13 +46,27 @@ object Acid {
     * production deployment layers a manifest/commit log (Delta-style)
     * over the swap primitive for that.
     */
+  private final class TableLock { var holders = 0 }
+  // one entry per table directory with DML running or waiting; the last
+  // holder to leave removes it
   private val pathLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+    new java.util.concurrent.ConcurrentHashMap[String, TableLock]()
   private def withTableLock[T](path: String)(body: => T): T = {
     val key = new Path(path).toString.stripSuffix("/")
-    val lock = pathLocks.computeIfAbsent(key, _ => new Object)
-    lock.synchronized(body)
+    val lock = pathLocks.compute(key, (_, held) => {
+      val l = if (held == null) new TableLock else held
+      l.holders += 1
+      l
+    })
+    try lock.synchronized(body)
+    finally pathLocks.compute(key, (_, l) => {
+      l.holders -= 1
+      if (l.holders == 0) null else l
+    }): Unit
   }
+
+  /** Table directories with DML running or waiting. */
+  private[graft] def lockedTables: Int = pathLocks.size
 
   /** UPDATE tbl SET (k -> expr)* WHERE cond, copy-on-write. `schema` is
     * required for formats that don't self-describe (graft-seq text lines

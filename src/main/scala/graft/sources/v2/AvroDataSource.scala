@@ -32,11 +32,10 @@ import graft.sources.Avro
   * block sync markers; projection pushdown is REAL — the pruned Spark
   * schema becomes the Avro reader schema, so Avro's schema resolution
   * skips decoding the dropped columns; and `forWrite` checks that every
-  * data column maps to Avro before the write deletes anything. Table,
-  * scan and write machinery is [[FileTable]]'s, including job abort: the
-  * files of tasks that committed before a failure are deleted. Honest
-  * caveat: an INSERT OVERWRITE's full-table or static-partition delete
-  * runs before the job and is not undone by a failure.
+  * data column maps to Avro before the write starts. Table, scan and
+  * write machinery is [[FileTable]]'s, including job abort: the files of
+  * tasks that committed before a failure are deleted, and an INSERT
+  * OVERWRITE deletes what it replaces only at commit.
   */
 class AvroDataSource extends FileTableProvider {
   override def shortName(): String = "graft-avro"
@@ -241,8 +240,8 @@ case object AvroCodec extends FileCodec {
     }
   }
 
-  /** Fails fast on a column Avro cannot carry, before the write's
-    * pre-delete: a mid-write schema error must not destroy existing data. */
+  /** Fails fast on a column Avro cannot carry, before the write starts:
+    * a schema error fails the statement at planning, not in its tasks. */
   override def forWrite(data: StructType): FileCodec = {
     Avro.toAvroSchema(data): Unit
     this

@@ -1,10 +1,16 @@
 package graft.sources.v2
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.read.InputPartition
+import org.apache.spark.sql.execution.datasources.FilePartition
+import org.apache.spark.sql.internal.SQLConf
 
-/** Byte-range split planning for the graft DSv2 container sources.
+/** Scan planning for the graft DSv2 container sources: byte-range
+  * splits, then Spark's packing of splits into shared tasks.
   *
   * The reference splits these formats by HDFS block via
   * FileInputFormat.getSplits — SequenceFile and RCFile carry sync
@@ -16,17 +22,23 @@ import org.apache.spark.sql.connector.read.InputPartition
   * few 10 GB files becomes a few straggler tasks; with them it runs
   * ~len/target parallel range readers per file.
   *
-  * Planning happens on the driver where SQLConf is in scope: the target
-  * is Spark's own scan knob (spark.sql.files.maxPartitionBytes), so the
-  * graft sources parallelize like a parquet scan does. Suffix-compressed
+  * The other end of the scale is many small files, which Hive's default
+  * CombineHiveInputFormat packs into a few splits so map tasks are not
+  * spent on file opens. [[packed]] does the same with Spark's own file-scan
+  * rule (FilePartition): each split costs its length plus
+  * spark.sql.files.openCostInBytes, and splits fill shared
+  * [[FileGroup]]s next-fit in decreasing size up to Spark's per-task cap.
+  *
+  * Planning happens on the driver where SQLConf is in scope: the byte
+  * ranges are cut at Spark's own scan knob (spark.sql.files.maxPartitionBytes),
+  * so the graft sources parallelize like a parquet scan does. Suffix-compressed
   * files (gzip text — standard Hive practice) are never split; a
   * byte-range seek into a gzip stream is meaningless.
   */
 object FileSplits {
 
   /** Driver-side only (SQLConf is thread-local to the planning thread). */
-  def targetBytes: Long =
-    org.apache.spark.sql.internal.SQLConf.get.filesMaxPartitionBytes
+  def targetBytes: Long = SQLConf.get.filesMaxPartitionBytes
 
   /** The session-faithful Hadoop conf for driver-side planning/listing.
     * A bare `new Configuration()` drops every `spark.hadoop.*` setting —
@@ -34,7 +46,7 @@ object FileSplits {
     * object stores where the rest of the engine works. Falls back to a
     * default conf only when no session is active (unit-test contexts). */
   def hadoopConf(): Configuration =
-    org.apache.spark.sql.SparkSession.getActiveSession
+    SparkSession.getActiveSession
       .map(_.sessionState.newHadoopConf())
       .getOrElse(new Configuration())
 
@@ -44,7 +56,7 @@ object FileSplits {
     * an equivalent conf inside the reader. Catches both launch-time
     * `--conf spark.hadoop.*` and runtime `spark.conf.set` entries. */
   def confOverlay(): Map[String, String] =
-    org.apache.spark.sql.SparkSession.getActiveSession.map { s =>
+    SparkSession.getActiveSession.map { s =>
       import scala.jdk.CollectionConverters._
       val session = s.sessionState.newHadoopConf()
       val defaults = new Configuration()
@@ -90,13 +102,42 @@ object FileSplits {
     else ranges(len, target)
 
   /** Splits for listed (file, length, partition spec) triples. */
-  def plan(listed: Seq[(String, Long, Map[String, String])]): Array[InputPartition] = {
+  def splits(listed: Seq[(String, Long, Map[String, String])]): Seq[FileSplit] = {
     val target = targetBytes
     listed.flatMap { case (f, len, spec) =>
       forFile(f, len, target).map { case (start, length) =>
-        FileSplit(f, spec, start, length): InputPartition
+        FileSplit(f, spec, start, length)
       }
-    }.toArray
+    }
+  }
+
+  /** One input partition per split (graft-thrift-seq's plan). */
+  def plan(listed: Seq[(String, Long, Map[String, String])]): Array[InputPartition] =
+    splits(listed).toArray
+
+  /** The splits of the listed files packed into shared input partitions by
+    * Spark's FilePartition rule: a split costs its length plus
+    * `openCostInBytes`, a group holds at most
+    * min(maxPartitionBytes, max(openCost, total / minPartitionNum)) of
+    * cost (Spark's `maxSplitBytes` over the files' length + open cost), and
+    * splits are placed next-fit in decreasing size. */
+  def packed(listed: Seq[(String, Long, Map[String, String])]): Array[InputPartition] = {
+    val openCost = SQLConf.get.filesOpenCostInBytes
+    val cap = FilePartition.maxSplitBytes(SparkSession.active,
+      listed.map { case (_, len, _) => len + openCost }.sum)
+    val groups = ArrayBuffer.empty[InputPartition]
+    val current = ArrayBuffer.empty[FileSplit]
+    var size = 0L
+    def close(): Unit = if (current.nonEmpty) {
+      groups += FileGroup(current.toSeq); current.clear(); size = 0L
+    }
+    splits(listed).sortBy(-_.bytes).foreach { s =>
+      if (size + s.bytes > cap) close()
+      size += s.bytes + openCost
+      current += s
+    }
+    close()
+    groups.toArray
   }
 
   /** Flat-directory listing with lengths (the split planner's input). */
@@ -118,4 +159,11 @@ case class FileSplit(file: String, partSpec: Map[String, String],
     start: Long = 0L, length: Long = Long.MaxValue) extends InputPartition {
   /** Exclusive end of the range. */
   def end: Long = if (length == Long.MaxValue) Long.MaxValue else start + length
+  /** Bytes the range covers, for packing; an open-ended range is planned
+    * only for a file listed as empty. */
+  def bytes: Long = if (length == Long.MaxValue) 0L else length
 }
+
+/** The splits one scan task reads in turn: Spark's FilePartition for the
+  * graft file table. */
+case class FileGroup(splits: Seq[FileSplit]) extends InputPartition

@@ -5,7 +5,7 @@ import java.util.{Map => JMap}
 import scala.collection.JavaConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{MetadataColumn, SupportsMetadataColumns, SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
@@ -28,18 +28,21 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - capabilities and the `_metadata.file_path` column, which the
   *     copy-on-write DML engine ([[graft.operators.Acid]]) uses to locate
   *     affected files;
-  *   - column pruning, and partition pruning at listing time (remembered
-  *     `EqualTo`/`In` filters on partition columns, every filter still
+  *   - column pruning, and pruning at listing time: remembered
+  *     `EqualTo`/`In` filters on partition columns skip directories, and
+  *     on `_metadata.file_path` skip files (every filter is still
   *     re-evaluated after the scan);
-  *   - listing through [[PartLayout]] and byte-range [[FileSplit]]s;
-  *   - the map from each required field to a data cell, `_metadata` or a
-  *     partition value (cast once per file);
-  *   - the NONE/ALL/STATIC/DYNAMIC overwrite modes, pre-delete and
-  *     dynamic-overwrite commit;
+  *   - listing through [[PartLayout]], byte-range [[FileSplit]]s, and
+  *     Spark's file-scan packing of the splits into shared tasks
+  *     ([[FileSplits.packed]]);
+  *   - a reader that walks its task's splits in turn on one Hadoop
+  *     Configuration, mapping each required field to a data cell,
+  *     `_metadata` or a partition value (cast once per split);
+  *   - the NONE/ALL/STATIC/DYNAMIC overwrite modes: what an overwrite
+  *     replaces is listed at job start and deleted at commit;
   *   - one open file per touched partition per task, with task-unique
   *     `part-…` names, and a job abort that deletes the committed tasks'
-  *     files, so a failed append or dynamic overwrite leaves the table as
-  *     it was.
+  *     files, so a failed append or overwrite leaves the table as it was.
   *
   * A format plugs in as a codec: it decodes the records of one split and
   * encodes one task's rows. Codecs travel to executors inside the reader
@@ -56,7 +59,7 @@ trait FileCodec extends Serializable {
     * boundary, for the data cells `cells` names. */
   def open(split: FileSplit, conf: Configuration, cells: Cells): CellReader
 
-  /** Runs at planning, in `WriteBuilder.build()` before any pre-delete: checks
+  /** Runs at planning, in `WriteBuilder.build()` before the job: checks
     * the data schema and fixes the session's output settings (such as
     * compression) for the job. The result encodes the job's rows. */
   def forWrite(data: StructType): FileCodec = this
@@ -97,6 +100,8 @@ trait RowAppender {
 /** `_metadata.file_path`, in the shape FileFormat sources expose. */
 object FileMetadataColumn extends MetadataColumn {
   val NAME = "_metadata"
+  /** The pushed-filter name of `_metadata.file_path`. */
+  val PATH = s"$NAME.file_path"
   val schema: StructType =
     StructType(Seq(StructField("file_path", StringType, nullable = false)))
   override def name(): String = NAME
@@ -105,6 +110,22 @@ object FileMetadataColumn extends MetadataColumn {
   /** Pre-built nested row for a reader pinned to one file. */
   def rowFor(file: String): InternalRow =
     new GenericInternalRow(Array[Any](UTF8String.fromString(file)))
+
+  /** File-path filters worth remembering for listing-time file pruning. */
+  def pathFilters(filters: Seq[Filter]): Seq[Filter] =
+    filters.filter {
+      case EqualTo(PATH, _) | In(PATH, _) => true
+      case _ => false
+    }
+
+  /** Whether a listed file can pass every remembered file-path filter; the
+    * path must match as `_metadata.file_path` spells it. */
+  def accepts(filters: Seq[Filter], file: String): Boolean =
+    filters.forall {
+      case EqualTo(_, v) => file == String.valueOf(v)
+      case In(_, vs) => vs.exists(v => file == String.valueOf(v))
+      case _ => true
+    }
 }
 
 object PartPrune {
@@ -193,20 +214,25 @@ class FileScanBuilder(path: String, full: StructType, partCols: Seq[String],
     with SupportsPushDownFilters {
   private var required: StructType = full
   private var prune: Seq[Filter] = Nil
+  private var paths: Seq[Filter] = Nil
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
-  /** Partition pruning is a listing optimization only: every filter is
-    * returned for Spark to re-evaluate after the scan. */
+  /** Partition and file pruning are listing optimizations only: every
+    * filter is returned for Spark to re-evaluate after the scan. */
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     prune = PartPrune.of(filters.toSeq, partCols)
+    paths = FileMetadataColumn.pathFilters(filters.toSeq)
     filters
   }
   override def pushedFilters(): Array[Filter] = Array.empty
-  override def build(): Scan = FileScan(path, full, required, partCols, prune, codec)
+  override def build(): Scan =
+    FileScan(path, full, required, partCols, prune, paths, codec)
 }
 
+/** `prune` holds the remembered partition filters, `paths` the remembered
+  * `_metadata.file_path` filters. */
 case class FileScan(path: String, full: StructType, required: StructType,
-    partCols: Seq[String], prune: Seq[Filter], codec: FileCodec)
+    partCols: Seq[String], prune: Seq[Filter], paths: Seq[Filter], codec: FileCodec)
     extends Scan with Batch {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
@@ -225,7 +251,7 @@ case class FileScan(path: String, full: StructType, required: StructType,
           root.getFileSystem(FileSplits.hadoopConf()), partCols, codec.keep,
           spec => PartPrune.accepts(prune, spec, PartLayout.partTypes(full, partCols)))
       }
-    FileSplits.plan(listed)
+    FileSplits.packed(listed.filter { case (f, _, _) => FileMetadataColumn.accepts(paths, f) })
   }
   override def createReaderFactory(): PartitionReaderFactory =
     FileReaderFactory(full.json, required.json, partCols,
@@ -237,35 +263,50 @@ case class FileReaderFactory(fullJson: String, requiredJson: String,
     confOverlay: Map[String, String])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val split = partition.asInstanceOf[FileSplit]
+    val splits = partition.asInstanceOf[FileGroup].splits
     val full = DataType.fromJson(fullJson).asInstanceOf[StructType]
     val required = DataType.fromJson(requiredJson).asInstanceOf[StructType]
     // the files hold the data columns: full minus partition columns, in
     // declaration order. `_metadata` and partition values are the same
-    // for every row of the file, so they sit in a template each row copies.
+    // for every row of a split, so they sit in a template each row copies.
     val data = StructType(full.fields.filterNot(f => partCols.contains(f.name)))
-    val template = new Array[Any](required.length)
-    val dataSlots = scala.collection.mutable.ArrayBuffer.empty[Int]
-    required.fields.zipWithIndex.foreach { case (f, i) =>
-      if (f.name == FileMetadataColumn.NAME)
-        template(i) = FileMetadataColumn.rowFor(split.file)
-      else if (partCols.contains(f.name))
-        template(i) = split.partSpec.get(f.name)
-          .map(PartLayout.castValue(_, full(f.name).dataType)).orNull
-      else dataSlots += i
-    }
-    val slots = dataSlots.toArray
-    val reader = codec.open(split, FileSplits.buildConf(confOverlay),
-      Cells(data, slots.map(required.fields), slots.map(i =>
-        data.fieldIndex(required(i).name)), slots, java.time.ZoneId.of(sessionTz)))
+    val slots = required.fields.indices.filterNot { i =>
+      required(i).name == FileMetadataColumn.NAME || partCols.contains(required(i).name)
+    }.toArray
+    val cells = Cells(data, slots.map(required.fields), slots.map(i =>
+      data.fieldIndex(required(i).name)), slots, java.time.ZoneId.of(sessionTz))
+    def templateFor(split: FileSplit): Array[Any] =
+      required.fields.map { f =>
+        if (f.name == FileMetadataColumn.NAME) FileMetadataColumn.rowFor(split.file)
+        else if (partCols.contains(f.name))
+          split.partSpec.get(f.name).map(PartLayout.castValue(_, full(f.name).dataType)).orNull
+        else null
+      }
+    // one Configuration per task: building one costs milliseconds
+    val conf = FileSplits.buildConf(confOverlay)
     new PartitionReader[InternalRow] {
-      override def next(): Boolean = reader.next()
+      // the next split to open; each opens on first use, inside the
+      // task's input-metrics window
+      private var nextSplit = 0
+      private var reader: CellReader = null
+      private var template: Array[Any] = null
+      override def next(): Boolean = {
+        while (reader == null || !reader.next()) {
+          if (reader != null) { reader.close(); reader = null }
+          if (nextSplit == splits.length) return false
+          val split = splits(nextSplit)
+          nextSplit += 1
+          template = templateFor(split)
+          reader = codec.open(split, conf, cells)
+        }
+        true
+      }
       override def get(): InternalRow = {
         val row = template.clone()
         reader.decode(row)
         new GenericInternalRow(row)
       }
-      override def close(): Unit = reader.close()
+      override def close(): Unit = if (reader != null) reader.close()
     }
   }
 }
@@ -320,31 +361,36 @@ case class FileBatchWrite(path: String, schemaJson: String,
     DataType.fromJson(schemaJson).asInstanceOf[StructType], partCols)
   private def written(messages: Array[WriterCommitMessage]) =
     messages.toSeq.collect { case m: PartWriteMessage => m }
+  // what an ALL or STATIC overwrite replaces, listed at job start and
+  // deleted only at commit
+  private var replaced: Seq[FileStatus] = Nil
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-    mode match {
-      case "ALL" => if (fs.exists(root)) fs.delete(root, true): Unit
+    replaced = mode match {
+      case "ALL" => PartLayout.tree(fs, root).drop(1)
       case "STATIC" =>
-        // delete every directory naming the same LOGICAL partitions
-        // (value match, not spelling — hr=1 must also replace hr=01)
-        PartLayout.deleteMatchingPartitions(root, fs, partCols, staticSpec, partTypes)
-      case _ => ()
+        // every directory naming the same LOGICAL partitions (value
+        // match, not spelling — hr=1 must also replace hr=01)
+        PartLayout.matchingPartitionDirs(root, fs, partCols, staticSpec, partTypes)
+          .flatMap(PartLayout.tree(fs, _))
+      case _ => Nil
     }
     fs.mkdirs(root): Unit
     FileWriterFactory(path, schemaJson, partCols, sessionTz, codec,
       FileSplits.confOverlay())
   }
-  override def commit(messages: Array[WriterCommitMessage]): Unit =
-    if (mode == "DYNAMIC") {
+  override def commit(messages: Array[WriterCommitMessage]): Unit = mode match {
+    case "DYNAMIC" =>
       val msgs = written(messages)
       PartLayout.commitDynamicOverwrite(root, fs,
         msgs.flatMap(_.partDirs).toSet, msgs.flatMap(_.files).toSet,
         partCols, partTypes)
-    }
+    case "ALL" | "STATIC" => PartLayout.deleteReplaced(fs, replaced)
+    case _ => ()
+  }
   /** Deletes the files of the tasks that committed before the job failed
-    * (a failed task deletes its own), so a failed append or dynamic
-    * overwrite leaves the table as it was. The ALL/STATIC pre-delete has
-    * already run and is not undone. */
+    * (a failed task deletes its own). Nothing was replaced yet, so a failed
+    * append or overwrite leaves the table as it was. */
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     written(messages).flatMap(_.files).foreach(f => fs.delete(new Path(f), false): Unit)
 }

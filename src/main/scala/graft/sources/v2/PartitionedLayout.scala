@@ -1,6 +1,6 @@
 package graft.sources.v2
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
 import org.apache.spark.sql.types._
@@ -141,23 +141,42 @@ object PartLayout {
       }
     else dirValue == litValue
 
-  /** Delete every partition directory whose values match `spec`
-    * semantically under the declared `types` (all of spec's columns
-    * equal; spec may bind a prefix subset) — the static INSERT
-    * OVERWRITE PARTITION delete step. */
-  def deleteMatchingPartitions(root: Path, fs: FileSystem,
+  /** Every partition directory whose values match `spec` semantically
+    * under the declared `types` (all of spec's columns equal; spec may
+    * bind a prefix subset) — what a static INSERT OVERWRITE PARTITION
+    * replaces. */
+  def matchingPartitionDirs(root: Path, fs: FileSystem,
       partCols: Seq[String], spec: Map[String, String],
-      types: Map[String, DataType]): Unit =
+      types: Map[String, DataType]): Seq[Path] =
     listPartitionDirs(root, fs, partCols)
       .filter(dirSpec => spec.forall { case (k, v) =>
         dirSpec.exists { case (dk, dv) => dk.equalsIgnoreCase(k) &&
           valueEq(dv, v, types.getOrElse(k.toLowerCase, StringType)) }
       })
-      .foreach { dirSpec =>
-        val rel = dirSpec.map { case (k, v) => escape(k) + "=" + escape(v) }
-          .mkString("/")
-        fs.delete(new Path(root, rel), true)
-      }
+      .map(dirSpec => new Path(root,
+        dirSpec.map { case (k, v) => escape(k) + "=" + escape(v) }.mkString("/")))
+
+  /** `path` and everything beneath it, parents before children; empty
+    * when `path` does not exist. */
+  def tree(fs: FileSystem, path: Path): Seq[FileStatus] =
+    if (!fs.exists(path)) Nil
+    else {
+      val st = fs.getFileStatus(path)
+      st +: (if (st.isDirectory) fs.listStatus(path).toSeq.flatMap(c => tree(fs, c.getPath))
+             else Nil)
+    }
+
+  /** The commit step of an overwrite that replaces `old` (a [[tree]]
+    * listing taken at job start): its files go, then its directories that
+    * are left empty. Files written since, the job's own, stay. */
+  def deleteReplaced(fs: FileSystem, old: Seq[FileStatus]): Unit = {
+    val (dirs, files) = old.partition(_.isDirectory)
+    files.foreach(f => fs.delete(f.getPath, false))
+    dirs.reverse.foreach { d =>
+      if (fs.exists(d.getPath) && fs.listStatus(d.getPath).isEmpty)
+        fs.delete(d.getPath, true)
+    }
+  }
 
   /** Full-depth partition DIRECTORIES (files or not — a registered-empty
     * partition is still a partition, Hive parity), each as the ordered

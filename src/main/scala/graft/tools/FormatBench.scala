@@ -9,6 +9,9 @@ import org.apache.spark.sql.functions._
   * storage-level column skip is measured against formats that prune at
   * the reader (parquet) or not at all (seq text lines split fully).
   *
+  * A second table scans 64 small files per format (tasks and seconds),
+  * a third splits one large file per graft format.
+  *
   * Usage: sbt "runMain graft.tools.FormatBench [rows]" — prints one row
   * per (format, op) with wall seconds, min-of-3 after a warm-up pass.
   * Results recorded in PERF.md §Round 10.
@@ -74,6 +77,28 @@ object FormatBench {
         .select(lit(rows)).collect()(0).getLong(0))
       require(n1 == rows && n2 == rows, s"$label row count mismatch")
       println(f"$label%-20s $wSec%8.2f $allSec%10.2f $projSec%11.2f")
+    }
+
+    // ---- many small files ----------------------------------------------
+    // 64 small files per format: a scan packs them into shared tasks by
+    // Spark's file-scan rule (parquet natively, the graft formats through
+    // FileSplits.packed) instead of one task per file open.
+    println()
+    println(f"${"format"}%-20s ${"files"}%6s ${"tasks"}%6s ${"scan_s"}%8s")
+    val smallRows = math.min(rows, 64000L)
+    val smallDf = df.limit(smallRows.toInt).repartition(64)
+    Seq("parquet", "graft-seq", "graft-text", "graft-rcfile", "graft-avro").foreach { fmt =>
+      val dir = Tmp.dir(s"fmtbench_small_$fmt") + "/t"
+      smallDf.write.format(fmt).mode("overwrite").save(dir)
+      val files = new java.io.File(dir).listFiles().count(_.getName.startsWith("part-"))
+      def rd: DataFrame = {
+        val r = spark.read
+        (if (fmt == "parquet") r else r.schema(df.schema)).format(fmt).load(dir)
+      }
+      val tasks = rd.rdd.getNumPartitions
+      val (sec, n) = minOf3(rd.agg(count(lit(1)), sum(col("v1"))).collect()(0).getLong(0))
+      require(n == smallRows, s"$fmt small-file scan row mismatch")
+      println(f"$fmt%-20s $files%6d $tasks%6d $sec%8.2f")
     }
 
     // ---- single-large-file split parallelism (round 11) ------------------
