@@ -70,6 +70,7 @@ private[graft] object Dml {
       cond: Option[String]): Unit = {
     val desc = TableDesc.of(spark, table)
     requireNoHetero(desc, "UPDATE")
+    requireRowLevelStorage(desc, "UPDATE")
     requireNoArchived(desc, "UPDATE")
     val partCols = desc.partCols
     val set = splitAssignments(setClause).map { a =>
@@ -91,6 +92,7 @@ private[graft] object Dml {
   def delete(spark: SparkSession, table: String, cond: Option[String]): Unit = {
     val desc = TableDesc.of(spark, table)
     requireNoHetero(desc, "DELETE")
+    requireRowLevelStorage(desc, "DELETE")
     requireNoArchived(desc, "DELETE")
     operators.Acid.deleteWhere(spark, desc.location, whereOrAll(cond),
       desc.format, desc.dmlSchema, desc.partCols, desc.dmlOptions)
@@ -104,7 +106,8 @@ private[graft] object Dml {
   def merge(spark: SparkSession, stmt: String): Unit = {
     val desc = mergeTargetRe.findFirstMatchIn(stmt)
       .flatMap(m => TableDesc.find(spark, m.group(1).replace("`", "")))
-    desc.foreach(requireNoArchived(_, "MERGE"))
+    desc.foreach { d =>
+      requireNoArchived(d, "MERGE"); requireRowLevelStorage(d, "MERGE") }
     sqlMerge(spark, stmt, desc)
   }
 
@@ -525,6 +528,13 @@ private[graft] object Dml {
     desc.archiveEntries.headOption.foreach(e =>
       sys.error(s"$op is not supported on ${desc.name} while partitions are " +
         s"archived ($e); UNARCHIVE first"))
+
+  /** The reference refuses row-level DML on a thrift-serialized table
+    * (the src_thrift shape), a non-ACID serde table. */
+  private def requireRowLevelStorage(desc: TableDesc, op: String): Unit =
+    if (desc.format == "graft-thrift-seq")
+      sys.error(s"$op is not supported on ${desc.name}: thrift-serialized " +
+        "tables are not transactional")
 
   /** Whole-table DML cannot run over a table whose partitions diverge in
     * format (the CoW machinery reads/rewrites one provider) — refuse

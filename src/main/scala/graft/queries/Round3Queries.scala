@@ -2,7 +2,6 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.operators.{Acid, AsOf, Dedup, Ranges, Sample, UniqueJoin}
-import graft.sources.{Avro, SequenceFileText}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.{round => _, _}
 import graft.queries.Fns.round
@@ -19,7 +18,8 @@ object Round3Queries {
 
     // ---- Avro source/sink round-trip (reference: serde2/avro/AvroSerDe).
     //      Writes orders (+ a synthesized array column) to Avro container
-    //      files, reads them back, and aggregates. All output columns are
+    //      files through graft-avro, reads them back, and aggregates. All
+    //      output columns are
     //      exact (counts, integer sums, min/max pass-throughs), so the gate
     //      proves date/timestamp/array/double fidelity through the Avro
     //      encoding with no float-arithmetic slack. ----
@@ -29,8 +29,8 @@ object Round3Queries {
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           col("o_totalprice"), col("o_orderdate"),
           array(col("o_orderkey"), col("o_custkey")).as("ks"))
-      Avro.write(src, dir)
-      Avro.read(s, dir)
+      src.write.format("graft-avro").mode("overwrite").save(dir)
+      s.read.format("graft-avro").load(dir)
         .groupBy("o_orderstatus")
         .agg(count(lit(1)).as("n"),
           sum(element_at(col("ks"), 2)).as("sum_cust"),
@@ -133,15 +133,14 @@ object Round3Queries {
 
     // ---- STORED AS SEQUENCEFILE round-trip (HiveSequenceFileOutputFormat +
     //      LazySimpleSerDe layout: \x01 separators, \N nulls, ignored key).
-    //      Read path re-parses through the csv dialect, sharing coercion
-    //      semantics with the textfile gates q106/q107. ----
+    //      Written and read through graft-seq with the declared schema a
+    //      Hive table carries. ----
     Q("q115_sequencefile", (s, d) => {
       val dir = graft.tools.Tmp.dir("graft_seq") + "/nation_seq"
-      SequenceFileText.write(
-        t(s, d, "nation").select("n_nationkey", "n_name", "n_regionkey"), dir)
-      SequenceFileText.read(s, dir,
-        org.apache.spark.sql.types.StructType.fromDDL(
-          "n_nationkey BIGINT, n_name STRING, n_regionkey BIGINT"))
+      t(s, d, "nation").select("n_nationkey", "n_name", "n_regionkey")
+        .write.format("graft-seq").mode("overwrite").save(dir)
+      s.read.format("graft-seq")
+        .schema("n_nationkey BIGINT, n_name STRING, n_regionkey BIGINT").load(dir)
         .groupBy("n_regionkey")
         .agg(count(lit(1)).as("n"), max("n_name").as("max_name"))
     },

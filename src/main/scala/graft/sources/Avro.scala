@@ -1,49 +1,26 @@
 package graft.sources
 
-import java.nio.ByteBuffer
-import java.time.LocalDate
-
 import scala.collection.JavaConverters._
 
-import org.apache.avro.{LogicalTypes, Schema, SchemaBuilder}
-import org.apache.avro.file.{DataFileReader, DataFileWriter}
-import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
-import org.apache.avro.mapred.FsInput
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.avro.{LogicalTypes, Schema}
 import org.apache.spark.sql.types._
 
-/** Avro container-file source/sink.
+/** The Avro schema mapping behind graft-avro ([[graft.sources.v2.AvroCodec]]):
+  * Spark types to the record schema written into a container's header and
+  * back.
   *
   * Parity target: the reference's Avro SerDe
   * (serde/src/java/org/apache/hadoop/hive/serde2/avro/AvroSerDe.java,
   * AvroDeserializer.java) — tables stored as Avro object-container files
-  * with a record schema derived from the table schema.
+  * with a record schema derived from the table schema. The environment
+  * ships avro-core/avro-mapred but NOT the spark-avro connector module,
+  * so the mapping is built on the public Avro schema API.
   *
-  * The environment ships avro-core/avro-mapred but NOT the spark-avro
-  * connector module, so this is a from-scratch source built on the public
-  * Avro file API. Scale design:
-  *
-  *   - WRITE: one container file per partition (the parquet layout
-  *     convention), written by executors directly to the table directory
-  *     through the Hadoop FileSystem — no driver funnel, no shuffle.
-  *   - READ: file-granularity parallelism (one task per container file, the
-  *     same granularity Hive's AvroContainerInputFormat defaults to when
-  *     files are written partition-sized); records stream through an
-  *     iterator, never materialized per-file. Block-level splitting via
-  *     Avro sync markers is a possible refinement for single huge files —
-  *     the writer above never produces those.
-  *
-  * Type coverage: the primitive lattice + date/timestamp-micros/decimal
-  * logical types + arrays — the types the fixture tables (and Hive's Avro
-  * tables in the reference test corpus) actually use. Nested records/maps
-  * would slot into the same two convert functions.
+  * Type coverage: the primitive lattice, date/timestamp/decimal logical
+  * types, arrays, string-keyed maps and nested records. Every column is a
+  * [null, T] union, as in Hive's Avro tables.
   */
 object Avro {
-
-  // ---- schema mapping ----
 
   def toAvroSchema(st: StructType, name: String = "row"): Schema = {
     val fields = st.fields.map { f =>
@@ -127,197 +104,8 @@ object Avro {
   }
 
   /** Strip the [null, T] union wrapper the writer (and Hive) emit. */
-  private def unwrap(s: Schema): Schema =
+  def unwrap(s: Schema): Schema =
     if (s.getType == Schema.Type.UNION)
       s.getTypes.asScala.find(_.getType != Schema.Type.NULL).getOrElse(s)
     else s
-
-  // ---- value conversion ----
-
-  /** `s` is the value's target avro schema (possibly [null, T]-wrapped):
-    * nested records need it to instantiate GenericData.Record, maps and
-    * arrays to recurse into their value/element schemas. */
-  private def toAvroValue(v: Any, s: Schema): AnyRef = v match {
-    case null                     => null
-    case t: java.sql.Timestamp    => Long.box(t.getTime * 1000L + (t.getNanos / 1000L) % 1000L)
-    case ldt: java.time.LocalDateTime =>
-      Long.box(ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + ldt.getNano / 1000L)
-    case d: java.sql.Date         => Int.box(d.toLocalDate.toEpochDay.toInt)
-    case b: Array[Byte]           => ByteBuffer.wrap(b)
-    // row decimals carry the column's declared scale (Spark normalizes on
-    // read/cast), so the unscaled bytes line up with the schema's logical
-    // decimal(precision, scale)
-    case bd: java.math.BigDecimal => ByteBuffer.wrap(bd.unscaledValue.toByteArray)
-    case b: java.lang.Byte        => Int.box(b.intValue)
-    case sh: java.lang.Short      => Int.box(sh.intValue)
-    case xs: scala.collection.Seq[_] =>
-      val es = unwrap(s).getElementType
-      new java.util.ArrayList[AnyRef](xs.map(toAvroValue(_, es)).asJava)
-    case m: scala.collection.Map[_, _] =>
-      val vs = unwrap(s).getValueType
-      val jm = new java.util.LinkedHashMap[String, AnyRef]()
-      m.foreach { case (k, mv) => jm.put(String.valueOf(k), toAvroValue(mv, vs)) }
-      jm
-    case row: org.apache.spark.sql.Row =>
-      val rs = unwrap(s)
-      val rec = new GenericData.Record(rs)
-      var i = 0
-      while (i < row.length) {
-        rec.put(i, toAvroValue(row.get(i), rs.getFields.get(i).schema()))
-        i += 1
-      }
-      rec
-    case other                    => other.asInstanceOf[AnyRef]
-  }
-
-  private def toSparkValue(v: Any, dt: DataType): Any = (v, dt) match {
-    case (null, _) => null
-    case (u: org.apache.avro.util.Utf8, StringType) => u.toString
-    case (s: CharSequence, StringType) => s.toString
-    case (l: java.lang.Long, TimestampType) =>
-      val ts = new java.sql.Timestamp(Math.floorDiv(l.longValue, 1000000L) * 1000L)
-      ts.setNanos((Math.floorMod(l.longValue, 1000000L) * 1000L).toInt)
-      ts
-    case (l: java.lang.Long, TimestampNTZType) =>
-      java.time.LocalDateTime.ofEpochSecond(Math.floorDiv(l.longValue, 1000000L),
-        (Math.floorMod(l.longValue, 1000000L) * 1000L).toInt, java.time.ZoneOffset.UTC)
-    case (i: java.lang.Integer, DateType) =>
-      java.sql.Date.valueOf(LocalDate.ofEpochDay(i.longValue))
-    case (i: java.lang.Integer, ByteType)  => i.byteValue
-    case (i: java.lang.Integer, ShortType) => i.shortValue
-    case (b: ByteBuffer, BinaryType) =>
-      val arr = new Array[Byte](b.remaining()); b.duplicate().get(arr); arr
-    case (b: ByteBuffer, dec: DecimalType) =>
-      val arr = new Array[Byte](b.remaining()); b.duplicate().get(arr)
-      new java.math.BigDecimal(new java.math.BigInteger(arr), dec.scale)
-    case (xs: java.util.Collection[_], ArrayType(elem, _)) =>
-      xs.asScala.map(toSparkValue(_, elem)).toSeq
-    case (m: java.util.Map[_, _], MapType(StringType, vt, _)) =>
-      m.asScala.map { case (k, mv) =>
-        String.valueOf(k) -> toSparkValue(mv, vt) }.toMap
-    case (r: GenericRecord, st: StructType) =>
-      org.apache.spark.sql.Row.fromSeq(st.fields.toSeq.zipWithIndex.map {
-        case (f, i) => toSparkValue(r.get(i), f.dataType) })
-    case (other, _) => other
-  }
-
-  // ---- sink ----
-
-  /** Write `df` as a directory of Avro container files, one per partition.
-    * Overwrites `dir`. Deflate-compressed, like Hive's default avro tables.
-    */
-  def write(df: DataFrame, dir: String): Unit = {
-    val schemaJson = toAvroSchema(df.schema).toString
-    val sparkSchema = df.schema
-    val out = new Path(dir)
-    val fs = out.getFileSystem(df.sparkSession.sessionState.newHadoopConf())
-    if (fs.exists(out)) fs.delete(out, true): Unit
-    fs.mkdirs(out): Unit
-
-    // the SESSION's Hadoop conf must travel to executors: a bare
-    // `new Configuration()` drops spark.hadoop.* settings (object-store
-    // credentials, etc.) that only exist in the session, not in site files
-    val serConf = new org.apache.spark.util.SerializableConfiguration(
-      df.sparkSession.sessionState.newHadoopConf())
-    df.rdd.foreachPartition { rows =>
-      if (rows.hasNext) {
-        val pid = TaskContext.getPartitionId()
-        val schema = new Schema.Parser().parse(schemaJson)
-        val pfs = new Path(dir).getFileSystem(serConf.value)
-        // write-then-rename: duplicate attempts of one partition (retry
-        // racing a zombie, speculation) each produce a COMPLETE temp file
-        // and the atomic rename publishes one of them whole — a direct
-        // create on the final name could interleave two attempts' blocks
-        val uid = java.util.UUID.randomUUID().toString.take(8)
-        val tmp = new Path(dir, f".part-$pid%05d-$uid.avro.tmp")
-        val file = new Path(dir, f"part-$pid%05d.avro")
-        val writer = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](schema))
-        writer.setCodec(org.apache.avro.file.CodecFactory.deflateCodec(6))
-        writer.create(schema, pfs.create(tmp, true)): Unit
-        try rows.foreach { row =>
-          val rec = new GenericData.Record(schema)
-          var i = 0
-          while (i < sparkSchema.length) {
-            rec.put(i, toAvroValue(row.get(i), schema.getFields.get(i).schema()))
-            i += 1
-          }
-          writer.append(rec)
-        } finally writer.close()
-        if (pfs.exists(file)) pfs.delete(file, false): Unit
-        pfs.rename(tmp, file): Unit
-      }
-    }
-
-    // an all-empty dataset must still round-trip: leave one schema-bearing
-    // empty container so read() can recover the schema and return 0 rows
-    if (Option(fs.globStatus(new Path(out, "*.avro"))).forall(_.isEmpty)) {
-      val schema = new Schema.Parser().parse(schemaJson)
-      val writer = new DataFileWriter[GenericRecord](new GenericDatumWriter[GenericRecord](schema))
-      writer.create(schema, fs.create(new Path(out, "part-00000.avro"), true)): Unit
-      writer.close()
-    }
-  }
-
-  // ---- source ----
-
-  /** Read a directory of Avro container files as a DataFrame; schema taken
-    * from the first file (Hive semantics: one schema per table).
-    */
-  def read(spark: SparkSession, dir: String): DataFrame = {
-    val conf = spark.sessionState.newHadoopConf()
-    val root = new Path(dir)
-    val fs = root.getFileSystem(conf)
-    val files = Option(fs.globStatus(new Path(root, "*.avro"))).toSeq.flatten
-      .map(_.getPath.toString).sorted
-    require(files.nonEmpty, s"no .avro files under $dir")
-
-    val first = new DataFileReader[GenericRecord](
-      new FsInput(new Path(files.head), conf), new GenericDatumReader[GenericRecord]())
-    val avroSchema = try first.getSchema finally first.close()
-    val sparkSchema = StructType(avroSchema.getFields.asScala.map { f =>
-      StructField(f.name, toSparkType(f.schema()), nullable = true)
-    }.toArray)
-    val fieldTypes = sparkSchema.fields.map(_.dataType)
-    // Hive's AvroSerDe historically writes timestamp-MILLIS; our writer
-    // emits micros. Both map to TimestampType, so the reader must scale
-    // by the FILE's logical type or external Hive files land near epoch.
-    val isMillis: Array[Boolean] = avroSchema.getFields.asScala.map { f =>
-      val u = unwrap(f.schema())
-      u.getLogicalType != null && u.getLogicalType.getName.endsWith("-millis")
-    }.toArray
-    val serConf = new org.apache.spark.util.SerializableConfiguration(conf)
-
-    val rdd = spark.sparkContext
-      .parallelize(files.toIndexedSeq, files.length)
-      .flatMap { file =>
-        val reader = new DataFileReader[GenericRecord](
-          new FsInput(new Path(file), serConf.value),
-          new GenericDatumReader[GenericRecord]())
-        // stream records; close when the iterator drains AND on task
-        // completion (limit/take stop consuming early and would otherwise
-        // leak one fd per container file)
-        var closed = false
-        def closeOnce(): Unit = if (!closed) { closed = true; reader.close() }
-        Option(TaskContext.get()).foreach(
-          _.addTaskCompletionListener[Unit](_ => closeOnce()))
-        new Iterator[Row] {
-          def hasNext: Boolean = {
-            if (closed) false
-            else if (reader.hasNext) true
-            else { closeOnce(); false }
-          }
-          def next(): Row = {
-            val rec = reader.next()
-            Row.fromSeq(fieldTypes.indices.map { i =>
-              val v = rec.get(i) match {
-                case l: java.lang.Long if isMillis(i) => Long.box(l * 1000L)
-                case other => other
-              }
-              toSparkValue(v, fieldTypes(i))
-            })
-          }
-        }
-      }
-    spark.createDataFrame(rdd, sparkSchema)
-  }
 }

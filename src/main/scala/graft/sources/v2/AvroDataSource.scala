@@ -4,6 +4,7 @@ import java.util.{Map => JMap}
 
 import scala.collection.JavaConverters._
 
+import org.apache.avro.LogicalTypes
 import org.apache.avro.file.{DataFileReader, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.avro.mapred.FsInput
@@ -25,8 +26,7 @@ import graft.sources.Avro
   * Parity target: the reference registers its Avro SerDe as a first-class
   * storage format (io/AvroStorageFormatDescriptor.java), not just a
   * programmatic reader — this provider is the Spark-native equivalent of
-  * that registration, layered over the same schema/value mapping as
-  * [[graft.sources.Avro]].
+  * that registration, over the schema mapping in [[graft.sources.Avro]].
   *
   * The codec owns the container: only `.avro` files list; splits align to
   * block sync markers; projection pushdown is REAL — the pruned Spark
@@ -57,19 +57,6 @@ object AvroV2Util {
     StructType(avro.getFields.asScala.map { f =>
       StructField(f.name, Avro.toSparkType(f.schema()), nullable = true)
     }.toArray)
-  }
-
-  /** Scale of an Avro field's decimal logical type (through a [null, T]
-    * union), or `dflt` when the field carries no decimal logical type. */
-  def decimalScaleOf(s: org.apache.avro.Schema, dflt: Int): Int = {
-    val u = if (s.getType == org.apache.avro.Schema.Type.UNION)
-      s.getTypes.asScala.find(_.getType != org.apache.avro.Schema.Type.NULL)
-        .getOrElse(s)
-    else s
-    u.getLogicalType match {
-      case d: org.apache.avro.LogicalTypes.Decimal => d.getScale
-      case _ => dflt
-    }
   }
 
   /** Decimal bytes → Catalyst Decimal, honoring the WRITER's scale. */
@@ -119,13 +106,6 @@ object AvroV2Util {
     case (other, _) => other
   }
 
-  /** Strip the [null, T] union wrapper around a field's avro schema. */
-  private def unwrapAvro(s: org.apache.avro.Schema): org.apache.avro.Schema =
-    if (s.getType == org.apache.avro.Schema.Type.UNION)
-      s.getTypes.asScala.find(_.getType != org.apache.avro.Schema.Type.NULL)
-        .getOrElse(s)
-    else s
-
   /** Catalyst internal value → Avro external value for one field. `s` is
     * the field's avro schema (possibly [null, T]-wrapped): nested records
     * need it to instantiate GenericData.Record, containers to recurse. */
@@ -157,7 +137,7 @@ object AvroV2Util {
           .toJavaBigDecimal.setScale(dec.scale).unscaledValue.toByteArray)
       case ArrayType(elem, _) =>
         val arr = g.getArray(i)
-        val es = unwrapAvro(s).getElementType
+        val es = Avro.unwrap(s).getElementType
         val out = new java.util.ArrayList[AnyRef](arr.numElements())
         var j = 0
         while (j < arr.numElements()) { out.add(fromGetter(arr, j, elem, es)); j += 1 }
@@ -165,7 +145,7 @@ object AvroV2Util {
       case MapType(StringType, vt, _) =>
         val m = g.getMap(i)
         val keys = m.keyArray(); val vals = m.valueArray()
-        val vs = unwrapAvro(s).getValueType
+        val vs = Avro.unwrap(s).getValueType
         val out = new java.util.LinkedHashMap[String, AnyRef]()
         var j = 0
         while (j < m.numElements()) {
@@ -174,7 +154,7 @@ object AvroV2Util {
         }
         out
       case st: StructType =>
-        val rs = unwrapAvro(s)
+        val rs = Avro.unwrap(s)
         val r = g.getStruct(i, st.length)
         val rec = new org.apache.avro.generic.GenericData.Record(rs)
         var j = 0
@@ -207,19 +187,23 @@ case object AvroCodec extends FileCodec {
     // seek to the first block sync after `start`, stop once past `end`
     reader.sync(split.start)
     val types = cells.fields.map(_.dataType)
-    // Avro schema resolution ignores LOGICAL types: a decimal field's
-    // bytes resolve even when the FILE was written at a different scale
-    // than the catalog declares (schema evolution / external files).
-    // Interpret unscaled bytes at the WRITER's scale, then rescale — the
-    // reference's AvroDeserializer does the same via the writer schema.
-    val writerScale: Array[Int] = cells.fields.map { f =>
-      f.dataType match {
-        case dec: DecimalType =>
-          Option(reader.getSchema.getField(f.name))
-            .map(fl => AvroV2Util.decimalScaleOf(fl.schema(), dec.scale))
-            .getOrElse(dec.scale)
-        case _ => -1
-      }
+    // Avro schema resolution ignores LOGICAL types, so each value is read
+    // by the WRITER's logical type (the file header's), as the
+    // reference's AvroDeserializer does: a decimal's unscaled bytes at the
+    // writer's scale, then rescaled (schema evolution / external files),
+    // and a timestamp-millis or local-timestamp-millis long (what Hive's
+    // AvroSerDe writes) scaled to micros.
+    val writerTypes = cells.fields.map(f => Option(reader.getSchema.getField(f.name))
+      .map(fl => Avro.unwrap(fl.schema()).getLogicalType).orNull)
+    val writerScale: Array[Int] = types.zip(writerTypes).map {
+      case (_: DecimalType, d: LogicalTypes.Decimal) => d.getScale
+      case (dec: DecimalType, _) => dec.scale
+      case _ => -1
+    }
+    val millis: Array[Boolean] = types.zip(writerTypes).map {
+      case (TimestampType | TimestampNTZType, lt) if lt != null =>
+        lt.getName == "timestamp-millis" || lt.getName == "local-timestamp-millis"
+      case _ => false
     }
     new CellReader {
       override def next(): Boolean =
@@ -228,11 +212,12 @@ case object AvroCodec extends FileCodec {
         val rec = reader.next()
         var i = 0
         while (i < types.length) {
+          val v = rec.get(i)
           row(cells.slot(i)) =
             if (writerScale(i) >= 0)
-              AvroV2Util.toInternalDecimal(rec.get(i),
-                types(i).asInstanceOf[DecimalType], writerScale(i))
-            else AvroV2Util.toInternal(rec.get(i), types(i))
+              AvroV2Util.toInternalDecimal(v, types(i).asInstanceOf[DecimalType], writerScale(i))
+            else if (millis(i) && v != null) v.asInstanceOf[java.lang.Long].longValue * 1000L
+            else AvroV2Util.toInternal(v, types(i))
           i += 1
         }
       }

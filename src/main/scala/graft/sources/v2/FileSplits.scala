@@ -111,10 +111,6 @@ object FileSplits {
     }
   }
 
-  /** One input partition per split (graft-thrift-seq's plan). */
-  def plan(listed: Seq[(String, Long, Map[String, String])]): Array[InputPartition] =
-    splits(listed).toArray
-
   /** The splits of the listed files packed into shared input partitions by
     * Spark's FilePartition rule: a split costs its length plus
     * `openCostInBytes`, a group holds at most

@@ -19,9 +19,10 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The format-independent DSv2 file table behind graft-seq, graft-rcfile,
-  * graft-text and graft-avro. Hive keeps table, partition and write
-  * machinery apart from the file format and plugs each format in as an
-  * Input/OutputFormat plus a SerDe named by the storage descriptor. Here
+  * graft-text, graft-avro and graft-thrift-seq. Hive keeps table,
+  * partition and write machinery apart from the file format and plugs
+  * each format in as an Input/OutputFormat plus a SerDe named by the
+  * storage descriptor. Here
   * the table machinery lives once, in [[FileTable]] and its scan and
   * write classes:
   *

@@ -4,7 +4,8 @@ import java.util.{Map => JMap}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.hadoop.io.{BytesWritable, SequenceFile, Text}
+import org.apache.hadoop.io.{BytesWritable, SequenceFile, Text, Writable}
+import org.apache.hadoop.util.ReflectionUtils
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -14,15 +15,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * STORED AS SEQUENCEFILE` statements run natively.
   * SequenceFile<BytesWritable, Text> whose value is a
   * LazySimpleSerDe-delimited line (\x01 separators, `\N` NULLs, key
-  * ignored) — the same byte contract as the programmatic
-  * [[graft.sources.SequenceFileText]] path (reference:
-  * io/HiveSequenceFileOutputFormat.java + serde2/lazy/LazySimpleSerDe.java).
+  * ignored), byte-compatible with what the reference writes for its
+  * default sequencefile tables (io/HiveSequenceFileOutputFormat.java +
+  * serde2/lazy/LazySimpleSerDe.java).
   *
-  * The codec owns the container: splits align to sync markers
-  * (SequenceFileRecordReader convention), each line splits once and only
-  * the required fields convert, and `compress.type`/`compress.codec`
-  * (or the session's output-compression SET values) pick the container's
-  * internal compression. Table, scan and write machinery is [[FileTable]]'s.
+  * The codec owns the record layout: each line splits once and only the
+  * required fields convert, and `compress.type`/`compress.codec` (or the
+  * session's output-compression SET values) pick the container's internal
+  * compression. The container itself is [[SeqContainer]]'s; table, scan
+  * and write machinery is [[FileTable]]'s.
   */
 class SequenceFileDataSource extends FileTableProvider {
   override def shortName(): String = "graft-seq"
@@ -147,6 +148,49 @@ object SeqV2Util {
   }
 }
 
+/** The SequenceFile container under graft-seq and graft-thrift-seq; only
+  * the value class differs between the two codecs. */
+object SeqContainer {
+  /** One split's records, aligned to sync markers
+    * (SequenceFileRecordReader convention): the reader seeks to the first
+    * sync after `start`, and a record read from a position at or past
+    * `end` with a sync seen belongs to the NEXT split's reader. Each
+    * record's value lands in `value`; the key, which both layouts ignore,
+    * takes the file's own key class. */
+  final class SplitReader(split: FileSplit, conf: Configuration, value: Writable)
+      extends java.io.Closeable {
+    private val reader =
+      new SequenceFile.Reader(conf, SequenceFile.Reader.file(new Path(split.file)))
+    if (split.start > 0) reader.sync(split.start)
+    private val key =
+      ReflectionUtils.newInstance(reader.getKeyClass, conf).asInstanceOf[Writable]
+    /** Advances `value` to the split's next record; false past its end. */
+    def next(): Boolean = {
+      val pos = reader.getPosition
+      reader.next(key, value) && !(pos >= split.end && reader.syncSeen())
+    }
+    override def close(): Unit = reader.close()
+  }
+
+  /** A writer of SequenceFile<BytesWritable, `valueClass`>. With an
+    * `outputCodec`, the container compresses internally (RECORD or BLOCK,
+    * FileSinkOperator via SequenceFileOutputFormat.getOutputCompressionType
+    * — hive.exec.compress.output parity): the file keeps its name, stays
+    * sync-splittable, and readers discover the codec from the header. */
+  def writer(conf: Configuration, file: Path, valueClass: Class[_ <: Writable],
+      outputCodec: Option[String], compressType: String): SequenceFile.Writer =
+    SequenceFile.createWriter(conf, SequenceFile.Writer.file(file),
+      SequenceFile.Writer.keyClass(classOf[BytesWritable]),
+      SequenceFile.Writer.valueClass(valueClass),
+      outputCodec match {
+        case Some(c) => SequenceFile.Writer.compression(
+          SequenceFile.CompressionType.valueOf(compressType),
+          TextV2Util.newCodec(c, conf))
+        case None => SequenceFile.Writer.compression(
+          SequenceFile.CompressionType.NONE)
+      })
+}
+
 /** The SequenceFile codec. `outputCodec`/`compressType` are the job's
   * output compression, fixed by [[forWrite]] from `props` and the session. */
 case class SeqCodec(props: Map[String, String] = Map.empty,
@@ -155,19 +199,11 @@ case class SeqCodec(props: Map[String, String] = Map.empty,
   override def name: String = "graft-seq"
 
   override def open(split: FileSplit, conf: Configuration, cells: Cells): CellReader = {
-    val reader = new SequenceFile.Reader(conf, SequenceFile.Reader.file(new Path(split.file)))
-    // sync-aligned byte range (SequenceFileRecordReader convention): seek
-    // to the first sync after `start`; a record read from a position at or
-    // past `end` with a sync seen belongs to the NEXT split's reader
-    if (split.start > 0) reader.sync(split.start)
-    val key = new BytesWritable()
     val value = new Text()
+    val reader = new SeqContainer.SplitReader(split, conf, value)
     val types = cells.fields.map(_.dataType)
     new CellReader {
-      override def next(): Boolean = {
-        val pos = reader.getPosition
-        reader.next(key, value) && !(pos >= split.end && reader.syncSeen())
-      }
+      override def next(): Boolean = reader.next()
       override def decode(row: Array[Any]): Unit = {
         val parts = value.toString.split(SeqV2Util.SEP, -1)
         var i = 0
@@ -199,21 +235,7 @@ case class SeqCodec(props: Map[String, String] = Map.empty,
     private val txt = new Text
     override def extension: String = ".seq"
     override def create(fs: FileSystem, file: Path): RowAppender = {
-      // hive.exec.compress.output parity: the container compresses
-      // internally (RECORD or BLOCK, FileSinkOperator via
-      // SequenceFileOutputFormat.getOutputCompressionType) — the file keeps
-      // its name, stays sync-splittable, and readers discover the codec
-      // from the header
-      val compressOpt = outputCodec match {
-        case Some(c) => SequenceFile.Writer.compression(
-          SequenceFile.CompressionType.valueOf(compressType),
-          TextV2Util.newCodec(c, conf))
-        case None => SequenceFile.Writer.compression(
-          SequenceFile.CompressionType.NONE)
-      }
-      val w = SequenceFile.createWriter(conf, SequenceFile.Writer.file(file),
-        SequenceFile.Writer.keyClass(classOf[BytesWritable]),
-        SequenceFile.Writer.valueClass(classOf[Text]), compressOpt)
+      val w = SeqContainer.writer(conf, file, classOf[Text], outputCodec, compressType)
       new RowAppender {
         override def append(row: InternalRow): Unit = {
           sb.setLength(0)

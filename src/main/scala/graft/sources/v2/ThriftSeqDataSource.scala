@@ -5,16 +5,13 @@ import java.util.{Map => JMap}
 import scala.collection.JavaConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.hadoop.io.{BytesWritable, SequenceFile}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.io.BytesWritable
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, ArrayData, GenericArrayData, MapData}
-import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData, MapData}
+import org.apache.spark.sql.connector.catalog.Table
 import org.apache.spark.sql.connector.expressions.Transform
-import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
-import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, SupportsTruncate, Write, WriteBuilder, WriterCommitMessage}
-import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -22,7 +19,7 @@ import org.apache.thrift.{TBase, TDeserializer, TFieldIdEnum, TSerializer}
 import org.apache.thrift.meta_data.{FieldMetaData, ListMetaData, MapMetaData, SetMetaData, StructMetaData}
 import org.apache.thrift.protocol.{TBinaryProtocol, TCompactProtocol, TProtocolFactory}
 
-/** DataSource V2 for Hive's thrift-serialized SequenceFile tables
+/** graft-thrift-seq: Hive's thrift-serialized SequenceFile tables
   * (reference: serde2/thrift/ThriftDeserializer.java +
   * ThriftByteStreamTypedSerDe.java; the src_thrift fixture behind
   * join_thrift.q). Each SequenceFile value is one record of the
@@ -44,35 +41,36 @@ import org.apache.thrift.protocol.{TBinaryProtocol, TCompactProtocol, TProtocolF
   * Strings, structs and containers are genuinely nullable (their write
   * is null-guarded) and pass through.
   *
-  * Scale design: sync-aligned byte-range splits ([[FileSplit]]); thrift records
-  * are row-serialized so each record deserializes once, but only the
-  * REQUIRED top-level fields convert to Catalyst values (projection
-  * prunes conversion, not deserialization). Writes serialize per task
-  * with no driver funnel.
+  * The codec owns the record layout: thrift records are row-serialized,
+  * so each record deserializes once, but only the REQUIRED top-level
+  * fields convert to Catalyst values (projection prunes conversion, not
+  * deserialization). The container is [[SeqContainer]]'s; table, scan and
+  * write machinery is [[FileTable]]'s. Tables are unpartitioned, as the
+  * reference's thrift tables are.
   */
-class ThriftSeqDataSource extends TableProvider with DataSourceRegister {
+class ThriftSeqDataSource extends FileTableProvider {
   override def shortName(): String = "graft-thrift-seq"
 
-  private def clazzOf(options: CaseInsensitiveStringMap): String =
+  private def thriftClassOf(options: JMap[String, String]): String =
     Option(options.get("thrift.class")).getOrElse(
       sys.error("graft-thrift-seq requires thrift.class (serialization.class)"))
 
+  /** The serde class is the schema: no path or file is consulted. */
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    ThriftBridge.schemaFor(clazzOf(options))
+    ThriftBridge.schemaFor(thriftClassOf(options))
 
-  override def supportsExternalMetadata(): Boolean = true
+  override protected def inferSchema(dir: String,
+      options: CaseInsensitiveStringMap): StructType = inferSchema(options)
+
+  override protected def codec(properties: JMap[String, String]): FileCodec =
+    ThriftCodec(thriftClassOf(properties), Option(properties.get("thrift.protocol"))
+      .getOrElse("org.apache.thrift.protocol.TBinaryProtocol"))
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: JMap[String, String]): Table = {
-    require(partitioning.isEmpty,
+    require(partitioning.isEmpty && !properties.containsKey("partitions"),
       "graft-thrift-seq does not support partitioned tables")
-    val p = Option(properties.get("path"))
-      .orElse(Option(properties.get("location"))).getOrElse("")
-    val cls = Option(properties.get("thrift.class")).getOrElse(sys.error(
-      "graft-thrift-seq requires thrift.class (serialization.class)"))
-    ThriftSeqTable(p, schema, cls,
-      Option(properties.get("thrift.protocol"))
-        .getOrElse("org.apache.thrift.protocol.TBinaryProtocol"))
+    super.getTable(schema, partitioning, properties)
   }
 }
 
@@ -268,151 +266,64 @@ object ThriftBridge {
   }
 }
 
-case class ThriftSeqTable(path: String, tableSchema: StructType,
-    thriftClass: String, protocol: String)
-    extends Table with SupportsRead with SupportsWrite {
-  override def name(): String = s"graft-thrift-seq:$path"
-  override def schema(): StructType = tableSchema
-  override def capabilities(): java.util.Set[TableCapability] =
-    Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-      TableCapability.TRUNCATE).asJava
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ThriftScanBuilder(path, tableSchema, thriftClass, protocol)
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new ThriftWriteBuilder(path, info.schema(), thriftClass, protocol)
-}
+/** The thrift codec: SequenceFile<BytesWritable, BytesWritable> whose value
+  * holds one record's bytes (ThriftByteStreamTypedSerDe). Fields resolve
+  * by NAME against the class metadata, never by position in the table
+  * schema: a reordered or subset external schema keeps reading the right
+  * fields, and an unknown name fails loudly. `outputCodec`/`compressType`
+  * are the job's output compression, fixed by [[forWrite]] from the
+  * session. */
+case class ThriftCodec(thriftClass: String, protocol: String,
+    outputCodec: Option[String] = None, compressType: String = "RECORD")
+    extends FileCodec {
+  override def name: String = "graft-thrift-seq"
 
-class ThriftScanBuilder(path: String, full: StructType,
-    thriftClass: String, protocol: String)
-    extends ScanBuilder with SupportsPushDownRequiredColumns {
-  private var required: StructType = full
-  override def pruneColumns(requiredSchema: StructType): Unit =
-    required = requiredSchema
-  override def build(): Scan = ThriftScan(path, full, required,
-    thriftClass, protocol)
-}
-
-case class ThriftScan(path: String, full: StructType, required: StructType,
-    thriftClass: String, protocol: String) extends Scan with Batch {
-  override def readSchema(): StructType = required
-  override def toBatch: Batch = this
-  override def description(): String =
-    s"graft-thrift-seq($thriftClass) ReadSchema: ${required.fieldNames.mkString(",")}"
-  override def planInputPartitions(): Array[InputPartition] = {
-    // SequenceFile sync markers make the container splittable (same
-    // convention as graft-seq): byte ranges at Spark's scan target size
-    FileSplits.plan(FileSplits.listFilesWithLen(path).map { case (f, len) =>
-      (f, len, Map.empty[String, String]) })
-  }
-  override def createReaderFactory(): PartitionReaderFactory =
-    ThriftReaderFactory(required.json, thriftClass, protocol,
-      FileSplits.confOverlay())
-}
-
-case class ThriftReaderFactory(requiredJson: String,
-    thriftClass: String, protocol: String,
-    confOverlay: Map[String, String] = Map.empty)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val part = partition.asInstanceOf[FileSplit]
-    val file = part.file
-    val required = DataType.fromJson(requiredJson).asInstanceOf[StructType]
-    // resolve by NAME against the thrift metadata (an external schema may
-    // reorder or subset the class's fields)
-    val fieldPos = ThriftBridge.fieldIndexes(thriftClass,
-      required.fields.map(_.name).toSeq)
+  override def open(split: FileSplit, conf: Configuration, cells: Cells): CellReader = {
+    val fieldPos = ThriftBridge.fieldIndexes(thriftClass, cells.fields.map(_.name).toSeq)
     val deser = new TDeserializer(ThriftBridge.protocolFactory(protocol))
-    val reader = new SequenceFile.Reader(FileSplits.buildConf(confOverlay),
-      SequenceFile.Reader.file(new Path(file)))
-    // the fixture layout is SequenceFile<BytesWritable, BytesWritable>
-    // (ThriftByteStreamTypedSerDe: record bytes in the VALUE)
-    val key = org.apache.hadoop.util.ReflectionUtils.newInstance(
-      reader.getKeyClass, FileSplits.buildConf(confOverlay))
-      .asInstanceOf[org.apache.hadoop.io.Writable]
     val value = new BytesWritable()
-    // sync-aligned byte range (SequenceFileRecordReader convention)
-    if (part.start > 0) reader.sync(part.start)
-    new PartitionReader[InternalRow] {
-      private var hasRow = false
-      override def next(): Boolean = {
-        val pos = reader.getPosition
-        hasRow = reader.next(key, value) && !(pos >= part.end && reader.syncSeen())
-        hasRow
-      }
-      override def get(): InternalRow = {
+    val reader = new SeqContainer.SplitReader(split, conf, value)
+    new CellReader {
+      override def next(): Boolean = reader.next()
+      override def decode(row: Array[Any]): Unit = {
         val obj = ThriftBridge.newInstance(thriftClass)
         // offset/length overload: no per-row byte copy on the scan path
         deser.deserialize(obj.asInstanceOf[TBase[Nothing, Nothing]],
           value.getBytes, 0, value.getLength)
-        new GenericInternalRow(
-          fieldPos.map(p => ThriftBridge.fieldToCatalyst(obj, p)))
+        var i = 0
+        while (i < fieldPos.length) {
+          row(cells.slot(i)) = ThriftBridge.fieldToCatalyst(obj, fieldPos(i))
+          i += 1
+        }
       }
       override def close(): Unit = reader.close()
     }
   }
-}
 
-class ThriftWriteBuilder(path: String, schema: StructType,
-    thriftClass: String, protocol: String)
-    extends WriteBuilder with SupportsTruncate {
-  private var doTruncate = false
-  override def truncate(): WriteBuilder = { doTruncate = true; this }
-  override def build(): Write = new Write {
-    override def toBatch: BatchWrite = new BatchWrite {
-      override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = {
-        val p = new Path(path)
-        val fs = p.getFileSystem(FileSplits.hadoopConf())
-        if (doTruncate && fs.exists(p)) fs.delete(p, true): Unit
-        fs.mkdirs(p): Unit
-        ThriftWriterFactory(path, schema.json, thriftClass, protocol,
-          TextV2Util.effectiveOutputCodec(Map.empty),
-          SeqV2Util.effectiveCompressType(Map.empty),
-          FileSplits.confOverlay())
-      }
-      override def commit(messages: Array[WriterCommitMessage]): Unit = ()
-      override def abort(messages: Array[WriterCommitMessage]): Unit = ()
-    }
+  /** Fails at planning on a column the class does not declare. */
+  override def forWrite(data: StructType): FileCodec = {
+    ThriftBridge.fieldIndexes(thriftClass, data.fieldNames.toSeq): Unit
+    copy(outputCodec = TextV2Util.effectiveOutputCodec(Map.empty),
+      compressType = SeqV2Util.effectiveCompressType(Map.empty))
   }
-}
 
-case class ThriftWriterFactory(path: String, schemaJson: String,
-    thriftClass: String, protocol: String,
-    outputCodec: Option[String] = None, compressType: String = "RECORD",
-    confOverlay: Map[String, String] = Map.empty)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] = {
-    val schema = DataType.fromJson(schemaJson).asInstanceOf[StructType]
-    val uid = java.util.UUID.randomUUID().toString.take(8)
-    val conf = FileSplits.buildConf(confOverlay)
-    val file = new Path(path, f"part-$partitionId%05d-$taskId-$uid.seq")
-    val ser = new TSerializer(ThriftBridge.protocolFactory(protocol))
-    val writer = SequenceFile.createWriter(conf,
-      SequenceFile.Writer.file(file),
-      SequenceFile.Writer.keyClass(classOf[BytesWritable]),
-      SequenceFile.Writer.valueClass(classOf[BytesWritable]),
-      outputCodec match {
-        case Some(c) => SequenceFile.Writer.compression(
-          SequenceFile.CompressionType.valueOf(compressType),
-          TextV2Util.newCodec(c, conf))
-        case None => SequenceFile.Writer.compression(
-          SequenceFile.CompressionType.NONE)
-      })
-    val emptyKey = new BytesWritable(Array.emptyByteArray)
-    new DataWriter[InternalRow] {
-      override def write(row: InternalRow): Unit = {
-        val obj = ThriftBridge.rowToStruct(row, schema, thriftClass)
-        val bytes = ser.serialize(obj.asInstanceOf[TBase[Nothing, Nothing]])
-        writer.append(emptyKey, new BytesWritable(bytes)): Unit
+  /** Thrift tables are unpartitioned, so data column `j` sits at ordinal
+    * `j` of each row (`ord` is the identity). */
+  override def encoder(data: StructType, ord: Array[Int], conf: Configuration,
+      zone: java.time.ZoneId): RowEncoder = new RowEncoder {
+    private val ser = new TSerializer(ThriftBridge.protocolFactory(protocol))
+    private val emptyKey = new BytesWritable(Array.emptyByteArray)
+    override def extension: String = ".seq"
+    override def create(fs: FileSystem, file: Path): RowAppender = {
+      val w = SeqContainer.writer(conf, file, classOf[BytesWritable], outputCodec, compressType)
+      new RowAppender {
+        override def append(row: InternalRow): Unit = {
+          val obj = ThriftBridge.rowToStruct(row, data, thriftClass)
+          w.append(emptyKey, new BytesWritable(
+            ser.serialize(obj.asInstanceOf[TBase[Nothing, Nothing]])))
+        }
+        override def close(): Unit = w.close()
       }
-      override def commit(): WriterCommitMessage = {
-        writer.close()
-        new WriterCommitMessage {}
-      }
-      override def abort(): Unit = {
-        writer.close()
-        new Path(file.toString).getFileSystem(conf).delete(file, false): Unit
-      }
-      override def close(): Unit = ()
     }
   }
 }

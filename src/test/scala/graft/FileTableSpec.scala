@@ -10,10 +10,12 @@ import org.apache.spark.sql.functions.{col, concat, lit}
 
 import graft.sources.v2.FileGroup
 
-/** The shared DSv2 file table behind graft-seq, graft-rcfile, graft-text
-  * and graft-avro: job abort and overwrite leave the table as it was, and
-  * scans prune files by `_metadata.file_path` and pack small files into
-  * shared tasks the way Spark's own file scans do. */
+/** The shared DSv2 file table behind graft-seq, graft-rcfile, graft-text,
+  * graft-avro and graft-thrift-seq: job abort and overwrite leave the
+  * table as it was, and scans prune files by `_metadata.file_path` and
+  * pack small files into shared tasks the way Spark's own file scans do.
+  * The partitioned cases run for every format but graft-thrift-seq, whose
+  * tables are unpartitioned and run the unpartitioned cases. */
 class FileTableSpec extends SparkSpec {
 
   private val formats = Seq("graft-seq", "graft-rcfile", "graft-text", "graft-avro")
@@ -73,13 +75,31 @@ class FileTableSpec extends SparkSpec {
     new File(base)
   }
 
+  /** An unpartitioned graft-thrift-seq table `name` of the IntString class
+    * (myint, myString, underscore_int), loaded by `inserts`; returns its
+    * directory. */
+  private def thriftTable(name: String, inserts: String*): File = {
+    val base = Files.createTempDirectory(name).toString + "/t"
+    spark.sql(s"DROP TABLE IF EXISTS $name")
+    spark.sql(s"""CREATE TABLE $name USING `graft-thrift-seq` OPTIONS ('thrift.class' =
+                  'org.apache.hadoop.hive.serde2.thrift.test.IntString') LOCATION '$base'""")
+    inserts.foreach(rows => spark.sql(s"INSERT INTO $name $rows"))
+    new File(base)
+  }
+
+  /** A thrift table `name` with `files` small files holding myint 0 until
+    * `rows`. */
+  private def smallThriftTable(name: String, rows: Int, files: Int): File =
+    thriftTable(name, s"""SELECT /*+ REPARTITION($files) */
+      CAST(id AS INT), concat('s', id), CAST(id % 4 AS INT) FROM range($rows)""")
+
   /** Each of `stmts` writes ids 10 and 11 through `ft_fail_after_peer` into
-    * p=x of the table at `root`, must fail, and must leave its files and
-    * `rows` as they were. Task 0 writes id 10 and commits. Task 1 waits
-    * until task 0's file is in p=x, gives the scheduler time to take its
-    * commit message, then fails the job. */
-  private def failedWritesLeave(root: File, rows: => Seq[Any], stmts: Seq[String]): Unit = {
-    val dirX = new File(root, "p=x")
+    * the directory `dirX` of the table at `root`, must fail, and must leave
+    * its files and `rows` as they were. Task 0 writes id 10 and commits.
+    * Task 1 waits until task 0's file is in `dirX`, gives the scheduler time
+    * to take its commit message, then fails the job. */
+  private def failedWritesLeave(root: File, rows: => Seq[Any], stmts: Seq[String],
+      dirX: File): Unit = {
     val before = dirX.list().toSet
     spark.udf.register("ft_fail_after_peer", (id: Long) => {
       if (id == 11) {
@@ -102,10 +122,69 @@ class FileTableSpec extends SparkSpec {
     }
   }
 
-  private def rowsOf(df: DataFrame): Seq[(Long, String, String, String)] =
-    df.select("id", "s", "p", "_metadata.file_path").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3)))
-      .toSeq.sortBy(_._1)
+  /** Every column of `df`'s rows and then the row's file, in a fixed order. */
+  private def rowsOf(df: DataFrame): Seq[Seq[Any]] =
+    df.select(df.columns.map(col) :+ col("_metadata.file_path"): _*).collect()
+      .map(_.toSeq).toSeq.sortBy(_.mkString("\u0001"))
+
+  /** A `_metadata.file_path` filter on table `name` plans only the files
+    * it names, and reads the rows an unpruned scan reads for them. */
+  private def prunesByPath(name: String): Unit = {
+    val t = spark.table(name)
+    val all = t.select("_metadata.file_path").distinct().collect().map(_.getString(0)).sorted
+    assert(all.length > 4, all.mkString(","))
+    val two = Seq(all(1), all(all.length - 2))
+    val pruned = t.where(col("_metadata.file_path").isin(two: _*))
+    assert(planned(pruned).flatMap(_.splits.map(_.file)).toSet == two.toSet)
+    assert(planned(t.where(col("_metadata.file_path") === two.head))
+      .flatMap(_.splits.map(_.file)) == Seq(two.head))
+    // the same filter through an expression no scan can prune on
+    val unpruned = t.where(concat(col("_metadata.file_path"), lit("")).isin(two: _*))
+    assert(planned(unpruned).flatMap(_.splits).length == all.length)
+    val got = rowsOf(pruned)
+    assert(got.nonEmpty && got == rowsOf(unpruned))
+    assert(got.map(_.last).toSet == two.toSet)
+    // a path spelled differently names no listed file and reads nothing
+    val respelled = two.map(_.replaceFirst("^file:/+", "file:///"))
+    assert(respelled != two)
+    val other = t.where(col("_metadata.file_path").isin(respelled: _*))
+    assert(planned(other).isEmpty && other.count() == 0)
+  }
+
+  /** Table `name`'s `files` small files of `rows` rows in all pack into
+    * the partition count Spark's own FilePartition rule gives, and read
+    * what a one-file-at-a-time scan reads. */
+  private def packsSmallFiles(name: String, rows: Int, files: Int): Unit = {
+    val t = spark.table(name)
+    val groups = planned(t)
+    val splits = groups.flatMap(_.splits)
+    assert(splits.length == files && splits.forall(s => s.start == 0L))
+    // the count Spark's own FilePartition rule gives for these files
+    val conf = spark.sessionState.conf
+    val lens = splits.map(s => s.file -> new File(new java.net.URI(s.file)).length)
+    val maxSplit = FilePartition.maxSplitBytes(spark,
+      lens.map(_._2 + conf.filesOpenCostInBytes).sum)
+    val expected = FilePartition.getFilePartitions(spark,
+      lens.map { case (f, len) =>
+        PartitionedFile(null, org.apache.spark.paths.SparkPath.fromUrlString(f), 0L, len)
+      }.sortBy(-_.length), maxSplit)
+    assert(groups.length == expected.length, s"${groups.length} vs ${expected.length}")
+    assert(groups.length < files)
+    assert(t.rdd.getNumPartitions == groups.length)
+    // every row equals a one-file-at-a-time read, also across the file
+    // boundaries inside one task
+    val single = withConf("spark.sql.files.openCostInBytes" -> "134217728") {
+      assert(planned(spark.table(name)).forall(_.splits.length == 1))
+      rowsOf(spark.table(name))
+    }
+    assert(single.length == rows)
+    assert(rowsOf(t) == single)
+    val filesPerTask = t.select("_metadata.file_path").rdd
+      .mapPartitions(it => Iterator(it.map(_.getString(0)).toSet))
+      .collect()
+    assert(filesPerTask.exists(_.size > 1))
+    assert(filesPerTask.flatten.toSet == single.map(_.last).toSet)
+  }
 
   for (fmt <- formats) {
     test(s"$fmt: a failed INSERT INTO or dynamic INSERT OVERWRITE leaves the table as it was") {
@@ -113,7 +192,8 @@ class FileTableSpec extends SparkSpec {
       try withConf("spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
         failedWritesLeave(root, spark.table("ft_abort").orderBy("id").collect().toSeq,
           Seq("INSERT INTO", "INSERT OVERWRITE").map(stmt => s"""$stmt ft_abort
-            SELECT ft_fail_after_peer(id), 'n', 'x' FROM range(10, 12, 1, 2)"""))
+            SELECT ft_fail_after_peer(id), 'n', 'x' FROM range(10, 12, 1, 2)"""),
+          new File(root, "p=x"))
       } finally spark.sql("DROP TABLE ft_abort")
     }
 
@@ -126,7 +206,8 @@ class FileTableSpec extends SparkSpec {
           """INSERT OVERWRITE ft_abort_static PARTITION (p = 'x')
              SELECT ft_fail_after_peer(id), 'n' FROM range(10, 12, 1, 2)""",
           """INSERT OVERWRITE ft_abort_static
-             SELECT ft_fail_after_peer(id), 'n', 'x' FROM range(10, 12, 1, 2)"""))
+             SELECT ft_fail_after_peer(id), 'n', 'x' FROM range(10, 12, 1, 2)"""),
+          new File(root, "p=x"))
         // the same statements succeed with the result they always had,
         // an overwrite that writes no rows included
         spark.sql("INSERT OVERWRITE ft_abort_static PARTITION (p = 'x') SELECT 5, 'e'")
@@ -143,61 +224,16 @@ class FileTableSpec extends SparkSpec {
 
     test(s"$fmt: a _metadata.file_path filter plans only the named files") {
       smallFileTable("ft_prune", fmt, rows = 400, files = 24)
-      try {
-        val t = spark.table("ft_prune")
-        val all = t.select("_metadata.file_path").distinct().collect().map(_.getString(0)).sorted
-        assert(all.length > 4, all.mkString(","))
-        val two = Seq(all(1), all(all.length - 2))
-        val pruned = t.where(col("_metadata.file_path").isin(two: _*))
-        assert(planned(pruned).flatMap(_.splits.map(_.file)).toSet == two.toSet)
-        assert(planned(t.where(col("_metadata.file_path") === two.head))
-          .flatMap(_.splits.map(_.file)) == Seq(two.head))
-        // the same filter through an expression no scan can prune on
-        val unpruned = t.where(concat(col("_metadata.file_path"), lit("")).isin(two: _*))
-        assert(planned(unpruned).flatMap(_.splits).length == all.length)
-        val got = rowsOf(pruned)
-        assert(got.nonEmpty && got == rowsOf(unpruned))
-        assert(got.map(_._4).toSet == two.toSet)
-        // a path spelled differently names no listed file and reads nothing
-        val respelled = two.map(_.replaceFirst("^file:/+", "file:///"))
-        assert(respelled != two)
-        val other = t.where(col("_metadata.file_path").isin(respelled: _*))
-        assert(planned(other).isEmpty && other.count() == 0)
-      } finally spark.sql("DROP TABLE ft_prune")
+      try prunesByPath("ft_prune")
+      finally spark.sql("DROP TABLE ft_prune")
     }
 
     test(s"$fmt: small files pack into Spark's file-scan partition count") {
       smallFileTable("ft_pack", fmt, rows = 4000, files = 40)
       try {
-        val t = spark.table("ft_pack")
-        val groups = planned(t)
-        val splits = groups.flatMap(_.splits)
-        assert(splits.length == 40 && splits.forall(s => s.start == 0L))
-        // the count Spark's own FilePartition rule gives for these files
-        val conf = spark.sessionState.conf
-        val files = splits.map(s => s.file -> new File(new java.net.URI(s.file)).length)
-        val maxSplit = FilePartition.maxSplitBytes(spark,
-          files.map(_._2 + conf.filesOpenCostInBytes).sum)
-        val expected = FilePartition.getFilePartitions(spark,
-          files.map { case (f, len) =>
-            PartitionedFile(null, org.apache.spark.paths.SparkPath.fromUrlString(f), 0L, len)
-          }.sortBy(-_.length), maxSplit)
-        assert(groups.length == expected.length, s"${groups.length} vs ${expected.length}")
-        assert(groups.length < 40 && groups.exists(_.splits.map(_.partSpec).distinct.length > 1))
-        assert(t.rdd.getNumPartitions == groups.length)
-        // every row equals a one-file-at-a-time read, also across the
-        // file (and partition) boundaries inside one task
-        val single = withConf("spark.sql.files.openCostInBytes" -> "134217728") {
-          assert(planned(spark.table("ft_pack")).forall(_.splits.length == 1))
-          rowsOf(spark.table("ft_pack"))
-        }
-        assert(single.length == 4000)
-        assert(rowsOf(t) == single)
-        val filesPerTask = t.select("_metadata.file_path", "p").rdd
-          .mapPartitions(it => Iterator(it.map(r => (r.getString(0), r.getString(1))).toSet))
-          .collect()
-        assert(filesPerTask.exists(_.size > 1))
-        assert(filesPerTask.flatten.toSet == single.map(r => (r._4, r._3)).toSet)
+        packsSmallFiles("ft_pack", rows = 4000, files = 40)
+        // packing crosses partition directories too
+        assert(planned(spark.table("ft_pack")).exists(_.splits.map(_.partSpec).distinct.length > 1))
       } finally spark.sql("DROP TABLE ft_pack")
     }
 
@@ -265,6 +301,50 @@ class FileTableSpec extends SparkSpec {
         spark.sql("DROP TABLE ft_cow")
       }
     }
+  }
+
+  private def thriftRows(name: String): Seq[(Int, String, Int)] =
+    spark.table(name).collect().map(r => (r.getInt(0), r.getString(1), r.getInt(2)))
+      .toSeq.sorted
+
+  test("graft-thrift-seq: INSERT OVERWRITE replaces the table in static and dynamic mode") {
+    for (mode <- Seq("static", "dynamic")) {
+      val root = thriftTable("ft_thrift_ow", "VALUES (1, 'a', 10), (2, 'b', 20)")
+      try withConf("spark.sql.sources.partitionOverwriteMode" -> mode) {
+        spark.sql("INSERT OVERWRITE ft_thrift_ow SELECT 3, 'c', 30")
+        assert(thriftRows("ft_thrift_ow") == Seq((3, "c", 30)), mode)
+        Engine.ddl(spark, "INSERT OVERWRITE TABLE ft_thrift_ow SELECT 4, 'd', 40")
+        assert(thriftRows("ft_thrift_ow") == Seq((4, "d", 40)), mode)
+        spark.sql("INSERT OVERWRITE ft_thrift_ow SELECT 5, 'e', 50 WHERE false")
+        assert(thriftRows("ft_thrift_ow").isEmpty &&
+          root.list().filterNot(_.startsWith(".")).isEmpty, mode)
+      } finally spark.sql("DROP TABLE ft_thrift_ow")
+    }
+  }
+
+  test("graft-thrift-seq: a failed INSERT INTO or INSERT OVERWRITE leaves the table as it was") {
+    for (mode <- Seq("static", "dynamic")) {
+      val root = thriftTable("ft_thrift_abort", "VALUES (1, 'a', 10), (2, 'b', 20)")
+      try withConf("spark.sql.sources.partitionOverwriteMode" -> mode) {
+        failedWritesLeave(root, thriftRows("ft_thrift_abort"),
+          Seq("INSERT INTO", "INSERT OVERWRITE").map(stmt => s"""$stmt ft_thrift_abort
+            SELECT CAST(ft_fail_after_peer(id) AS INT), 'n', 0 FROM range(10, 12, 1, 2)"""),
+          root)
+        assert(thriftRows("ft_thrift_abort") == Seq((1, "a", 10), (2, "b", 20)), mode)
+      } finally spark.sql("DROP TABLE ft_thrift_abort")
+    }
+  }
+
+  test("graft-thrift-seq: a _metadata.file_path filter plans only the named files") {
+    smallThriftTable("ft_thrift_prune", rows = 400, files = 24)
+    try prunesByPath("ft_thrift_prune")
+    finally spark.sql("DROP TABLE ft_thrift_prune")
+  }
+
+  test("graft-thrift-seq: small files pack into Spark's file-scan partition count") {
+    smallThriftTable("ft_thrift_pack", rows = 4000, files = 40)
+    try packsSmallFiles("ft_thrift_pack", rows = 4000, files = 40)
+    finally spark.sql("DROP TABLE ft_thrift_pack")
   }
 
   test("CoW DML on distinct tables leaves no table lock behind") {

@@ -332,11 +332,11 @@ class Round9Spec extends SparkSpec {
 
   test("avro decimals round-trip at declared scale through both paths") {
     val dir = Files.createTempDirectory("r9_avdec").toString
-    // row-level writer path
+    // path write and read
     val df = spark.sql(
       "SELECT CAST(v AS DECIMAL(8,3)) AS d FROM VALUES (1.5), (-2.125), (999.999) t(v)")
-    graft.sources.Avro.write(df, dir)
-    val back = graft.sources.Avro.read(spark, dir)
+    df.write.format("graft-avro").mode("overwrite").save(dir)
+    val back = spark.read.format("graft-avro").load(dir)
     assert(back.schema("d").dataType == org.apache.spark.sql.types.DecimalType(8, 3))
     assert(back.selectExpr("CAST(d AS STRING)").collect().map(_.getString(0)).sorted
       .sameElements(Array("-2.125", "1.500", "999.999")))
@@ -463,8 +463,8 @@ class Round9Spec extends SparkSpec {
     val dir = Files.createTempDirectory("r9_avev").toString
     // files written at scale 3; the table schema declares scale 2 —
     // values must RESCALE, not shift by a power of ten
-    graft.sources.Avro.write(
-      spark.sql("SELECT CAST(v AS DECIMAL(8,3)) AS d FROM VALUES (12.345), (7.5) t(v)"), dir)
+    spark.sql("SELECT CAST(v AS DECIMAL(8,3)) AS d FROM VALUES (12.345), (7.5) t(v)")
+      .write.format("graft-avro").mode("overwrite").save(dir)
     val got = spark.read.format("graft-avro").schema("d DECIMAL(8,2)").load(dir)
       .selectExpr("CAST(d AS STRING)").collect().map(_.getString(0)).sorted
     assert(got.sameElements(Array("12.35", "7.50")), got.mkString(","))
@@ -497,9 +497,8 @@ class Round9Spec extends SparkSpec {
     val dir = Files.createTempDirectory("r9_seqempty").toString + "/t"
     val df = Seq((1, Some("")), (2, None), (3, Some("x")))
       .toDF("id", "s")
-    sources.SequenceFileText.write(df, dir)
-    val schema = org.apache.spark.sql.types.StructType.fromDDL("id INT, s STRING")
-    val back = sources.SequenceFileText.read(spark, dir, schema)
+    df.write.format("graft-seq").mode("overwrite").save(dir)
+    val back = spark.read.format("graft-seq").schema("id INT, s STRING").load(dir)
       .collect().map(r => (r.getInt(0), Option(r.get(1)).map(_.toString))).sorted
     assert(back.toSeq == Seq((1, Some("")), (2, None), (3, Some("x"))), back.mkString(","))
   }
@@ -526,9 +525,16 @@ class Round9Spec extends SparkSpec {
     val rec = new org.apache.avro.generic.GenericData.Record(schema)
     rec.put(0, 1700000000000L) // 2023-11-14T22:13:20Z in MILLIS
     w.append(rec); w.close()
-    val got = sources.Avro.read(spark, dir)
+    val got = spark.read.format("graft-avro").load(dir)
       .selectExpr("unix_timestamp(ts)").head().getLong(0)
     assert(got == 1700000000L, s"$got — millis file misread as micros")
+    // a table over the file declares the column, and reads it the same
+    Engine.ddl(spark, "DROP TABLE IF EXISTS r9_avms")
+    Engine.ddl(spark, s"CREATE TABLE r9_avms (ts TIMESTAMP) STORED AS AVRO LOCATION '$dir'")
+    try {
+      val viaTable = spark.table("r9_avms").selectExpr("unix_timestamp(ts)").head().getLong(0)
+      assert(viaTable == 1700000000L, s"$viaTable — millis file misread as micros")
+    } finally Engine.ddl(spark, "DROP TABLE r9_avms")
   }
 
   // ---- fourth review batch: merge predicates, protect mode, escaping ----
