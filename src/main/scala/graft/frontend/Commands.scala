@@ -180,7 +180,7 @@ private[graft] object Commands {
   // registered configuration, error for an unknown name. Spark-first the
   // registry is SQLConf's defined entries.
   val showConfRe =
-    """(?is)\s*SHOW\s+CONF\s+'([^']+)'\s*;?\s*""".r
+    """(?is)\s*SHOW\s+CONF\s+'((?:[^'\\]|\\.)+)'\s*;?\s*""".r
   // SHOW TABLE EXTENDED [IN|FROM db] LIKE 'pattern' [PARTITION(...)] —
   // TOK_SHOW_TABLESTATUS (DDLSemanticAnalyzer.java:2175) → DDLTask
   // showTableStatus + TextMetaDataFormatter.showTableStatus: key:value
@@ -188,7 +188,7 @@ private[graft] object Commands {
   // Spark's parser so the answer carries Hive's text shape, not Spark's
   // (namespace, tableName, information) rows.
   val showTableExtRe =
-    """(?is)\s*SHOW\s+TABLE\s+EXTENDED\s+(?:(?:IN|FROM)\s+([\w]+)\s+)?LIKE\s+'?([^'\s;]+)'?\s*(?:PARTITION\s*\(([^)]*)\)\s*)?;?\s*""".r
+    """(?is)\s*SHOW\s+TABLE\s+EXTENDED\s+(?:(?:IN|FROM)\s+([\w]+)\s+)?LIKE\s+(?:'((?:[^'\\]|\\.)+)'|([^'\s;]+))\s*(?:PARTITION\s*\(([^)]*)\)\s*)?;?\s*""".r
   val abortTxnsRe =
     """(?is)\s*ABORT\s+TRANSACTIONS\s+[\d\s,]+;?\s*""".r
   // dfs -cmd args — Hive CLI's Hadoop shell passthrough
@@ -493,8 +493,10 @@ private[graft] object Commands {
   // `src s1` are skipped); View nodes carry catalog/temp view names.
   // input_partitions stays empty: pruned-partition detail lives in
   // EXPLAIN FORMATTED's PartitionFilters here.
-  def explainDependency(spark: SparkSession, s: String): DataFrame = {
-    val q = s.trim.substring("EXPLAIN DEPENDENCY".length).trim
+  val explainDependencyRe = """(?is)\s*EXPLAIN\s+DEPENDENCY\s+(.*)""".r
+  val explainLogicalRe = """(?is)\s*EXPLAIN\s+LOGICAL\s+(.*)""".r
+
+  def explainDependency(spark: SparkSession, q: String): DataFrame = {
     val names = queryInputTables(spark, q)
     val json = names
       .map(n => s"""{"tablename":"$n"}""")
@@ -515,8 +517,7 @@ private[graft] object Commands {
   // (HiveParser.g:650): print the logical operator tree only. The
   // analog here is the OPTIMIZED logical plan (what Catalyst hands
   // to physical planning), scrubbed like the physical EXPLAIN path.
-  def explainLogical(spark: SparkSession, s: String): DataFrame = {
-    val q = s.trim.substring("EXPLAIN LOGICAL".length).trim
+  def explainLogical(spark: SparkSession, q: String): DataFrame = {
     oneStringRow(spark, "plan",
       scrubPlanText(analyzeOnly(spark, q).optimizedPlan.toString))
   }
@@ -582,7 +583,7 @@ private[graft] object Commands {
   def analyzeOnly(spark: SparkSession, q: String)
       : org.apache.spark.sql.execution.QueryExecution =
     spark.sessionState.executePlan(
-      spark.sessionState.sqlParser.parsePlan(q),
+      HiveQlParser.sparkParser(spark).parsePlan(q),
       org.apache.spark.sql.execution.CommandExecutionMode.SKIP)
 
   /** The input tables/views a query reads, as sorted db@table strings —

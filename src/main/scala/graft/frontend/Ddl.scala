@@ -47,7 +47,7 @@ private[graft] object Ddl {
   // same file-count compaction CONCATENATE runs — executed inline (no
   // queue; SHOW COMPACTIONS stays empty by design).
   val compactRe =
-    """(?is)\s*ALTER\s+TABLE\s+([\w.]+)\s*(?:PARTITION\s*\(([^)]*)\)\s*)?COMPACT\s+'(\w+)'\s*;?\s*""".r
+    """(?is)\s*ALTER\s+TABLE\s+([\w.]+)\s*(?:PARTITION\s*\(([^)]*)\)\s*)?COMPACT\s+'((?:[^'\\]|\\.)*)'\s*;?\s*""".r
 
   // ALTER TABLE t [PARTITION(...)] SET FILEFORMAT fmt — DDLSemanticAnalyzer
   // alterTableFileFormat. Hive flips metadata only (old files must already

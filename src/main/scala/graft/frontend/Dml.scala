@@ -12,7 +12,7 @@ import SqlText._
 private[graft] object Dml {
 
   val loadDataRe =
-    """(?is)\s*LOAD\s+DATA\s+(?:LOCAL\s+)?INPATH\s+'([^']+)'\s+(OVERWRITE\s+)?INTO\s+TABLE\s+([\w.]+)\s*(?:PARTITION\s*\(([^)]*)\))?\s*;?\s*""".r
+    """(?is)\s*LOAD\s+DATA\s+(?:LOCAL\s+)?INPATH\s+'((?:[^'\\]|\\.)+)'\s+(OVERWRITE\s+)?INTO\s+TABLE\s+([\w.]+)\s*(?:PARTITION\s*\(([^)]*)\))?\s*;?\s*""".r
   val updateRe =
     """(?is)\s*UPDATE\s+([\w.]+)\s+SET\s+(.+?)\s+WHERE\s+(.+?)\s*;?\s*""".r
   // full-table UPDATE (no WHERE): every row rewrites — legal in HiveQL
@@ -32,9 +32,9 @@ private[graft] object Dml {
   // named partition from the dump (ImportSemanticAnalyzer partSpecs,
   // exim_23_import_part_authsuccess.q)
   val exportRe =
-    """(?is)\s*EXPORT\s+TABLE\s+([\w.]+)(?:\s+PARTITION\s*\(([^)]*)\))?\s+TO\s+'([^']+)'\s*;?\s*""".r
+    """(?is)\s*EXPORT\s+TABLE\s+([\w.]+)(?:\s+PARTITION\s*\(([^)]*)\))?\s+TO\s+'((?:[^'\\]|\\.)+)'\s*;?\s*""".r
   val importRe =
-    """(?is)\s*IMPORT\s+(EXTERNAL\s+)?TABLE\s+([\w.]+)(?:\s+PARTITION\s*\(([^)]*)\))?\s+FROM\s+'([^']+)'(?:\s+LOCATION\s+'([^']+)')?\s*;?\s*""".r
+    """(?is)\s*IMPORT\s+(EXTERNAL\s+)?TABLE\s+([\w.]+)(?:\s+PARTITION\s*\(([^)]*)\))?\s+FROM\s+'((?:[^'\\]|\\.)+)'(?:\s+LOCATION\s+'((?:[^'\\]|\\.)+)')?\s*;?\s*""".r
 
   // INSERT OVERWRITE TABLE t PARTITION (static spec) IF NOT EXISTS SELECT …
   // — Hive skips the insert when the target partition already exists
@@ -114,7 +114,7 @@ private[graft] object Dml {
   /** INSERT OVERWRITE TABLE t PARTITION (static spec) IF NOT EXISTS: a
     * no-op when the partition already exists. */
   def insertIfNotExists(spark: SparkSession, prefix: String, table: String,
-      spec: String, rest: String): DataFrame = {
+      spec: String, rest: String): Unit = {
     val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
     val specMap = spec.split(",").map { kv =>
       require(kv.contains("="), // dynamic column (no value given)
@@ -128,8 +128,7 @@ private[graft] object Dml {
     // rewritten statement must still see the dyn-part guards, the
     // Hive-cast retry, small-file merge/autogather, and the
     // heterogeneous-partition write routing
-    if (exists) spark.emptyDataFrame
-    else insertWithHiveCasts(spark, prefix + " " + rest)
+    if (!exists) insertWithHiveCasts(spark, prefix + " " + rest): Unit
   }
 
   def exportTable(spark: SparkSession, table: String, part: String,
@@ -961,7 +960,7 @@ private[graft] object Dml {
     def insertPrefix: String = s"INSERT $mode TABLE $tbl$partSql$colList"
   }
 
-  def multiInsert(spark: SparkSession, stmt: String): org.apache.spark.sql.DataFrame = {
+  def multiInsert(spark: SparkSession, stmt: String): Unit = {
     val t = stmt.trim.stripSuffix(";").trim
     val inserts = topLevel(t, "INSERT")
     val src = t.substring("FROM".length, inserts.head).trim
@@ -1002,7 +1001,7 @@ private[graft] object Dml {
       // statement rewrite, any source shape
       insertWithHiveCasts(spark,
         s"${branches.head.insertPrefix} ${branches.head.selectSql(s"FROM $src")}")
-      return spark.emptyDataFrame
+      return
     }
     if (joined) {
       // several destinations over a joined source: genBodyPlan's
@@ -1024,7 +1023,7 @@ private[graft] object Dml {
         spark.catalog.dropTempView(v)
         graft.tools.Checkpoints.release(snap)
       }
-      return spark.emptyDataFrame
+      return
     }
     // Simple shared source: compute it ONCE, persist, and feed every
     // branch from the cached view (the reference's genBodyPlan shape — at
@@ -1054,7 +1053,6 @@ private[graft] object Dml {
       spark.catalog.dropTempView(view)
       cached.unpersist()
     }
-    spark.emptyDataFrame
   }
 
   /** LOAD DATA INPATH — LoadSemanticAnalyzer + MoveTask parity: files move

@@ -149,7 +149,7 @@ private[graft] object Functions {
   }
 
   val createFunRe =
-    """(?is)\s*CREATE\s+(?:TEMPORARY\s+)?FUNCTION\s+(?:IF\s+NOT\s+EXISTS\s+)?([\w.]+)\s+AS\s+'([^']+)'\s*(?:USING\s+(.+?))?\s*;?\s*""".r
+    """(?is)\s*CREATE\s+(?:TEMPORARY\s+)?FUNCTION\s+(?:IF\s+NOT\s+EXISTS\s+)?([\w.]+)\s+AS\s+'((?:[^'\\]|\\.)+)'\s*(?:USING\s+(.+?))?\s*;?\s*""".r
   // one USING resource: JAR|FILE|ARCHIVE '<uri>' (FunctionSemanticAnalyzer
   // .getResourceList — parse/FunctionSemanticAnalyzer.java:131-156)
   private val funResourceRe = """(?i)(JAR|FILE|ARCHIVE)\s+'([^']+)'""".r

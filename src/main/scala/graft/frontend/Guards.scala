@@ -89,7 +89,7 @@ private[graft] object Guards {
     if (!dmlHeads.contains(head)) return
     val refs: Seq[String] =
       try {
-        val p = spark.sessionState.sqlParser.parsePlan(stmt)
+        val p = HiveQlParser.sparkParser(spark).parsePlan(stmt)
         def rels(q: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
           q.collect {
             case r: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation =>
@@ -137,7 +137,7 @@ private[graft] object Guards {
     * check's own refusal, recognized by `marker`, propagates. */
   private def onParsed(spark: SparkSession, stmt: String, marker: String)(
       check: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan => Unit): Unit =
-    try check(spark.sessionState.sqlParser.parsePlan(stmt))
+    try check(HiveQlParser.sparkParser(spark).parsePlan(stmt))
     catch {
       case e: RuntimeException
           if e.getMessage != null && e.getMessage.contains(marker) => throw e

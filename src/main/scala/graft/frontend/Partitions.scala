@@ -94,22 +94,17 @@ private[graft] object Partitions {
       val n = partCmpRe.findAllMatchIn(g.group(1)).size
       n > 0 && n < types.size
     }
-    def pruned(drop: => DataFrame): Run = () => {
-      val out = drop
+    def pruned(drop: => Unit): Run = Router.done(spark) {
+      drop
       pruneHeteroEntries(spark, table)
       operators.Archive.prune(spark, table)
-      out
     }
-    if (desc.exists(_.graftPartCols.nonEmpty)) Some(() => {
-      dropGraftPartitions(spark, desc.get, ifEx != null, specText)
-      spark.emptyDataFrame
-    })
-    else if ("<>!".exists(specText.contains(_)) || partial) Some(pruned {
-      dropPartitionsByFilter(spark, table, types, ifEx != null, specText)
-      spark.emptyDataFrame
-    })
+    if (desc.exists(_.graftPartCols.nonEmpty))
+      Some(Router.done(spark)(dropGraftPartitions(spark, desc.get, ifEx != null, specText)))
+    else if ("<>!".exists(specText.contains(_)) || partial)
+      Some(pruned(dropPartitionsByFilter(spark, table, types, ifEx != null, specText)))
     else if (desc.exists(d => d.heteroEntries.nonEmpty || d.archiveEntries.nonEmpty))
-      Some(pruned(spark.sql(stmt)))
+      Some(pruned(spark.sql(stmt): Unit))
     else None
   }
 
@@ -133,9 +128,9 @@ private[graft] object Partitions {
     * the partition (the files keep their format through a rename). */
   def renameDiverged(spark: SparkSession, stmt: String, table: String,
       fromSpec: String, toSpec: String): Option[Run] =
-    TableDesc.find(spark, table).filter(_.heteroEntries.nonEmpty).map { d => () =>
+    TableDesc.find(spark, table).filter(_.heteroEntries.nonEmpty).map { d => Router.done(spark) {
       val fromPath = partSubdirLiteral(d.partCols, fromSpec)
-      val out = spark.sql(stmt)
+      spark.sql(stmt)
       val entries = d.heteroEntries
       entries.find(_._1 == fromPath).foreach { case (_, prov) =>
         val toPath = partSubdirLiteral(d.partCols, toSpec)
@@ -145,8 +140,7 @@ private[graft] object Partitions {
           s"'${graft.plans.HeteroPartitions.encode(moved)}')")
         spark.sql(s"REFRESH TABLE $table")
       }
-      out
-    }
+    } }
 
   /** Numeric compare for numeric-typed partition columns, lexicographic
     * for string-typed — the comparison the metastore's

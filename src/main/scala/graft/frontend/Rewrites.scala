@@ -190,7 +190,7 @@ private[graft] object Rewrites {
 
   /** Hive buckets by (32-bit ObjectInspectorUtils.hashCode & Int.MaxValue)
     * % y; the registered `hash` IS that exact chain (HiveHash,
-    * Engine.install), so use it instead of an unbounded BIGINT 31*a+b —
+    * functions.FunctionPack), so use it instead of an unbounded BIGINT 31*a+b —
     * which diverges on negative hashes (& masks the sign bit, pmod does
     * not) and on 32-bit overflow. */
   private def bucketPred(cols: Seq[String], x: Int, y: Int): String =

@@ -3,13 +3,13 @@ package frontend
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.operators.Auth
-import SqlText.stripLeadingComments
+import SqlText.stripComments
 
 /** The front end's statement router: the compiler stage of the Hive
   * paper's compiler → optimizer → execution split, where the reference
   * picks one analyzer per statement (SemanticAnalyzerFactory.get). A
   * statement makes four passes:
-  *  1. its leading comment lines strip, once;
+  *  1. its `--` comments strip, once;
   *  2. the [[Rewrites.toStmt0]] rewrites give `stmt0`;
   *  3. the [[Guards]] pass refuses on `stmt0`; the [[Rewrites.toStmt]]
   *     rewrites then give `stmt`;
@@ -18,11 +18,22 @@ import SqlText.stripLeadingComments
   *     last entry accepts everything.
   * Matchers read at most the catalog; every effect lives in the returned
   * [[Run]], so [[route]] can name a statement's handler without running
-  * it.
+  * it. [[HiveQlParser]] turns the Run into the plan `spark.sql` returns.
   */
 private[graft] object Router {
 
   type Run = () => DataFrame
+
+  /** A row-less handler's effect: Spark runs it when it executes the
+    * statement's plan ([[HiveQlCommand]]). */
+  final class Effect(spark: SparkSession, val body: () => Unit) extends Run {
+    def apply(): DataFrame = { body(); spark.emptyDataFrame }
+  }
+
+  /** A statement no handler claims: Spark's own, through the insert route. */
+  final class Native(spark: SparkSession, val stmt: String) extends Run {
+    def apply(): DataFrame = Dml.insertOrNative(spark, stmt)
+  }
 
   final case class Handler(name: String)(
       val matcher: SparkSession => PartialFunction[String, Run])
@@ -38,8 +49,8 @@ private[graft] object Router {
     dispatch(spark, raw, guarded = false).handler
 
   private def dispatch(spark: SparkSession, raw: String,
-      guarded: Boolean): Routed = {
-    val stmt0 = Rewrites.applyAll(spark, Rewrites.toStmt0, stripLeadingComments(raw))
+      guarded: Boolean): Routed = HiveQlParser.bypassed {
+    val stmt0 = Rewrites.applyAll(spark, Rewrites.toStmt0, stripComments(raw))
     if (guarded) Guards.check(spark, stmt0)
     val stmt = Rewrites.applyAll(spark, Rewrites.toStmt, stmt0)
     val (name, run) =
@@ -49,8 +60,8 @@ private[graft] object Router {
     Routed(stmt0, name, run)
   }
 
-  private def done(spark: SparkSession)(body: => Unit): Run =
-    () => { body; spark.emptyDataFrame }
+  def done(spark: SparkSession)(body: => Unit): Run =
+    new Effect(spark, () => body)
 
   /** Handlers matched against `stmt0`, before the query-shape rewrites. */
   val early: Seq[Handler] = Seq(
@@ -88,8 +99,9 @@ private[graft] object Router {
     Handler("show-conf") { spark => {
       case Commands.showConfRe(name) => () => Commands.showConf(spark, name) } },
     Handler("show-table-extended") { spark => {
-      case Commands.showTableExtRe(db, pattern, part) =>
-        () => Commands.showTableExtended(spark, Option(db), pattern, Option(part)) } },
+      case Commands.showTableExtRe(db, quoted, bare, part) => () =>
+        Commands.showTableExtended(spark, Option(db), Option(quoted).getOrElse(bare),
+          Option(part)) } },
     Handler("index") { spark => {
       case Commands.indexStmtRe(s) => () => Commands.indexStatement(spark, s) } },
     Handler("archive") { spark => {
@@ -124,6 +136,7 @@ private[graft] object Router {
         Commands.emptyListing(spark, "dbname", "tabname", "partname", "type", "state") } })
 
   private val storedByRe = "(?is)\\bSTORED\\s+BY\\s+'".r
+  private val explainRe = "(?is)\\s*EXPLAIN\\s.*".r
 
   /** Handlers matched against the fully rewritten `stmt`. */
   val late: Seq[Handler] = Seq(
@@ -157,7 +170,7 @@ private[graft] object Router {
         done(spark)(Ddl.changeColumn(spark, table, oldC, newC, typ, pos)) } },
     Handler("insert-if-not-exists") { spark => {
       case Dml.insertIfNotExistsRe(prefix, table, spec, rest) =>
-        () => Dml.insertIfNotExists(spark, prefix, table, spec, rest) } },
+        done(spark)(Dml.insertIfNotExists(spark, prefix, table, spec, rest)) } },
     Handler("create-function") { spark => {
       case s @ Functions.createFunRe(name, cls, res) =>
         () => Functions.createFunction(spark, s, name, cls, res) } },
@@ -248,21 +261,19 @@ private[graft] object Router {
     // rejects it, so detect and fan out over one shared scan
     Handler("multi-insert") { spark => {
       case s if s.trim.toUpperCase.startsWith("FROM") &&
-          SqlText.topLevel(s.trim, "INSERT").nonEmpty => () => Dml.multiInsert(spark, s) } },
+          SqlText.topLevel(s.trim, "INSERT").nonEmpty => done(spark)(Dml.multiInsert(spark, s)) } },
     Handler("explain-dependency") { spark => {
-      case s if s.trim.toUpperCase.startsWith("EXPLAIN DEPENDENCY") =>
-        () => Commands.explainDependency(spark, s) } },
+      case Commands.explainDependencyRe(q) => () => Commands.explainDependency(spark, q) } },
     Handler("show-create-serde") { spark => {
       case s if Commands.showCreateSerdeRe.findFirstIn(s).isDefined =>
         () => Commands.showCreateTable(spark, s) } },
     Handler("explain-logical") { spark => {
-      case s if s.trim.toUpperCase.startsWith("EXPLAIN LOGICAL") =>
-        () => Commands.explainLogical(spark, s) } },
+      case Commands.explainLogicalRe(q) => () => Commands.explainLogical(spark, q) } },
     Handler("explain-authorization") { spark => {
       case s if Commands.explainAuthRe.findFirstIn(s.trim).isDefined =>
         () => Commands.explainAuthorization(spark, s) } },
     Handler("explain") { spark => {
-      case s if s.trim.toUpperCase.startsWith("EXPLAIN ") => () => Commands.explain(spark, s) } },
+      case s @ explainRe() => () => Commands.explain(spark, s) } },
     Handler("create-view-names") { spark => {
       case Ddl.createViewRe(prefix, select) if Ddl.autoNamed(spark, select).exists(identity) =>
         () => Ddl.createViewNamed(spark, prefix, select) } },
@@ -270,5 +281,5 @@ private[graft] object Router {
       case Ddl.ctasRe(prefix, select) if Ddl.autoNamed(spark, select).exists(identity) =>
         () => Ddl.ctasNamed(spark, prefix, select) } },
     Handler("insert-or-native") { spark => {
-      case s => () => Dml.insertOrNative(spark, s) } })
+      case s => new Native(spark, s) } })
 }

@@ -18,17 +18,17 @@ private[graft] object SqlText {
       s"$k = '${v.replace("\\", "\\\\").replace("'", "\\'")}'" }
       .mkString(" OPTIONS (", ", ", ")")
 
-  /** Drop the comment-only prefix lines of a .q-style statement (the
-    * splitter keeps them attached); Spark's parser skips them, but the
-    * statement-shape regexes here anchor at the text start — both must
-    * see the same statement. */
-  def stripLeadingComments(stmt: String): String = {
-    val lines = stmt.linesIterator.toSeq
-    val idx = lines.indexWhere { l =>
-      val t = l.trim; t.nonEmpty && !t.startsWith("--")
-    }
-    if (idx <= 0) stmt else lines.drop(idx).mkString("\n")
-  }
+  /** The statement without its `--` comments: Spark's parser skips a
+    * comment wherever it sits, and the statement-shape regexes here must
+    * see the same statement. Quoted text (both string quotes with Hive's
+    * escapes, and backtick identifiers) is kept byte for byte. */
+  def stripComments(stmt: String): String =
+    quotedOrCommentRe.replaceAllIn(stmt, m =>
+      if (m.matched.startsWith("--")) ""
+      else scala.util.matching.Regex.quoteReplacement(m.matched)).trim
+  // unrolled loops: the regex engine recurses per escape, not per char
+  private val quotedOrCommentRe = ("""'[^'\\]*+(?:(?:\\.|'')[^'\\]*+)*+'|""" +
+    """"[^"\\]*+(?:(?:\\.|"")[^"\\]*+)*+"|`[^`]*+(?:``[^`]*+)*+`|--[^\n]*+""").r
 
   /** Blank out quoted string literals (both quote styles, with the
     * backslash and doubled-quote escapes Hive accepts) and `--` line

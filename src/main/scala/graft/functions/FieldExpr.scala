@@ -84,8 +84,8 @@ case class FieldExpr(children: Seq[Expression])
 }
 
 object FieldExpr {
-  /** Column-API form; requires Engine.install(spark) to have registered
-    * the "field" function in the session's registry.
+  /** Column-API form; resolves the "field" function the session's
+    * registry holds ([[FunctionPack]]).
     */
   def field(needle: Column, candidates: Column*): Column =
     org.apache.spark.sql.functions.call_function("field", (needle +: candidates): _*)

@@ -65,7 +65,7 @@ object NGrams {
       i => concat_ws(sep, slice(tokens, i + lit(1), lit(n))))
   }
 
-  /** The SQL-name route (`Engine.install`): Hive's exact output shape
+  /** The SQL-name route ([[FunctionPack]]): Hive's exact output shape
     * `array<struct<ngram:array<string>, estfrequency:double>>`
     * (GenericUDAFnGrams), over flat `array<string>` input or the
     * `sentences()` nested shape — in nested mode n-grams are counted
@@ -118,7 +118,7 @@ object NGrams {
   }
 
   /** Column-based overload (same semantics) — lets the SQL-name
-    * registration in `Engine.install` accept an arbitrary tokens
+    * registration in [[FunctionPack]] accept an arbitrary tokens
     * EXPRESSION (e.g. `context_ngrams(split(text, ' '), ...)`), not just
     * a column name.
     */

@@ -9,7 +9,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Hive's `parse_url_tuple(url, part1, part2, ...)` UDTF as a real Catalyst
   * `Generator` — one output row per input row with one string column per
   * requested part, usable from SQL via LATERAL VIEW after registration in
-  * `Engine.install`.
+  * [[FunctionPack]].
   *
   * Reference: /root/reference/ql/src/java/org/apache/hadoop/hive/ql/udf/
   * generic/GenericUDTFParseUrlTuple.java. Parts: HOST, PATH, QUERY, REF,

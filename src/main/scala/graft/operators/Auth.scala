@@ -13,7 +13,7 @@ import scala.jdk.CollectionConverters._
   * analyzeRevoke / analyzeShowGrant) executed by
   * ql/.../exec/DDLTask.java:697-713 against the metastore's ROLES /
   * ROLE_MAP / TBL_PRIVS tables. Spark has no authorization parser at all,
-  * so the statements are intercepted as text (Engine.ddl) and answered
+  * so the statements are intercepted as text (frontend.Router) and answered
   * from this session-scoped registry.
   *
   * Design notes:
@@ -349,9 +349,9 @@ object Auth {
   private val showPrincipalsRe =
     """(?is)\s*SHOW\s+PRINCIPALS\s+`?([\w]+)`?\s*;?\s*""".r
 
-  /** Fast pre-filter so Engine.ddl doesn't regex every statement. */
+  /** Fast pre-filter so the router doesn't regex every statement. */
   def handles(stmt: String): Boolean = {
-    val u = stmt.trim.stripPrefix(";").trim.toUpperCase
+    val u = stmt.trim.stripPrefix(";").trim.toUpperCase.replaceAll("\\s+", " ")
     u.startsWith("CREATE ROLE") || u.startsWith("DROP ROLE") ||
     u.startsWith("GRANT") || u.startsWith("REVOKE") ||
     u.startsWith("SHOW ROLES") || u.startsWith("SHOW CURRENT ROLES") ||

@@ -106,7 +106,7 @@ object Dedup {
 
   // the sorted-set kernels as Columns over their Catalyst expressions: no
   // function-registry lookup, so the operators run on any session, not
-  // only on one Engine.install populated
+  // only on one with the function pack
   private def sortedIntersectCount(a: Column, b: Column): Column =
     toColumn(SortedIntersectCount(toExpression(a), toExpression(b)))
 
@@ -661,7 +661,7 @@ object Dedup {
   private def bandHashes(numHashes: Int, bands: Int): Seq[Column] = {
     val r = numHashes / bands
     // xxhash64 (native, never re-registered): the SQL-name `hash` resolves
-    // to HiveHash for script parity (Engine.install), but the band hash is
+    // to HiveHash for script parity (FunctionPack), but the band hash is
     // an internal detail that must not shift with the registry
     (0 until bands).map(b =>
       xxhash64((b * r until (b + 1) * r).map(i => col(s"mh$i")): _*))

@@ -28,14 +28,11 @@ object Similarity {
     * — same accumulation order and null/zero-norm semantics as the
     * previous aggregate(zip_with(...)) composition, minus one intermediate
     * array allocation and three extra traversals per row pair. Resolved
-    * through the session registry ("cosine_sim", Engine.install —
-    * idempotent, every public entry point below installs first).
+    * through the session registry ("cosine_sim", registered by
+    * `GraftExtensions` on every session built with it).
     */
   def cosine(a: String, b: String): org.apache.spark.sql.Column =
     call_function("cosine_sim", col(a), col(b))
-
-  private def installed(df: DataFrame): Unit =
-    graft.Engine.install(df.sparkSession)
 
   /** Cast to double once; all math in f64 for oracle-stable results. */
   def prep(emb: DataFrame): DataFrame =
@@ -43,7 +40,6 @@ object Similarity {
 
   /** Exact brute-force cosine top-k for the given query vectors. */
   def bruteForceTopK(emb: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    installed(emb)
     val joined = broadcast(queries.select(col("vec_id").as("q_id"), col("emb").as("q_emb")))
       .crossJoin(emb)
       .filter(col("q_id") =!= col("vec_id"))
@@ -65,7 +61,6 @@ object Similarity {
   /** IVF-style ANN: cluster by nearest centroid, probe nProbe clusters. */
   def ivfTopK(emb: DataFrame, queries: DataFrame, centroids: DataFrame,
               k: Int, nProbe: Int = 2): DataFrame = {
-    installed(emb)
     val cent = broadcast(centroids.select(col("vec_id").as("c_id"), col("emb").as("c_emb")))
 
     def nearestClusters(vecs: DataFrame, idCol: String, vecCol: String, top: Int) = {
@@ -110,7 +105,6 @@ object Similarity {
     * cancels in the next assignment.
     */
   def kmeansCentroids(emb: DataFrame, k: Int, iters: Int = 5): DataFrame = {
-    installed(emb)
     val spark = emb.sparkSession
     import spark.implicits._
     // centroids carried in DOUBLE from the start so every iteration sees
@@ -186,7 +180,6 @@ object Similarity {
     */
   def quantizedTopK(emb: DataFrame, queries: DataFrame, k: Int,
                     candFactor: Int = 4): DataFrame = {
-    installed(emb)
     def quantize(df: DataFrame, pfx: String) = df
       .withColumn(s"${pfx}mx", array_max(transform(col(s"${pfx}emb"), x => abs(x))))
       .withColumn(s"${pfx}qv", transform(col(s"${pfx}emb"),
@@ -228,7 +221,6 @@ object Similarity {
     */
   def lshTopK(emb: DataFrame, queries: DataFrame, planes: DataFrame,
               k: Int, bitsPerBand: Int = 8): DataFrame = {
-    installed(emb)
     // planes: metadata-sized (numPlanes × dims) — collected once, inlined
     // as literal arrays so the signature pass has no join at all
     val pl = planes.select(col("vec_id"), col("emb")).collect()
@@ -284,7 +276,6 @@ object Similarity {
     */
   def neardupIVF(emb: DataFrame, centroids: DataFrame, minSim: Double,
                  nProbe: Int = 2): DataFrame = {
-    installed(emb)
     val cent = broadcast(centroids.select(col("vec_id").as("c_id"), col("emb").as("c_emb")))
     val w = Window.partitionBy("vec_id").orderBy(col("csim").desc, col("c_id").asc)
     // checkpointed: the cluster self-join below would otherwise recompute

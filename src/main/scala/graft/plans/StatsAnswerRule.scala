@@ -59,11 +59,16 @@ case class StatsAnswerRule(spark: SparkSession) extends Rule[LogicalPlan] {
 }
 
 /** SparkSessionExtensions entry point:
-  * `.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.plans.GraftExtensions`.
+  * `spark.sql.extensions=graft.plans.GraftExtensions` (what
+  * `Engine.session` sets) or `.withExtensions(new GraftExtensions)`.
+  * A session with it speaks HiveQL: `spark.sql` parses through the
+  * front end ([[graft.frontend.HiveQlParser]]), and the function pack
+  * registers once, when the session's function registry is built.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
+    e.injectParser((session, delegate) => new graft.frontend.HiveQlParser(session, delegate))
+    graft.functions.FunctionPack.descriptions.foreach(e.injectFunction)
     e.injectOptimizerRule(session => StatsAnswerRule(session))
     // Hive comparison/cast semantics (see HiveSemantics.scala)
     e.injectResolutionRule(session => HeteroPartitions.Reads(session))

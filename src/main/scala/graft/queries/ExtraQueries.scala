@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Engine, Q, Tables}
+import graft.{Q, Tables}
 import graft.functions.NGrams
 import graft.operators.{MatchPath, MultiInsert}
 import org.apache.spark.sql.SparkSession
@@ -299,7 +299,6 @@ object ExtraQueries {
 
     // ---- custom `field` Catalyst expression (Hive UDFField) ----
     Q("q66_field", (s, d) => {
-      Engine.install(s)
       t(s, d, "orders").filter(col("o_orderkey") < 200)
         .select(col("o_orderkey"),
           call_function("field", col("o_orderstatus"),

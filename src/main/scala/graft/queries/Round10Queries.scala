@@ -33,13 +33,10 @@ object Round10Queries {
                 SELECT 0 AS n_nationkey, 'M0' AS n_name, 0 AS rk
                 UNION ALL SELECT 990, 'M99', 99""")
       }
-      Engine.ddl(s,
-        "UPDATE graft_tmp.pdml_seq SET n_name = concat('U_', n_name) WHERE rk = 1")
-      Engine.ddl(s,
-        "DELETE FROM graft_tmp.pdml_seq WHERE rk = 2 AND n_nationkey % 2 = 0")
+      s.sql("UPDATE graft_tmp.pdml_seq SET n_name = concat('U_', n_name) WHERE rk = 1")
+      s.sql("DELETE FROM graft_tmp.pdml_seq WHERE rk = 2 AND n_nationkey % 2 = 0")
       graft.tools.Pools.awaitAll(Seq(srcReady)): Unit
-      Engine.ddl(s,
-        """MERGE INTO graft_tmp.pdml_seq t USING graft_tmp.pdml_seq_src s
+      s.sql("""MERGE INTO graft_tmp.pdml_seq t USING graft_tmp.pdml_seq_src s
            ON t.n_nationkey = s.n_nationkey
            WHEN MATCHED THEN UPDATE SET n_name = s.n_name
            WHEN NOT MATCHED THEN INSERT VALUES (s.n_nationkey, s.n_name, s.rk)""")
@@ -69,17 +66,14 @@ object Round10Queries {
                LOCATION '$base'""")
       graft.Tables.t(s, d, "nation").createOrReplaceTempView("a16_nation")
       // hybrid: ds static, hr dynamic — every region lands in its own hr
-      Engine.ddl(s,
-        """INSERT OVERWRITE TABLE graft_tmp.hyb PARTITION (ds='d1', hr)
+      s.sql("""INSERT OVERWRITE TABLE graft_tmp.hyb PARTITION (ds='d1', hr)
            SELECT n_nationkey, n_name, n_regionkey FROM a16_nation""")
       // fully static append into a fresh (ds, hr)
-      Engine.ddl(s,
-        """INSERT INTO graft_tmp.hyb PARTITION (ds='d2', hr=9)
+      s.sql("""INSERT INTO graft_tmp.hyb PARTITION (ds='d2', hr=9)
            SELECT n_nationkey, n_name FROM a16_nation WHERE n_nationkey < 3""")
       // fully static overwrite of ONE partition: (d1, 1) is replaced,
       // every sibling hr under d1 and all of d2 stay intact
-      Engine.ddl(s,
-        """INSERT OVERWRITE TABLE graft_tmp.hyb PARTITION (ds='d1', hr=1)
+      s.sql("""INSERT OVERWRITE TABLE graft_tmp.hyb PARTITION (ds='d1', hr=1)
            SELECT n_nationkey + 100, concat('R_', n_name) FROM a16_nation
            WHERE n_regionkey = 1""")
       s.table("graft_tmp.hyb").select("k", "v", "ds", "hr")
@@ -117,13 +111,10 @@ object Round10Queries {
                 SELECT 0 AS n_nationkey, 'M0' AS n_name, 0 AS rk
                 UNION ALL SELECT 990, 'M99', 99""")
       }
-      Engine.ddl(s,
-        "UPDATE graft_tmp.pdml_rc SET n_name = concat('U_', n_name) WHERE rk = 1")
-      Engine.ddl(s,
-        "DELETE FROM graft_tmp.pdml_rc WHERE rk = 2 AND n_nationkey % 2 = 0")
+      s.sql("UPDATE graft_tmp.pdml_rc SET n_name = concat('U_', n_name) WHERE rk = 1")
+      s.sql("DELETE FROM graft_tmp.pdml_rc WHERE rk = 2 AND n_nationkey % 2 = 0")
       graft.tools.Pools.awaitAll(Seq(srcReady)): Unit
-      Engine.ddl(s,
-        """MERGE INTO graft_tmp.pdml_rc t USING graft_tmp.pdml_rc_src s
+      s.sql("""MERGE INTO graft_tmp.pdml_rc t USING graft_tmp.pdml_rc_src s
            ON t.n_nationkey = s.n_nationkey
            WHEN MATCHED THEN UPDATE SET n_name = s.n_name
            WHEN NOT MATCHED THEN INSERT VALUES (s.n_nationkey, s.n_name, s.rk)""")
@@ -147,7 +138,7 @@ object Round10Queries {
     //      from the generated thrift metadata; records are TBinaryProtocol
     //      bytes in SequenceFile values. ----
     Q("q154_thrift_seq", (s, d) => {
-      val de = Engine.ddl(s, _: String)
+      val de = s.sql(_: String)
       s.sql("CREATE DATABASE IF NOT EXISTS graft_tmp")
       s.sql("DROP TABLE IF EXISTS graft_tmp.src_thrift")
       val base = graft.tools.Tmp.dir("graft_src_thrift")
@@ -252,7 +243,7 @@ object Round10Queries {
               SELECT canonical_url, doc_id, n_chars, n_docs
               FROM ranked WHERE rn = 1""")),
 
-    // ---- q155: the ngrams SQL-NAME route (Engine.install registration →
+    // ---- q155: the ngrams SQL-NAME route (FunctionPack registration →
     //      GraftColumnBridge → NGrams.ngramsHive) — same counting contract
     //      as the API gate q64, but exercising the FunctionRegistry path
     //      and Hive's array<struct<ngram:array<string>, estfrequency>>
@@ -296,8 +287,7 @@ object Round10Queries {
     Q("q157_text_complex", (s, d) => {
       s.sql("CREATE DATABASE IF NOT EXISTS graft_tmp")
       s.sql("DROP TABLE IF EXISTS graft_tmp.q157_t")
-      Engine.ddl(s,
-        s"""CREATE TABLE graft_tmp.q157_t (
+      s.sql(s"""CREATE TABLE graft_tmp.q157_t (
               k INT, words ARRAY<STRING>, st STRUCT<r: INT, nm: STRING>)
             STORED AS TEXTFILE
             LOCATION '${graft.tools.Tmp.dir("q157")}/t'""")

@@ -25,9 +25,9 @@ object Round13Queries {
     //      distributed over a real scan. ----
     Q("q158_hive_udf_jar", (s, d) => {
       Tables.t(s, d, "nation").createOrReplaceTempView("q158_nation")
-      Engine.ddl(s, "CREATE TEMPORARY FUNCTION q158_repeat_tag AS " +
+      s.sql("CREATE TEMPORARY FUNCTION q158_repeat_tag AS " +
         s"'graftjar.RepeatTag' USING JAR '$udfJar'")
-      Engine.ddl(s, "CREATE TEMPORARY FUNCTION q158_plus_one AS " +
+      s.sql("CREATE TEMPORARY FUNCTION q158_plus_one AS " +
         s"'graftjar.LegacyPlusOne' USING JAR '$udfJar'")
       s.sql("""SELECT n_name,
                       q158_repeat_tag(n_name, 2) AS tagged,
@@ -48,9 +48,9 @@ object Round13Queries {
     //      HiveUDAFFunction bridge) aggregates per token. ----
     Q("q159_hive_udtf_udaf_jar", (s, d) => {
       Tables.t(s, d, "nation").createOrReplaceTempView("q159_nation")
-      Engine.ddl(s, "CREATE TEMPORARY FUNCTION q159_tok AS " +
+      s.sql("CREATE TEMPORARY FUNCTION q159_tok AS " +
         s"'graftjar.TokenExplode' USING JAR '$udfJar'")
-      Engine.ddl(s, "CREATE TEMPORARY FUNCTION q159_ss AS " +
+      s.sql("CREATE TEMPORARY FUNCTION q159_ss AS " +
         s"'graftjar.SumSquares' USING JAR '$udfJar'")
       s.sql("""SELECT t.token, count(*) AS n,
                       q159_ss(n.n_nationkey) AS ss

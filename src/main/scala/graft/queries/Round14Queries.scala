@@ -24,13 +24,12 @@ object Round14Queries {
     //      content, equality matches the bare literal. ----
     Q("q160_char_strip", (s, d) => {
       Tables.t(s, d, "nation").createOrReplaceTempView("q160_nation")
-      Engine.ddl(s, "DROP TABLE IF EXISTS q160_chart")
+      s.sql("DROP TABLE IF EXISTS q160_chart")
       // explicit fresh location: a prior SESSION's managed-table dir would
       // otherwise survive in spark-warehouse and fail the CREATE
       val loc = graft.tools.Tmp.dir("q160_char") + "/t"
-      Engine.ddl(s,
-        s"CREATE TABLE q160_chart (k INT, c CHAR(12)) USING parquet LOCATION '$loc'")
-      Engine.ddl(s, """INSERT OVERWRITE TABLE q160_chart
+      s.sql(s"CREATE TABLE q160_chart (k INT, c CHAR(12)) USING parquet LOCATION '$loc'")
+      s.sql("""INSERT OVERWRITE TABLE q160_chart
         SELECT CAST(n_nationkey AS INT), n_name FROM q160_nation""")
       s.sql("""SELECT k, concat('[', c, ']') AS bracketed,
                       CAST(length(c) AS INT) AS len,

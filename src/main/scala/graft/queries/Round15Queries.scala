@@ -28,12 +28,12 @@ object Round15Queries {
     Q("q161_char_part_prune", (s, d) => {
       Tables.t(s, d, "nation").createOrReplaceTempView("q161_nation")
       Tables.t(s, d, "region").createOrReplaceTempView("q161_region")
-      Engine.ddl(s, "DROP TABLE IF EXISTS q161_partc")
+      s.sql("DROP TABLE IF EXISTS q161_partc")
       val loc = graft.tools.Tmp.dir("q161_charpart") + "/t"
-      Engine.ddl(s, s"""CREATE TABLE q161_partc (k INT, c CHAR(20))
+      s.sql(s"""CREATE TABLE q161_partc (k INT, c CHAR(20))
         USING parquet PARTITIONED BY (c) LOCATION '$loc'""")
-      Engine.ddl(s, "SET hive.exec.dynamic.partition.mode=nonstrict")
-      Engine.ddl(s, """INSERT OVERWRITE TABLE q161_partc PARTITION (c)
+      s.sql("SET hive.exec.dynamic.partition.mode=nonstrict")
+      s.sql("""INSERT OVERWRITE TABLE q161_partc PARTITION (c)
         SELECT CAST(n_nationkey AS INT), r_name
         FROM q161_nation JOIN q161_region ON n_regionkey = r_regionkey""")
       s.sql("""SELECT k, c, CAST(length(c) AS INT) AS len
@@ -52,12 +52,12 @@ object Round15Queries {
     //      clen/alen read pad-inflated and the hash diverges ----
     Q("q162_char_nested", (s, d) => {
       Tables.t(s, d, "nation").createOrReplaceTempView("q162_nation")
-      Engine.ddl(s, "DROP TABLE IF EXISTS q162_nested")
+      s.sql("DROP TABLE IF EXISTS q162_nested")
       val loc = graft.tools.Tmp.dir("q162_nested") + "/t"
-      Engine.ddl(s, s"""CREATE TABLE q162_nested
+      s.sql(s"""CREATE TABLE q162_nested
         (k INT, st STRUCT<c: CHAR(20), s: STRING>, arr ARRAY<CHAR(8)>)
         USING parquet LOCATION '$loc'""")
-      Engine.ddl(s, """INSERT OVERWRITE TABLE q162_nested
+      s.sql("""INSERT OVERWRITE TABLE q162_nested
         SELECT CAST(n_nationkey AS INT),
                named_struct('c', n_name, 's', n_name),
                array(substr(n_name, 1, 6))

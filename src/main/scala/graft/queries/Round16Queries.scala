@@ -23,15 +23,15 @@ object Round16Queries {
     //      map-value-of-struct — every leaf reads stripped ----
     Q("q163_char_deep_nested", (s, d) => {
       Tables.t(s, d, "nation").createOrReplaceTempView("q163_nation")
-      Engine.ddl(s, "DROP TABLE IF EXISTS q163_deep")
+      s.sql("DROP TABLE IF EXISTS q163_deep")
       val loc = graft.tools.Tmp.dir("q163_deep") + "/t"
-      Engine.ddl(s, s"""CREATE TABLE q163_deep (
+      s.sql(s"""CREATE TABLE q163_deep (
           k INT,
           ost STRUCT<inner: STRUCT<c: CHAR(16), n: INT>, tag: CHAR(6)>,
           arrst ARRAY<STRUCT<c2: CHAR(10)>>,
           mp MAP<STRING, STRUCT<mc: CHAR(12)>>)
         USING parquet LOCATION '$loc'""")
-      Engine.ddl(s, """INSERT OVERWRITE TABLE q163_deep
+      s.sql("""INSERT OVERWRITE TABLE q163_deep
         SELECT CAST(n_nationkey AS INT),
                named_struct('inner',
                  named_struct('c', n_name, 'n', CAST(n_regionkey AS INT)),

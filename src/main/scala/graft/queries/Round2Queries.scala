@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{Engine, Q, Tables}
+import graft.{Q, Tables}
 import graft.functions.{NGrams, UnionTypeShim}
 import graft.operators.{Acid, Dedup, Similarity}
 import org.apache.spark.sql.SparkSession
@@ -529,7 +529,6 @@ object Round2Queries {
 
     // ---- parse_url_tuple as a true Generator via LATERAL VIEW ----
     Q("q100_parse_url_tuple", (s, d) => {
-      Engine.install(s)
       t(s, d, "documents").filter(col("doc_id") < 100)
         .withColumn("url", concat(lit("https://"), col("source"),
           lit(".example.com/docs/"), col("doc_id").cast("string"),
@@ -548,7 +547,6 @@ object Round2Queries {
     //      read once on the driver; executors get the line set with the
     //      task, so only the submitting host needs the file. ----
     Q("q101_in_file", (s, d) => {
-      Engine.install(s)
       val f = java.nio.file.Paths.get(graft.tools.Tmp.dir("graft_dict"), "segs.txt")
       java.nio.file.Files.write(f, "BUILDING\nAUTOMOBILE\n".getBytes("UTF-8"))
       t(s, d, "customer")

@@ -38,8 +38,8 @@ object Round5Queries {
     //      a migrating user's script actually contains — then used in a
     //      query under its new name. ----
     Q("q128_create_function_sql", (s, d) => {
-      Engine.ddl(s, "DROP TEMPORARY FUNCTION IF EXISTS my_field")
-      Engine.ddl(s,
+      s.sql("DROP TEMPORARY FUNCTION IF EXISTS my_field")
+      s.sql(
         "CREATE TEMPORARY FUNCTION my_field AS 'org.apache.hadoop.hive.ql.udf.generic.GenericUDFField'")
       Engine.sql(s, d,
         """SELECT o_orderkey,
@@ -65,7 +65,7 @@ object Round5Queries {
       s.sql(s"""CREATE TABLE graft_tmp.loaded_sup
                (s_suppkey BIGINT, s_name STRING, s_acctbal DOUBLE)
                USING parquet LOCATION '$base/tbl'""")
-      Engine.ddl(s, s"LOAD DATA INPATH '$base/staging' INTO TABLE graft_tmp.loaded_sup")
+      s.sql(s"LOAD DATA INPATH '$base/staging' INTO TABLE graft_tmp.loaded_sup")
       s.table("graft_tmp.loaded_sup")
     },
       Some("""SELECT s_suppkey, s_name, s_acctbal
@@ -105,7 +105,7 @@ object Round5Queries {
 
     // ---- UPDATE / DELETE as SQL TEXT (UpdateDeleteSemanticAnalyzer):
     //      the statements a reference user's scripts contain, parsed by
-    //      Engine.ddl and routed onto the copy-on-write engine — Spark's
+    //      the front end and routed onto the copy-on-write engine — Spark's
     //      own parser rejects row-level DML on parquet tables. ----
     Q("a09_dml_sql", (s, d) => {
       val base = graft.tools.Tmp.dir("graft_dml_sql")
@@ -118,11 +118,10 @@ object Round5Queries {
       s.sql(s"""CREATE TABLE graft_tmp.dml_cust
                (c_custkey BIGINT, c_nationkey INT, c_acctbal DOUBLE, c_mktsegment STRING)
                USING parquet LOCATION '${base + "/tbl"}'""")
-      Engine.ddl(s,
-        """UPDATE graft_tmp.dml_cust
+      s.sql("""UPDATE graft_tmp.dml_cust
            SET c_acctbal = round(c_acctbal * 1.1 * 100) / 100, c_mktsegment = upper(c_mktsegment)
            WHERE c_nationkey < 10""")
-      Engine.ddl(s, "DELETE FROM graft_tmp.dml_cust WHERE c_acctbal < 0")
+      s.sql("DELETE FROM graft_tmp.dml_cust WHERE c_acctbal < 0")
       s.table("graft_tmp.dml_cust")
     },
       Some("""SELECT c_custkey, c_nationkey,
@@ -136,7 +135,7 @@ object Round5Queries {
 
     // ---- multi-insert as SQL TEXT (`FROM src INSERT ... INSERT ...`,
     //      SemanticAnalyzer.genBodyPlan): Spark's parser rejects the
-    //      FROM-first multi-destination form; Engine.ddl fans the branches
+    //      FROM-first multi-destination form; the front end fans the branches
     //      out over ONE shared scan of the source. Gate reads both
     //      destinations back, tagged, and compares against the equivalent
     //      two selects. ----

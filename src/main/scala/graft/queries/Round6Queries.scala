@@ -23,7 +23,7 @@ object Round6Queries {
     //      Explicit partition lifecycle: two partitions registered with
     //      external LOCATIONs, one dropped, the table renamed, then a
     //      partition-filtered read-back that must prune to the surviving
-    //      partition directory. All statements run through Engine.ddl —
+    //      partition directory. All statements run through spark.sql —
     //      Spark SQL parses and executes them natively on datasource
     //      tables, which is the point: catalog DDL is the catalog's job. ----
     Q("a11_partition_ddl", (s, d) => {
@@ -41,12 +41,10 @@ object Round6Queries {
       new java.io.File(base + "/tbl").mkdirs()
       s.sql(s"""CREATE TABLE graft_tmp.pddl_t (n_nationkey INT, n_name STRING)
                USING parquet PARTITIONED BY (p INT) LOCATION '$base/tbl'""")
-      Engine.ddl(s,
-        s"ALTER TABLE graft_tmp.pddl_t ADD PARTITION (p=0) LOCATION '$base/ext0'")
-      Engine.ddl(s,
-        s"ALTER TABLE graft_tmp.pddl_t ADD IF NOT EXISTS PARTITION (p=2) LOCATION '$base/ext2'")
-      Engine.ddl(s, "ALTER TABLE graft_tmp.pddl_t DROP PARTITION (p=2)")
-      Engine.ddl(s, "ALTER TABLE graft_tmp.pddl_t RENAME TO graft_tmp.pddl_renamed")
+      s.sql(s"ALTER TABLE graft_tmp.pddl_t ADD PARTITION (p=0) LOCATION '$base/ext0'")
+      s.sql(s"ALTER TABLE graft_tmp.pddl_t ADD IF NOT EXISTS PARTITION (p=2) LOCATION '$base/ext2'")
+      s.sql("ALTER TABLE graft_tmp.pddl_t DROP PARTITION (p=2)")
+      s.sql("ALTER TABLE graft_tmp.pddl_t RENAME TO graft_tmp.pddl_renamed")
       s.table("graft_tmp.pddl_renamed").filter(col("p") === 0)
         .select("n_nationkey", "n_name", "p")
     },
@@ -71,9 +69,8 @@ object Round6Queries {
                USING parquet LOCATION '$base/sup'""")
       s.sql(s"""CREATE TABLE graft_tmp.nw_nat (n_nationkey INT)
                USING parquet LOCATION '$base/nat'""")
-      Engine.ddl(s,
-        "UPDATE graft_tmp.nw_sup SET s_acctbal = round(s_acctbal * 2 * 100) / 100")
-      Engine.ddl(s, "DELETE FROM graft_tmp.nw_nat")
+      s.sql("UPDATE graft_tmp.nw_sup SET s_acctbal = round(s_acctbal * 2 * 100) / 100")
+      s.sql("DELETE FROM graft_tmp.nw_nat")
       s.table("graft_tmp.nw_sup")
         .select(col("s_suppkey").as("k"), col("s_acctbal").as("v"))
         .unionByName(s.table("graft_tmp.nw_nat")
@@ -85,7 +82,7 @@ object Round6Queries {
 
     // ---- DROP PARTITION with comparison filters (DDLTask.dropPartitions;
     //      golden drop_partitions_filter.q): Spark's parser only accepts
-    //      exact `=` specs, so Engine.ddl expands the filtered form from a
+    //      exact `=` specs, so the front end expands the filtered form from a
     //      catalog listing (metadata-sized, no data scan) into native
     //      exact drops. Two statements: a range drop and a union of a
     //      != filter group with an exact group. ----
@@ -99,9 +96,8 @@ object Round6Queries {
       t(s, d, "nation")
         .select(col("n_nationkey"), col("n_name"), col("n_regionkey").as("rk"))
         .write.insertInto("graft_tmp.dpf_t")
-      Engine.ddl(s, "ALTER TABLE graft_tmp.dpf_t DROP PARTITION (rk < 2)")
-      Engine.ddl(s,
-        "ALTER TABLE graft_tmp.dpf_t DROP IF EXISTS PARTITION (rk != 3), PARTITION (rk = 2)")
+      s.sql("ALTER TABLE graft_tmp.dpf_t DROP PARTITION (rk < 2)")
+      s.sql("ALTER TABLE graft_tmp.dpf_t DROP IF EXISTS PARTITION (rk != 3), PARTITION (rk = 2)")
       s.table("graft_tmp.dpf_t").select("n_nationkey", "n_name", "rk")
     },
       Some("""SELECT n_nationkey, n_name, n_regionkey AS rk
@@ -118,21 +114,21 @@ object Round6Queries {
       // distinct tables and are fully independent — overlap them (guide
       // §2.6; profiled: the two insertInto write jobs own ~620 ms of the
       // row's ~1.1 s, catalog ops 25-55 ms each). Statement order WITHIN
-      // each branch is preserved; the catalog and Engine.ddl are
+      // each branch is preserved; the catalog and the front end are
       // thread-safe (synchronized SessionCatalog / Auth state).
       graft.tools.Pools.runAll(Seq(
         () => {
           s.sql("CREATE TABLE graft_tr.f (s_suppkey BIGINT, s_name STRING) USING parquet")
           t(s, d, "supplier").select("s_suppkey", "s_name")
             .write.insertInto("graft_tr.f")
-          Engine.ddl(s, "TRUNCATE TABLE graft_tr.f"): Unit
+          s.sql("TRUNCATE TABLE graft_tr.f"): Unit
         },
         () => {
           s.sql("CREATE TABLE graft_tr.p (n_nationkey INT) USING parquet PARTITIONED BY (pk INT)")
           t(s, d, "nation").filter(col("n_regionkey") <= 1)
             .select(col("n_nationkey"), col("n_regionkey").as("pk"))
             .write.insertInto("graft_tr.p")
-          Engine.ddl(s, "TRUNCATE TABLE graft_tr.p PARTITION (pk=0)"): Unit
+          s.sql("TRUNCATE TABLE graft_tr.p PARTITION (pk=0)"): Unit
         }))
       s.table("graft_tr.p")
         .select(col("n_nationkey").cast("long").as("k"), col("pk"))

@@ -33,7 +33,7 @@ object Round7Queries {
 
     // ---- TABLESAMPLE(BUCKET x OUT OF y ON cols) SQL-text form
     //      (parse/FromClauseParser.g:154-166) — the exact statement text a
-    //      migrating script contains, rewritten by Engine.ddl into the
+    //      migrating script contains, rewritten by the front end into the
     //      deterministic bucket filter (Hive's int-column bucket hash IS
     //      the value, so pmod(key, y) = x-1 reproduces the reference's
     //      row-to-bucket assignment; same semantics q42 pins DataFrame-
@@ -56,7 +56,7 @@ object Round7Queries {
     //      as `reflect2` and under the Hive class name via CREATE FUNCTION. ----
     Q("q139_reflect2", (s, d) => {
       Tables.views(s, d, "customer")
-      Engine.ddl(s, """CREATE TEMPORARY FUNCTION hive_reflect2 AS
+      s.sql("""CREATE TEMPORARY FUNCTION hive_reflect2 AS
         'org.apache.hadoop.hive.ql.udf.generic.GenericUDFReflect2'""")
       Engine.sql(s, d,
         """SELECT c_custkey,
@@ -178,7 +178,7 @@ object Round7Queries {
       // is preserved
       graft.tools.Pools.runAll(Seq(
         () => {
-          Engine.ddl(s, "DROP TABLE IF EXISTS graft_tmp.q141_txt")
+          s.sql("DROP TABLE IF EXISTS graft_tmp.q141_txt")
           // a fresh session's DROP is a catalog no-op, but a managed
           // location left by a PREVIOUS process blocks CREATE
           // (LOCATION_ALREADY_EXISTS) — remove the stale warehouse dir
@@ -186,15 +186,14 @@ object Round7Queries {
           val wh = new org.apache.hadoop.fs.Path(
             s.conf.get("spark.sql.warehouse.dir") + "/graft_tmp.db/q141_txt")
           wh.getFileSystem(s.sessionState.newHadoopConf()).delete(wh, true)
-          Engine.ddl(s,
-            """CREATE TABLE graft_tmp.q141_txt (n_nationkey INT, n_name STRING)
+          s.sql("""CREATE TABLE graft_tmp.q141_txt (n_nationkey INT, n_name STRING)
                ROW FORMAT DELIMITED FIELDS TERMINATED BY '|' NULL DEFINED AS '\N'
                STORED AS TEXTFILE""")
           s.sql("INSERT OVERWRITE TABLE graft_tmp.q141_txt SELECT n_nationkey, n_name FROM nation"): Unit
         },
         () => {
-          Engine.ddl(s, "DROP TABLE IF EXISTS graft_tmp.q141_par")
-          Engine.ddl(s,
+          s.sql("DROP TABLE IF EXISTS graft_tmp.q141_par")
+          s.sql(
             "CREATE EXTERNAL TABLE graft_tmp.q141_par (n_nationkey INT, n_regionkey INT) STORED AS PARQUET LOCATION '" +
               graft.tools.Tmp.dir("graft_q141") + "/par'")
           s.sql("INSERT OVERWRITE TABLE graft_tmp.q141_par SELECT n_nationkey, n_regionkey FROM nation"): Unit
@@ -207,7 +206,7 @@ object Round7Queries {
 
     // ---- CREATE TEMPORARY MACRO (FunctionSemanticAnalyzer + udf/generic/
     //      GenericUDFMacro.java): Hive expands the macro body inline at
-    //      compile time. Engine.ddl rewrites the statement onto Spark 4
+    //      compile time. The front end rewrites the statement onto Spark 4
     //      SQL scalar UDFs (CREATE TEMPORARY FUNCTION ... RETURN body),
     //      which Catalyst inlines identically — the oracle is the body
     //      written out by hand. ----
@@ -229,21 +228,21 @@ object Round7Queries {
     // ---- INSERT OVERWRITE ... PARTITION (static) IF NOT EXISTS
     //      (SemanticAnalyzer: the insert is SKIPPED when the partition
     //      already exists; only legal with a fully-static spec). Spark's
-    //      parser rejects the clause; Engine.ddl checks the catalog and
+    //      parser rejects the clause; the front end checks the catalog and
     //      runs or no-ops. Second insert into p='a' must not overwrite. ----
     Q("q143_insert_ine", (s, d) => {
       s.sql("CREATE DATABASE IF NOT EXISTS graft_tmp")
-      Engine.ddl(s, "DROP TABLE IF EXISTS graft_tmp.q143_t")
+      s.sql("DROP TABLE IF EXISTS graft_tmp.q143_t")
       val wh = new org.apache.hadoop.fs.Path(
         s.conf.get("spark.sql.warehouse.dir") + "/graft_tmp.db/q143_t")
       wh.getFileSystem(s.sessionState.newHadoopConf()).delete(wh, true)
       s.sql("""CREATE TABLE graft_tmp.q143_t (v STRING, p STRING)
                USING parquet PARTITIONED BY (p)""")
-      Engine.ddl(s, """INSERT OVERWRITE TABLE graft_tmp.q143_t
+      s.sql("""INSERT OVERWRITE TABLE graft_tmp.q143_t
         PARTITION (p='a') IF NOT EXISTS SELECT 'first'""")
-      Engine.ddl(s, """INSERT OVERWRITE TABLE graft_tmp.q143_t
+      s.sql("""INSERT OVERWRITE TABLE graft_tmp.q143_t
         PARTITION (p='a') IF NOT EXISTS SELECT 'second'""")
-      Engine.ddl(s, """INSERT OVERWRITE TABLE graft_tmp.q143_t
+      s.sql("""INSERT OVERWRITE TABLE graft_tmp.q143_t
         PARTITION (p='b') IF NOT EXISTS SELECT 'fresh'""")
       s.sql("SELECT p, v FROM graft_tmp.q143_t")
     },
@@ -256,7 +255,7 @@ object Round7Queries {
     //      \001/\N LazySimpleSerDe layout with a NULL round-trip, then ORC. ----
     Q("q144_set_fileformat", (s, d) => {
       s.sql("CREATE DATABASE IF NOT EXISTS graft_tmp")
-      Engine.ddl(s, "DROP TABLE IF EXISTS graft_tmp.q144_t")
+      s.sql("DROP TABLE IF EXISTS graft_tmp.q144_t")
       for (suffix <- Seq("", "_setff_tmp")) {
         val wh = new org.apache.hadoop.fs.Path(
           s.conf.get("spark.sql.warehouse.dir") + s"/graft_tmp.db/q144_t$suffix")
@@ -264,8 +263,8 @@ object Round7Queries {
       }
       s.sql("CREATE TABLE graft_tmp.q144_t (k INT, v STRING) USING parquet")
       s.sql("INSERT INTO graft_tmp.q144_t VALUES (1, 'a'), (2, NULL)")
-      Engine.ddl(s, "ALTER TABLE graft_tmp.q144_t SET FILEFORMAT TEXTFILE")
-      Engine.ddl(s, "ALTER TABLE graft_tmp.q144_t SET FILEFORMAT ORC")
+      s.sql("ALTER TABLE graft_tmp.q144_t SET FILEFORMAT TEXTFILE")
+      s.sql("ALTER TABLE graft_tmp.q144_t SET FILEFORMAT ORC")
       s.sql("SELECT k, v FROM graft_tmp.q144_t")
     },
       Some("SELECT 1 AS k, 'a' AS v UNION ALL SELECT 2, NULL")),
@@ -275,7 +274,7 @@ object Round7Queries {
     //      348-354: std/stddev/stddev_pop -> GenericUDAFStd, variance/
     //      var_pop -> GenericUDAFVariance) but SAMPLE aliases in stock
     //      Spark — a silent value drift for migrating scripts.
-    //      Engine.install re-points the ambiguous names; the oracle pins
+    //      FunctionPack re-points the ambiguous names; the oracle pins
     //      them against DuckDB's explicit population spellings. ----
     Q("q145_hive_stat_aliases", (s, d) =>
       Engine.sql(s, d,

@@ -17,7 +17,7 @@ object Round8Queries {
     * session's DROP is a catalog no-op and the orphan location blocks
     * CREATE with LOCATION_ALREADY_EXISTS). */
   private def resetTable(s: SparkSession, name: String): Unit = {
-    Engine.ddl(s, s"DROP TABLE IF EXISTS $name")
+    s.sql(s"DROP TABLE IF EXISTS $name")
     val wh = new org.apache.hadoop.fs.Path(
       s.conf.get("spark.sql.warehouse.dir") + "/" + name)
     wh.getFileSystem(s.sessionState.newHadoopConf()).delete(wh, true): Unit
@@ -33,9 +33,8 @@ object Round8Queries {
     Q("q147_merge_sql", (s, d) => {
       Tables.views(s, d, "orders")
       resetTable(s, "q147_t")
-      Engine.ddl(s, "CREATE TABLE q147_t (k BIGINT, price DOUBLE, status STRING)")
-      Engine.ddl(s,
-        """INSERT INTO q147_t
+      s.sql("CREATE TABLE q147_t (k BIGINT, price DOUBLE, status STRING)")
+      s.sql("""INSERT INTO q147_t
            SELECT o_orderkey, o_totalprice, o_orderstatus FROM orders
            WHERE o_orderkey <= 300""")
       t(s, d, "orders").where(col("o_orderkey") <= 300)
@@ -45,8 +44,7 @@ object Round8Queries {
           lit("X").as("status"),
           when(col("o_orderkey") % 3 === 0, "D").otherwise("U").as("op"))
         .createOrReplaceTempView("q147_s")
-      Engine.ddl(s,
-        """MERGE INTO q147_t t USING q147_s s ON t.k = s.k
+      s.sql("""MERGE INTO q147_t t USING q147_s s ON t.k = s.k
            WHEN MATCHED AND s.op = 'D' THEN DELETE
            WHEN MATCHED THEN UPDATE SET price = s.price
            WHEN NOT MATCHED THEN INSERT VALUES (s.k, s.price, s.status)""")
@@ -104,9 +102,8 @@ object Round8Queries {
     Q("q149_union_remove", (s, d) => {
       Tables.views(s, d, "lineitem")
       resetTable(s, "q149_t")
-      Engine.ddl(s, "CREATE TABLE q149_t (rf STRING, n BIGINT)")
-      Engine.ddl(s,
-        """INSERT OVERWRITE TABLE q149_t
+      s.sql("CREATE TABLE q149_t (rf STRING, n BIGINT)")
+      s.sql("""INSERT OVERWRITE TABLE q149_t
            SELECT * FROM (
              SELECT l_returnflag AS rf, count(1) AS n FROM lineitem GROUP BY l_returnflag
              UNION ALL
@@ -183,12 +180,10 @@ object Round8Queries {
                 SELECT 0 AS n_nationkey, 'M0' AS n_name, 0 AS rk
                 UNION ALL SELECT 990, 'M99', 99""")
       }
-      Engine.ddl(s,
-        "UPDATE graft_tmp.pdml SET n_name = concat('U_', n_name) WHERE rk = 1")
-      Engine.ddl(s, "DELETE FROM graft_tmp.pdml WHERE rk = 2 AND n_nationkey % 2 = 0")
+      s.sql("UPDATE graft_tmp.pdml SET n_name = concat('U_', n_name) WHERE rk = 1")
+      s.sql("DELETE FROM graft_tmp.pdml WHERE rk = 2 AND n_nationkey % 2 = 0")
       graft.tools.Pools.awaitAll(Seq(srcReady)): Unit
-      Engine.ddl(s,
-        """MERGE INTO graft_tmp.pdml t USING graft_tmp.pdml_src s
+      s.sql("""MERGE INTO graft_tmp.pdml t USING graft_tmp.pdml_src s
            ON t.n_nationkey = s.n_nationkey
            WHEN MATCHED THEN UPDATE SET n_name = s.n_name
            WHEN NOT MATCHED THEN INSERT VALUES (s.n_nationkey, s.n_name, s.rk)""")

@@ -44,9 +44,13 @@ object Pools {
   /** Submit one independent job body onto the shared pool. Called from a
     * pool thread, the body runs inline on the caller instead: a pool body
     * blocking on work queued behind itself and three like it would
-    * otherwise wait forever. */
+    * otherwise wait forever. A body submitted from inside a front-end
+    * handler keeps its `spark.sql` calls on Spark's own parser, as the
+    * handler's thread does. */
   def submit[T](body: => T): Future[T] =
     if (Thread.currentThread.getName.startsWith("graft-overlap-")) Future.fromTry(Try(body))
+    else if (graft.frontend.HiveQlParser.isBypassed)
+      Future(blocking(graft.frontend.HiveQlParser.bypassed(body)))(jobs)
     else Future(blocking(body))(jobs)
 
   /** Settle ALL futures (no early return), then rethrow the FIRST

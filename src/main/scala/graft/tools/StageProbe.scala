@@ -102,10 +102,10 @@ object StageProbe {
               .filter(col("n_regionkey") <= 1)
               .select(col("n_nationkey"), col("n_regionkey").as("pk"))
               .write.insertInto("graft_trp.p"))
-          step("TRUNCATE f (Engine.ddl)")(
-            graft.Engine.ddl(spark, "TRUNCATE TABLE graft_trp.f"): Unit)
+          step("TRUNCATE f")(
+            spark.sql("TRUNCATE TABLE graft_trp.f"): Unit)
           step("TRUNCATE p PARTITION")(
-            graft.Engine.ddl(spark, "TRUNCATE TABLE graft_trp.p PARTITION (pk=0)"): Unit)
+            spark.sql("TRUNCATE TABLE graft_trp.p PARTITION (pk=0)"): Unit)
           step("read-back union")(
             mat(spark.table("graft_trp.p")
               .select(col("n_nationkey").cast("long").as("k"), col("pk"))

@@ -22,7 +22,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("field() returns 1-based index, 0 on miss, 0 on null needle") {
-    Engine.install(spark)
     val df = Seq(("b", "x"), ("z", "y"), (null, "z")).toDF("needle", "pad")
     val got = df.select(call_function("field", col("needle"),
       lit("a"), lit("b"), lit("c")).as("f")).collect().map(_.getInt(0)).toSeq
@@ -30,14 +29,12 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("field() works from SQL text") {
-    Engine.install(spark)
     Seq("F").toDF("s").createOrReplaceTempView("field_t")
     assert(spark.sql("SELECT field(s, 'O','F','P') FROM field_t")
       .collect().head.getInt(0) == 2)
   }
 
   test("fused dot_product/int_dot equal the composed HOF forms bit-for-bit") {
-    Engine.install(spark)
     val e = graft.operators.Similarity.prep(Tables.t(spark, sf, "embeddings"))
     e.createOrReplaceTempView("dot_spec_e")
     codegenOnly {
@@ -81,7 +78,6 @@ class FunctionsSpec extends SparkSpec {
   }
 
   test("sorted_intersect_count/atleast equal the built-in set ops (codegen only)") {
-    Engine.install(spark)
     // randomized sorted distinct long sets (fixed seed), the dedup tset
     // shape: parity with array_intersect pinned exactly
     val rnd = new scala.util.Random(42)

@@ -12,38 +12,17 @@ import scala.jdk.CollectionConverters._
   *
   * Like a .q file, a script may hold MULTIPLE statements separated by a
   * line-ending semicolon (DROP/CREATE/multi-INSERT/...); the LAST
-  * statement's result is the golden. Statements run through Engine.ddl so
-  * the CREATE FUNCTION surface is available to scripts too.
+  * statement's result is the golden. Scripts run through Engine.script,
+  * whose statements reach the session's HiveQL parser through plain
+  * spark.sql (HiveQlSessionSpec runs a sample on a session that has only
+  * the extension).
   */
 class GoldenSpec extends SparkSpec {
-
-  private val goldenDir: Path = {
-    // prefer the source tree (so regen writes where git sees it)
-    val src = Paths.get("src/test/resources/golden")
-    if (Files.isDirectory(src)) src
-    else Paths.get(getClass.getResource("/golden").toURI)
-  }
-
-  private def canon(v: Any): String = v match {
-    case null => "NULL"
-    case d: Double => f"$d%.6g"
-    case f: Float => f"${f.toDouble}%.6g"
-    case b: Array[Byte] => "0x" + b.map("%02x".format(_)).mkString // not [B@addr
-    case x => x.toString
-  }
-
-  private def canonicalize(df: org.apache.spark.sql.DataFrame): String = {
-    val cols = df.columns.sorted
-    val proj = df.selectExpr(cols.map(c => s"`$c`"): _*)
-    val rows = proj.collect()
-      .map(r => (0 until r.length).map(i => canon(r.get(i))).mkString("\t"))
-      .sorted
-    (cols.mkString("\t") +: rows).mkString("\n") + "\n"
-  }
+  import GoldenSpec.canonicalize
 
   private lazy val ready: Unit = Tables.views(spark, sf, Tables.all: _*)
 
-  Files.list(goldenDir).iterator().asScala
+  Files.list(GoldenSpec.dir).iterator().asScala
     .filter(_.toString.endsWith(".sql")).toSeq.sortBy(_.toString)
     .foreach { sqlPath =>
       val name = sqlPath.getFileName.toString.stripSuffix(".sql")
@@ -80,4 +59,31 @@ class GoldenSpec extends SparkSpec {
         }
       }
     }
+}
+
+object GoldenSpec {
+
+  val dir: Path = {
+    // prefer the source tree (so regen writes where git sees it)
+    val src = Paths.get("src/test/resources/golden")
+    if (Files.isDirectory(src)) src
+    else Paths.get(getClass.getResource("/golden").toURI)
+  }
+
+  private def canon(v: Any): String = v match {
+    case null => "NULL"
+    case d: Double => f"$d%.6g"
+    case f: Float => f"${f.toDouble}%.6g"
+    case b: Array[Byte] => "0x" + b.map("%02x".format(_)).mkString // not [B@addr
+    case x => x.toString
+  }
+
+  def canonicalize(df: org.apache.spark.sql.DataFrame): String = {
+    val cols = df.columns.sorted
+    val proj = df.selectExpr(cols.map(c => s"`$c`"): _*)
+    val rows = proj.collect()
+      .map(r => (0 until r.length).map(i => canon(r.get(i))).mkString("\t"))
+      .sorted
+    (cols.mkString("\t") +: rows).mkString("\n") + "\n"
+  }
 }

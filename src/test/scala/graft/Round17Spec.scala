@@ -122,9 +122,11 @@ class Round17Spec extends SparkSpec {
     freshDb()
     val snap = operators.Auth.snapshot(spark)
     try {
-      // created OUTSIDE engine tracking: no owners-map entry
+      // created OUTSIDE engine tracking (Spark's own parser, past the
+      // front end): no owners-map entry
       spark.sql("DROP TABLE IF EXISTS graft_tmp.r17_ownbf")
-      spark.sql("CREATE TABLE graft_tmp.r17_ownbf (i INT) USING parquet")
+      frontend.HiveQlParser.bypassed(
+        spark.sql("CREATE TABLE graft_tmp.r17_ownbf (i INT) USING parquet"))
       assert(operators.Auth.ownerOf(spark, "graft_tmp", "r17_ownbf").isEmpty)
       val cat = spark.sessionState.catalog
       val id = TableIdentifier("r17_ownbf", Some("graft_tmp"))
@@ -143,7 +145,8 @@ class Round17Spec extends SparkSpec {
       // (pre-tracking contract unchanged when nobody recorded anything):
       // the failure a stranger hits is the separate Drop PRIVILEGE gate,
       // never OBJECT OWNERSHIP
-      spark.sql("CREATE TABLE graft_tmp.r17_ownbf2 (i INT) USING parquet")
+      frontend.HiveQlParser.bypassed(
+        spark.sql("CREATE TABLE graft_tmp.r17_ownbf2 (i INT) USING parquet"))
       cat.alterTable(cat.getTableMetadata(
         TableIdentifier("r17_ownbf2", Some("graft_tmp"))).copy(owner = ""))
       withSqlStd {

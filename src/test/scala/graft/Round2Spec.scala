@@ -89,7 +89,6 @@ class Round2Spec extends SparkSpec {
   }
 
   test("parse_url_tuple extracts parts; malformed URLs and unknown parts are null") {
-    Engine.install(spark)
     Seq("https://user@example.com/a/b?x=1&y=2#frag", ":::not a url")
       .toDF("url").createOrReplaceTempView("r2_urls")
     val rows = spark.sql(
@@ -163,7 +162,6 @@ class Round2Spec extends SparkSpec {
   }
 
   test("in_file matches whole lines only, null str -> null, codegen path") {
-    Engine.install(spark)
     val f = java.nio.file.Paths.get(tools.Tmp.dir("infile_spec"), "dict.txt")
     java.nio.file.Files.write(f, "alpha\nbeta\n".getBytes("UTF-8"))
     // force doGenCode (no interpreted fallback) for the assertion

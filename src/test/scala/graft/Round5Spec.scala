@@ -58,7 +58,6 @@ class Round5Spec extends SparkSpec {
   }
 
   test("fused cosine_sim equals the composed form bit-for-bit, codegen path") {
-    Engine.install(spark)
     val e = graft.operators.Similarity.prep(Tables.t(spark, sf, "embeddings"))
     e.createOrReplaceTempView("cos_spec_e")
     // force doGenCode (no interpreted fallback) for the assertion

@@ -333,7 +333,7 @@ class Round7Spec extends SparkSpec {
   }
 
   test("greatest/least return NULL on any NULL argument (HIVE-12082)") {
-    val r = Engine.install(spark)
+    val r = spark
       .sql("""SELECT greatest(1, 2, NULL), least(1, NULL),
                      greatest(1, 2), least(3, 4, 2),
                      greatest('a', NULL, 'c')""").collect()(0)

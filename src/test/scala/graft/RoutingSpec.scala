@@ -10,8 +10,28 @@ import java.nio.file.Files
   * SHOW PARTITIONS on a view vs a graft table vs a parquet table, the
   * EXPLAIN family). */
 class RoutingSpec extends SparkSpec {
+  import RoutingSpec._
 
-  private val cases: Seq[(String, String)] = Seq(
+  test("every statement reaches its declared handler") {
+    fixtures(spark) {
+      val wrong = cases.flatMap { case (stmt, want) =>
+        val got = frontend.Router.route(spark, stmt)
+        if (got == want) None else Some(s"$stmt -> $got (want $want)")
+      }
+      assert(wrong.isEmpty, wrong.mkString("\n"))
+    }
+  }
+
+  test("the routing table covers every handler") {
+    val declared = (frontend.Router.early ++ frontend.Router.late).map(_.name)
+    assert(declared.distinct == declared, "handler names must be unique")
+    assert(declared.toSet == cases.map(_._2).toSet)
+  }
+}
+
+object RoutingSpec {
+
+  val cases: Seq[(String, String)] = Seq(
     "SHOW ROLES" -> "authorization",
     "SET mapred.reduce.tasks=4" -> "set-bridged",
     "ALTER TABLE rt_t TOUCH" -> "touch",
@@ -92,7 +112,8 @@ class RoutingSpec extends SparkSpec {
     "CREATE TABLE rt_c AS SELECT count(*) FROM rt_t" -> "ctas-names",
     "-- a leading comment line\nSELECT 1" -> "insert-or-native")
 
-  private def fixtures(body: => Unit): Unit = {
+  /** The catalog objects the statements name, for the length of `body`. */
+  def fixtures(spark: org.apache.spark.sql.SparkSession)(body: => Unit): Unit = {
     val dir = Files.createTempDirectory("routing").toString
     spark.sql("CREATE TABLE rt_t (id INT, s STRING) USING parquet")
     spark.sql("""CREATE TABLE rt_part (id INT, s STRING) USING parquet
@@ -114,21 +135,5 @@ class RoutingSpec extends SparkSpec {
       Seq("rt_t", "rt_part", "rt_graft", "rt_het", "rt_prot")
         .foreach(t => spark.sql(s"DROP TABLE IF EXISTS $t"))
     }
-  }
-
-  test("every statement reaches its declared handler") {
-    fixtures {
-      val wrong = cases.flatMap { case (stmt, want) =>
-        val got = frontend.Router.route(spark, stmt)
-        if (got == want) None else Some(s"$stmt -> $got (want $want)")
-      }
-      assert(wrong.isEmpty, wrong.mkString("\n"))
-    }
-  }
-
-  test("the routing table covers every handler") {
-    val declared = (frontend.Router.early ++ frontend.Router.late).map(_.name)
-    assert(declared.distinct == declared, "handler names must be unique")
-    assert(declared.toSet == cases.map(_._2).toSet)
   }
 }
