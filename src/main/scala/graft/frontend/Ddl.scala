@@ -3,7 +3,6 @@ package frontend
 
 import org.apache.spark.sql.SparkSession
 import SqlText._
-import Dml.execInsertStmt
 
 /** CREATE / ALTER TABLE and VIEW statement bodies: table rewrites that
   * land rows through CTAS + swap (SET FILEFORMAT, CHANGE / REPLACE
@@ -617,7 +616,7 @@ private[graft] object Ddl {
         // the target with the declared types, then insert (trailing
         // select columns feed the partition columns dynamically)
         spark.sql(s"CREATE TABLE $tmp ($ddl) USING $provider$opts$partBy")
-        execInsertStmt(spark, s"INSERT INTO TABLE $tmp $selectSql"): Unit
+        Dml.writeSql(spark, s"INSERT INTO TABLE $tmp $selectSql")
       case None =>
         spark.sql(s"CREATE TABLE $tmp USING $provider$opts$partBy$clustering AS $selectSql")
     }

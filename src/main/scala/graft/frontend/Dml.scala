@@ -1,14 +1,23 @@
 package graft
 package frontend
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, GraftDatasetBridge, SparkSession}
+import org.apache.spark.sql.catalyst.analysis.{UnresolvedPartitionSpec, UnresolvedRelation,
+  UnresolvedTable}
+import org.apache.spark.sql.catalyst.catalog.CatalogUtils
+import org.apache.spark.sql.catalyst.expressions.{Alias, Literal, NamedExpression, Substring}
+import org.apache.spark.sql.catalyst.plans.logical.{CreateTableAsSelect, InsertIntoDir,
+  InsertIntoStatement, LogicalPlan, OptionList, Project, TruncatePartition, TruncateTable,
+  UnresolvedTableSpec, UnresolvedWith}
+import org.apache.spark.sql.catalyst.util.{CharVarcharUtils, QuotingUtils}
+import org.apache.spark.sql.types.{CharType, VarcharType}
 import SqlText._
 
-/** Data-changing statements: INSERT in every Hive shape (dynamic
-  * partition guards, the implicit-cast retry, self-read overwrite
-  * staging, small-file merge, hetero-partition routing, FROM-first
-  * multi-insert), row-level UPDATE / DELETE / MERGE onto the
-  * copy-on-write engine, LOAD DATA and EXPORT / IMPORT TABLE. */
+/** Data-changing statements: INSERT in every Hive shape, read from
+  * Spark's parsed plan (dynamic partition guards, the implicit-cast
+  * retry, self-read overwrite staging, small-file merge, hetero-partition
+  * routing, FROM-first multi-insert), row-level UPDATE / DELETE / MERGE
+  * onto the copy-on-write engine, LOAD DATA and EXPORT / IMPORT TABLE. */
 private[graft] object Dml {
 
   val loadDataRe =
@@ -36,25 +45,12 @@ private[graft] object Dml {
   val importRe =
     """(?is)\s*IMPORT\s+(EXTERNAL\s+)?TABLE\s+([\w.]+)(?:\s+PARTITION\s*\(([^)]*)\))?\s+FROM\s+'((?:[^'\\]|\\.)+)'(?:\s+LOCATION\s+'((?:[^'\\]|\\.)+)')?\s*;?\s*""".r
 
-  // INSERT OVERWRITE TABLE t PARTITION (static spec) IF NOT EXISTS SELECT …
-  // — Hive skips the insert when the target partition already exists
-  // (SemanticAnalyzer; only legal with a fully-static spec). Spark's
-  // parser rejects the clause, so it's intercepted: existence check
-  // against the catalog, then the plain statement or a no-op.
-  val insertIfNotExistsRe =
-    """(?is)\s*(INSERT\s+OVERWRITE\s+TABLE\s+([\w.]+)\s+PARTITION\s*\(([^)]*)\))\s+IF\s+NOT\s+EXISTS\s*(.+)""".r
-
   val insertBranchRe =
     """(?is)\s*INSERT\s+(OVERWRITE|INTO)\s+(?:TABLE\s+)?([\w.]+)\s*(?:PARTITION\s*\(([^)]*)\))?\s+(SELECT.+)""".r
   private val insertTransformBranchRe =
     """(?is)\s*INSERT\s+(OVERWRITE|INTO)\s+(?:TABLE\s+)?([\w.]+)\s*(?:PARTITION\s*\(([^)]*)\))?\s+((?:MAP|REDUCE)\b.+)""".r
   private val insertSchemaBranchRe =
     """(?is)\s*INSERT\s+(OVERWRITE|INTO)\s+(?:TABLE\s+)?([\w.]+)\s*(\(\s*[\w`]+(?:\s*,\s*[\w`]+)*\s*\))\s+(SELECT.+)""".r
-  private val insertValuesRe =
-    """(?is)\s*INSERT\s+(OVERWRITE|INTO)\s+(?:TABLE\s+)?([\w.]+)\s*(?:PARTITION\s*\(([^)]*)\))?\s+VALUES\s+(.+?)\s*;?\s*""".r
-  // target-table extraction for ANY insert form (SELECT or VALUES tail)
-  private val insertTargetRe =
-    """(?is)\s*INSERT\s+(?:OVERWRITE|INTO)\s+(?:TABLE\s+)?([\w.]+).*""".r
   private val whenUpdateRe =
     """(?is)\s*WHEN\s+MATCHED\s+(?:AND\s+(.+?)\s+)?THEN\s+UPDATE\s+SET\s+(.+?)\s*""".r
   private val whenDeleteRe =
@@ -111,26 +107,6 @@ private[graft] object Dml {
     sqlMerge(spark, stmt, desc)
   }
 
-  /** INSERT OVERWRITE TABLE t PARTITION (static spec) IF NOT EXISTS: a
-    * no-op when the partition already exists. */
-  def insertIfNotExists(spark: SparkSession, prefix: String, table: String,
-      spec: String, rest: String): Unit = {
-    val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
-    val specMap = spec.split(",").map { kv =>
-      require(kv.contains("="), // dynamic column (no value given)
-        s"IF NOT EXISTS needs a fully-static partition spec, got: $kv")
-      val Array(k, v) = kv.split("=", 2).map(_.trim)
-      k.toLowerCase -> v.stripPrefix("'").stripSuffix("'")
-    }.toMap
-    val exists = spark.sessionState.catalog
-      .listPartitions(ident, Some(specMap)).nonEmpty
-    // through the full insert route (NOT a bare spark.sql): the
-    // rewritten statement must still see the dyn-part guards, the
-    // Hive-cast retry, small-file merge/autogather, and the
-    // heterogeneous-partition write routing
-    if (!exists) insertWithHiveCasts(spark, prefix + " " + rest): Unit
-  }
-
   def exportTable(spark: SparkSession, table: String, part: String,
       dir: String): Unit = {
     val meta = TableDesc.of(spark, table).meta
@@ -170,59 +146,80 @@ private[graft] object Dml {
       external = ext != null, explicitLocation = loc != null)
   }
 
-  private val csvToSerdeKeys = Seq("sep" -> "field.delim",
+  /** The plan Spark parsed for a statement no handler claims. A write —
+    * INSERT (a CTE prefix included), INSERT OVERWRITE DIRECTORY, CTAS,
+    * TRUNCATE — runs as Hive's SemanticAnalyzer runs it: each guard reads
+    * the plan's fields and each retry rewrites the plan, never the SQL
+    * text. Any other plan just runs. */
+  def write(spark: SparkSession, plan: LogicalPlan): Unit = plan match {
+    // a CTE prefix scopes over the query (the target never names a CTE)
+    case UnresolvedWith(i: InsertIntoStatement, ctes, recursive) =>
+      write(spark, i.copy(query = UnresolvedWith(i.query, ctes, recursive)))
+    case i: InsertIntoStatement => insert(spark, i)
+    // TRUNCATE clears data at each catalog partition location — with a
+    // partition archived that would destroy the relocated subtree while
+    // the archive entry persists (the reference refuses truncating
+    // archived partitions)
+    case TruncateTable(t: UnresolvedTable) =>
+      TableDesc.find(spark, nameOf(t.multipartIdentifier))
+        .foreach(requireNoArchiveConflict(_, None, "TRUNCATE"))
+      run(spark, plan)
+    case TruncatePartition(t: UnresolvedTable, UnresolvedPartitionSpec(spec, _)) =>
+      TableDesc.find(spark, nameOf(t.multipartIdentifier))
+        .foreach(requireNoArchiveConflict(_, Some(spec.toSeq), "TRUNCATE"))
+      run(spark, plan)
+    case _ =>
+      try run(spark, plan)
+      catch { case e: Exception => asGraftText(spark, plan, e) }
+  }
+
+  /** Statement text a handler builds, parsed once and run by [[write]]. */
+  def writeSql(spark: SparkSession, sqlText: String): Unit =
+    write(spark, HiveQlParser.sparkParser(spark).parsePlan(sqlText))
+
+  private def nameOf(parts: Seq[String]): String =
+    parts.map(QuotingUtils.quoteIfNeeded).mkString(".")
+
+  private def run(spark: SparkSession, plan: LogicalPlan): Unit =
+    GraftDatasetBridge.ofRows(spark, plan): Unit
+
+  private def refresh(spark: SparkSession, table: String): Unit =
+    try spark.sql(s"REFRESH TABLE $table"): Unit
+    catch { case _: Exception => () } // a temp-view target etc.
+
+  private val csvToSerdeKeys = Map("sep" -> "field.delim",
     "nullValue" -> "serialization.null.format", "escape" -> "escape.delim")
 
-  /** Every statement no other handler claims: INSERT shapes through the
-    * shared insert route, anything else through Spark SQL unchanged. */
-  def insertOrNative(spark: SparkSession, stmt: String): DataFrame =
-    // the self-read INSERT OVERWRITE staging and the Hive implicit-cast
-    // retry both live inside insertWithHiveCasts so every insert route
-    // (plain and FROM-first branches) shares them
-    try insertWithHiveCasts(spark, stmt)
-    catch {
-      // a text directory export whose SELECT carries complex types
-      // exceeds the csv datasource; the serde-faithful fallback is
-      // graft-text (same \001 layout, nested \002/\003 for the
-      // complex columns — what Hive itself writes). Types are only
-      // known post-analysis, hence retry rather than pre-route.
-      case e: Exception
-          if (String.valueOf(e.getMessage)
-              .contains("UNSUPPORTED_DATA_TYPE_FOR_DATASOURCE") &&
-              stmt.contains("USING csv")) ||
-            String.valueOf(e.getMessage)
-              .contains("Only Data Sources providing FileFormat") =>
-        val dirRe = ("""(?is)\s*INSERT\s+OVERWRITE\s+(?:LOCAL\s+)?""" +
-          """DIRECTORY\s+'([^']+)'\s+USING\s+`?([\w-]+)`?\s*""" +
-          """(?:OPTIONS\s*\(([^)]*)\))?\s*(.*)""").r
-        stmt match {
-          case dirRe(dir, prov, optText, select) =>
-            val pair = """`?([\w.]+)`?\s*=\s*'((?:[^'\\]|\\.)*)'""".r
-            val pairs = pair.findAllMatchIn(Option(optText).getOrElse(""))
-              .map(p => p.group(1) ->
-                p.group(2).replace("\\'", "'").replace("\\\\", "\\"))
-              .toSeq
-            // option names remap to the serde's
-            val (provider, opts) =
-              if (prov == "csv")
-                ("graft-text", pairs.flatMap { case (k, v) =>
-                  csvToSerdeKeys.toMap.get(k).map(_ -> v) })
-              else (prov, pairs)
-            spark.sql(select).write.format(provider)
-              .options(opts.toMap).mode("overwrite").save(dir)
-            spark.emptyDataFrame
-          // CTAS into a text table whose SELECT carries complex types:
-          // the column types are only known post-analysis, so the
-          // rewrite routed to csv — retry as a graft-text CTAS (DSv2
-          // CTAS works; option keys remap to the serde's names)
-          case _ if "(?is)\\bCREATE\\s+TABLE\\b".r.findFirstIn(stmt).isDefined &&
-              !stmt.contains("header = ") =>
-            insertWithHiveCasts(spark, csvToSerdeKeys.foldLeft(
-              stmt.replace("USING csv", "USING `graft-text`")) { case (s, (k, v)) =>
-              s.replace(s"$k = ", s"`$v` = ") })
-          case _ => throw e
-        }
+  /** A directory export or CTAS whose SELECT carries complex types
+    * exceeds the csv datasource, and a directory export cannot write a
+    * DSv2-only provider. The serde-faithful fallback is graft-text (the
+    * same \001 layout, nested \002/\003 for the complex columns — what
+    * Hive itself writes) with the csv option names remapped to the
+    * serde's. Types are only known post-analysis, hence a retry rather
+    * than a pre-route. */
+  private def asGraftText(spark: SparkSession, plan: LogicalPlan, e: Exception): Unit = {
+    val msg = String.valueOf(e.getMessage)
+    val complex = msg.contains("UNSUPPORTED_DATA_TYPE_FOR_DATASOURCE")
+    def save(d: InsertIntoDir, provider: String, opts: Map[String, String]): Unit =
+      GraftDatasetBridge.ofRows(spark, d.child).write.format(provider).options(opts)
+        .mode("overwrite").save(CatalogUtils.URIToString(d.storage.locationUri.get))
+    plan match {
+      case d: InsertIntoDir if complex && d.provider.contains("csv") =>
+        save(d, "graft-text", d.storage.properties.flatMap { case (k, v) =>
+          csvToSerdeKeys.get(k).map(_ -> v) })
+      case d: InsertIntoDir if msg.contains("Only Data Sources providing FileFormat") =>
+        save(d, d.provider.get, d.storage.properties)
+      case c: CreateTableAsSelect if complex => c.tableSpec match {
+        case t: UnresolvedTableSpec if t.provider.contains("csv") &&
+            !t.optionExpression.options.exists(_._1 == "header") =>
+          run(spark, c.copy(tableSpec = t.copy(provider = Some("graft-text"),
+            optionExpression = OptionList(t.optionExpression.options.map {
+              case (k, v) => csvToSerdeKeys.getOrElse(k, k) -> v }))))
+        case _ => throw e
+      }
+      case _ => throw e
     }
+  }
 
   /** MERGE INTO target [AS t] USING source [AS s] ON keys WHEN ... SQL
     * text, routed to the copy-on-write upsert (`operators.Acid.mergeInto`).
@@ -406,6 +403,74 @@ private[graft] object Dml {
     spark.sql(s"REFRESH TABLE $table"): Unit
   }
 
+  /** One INSERT. Its target's [[TableDesc]] is read once and serves every
+    * guard and retry; the PARTITION clause is read in declared column
+    * order, None for a dynamic column. */
+  private def insert(spark: SparkSession, i0: InsertIntoStatement): Unit = {
+    val (name, desc) = i0.table match {
+      case u: UnresolvedRelation =>
+        val name = nameOf(u.multipartIdentifier)
+        (name, TableDesc.find(spark, name))
+      case t => (t.nodeName, None)
+    }
+    val declared = desc.fold(Seq.empty[String])(_.partCols)
+    val spec = Partitions.inDeclaredOrder(declared, i0.partitionSpec.toSeq)
+    // the clause's values when it names no dynamic column
+    val staticSpec = Some(spec.collect { case (k, Some(v)) => k -> v })
+      .filter(s => s.nonEmpty && s.length == spec.length)
+    // IF NOT EXISTS (the parser allows it on static specs only): Hive
+    // skips the insert when the target partition already exists
+    if (i0.ifPartitionNotExists && desc.zip(staticSpec).exists { case (d, s) =>
+        spark.sessionState.catalog.listPartitions(d.meta.identifier, Some(s.map {
+          case (k, v) => declared.find(_.equalsIgnoreCase(k)).getOrElse(k) -> v }.toMap))
+          .nonEmpty }) return
+    val i = i0.copy(ifPartitionNotExists = false)
+    desc.foreach(requireNoArchiveConflict(_, staticSpec, "Insert"))
+    if (desc.filter(_.heteroEntries.nonEmpty).exists(heteroInsert(spark, i, _, staticSpec)))
+      return
+    dynPartGuards(spark, name, spec)
+    // bucketed targets are NEVER merged: repartition(n) would strip the
+    // bucket-id file naming Spark derives bucket membership from — the
+    // same invariant loadData enforces; Hive's
+    // ConditionalResolverMergeFiles likewise skips bucketed outputs
+    val mergeOn = Seq("hive.merge.mapfiles", "hive.merge.mapredfiles",
+      "hive.merge.sparkfiles", "hive.merge.tezfiles").exists(k =>
+      spark.conf.getOption(k).exists(_.trim.equalsIgnoreCase("true")))
+    val mergeBefore = desc.filter(d => mergeOn && d.meta.bucketSpec.isEmpty).flatMap(d =>
+      scala.util.Try { val dir = mergeScope(d, staticSpec); (d, dir, listDataFiles(spark, dir)) }
+        .toOption) // a view target has no location: merge is a no-op
+    val dynCols = spec.count(_._2.isEmpty)
+    if (dynCols > 0 && Seq("hive.exec.max.dynamic.partitions",
+        "hive.exec.max.dynamic.partitions.pernode",
+        "hive.metastore.partition.name.whitelist.pattern").exists(k =>
+          spark.conf.getOption(k).exists(_.trim.nonEmpty)))
+      withDynCap(spark, i, name, dynCols)(exec(spark, _, name, desc))
+    else exec(spark, i, name, desc)
+    mergeBefore.foreach { case (d, dir, before) => autoMergeSmallFiles(spark, d, dir, before) }
+    // hive.stats.autogather (HiveConf.java:1184, default true there —
+    // opt-in here, Spark parity): Hive gathers basic table stats as part
+    // of every INSERT's job; the Spark equivalent is an ANALYZE after the
+    // write, so the refreshed rowCount/sizeInBytes feed broadcast and
+    // CBO decisions without a manual ANALYZE. COST CAVEAT (why opt-in,
+    // not default-on like Hive): the reference reads its counts from the
+    // write job's own counters at O(job) cost, while ANALYZE rescans the
+    // table — O(table) per statement. Suitable for rebuild-style
+    // pipelines; a high-frequency small-append workload should ANALYZE
+    // on its own cadence instead.
+    if (spark.conf.getOption("hive.stats.autogather").exists(_.trim.equalsIgnoreCase("true")))
+      desc.foreach { d =>
+        // stats gathering is a maintenance task: it must work under
+        // strict mode too (Hive's autogather reads job counters, never
+        // a checked query), so the internal count runs suspended
+        try graft.plans.StrictChecks.suspended(spark) {
+          spark.sql(s"ANALYZE TABLE ${d.name} COMPUTE STATISTICS"): Unit
+        } catch { case _: Exception => () }
+      }
+  }
+
+  private def clause(spec: Seq[(String, Option[String])]): String =
+    spec.map { case (k, v) => k + v.fold("")(x => s"='$x'") }.mkString(", ")
+
   /** Hive dynamic-partition INSERT guards (SemanticAnalyzer
     * validatePartSpec / ErrorMsg 10096/10094/10095, clientnegative
     * dyn_part1–4.q), evaluated from the session confs each statement:
@@ -413,45 +478,34 @@ private[graft] object Dml {
     *   - `hive.exec.dynamic.partition.mode=strict` requires >=1 static
     *     column in the PARTITION clause (the engine's default stays
     *     nonstrict — Spark parity);
-    *   - a static column may never FOLLOW a dynamic one (the directory
-    *     tree can't nest a constant under a varying parent);
+    *   - a static column may never FOLLOW a dynamic one in declared
+    *     order (the directory tree can't nest a constant under a varying
+    *     parent);
     *   - `hive.exec.max.dynamic.partitions`, when explicitly set, caps
     *     the distinct dynamic tuples the statement writes — enforced in
-    *     cappedDynInsert over a ONE-PASS checkpoint staging (the SELECT
-    *     materializes once; the count and the write read the same rows,
-    *     so nondeterministic SELECTs are guarded too, and a tripped cap
-    *     leaves the table untouched).
+    *     [[withDynCap]].
     */
-  private def dynPartGuards(spark: SparkSession, stmt: String): Unit =
-    stmt match {
-      case insertBranchRe(_, tbl, part, _) if part != null &&
-          splitPartSpec(part).exists(!_.contains("=")) =>
-        // quote-aware split: PARTITION (p='a,b') is static, not dynamic
-        val kvs = splitPartSpec(part)
-        val dynIdx = kvs.indexWhere(!_.contains("="))
-        if (!spark.conf.get("hive.exec.dynamic.partition", "true").trim
-            .equalsIgnoreCase("true"))
-          sys.error("Dynamic partition is disabled " +
-            "(hive.exec.dynamic.partition=false): " +
-            s"INSERT into $tbl PARTITION ($part)")
-        if (spark.conf.get("hive.exec.dynamic.partition.mode", "nonstrict")
-            .trim.equalsIgnoreCase("strict") && dynIdx == 0)
-          sys.error("Dynamic partition strict mode requires at least one " +
-            "static partition column " +
-            "(set hive.exec.dynamic.partition.mode=nonstrict): " +
-            s"INSERT into $tbl PARTITION ($part)")
-        kvs.drop(dynIdx).find(_.contains("=")).foreach(k =>
-          sys.error(s"Dynamic partition cannot be the parent of a static " +
-            s"partition: ${k.trim} follows a dynamic column in " +
-            s"PARTITION ($part)"))
-        // hive.exec.max.dynamic.partitions enforcement moved to
-        // cappedDynInsert: the SELECT materializes once, the distinct
-        // dynamic tuples are counted on the materialized rows, and the
-        // write runs from the same checkpoint — one pass, nondeterministic
-        // SELECTs included, nothing written when the cap trips
-        ()
-      case _ => ()
+  private def dynPartGuards(spark: SparkSession, name: String,
+      spec: Seq[(String, Option[String])]): Unit = {
+    val dynIdx = spec.indexWhere(_._2.isEmpty)
+    if (dynIdx >= 0) {
+      if (!spark.conf.get("hive.exec.dynamic.partition", "true").trim
+          .equalsIgnoreCase("true"))
+        sys.error("Dynamic partition is disabled " +
+          "(hive.exec.dynamic.partition=false): " +
+          s"INSERT into $name PARTITION (${clause(spec)})")
+      if (spark.conf.get("hive.exec.dynamic.partition.mode", "nonstrict")
+          .trim.equalsIgnoreCase("strict") && dynIdx == 0)
+        sys.error("Dynamic partition strict mode requires at least one " +
+          "static partition column " +
+          "(set hive.exec.dynamic.partition.mode=nonstrict): " +
+          s"INSERT into $name PARTITION (${clause(spec)})")
+      spec.drop(dynIdx).find(_._2.isDefined).foreach(kv =>
+        sys.error(s"Dynamic partition cannot be the parent of a static " +
+          s"partition: ${clause(Seq(kv))} follows a dynamic column in " +
+          s"PARTITION (${clause(spec)})"))
     }
+  }
 
   /** Post-INSERT small-file auto-merge (reference: hive.merge.mapfiles /
     * hive.merge.mapredfiles, ConditionalTask + ConditionalResolverMergeFiles
@@ -497,28 +551,6 @@ private[graft] object Dml {
     }
   }
 
-  private def smallFileMergeSnapshot(spark: SparkSession, stmt: String)
-      : Option[(String, Map[String, Long])] = {
-    val on = Seq("hive.merge.mapfiles", "hive.merge.mapredfiles",
-      "hive.merge.sparkfiles", "hive.merge.tezfiles").exists(k =>
-      spark.conf.getOption(k).exists(_.trim.equalsIgnoreCase("true")))
-    if (!on) None
-    else stmt match {
-      case insertTargetRe(tbl) =>
-        // a temp-view or path-less target has no location: merge is a no-op
-        try {
-          // bucketed targets are NEVER merged: repartition(n) would strip
-          // the bucket-id file naming Spark derives bucket membership
-          // from — the same invariant loadData enforces; Hive's
-          // ConditionalResolverMergeFiles likewise skips bucketed outputs
-          val desc = TableDesc.of(spark, tbl)
-          if (desc.meta.bucketSpec.isDefined) None
-          else Some(tbl -> listDataFiles(spark, mergeScope(desc, stmt)))
-        } catch { case _: Exception => None }
-      case _ => None
-    }
-  }
-
   /** Row-rewriting maintenance (CoW DML) rewrites files wherever the
     * predicate reaches — with any partition archived, a rewrite could
     * target the relocated subtree, so refuse until UNARCHIVE (archived
@@ -547,87 +579,59 @@ private[graft] object Dml {
   /** INSERT routing for heterogeneous-format tables: a fully-static spec
     * aimed at a diverged partition becomes a path write in that
     * partition's own format; dynamic/absent specs are refused (rows could
-    * land in a diverged directory in the wrong format). Returns Some when
-    * the statement was fully handled here. */
-  private def heteroInsertRoute(spark: SparkSession, stmt: String)
-      : Option[DataFrame] = {
-    val target = stmt match {
-      case insertTargetRe(tbl) =>
-        TableDesc.find(spark, tbl).filter(_.heteroEntries.nonEmpty)
-      case _ => None
-    }
-    target.flatMap { desc => stmt match {
-      case insertBranchRe(mode, tbl, part, select) =>
-        val entries = desc.heteroEntries
-        val meta = desc.meta
-        val partCols = meta.partitionColumnNames
-        val kvs = Option(part).map(splitPartSpec).getOrElse(Nil)
-        val fullyStatic = kvs.nonEmpty && kvs.forall(_.contains("=")) &&
-          kvs.length == partCols.length
-        if (!fullyStatic)
-          sys.error(s"INSERT into $tbl requires a fully-static PARTITION " +
-            "spec while partitions carry heterogeneous file formats " +
-            "(a dynamic write could land base-format rows in a diverged " +
-            "partition directory)")
-        val specPath = Partitions.partSubdirLiteral(desc.partCols, part)
-        entries.find(_._1 == specPath).map { case (_, prov) =>
-          val dir = meta.location.toString.stripSuffix("/") + "/" + specPath
-          val dataFields = meta.schema.fields
-            .filterNot(f => partCols.exists(_.equalsIgnoreCase(f.name)))
-          val df = spark.sql(select)
-          require(df.columns.length == dataFields.length,
-            s"INSERT into $tbl PARTITION ($part): expected " +
-              s"${dataFields.length} data columns, got ${df.columns.length}")
-          val cast = df.select(df.columns.zip(dataFields).map { case (c, f) =>
-            org.apache.spark.sql.functions.col(s"`$c`")
-              .cast(f.dataType).as(f.name) }.toSeq: _*)
-          cast.write.format(prov)
-            .options(graft.plans.HeteroPartitions.providerOptions(prov))
-            .mode(if (mode.equalsIgnoreCase("OVERWRITE")) "overwrite" else "append")
-            .save(dir)
-          spark.sql(s"REFRESH TABLE $tbl")
-          spark.emptyDataFrame
-        } // non-diverged static partition: None -> the normal insert path
-      case _ =>
-        sys.error(s"INSERT into ${desc.name} requires the PARTITION (...) SELECT " +
-          "form while partitions carry heterogeneous file formats")
-    } }
+    * land in a diverged directory in the wrong format). True when the
+    * statement was fully handled here. */
+  private def heteroInsert(spark: SparkSession, i: InsertIntoStatement,
+      desc: TableDesc, staticSpec: Option[Seq[(String, String)]]): Boolean = {
+    val partCols = desc.partCols
+    val spec = staticSpec.filter(_.length == partCols.length).getOrElse(
+      sys.error(s"INSERT into ${desc.name} requires a fully-static PARTITION " +
+        "spec while partitions carry heterogeneous file formats " +
+        "(a dynamic write could land base-format rows in a diverged " +
+        "partition directory)"))
+    require(i.userSpecifiedCols.isEmpty && !i.byName, s"INSERT into ${desc.name} " +
+      "cannot name its columns while partitions carry heterogeneous file formats")
+    val specPath = Partitions.partSubdir(partCols, spec)
+    desc.heteroEntries.find(_._1 == specPath).exists { case (_, prov) =>
+      val dataFields = desc.meta.schema.fields
+        .filterNot(f => partCols.exists(_.equalsIgnoreCase(f.name)))
+      val df = GraftDatasetBridge.ofRows(spark, i.query)
+      require(df.columns.length == dataFields.length,
+        s"INSERT into ${desc.name} PARTITION ($specPath): expected " +
+          s"${dataFields.length} data columns, got ${df.columns.length}")
+      df.select(df.columns.zip(dataFields).map { case (c, f) =>
+          org.apache.spark.sql.functions.col(s"`$c`").cast(f.dataType).as(f.name) }.toSeq: _*)
+        .write.format(prov)
+        .options(graft.plans.HeteroPartitions.providerOptions(prov))
+        .mode(if (i.overwrite) "overwrite" else "append")
+        .save(desc.location.stripSuffix("/") + "/" + specPath)
+      refresh(spark, desc.name)
+      true
+    } // non-diverged static partition: false -> the normal insert path
   }
 
   /** Listing scope for the auto-merge diff: a fully-STATIC PARTITION spec
     * confines the statement's output to one directory, so both listings
     * cover just that subtree instead of the whole table — an append into
     * one partition of a million-file table lists that partition only.
-    * Dynamic or absent specs fall back to the table root. */
-  private def mergeScope(desc: TableDesc, stmt: String): String = {
-    val root = desc.location
-    stmt match {
-      case insertBranchRe(_, _, part, _) if part != null &&
-          splitPartSpec(part).forall(_.contains("=")) =>
-        // directory names use the DECLARED column case and Spark's path
-        // escaping — PARTITION (P='a:b') lands in p=a%3Ab, so the scoped
-        // listing must spell it the same way or the diff sees nothing.
-        // partSubdirLiteral gives the LITERAL name; the scope string
-        // feeds new Path(str), which decodes one round of %-escapes —
-        // so emit the URI spelling (a%253Ab), the same convention
-        // FileStatus.toUri / _metadata use
-        val sub = Partitions.partSubdirLiteral(desc.partCols, part)
-          .replace("%", "%25")
-        root.stripSuffix("/") + "/" + sub
-      case _ => root
-    }
-  }
+    * Dynamic or absent specs fall back to the table root. Directory names
+    * use the DECLARED column case and Spark's path escaping — PARTITION
+    * (P='a:b') lands in p=a%3Ab; partSubdir gives that LITERAL name, and
+    * the scope string feeds new Path(URI), which decodes one round of
+    * %-escapes — so emit the URI spelling (a%253Ab), the same convention
+    * FileStatus.toUri / _metadata use. */
+  private[graft] def mergeScope(desc: TableDesc,
+      staticSpec: Option[Seq[(String, String)]]): String =
+    desc.location.stripSuffix("/") + staticSpec.fold("")(s =>
+      "/" + Partitions.partSubdir(desc.partCols, s).replace("%", "%25"))
 
-  private def autoMergeSmallFiles(spark: SparkSession, tbl: String,
-      stmt: String, before: Map[String, Long]): Unit = {
+  private def autoMergeSmallFiles(spark: SparkSession, desc: TableDesc,
+      dir: String, before: Map[String, Long]): Unit = {
     val avgSize = spark.conf.getOption("hive.merge.smallfiles.avgsize")
       .map(_.trim.toLong).getOrElse(16000000L)
     val perTask = spark.conf.getOption("hive.merge.size.per.task")
       .map(_.trim.toLong).getOrElse(256000000L)
-    val desc = TableDesc.of(spark, tbl)
-    val after = listDataFiles(spark, mergeScope(desc, stmt))
-    val fresh = after.filter { case (f, _) => !before.contains(f) }
-    if (fresh.isEmpty) return
+    val fresh = listDataFiles(spark, dir).filter { case (f, _) => !before.contains(f) }
     var merged = false
     // per-directory decision, as the reference resolves per partition
     fresh.groupBy { case (f, _) => f.substring(0, f.lastIndexOf('/')) }
@@ -641,278 +645,152 @@ private[graft] object Dml {
           merged = true
         }
       }
-    if (merged)
-      try { spark.sql(s"REFRESH TABLE $tbl"): Unit }
-      catch { case _: Exception => () }
+    if (merged) refresh(spark, desc.name)
   }
 
   /** Refuse a write aimed at (or overlapping) an archived partition —
     * the reference's compile-time guard ("Insert conflict with existing
     * archive", SemanticAnalyzer; clientnegative/archive_insert1.q). A
-    * dynamic or absent spec on a table with ANY archived partition
-    * refuses too: the write could land under an archived prefix. */
+    * dynamic or absent spec (None) on a table with ANY archived
+    * partition refuses too: the write could land under an archived
+    * prefix. */
+  def requireNoArchiveConflict(desc: TableDesc,
+      staticSpec: Option[Seq[(String, String)]], op: String): Unit =
+    operators.Archive.conflict(desc.archiveEntries,
+        staticSpec.fold("")(Partitions.partSubdir(desc.partCols, _)))
+      .foreach(e => sys.error(s"$op conflict with existing archive: $e"))
+
+  /** [[requireNoArchiveConflict]] for a PARTITION clause's text. */
   def requireNoArchiveConflict(spark: SparkSession, table: String,
       part: Option[String], op: String): Unit =
-    if (operators.Archive.entriesOf(spark, table).nonEmpty) {
-      val path = part match {
-        case Some(p) if splitPartSpec(p).forall(_.contains("=")) =>
-          operators.Archive.specPath(spark, table, p, requirePrefix = false)
-        case _ => "" // dynamic or whole-table: could touch anything
-      }
-      operators.Archive.conflict(spark, table, path).foreach(e =>
-        sys.error(s"$op conflict with existing archive: $e"))
-    }
+    TableDesc.find(spark, table).foreach(requireNoArchiveConflict(_,
+      part.filter(splitPartSpec(_).forall(_.contains("="))).map(Partitions.staticSpec), op))
 
-  // target + static spec for ANY insert form (SELECT or VALUES tail) —
-  // insertBranchRe's SELECT-only tail would drop the PARTITION clause
-  // of a VALUES insert and misread it as a whole-table write. Backticks
-  // accepted: a quoted target must not slip past the archive guard.
-  private val insertTargetPartRe =
-    """(?is)\s*INSERT\s+(?:OVERWRITE|INTO)\s+(?:TABLE\s+)?(?!DIRECTORY\b|LOCAL\b)([\w.`]+)\s*(?:PARTITION\s*\(([^)]*)\))?.*""".r
   private val mergeTargetRe = """(?is)MERGE\s+INTO\s+([\w.`]+)""".r
-  private val truncateTargetRe =
-    """(?is)\s*TRUNCATE\s+TABLE\s+([\w.`]+)\s*(?:PARTITION\s*\(([^)]*)\))?\s*;?\s*""".r
-
-  private def insertWithHiveCasts(spark: SparkSession,
-      stmt: String): org.apache.spark.sql.DataFrame = {
-    stmt match {
-      case insertTargetPartRe(tbl, part) =>
-        requireNoArchiveConflict(spark, tbl.replace("`", ""), Option(part), "Insert")
-      // TRUNCATE clears data at each catalog partition location — with a
-      // partition archived that would destroy the relocated subtree while
-      // the archive entry persists (the reference refuses truncating
-      // archived partitions)
-      case truncateTargetRe(tbl, part) =>
-        requireNoArchiveConflict(spark, tbl.replace("`", ""), Option(part), "TRUNCATE")
-      case _ => ()
-    }
-    heteroInsertRoute(spark, stmt).getOrElse(
-      insertWithHiveCasts0(spark, stmt))
-  }
 
   /** One-pass hive.exec.max.dynamic.partitions enforcement: the SELECT
     * materializes ONCE through a tracked checkpoint (durable under
     * spark.graft.checkpointDir — tools/Checkpoints.cut), the distinct
     * dynamic tuples are counted on the materialized rows, and only then
-    * does the write run FROM the checkpoint. Nothing touches the table
-    * when the cap trips (clean rollback), nondeterministic SELECTs are
-    * now guarded too (the count and the write see the same rows), and
-    * the old pre-write probe's double SELECT execution is gone — at
-    * 100 TB the staging pass costs one executor-disk materialization,
-    * the same scratch-dir shape the reference's FileSinkOperator uses.
-    * Returns None when the statement has no explicit cap to enforce. */
-  private val dynCapSeq = new java.util.concurrent.atomic.AtomicInteger
-  private def cappedDynInsert(spark: SparkSession,
-      stmt: String): Option[org.apache.spark.sql.DataFrame] = stmt match {
-    case insertBranchRe(mode, tbl, part, select)
-        if part != null && splitPartSpec(part).exists(!_.contains("=")) &&
-          (spark.conf.getOption("hive.exec.max.dynamic.partitions").isDefined ||
-            spark.conf.getOption("hive.exec.max.dynamic.partitions.pernode")
-              .isDefined ||
-            spark.conf
-              .getOption("hive.metastore.partition.name.whitelist.pattern")
-              .exists(_.trim.nonEmpty)) &&
-          !select.contains("graft_dyncap_") => // the rewritten stage itself
-      // pernode caps what one node creates (dyn_part_max_per_node.q) — on
-      // this engine a write is one Spark job over one logical cluster, so
-      // the binding cap is simply the smaller of the two when both are set
-      val total = spark.conf.getOption("hive.exec.max.dynamic.partitions")
-        .map(_.trim.toInt)
-      val perNode = spark.conf
-        .getOption("hive.exec.max.dynamic.partitions.pernode").map(_.trim.toInt)
-      val whitelist = spark.conf
-        .getOption("hive.metastore.partition.name.whitelist.pattern")
-        .map(_.trim).filter(_.nonEmpty)
-      val kvs = splitPartSpec(part)
-      val dynCols = kvs.count(!_.contains("="))
-      val staged = graft.tools.Checkpoints.cut(spark.sql(select))
-      try {
-        val tail = staged.columns.takeRight(dynCols).toSeq
-        // dynamic whitelist leg (dynamic_partitions_with_whitelist.q): a
-        // DATA-derived partition value outside the pattern refuses BEFORE
-        // the write — the one-pass staging guarantees nothing lands. The
-        // check is distributed (rlike filter, first offender collected);
-        // NULL values become Hive's default partition and skip the gate.
-        whitelist.foreach { pat =>
-          import org.apache.spark.sql.functions.col
-          val anchored = "^(?:" + pat + ")$"
-          tail.foreach { c =>
-            val bad = staged.filter(col(c).isNotNull &&
-                !col(c).cast("string").rlike(anchored))
-              .select(col(c).cast("string")).limit(1).collect()
-            if (bad.nonEmpty)
-              sys.error(s"Partition value '${bad(0).getString(0)}' " +
-                s"contains a character not matched by whitelist pattern " +
-                s"'$pat'. (configure with " +
-                "hive.metastore.partition.name.whitelist.pattern)")
-          }
+    * does `write` run the INSERT over the checkpoint. Nothing touches
+    * the table when the cap trips (clean rollback), nondeterministic
+    * SELECTs are guarded too (the count and the write see the same
+    * rows), and the SELECT runs once — at 100 TB the staging pass costs
+    * one executor-disk materialization, the same scratch-dir shape the
+    * reference's FileSinkOperator uses. */
+  private def withDynCap(spark: SparkSession, i: InsertIntoStatement,
+      name: String, dynCols: Int)(write: InsertIntoStatement => Unit): Unit = {
+    // pernode caps what one node creates (dyn_part_max_per_node.q) — on
+    // this engine a write is one Spark job over one logical cluster, so
+    // the binding cap is simply the smaller of the two when both are set
+    val total = spark.conf.getOption("hive.exec.max.dynamic.partitions")
+      .map(_.trim.toInt)
+    val perNode = spark.conf
+      .getOption("hive.exec.max.dynamic.partitions.pernode").map(_.trim.toInt)
+    val whitelist = spark.conf
+      .getOption("hive.metastore.partition.name.whitelist.pattern")
+      .map(_.trim).filter(_.nonEmpty)
+    val staged = graft.tools.Checkpoints.cut(GraftDatasetBridge.ofRows(spark, i.query))
+    try {
+      val tail = staged.columns.takeRight(dynCols).toSeq
+      // dynamic whitelist leg (dynamic_partitions_with_whitelist.q): a
+      // DATA-derived partition value outside the pattern refuses BEFORE
+      // the write — the one-pass staging guarantees nothing lands. The
+      // check is distributed (rlike filter, first offender collected);
+      // NULL values become Hive's default partition and skip the gate.
+      whitelist.foreach { pat =>
+        import org.apache.spark.sql.functions.col
+        val anchored = "^(?:" + pat + ")$"
+        tail.foreach { c =>
+          val bad = staged.filter(col(c).isNotNull &&
+              !col(c).cast("string").rlike(anchored))
+            .select(col(c).cast("string")).limit(1).collect()
+          if (bad.nonEmpty)
+            sys.error(s"Partition value '${bad(0).getString(0)}' " +
+              s"contains a character not matched by whitelist pattern " +
+              s"'$pat'. (configure with " +
+              "hive.metastore.partition.name.whitelist.pattern)")
         }
-        if (total.isDefined || perNode.isDefined) {
-          val max = (total.toSeq ++ perNode.toSeq).min
-          val capName =
-            if (perNode.exists(p => total.forall(p <= _)))
-              "hive.exec.max.dynamic.partitions.pernode"
-            else "hive.exec.max.dynamic.partitions"
-          val n = staged.select(tail.map(org.apache.spark.sql.functions.col): _*)
-            .distinct().limit(max + 1).count()
-          if (n > max) sys.error(s"Dynamic partition INSERT into $tbl " +
-            s"would create at least $n partitions, which is more than " +
-            s"$capName=$max")
-        }
-        val view = s"graft_dyncap_${dynCapSeq.incrementAndGet()}"
-        staged.createOrReplaceTempView(view)
-        try Some(execInsertStmt(spark,
-          s"INSERT $mode TABLE $tbl PARTITION ($part) SELECT * FROM $view"))
-        finally spark.catalog.dropTempView(view)
-      } finally graft.tools.Checkpoints.release(staged)
-    case _ => None
+      }
+      if (total.isDefined || perNode.isDefined) {
+        val max = (total.toSeq ++ perNode.toSeq).min
+        val capName =
+          if (perNode.exists(p => total.forall(p <= _)))
+            "hive.exec.max.dynamic.partitions.pernode"
+          else "hive.exec.max.dynamic.partitions"
+        val n = staged.select(tail.map(org.apache.spark.sql.functions.col): _*)
+          .distinct().limit(max + 1).count()
+        if (n > max) sys.error(s"Dynamic partition INSERT into $name " +
+          s"would create at least $n partitions, which is more than " +
+          s"$capName=$max")
+      }
+      write(i.copy(query = staged.queryExecution.analyzed))
+    } finally graft.tools.Checkpoints.release(staged)
   }
 
-  /** spark.sql with the Hive implicit-cast retry: on CANNOT_SAFELY_CAST
-    * the statement re-runs on a CLONED session under the LEGACY store
-    * policy so the permissive cast is truly statement-scoped — flipping
-    * the shared session conf would let a concurrently-executing statement
-    * momentarily run with silently-nulling casts. The clone shares the
-    * external catalog (the INSERT lands in the same tables) and snapshots
-    * temp views. */
-  def execInsertStmt(spark: SparkSession,
-      stmt: String): org.apache.spark.sql.DataFrame =
-    try spark.sql(stmt)
+  /** Runs an INSERT plan with Hive's write-time retries, each a rewrite
+    * of the plan:
+    *  - CANNOT_SAFELY_CAST: Hive casts implicitly on write, so the same
+    *    plan re-runs on a CLONED session under the LEGACY store policy —
+    *    flipping the shared session conf would let a concurrently
+    *    executing statement momentarily run with silently-nulling casts.
+    *    The clone shares the external catalog and snapshots temp views.
+    *  - EXCEED_LIMIT_LENGTH: Hive TRUNCATES a char/varchar value longer
+    *    than the declared length (HiveChar/HiveVarchar setValue;
+    *    alter_char2.q reads the 10-char prefix of a long string in a
+    *    char(10)), so the query is projected through substr().
+    *  - UNSUPPORTED_OVERWRITE: Hive allows INSERT OVERWRITE of a table the
+    *    query also reads (MoveTask stages the result before the move —
+    *    union22.q rebuilds a partition from the table itself), so the
+    *    query materializes first through a TRACKED checkpoint (breaking
+    *    lineage to the target's scan) and the INSERT, static spec
+    *    included, runs over it.
+    */
+  private def exec(spark: SparkSession, i: InsertIntoStatement, name: String,
+      desc: Option[TableDesc]): Unit =
+    try run(spark, i)
     catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getMessage.contains("CANNOT_SAFELY_CAST") =>
+      case e: AnalysisException if e.getMessage.contains("CANNOT_SAFELY_CAST") =>
         val cloned = org.apache.spark.sql.GraftSessionClone.cloneSession(spark)
         cloned.conf.set("spark.sql.storeAssignmentPolicy", "LEGACY")
-        val res = cloned.sql(stmt)
+        run(cloned, i)
         // the clone invalidated ITS relation cache; refresh the target in
         // the caller's session too so it doesn't serve a stale file list
-        // (insertTargetRe also covers INSERT INTO t VALUES (...) — the
-        // SELECT-only branch regex would miss the VALUES form)
-        stmt match {
-          case insertTargetRe(target) =>
-            try { spark.sql(s"REFRESH TABLE $target"): Unit }
-            catch { case _: Exception => () }
-          case _ => ()
-        }
-        res
-      // Hive TRUNCATES a char/varchar value longer than the declared
-      // length on write (HiveChar/HiveVarchar setValue enforce maxLength;
-      // alter_char2.q inserts a long string into char(10) and reads the
-      // 10-char prefix) — Spark refuses with EXCEED_LIMIT_LENGTH. Retry
-      // the statement with the source projected through substr() at each
-      // over-length char/varchar target column.
+        refresh(spark, name)
       case e: Throwable if {
         def chain(t: Throwable, d: Int): Boolean = t != null && d < 8 &&
           (Option(t.getMessage).exists(_.contains("EXCEED_LIMIT_LENGTH")) ||
             chain(t.getCause, d + 1))
-        chain(e, 0) && !stmt.contains("graft_trunc_")
-      } => truncatingInsert(spark, stmt).getOrElse(throw e)
+        chain(e, 0)
+      } => run(spark, truncated(spark, i, desc).getOrElse(throw e))
+      case e: AnalysisException
+          if i.overwrite && e.getMessage.contains("UNSUPPORTED_OVERWRITE") =>
+        val staged = graft.tools.Checkpoints.local(GraftDatasetBridge.ofRows(spark, i.query))
+        try exec(spark, i.copy(query = staged.queryExecution.analyzed), name, desc)
+        finally graft.tools.Checkpoints.release(staged)
     }
 
-  /** Re-issue an insert with char/varchar columns truncated to their
-    * declared lengths (Hive write semantics). None when the statement
-    * shape or target schema gives nothing to truncate. */
-  private def truncatingInsert(spark: SparkSession,
-      stmt: String): Option[org.apache.spark.sql.DataFrame] = {
-    import org.apache.spark.sql.catalyst.util.CharVarcharUtils
-    val (mode, tbl, part, source) = stmt match {
-      case insertBranchRe(m, t, p, sel) => (m, t, p, sel)
-      case insertValuesRe(m, t, p, vals) =>
-        (m, t, p, s"SELECT * FROM (VALUES $vals)")
-      case _ => return None
-    }
-    val meta = TableDesc.find(spark, tbl).getOrElse(return None).meta
-    val partCols = meta.partitionColumnNames
-    val dataFields = meta.schema.fields.filterNot(f =>
-      partCols.exists(_.equalsIgnoreCase(f.name)))
-    val limits: Seq[Option[Int]] = dataFields.toSeq.map { f =>
-      CharVarcharUtils.getRawType(f.metadata).collect {
-        case org.apache.spark.sql.types.CharType(n) => n
-        case org.apache.spark.sql.types.VarcharType(n) => n
+  /** The INSERT with its query's columns cut to the declared length at
+    * each char/varchar target column; None when the target declares none
+    * or the query does not feed the columns by position. The query's
+    * outputs map positionally: data columns first, then any DYNAMIC
+    * partition columns (never truncated). */
+  private def truncated(spark: SparkSession, i: InsertIntoStatement,
+      desc: Option[TableDesc]): Option[InsertIntoStatement] =
+    desc.filter(_ => i.userSpecifiedCols.isEmpty && !i.byName).flatMap { d =>
+      val limits = d.meta.schema.filterNot(f => d.partCols.exists(_.equalsIgnoreCase(f.name)))
+        .map(f => CharVarcharUtils.getRawType(f.metadata).collect {
+          case CharType(n) => n
+          case VarcharType(n) => n
+        })
+      Option.when(limits.exists(_.isDefined)) {
+        val q = GraftDatasetBridge.ofRows(spark, i.query).queryExecution.analyzed
+        i.copy(query = Project(q.output.zipWithIndex.map { case (a, n) =>
+          limits.lift(n).flatten.fold[NamedExpression](a)(len =>
+            Alias(Substring(a, Literal(1), Literal(len)), a.name)())
+        }, q))
       }
     }
-    if (!limits.exists(_.isDefined)) return None
-    val src = spark.sql(source)
-    // source outputs map positionally: data columns first, then any
-    // DYNAMIC partition columns (never truncated)
-    val proj = src.columns.zipWithIndex.map { case (c, i) =>
-      limits.lift(i).flatten match {
-        case Some(n) => s"substr(`$c`, 1, $n) AS `$c`"
-        case None => s"`$c`"
-      }
-    }
-    val view = s"graft_trunc_${dynCapSeq.incrementAndGet()}"
-    src.createOrReplaceTempView(view)
-    try {
-      val partClause = Option(part).map(p => s" PARTITION ($p)").getOrElse("")
-      Some(spark.sql(s"INSERT $mode TABLE $tbl$partClause " +
-        s"SELECT ${proj.mkString(", ")} FROM $view"))
-    } finally spark.catalog.dropTempView(view): Unit
-  }
-
-  private def insertWithHiveCasts0(spark: SparkSession,
-      stmt: String): org.apache.spark.sql.DataFrame = {
-    dynPartGuards(spark, stmt)
-    val mergeSnap = smallFileMergeSnapshot(spark, stmt)
-    def run(): org.apache.spark.sql.DataFrame =
-      cappedDynInsert(spark, stmt).getOrElse(execInsertStmt(spark, stmt))
-    val out = try run()
-    catch {
-      // Hive allows INSERT OVERWRITE of a table that the query also reads
-      // (MoveTask stages the result before the move — union22.q rebuilds a
-      // partition from the table itself). Spark rejects the plan outright,
-      // so stage it: materialize the SELECT with a TRACKED checkpoint
-      // (breaking lineage to the target's scan; a bare localCheckpoint +
-      // Dataset.unpersist would leak its storage blocks — the round-4
-      // class), turn a static PARTITION spec into trailing constant
-      // columns, and insertInto under dynamic-overwrite mode. Living here
-      // gives EVERY insert route the fallback — FROM-first branches
-      // included, not just the plain statement shape.
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getMessage.contains("UNSUPPORTED_OVERWRITE") =>
-        stmt match {
-          case insertBranchRe(mode, target, partSpec, select)
-              if mode.equalsIgnoreCase("OVERWRITE") =>
-            val staticCols = Option(partSpec).toSeq.flatMap(
-              _.split(",").toSeq.filter(_.contains("=")).map { kv =>
-                val Array(_, v) = kv.split("=", 2).map(_.trim); v
-              })
-            val sel = if (staticCols.isEmpty) select
-              else s"SELECT q.*, ${staticCols.mkString(", ")} FROM ($select) q"
-            val staged = graft.tools.Checkpoints.local(spark.sql(sel))
-            try staged.write.mode("overwrite").insertInto(target)
-            finally graft.tools.Checkpoints.release(staged)
-            spark.sql(s"REFRESH TABLE $target")
-            spark.emptyDataFrame
-          case _ => throw e
-        }
-    }
-    mergeSnap.foreach { case (tbl, before) =>
-      autoMergeSmallFiles(spark, tbl, stmt, before) }
-    // hive.stats.autogather (HiveConf.java:1184, default true there —
-    // opt-in here, Spark parity): Hive gathers basic table stats as part
-    // of every INSERT's job; the Spark equivalent is an ANALYZE after the
-    // write, so the refreshed rowCount/sizeInBytes feed broadcast and
-    // CBO decisions without a manual ANALYZE. COST CAVEAT (why opt-in,
-    // not default-on like Hive): the reference reads its counts from the
-    // write job's own counters at O(job) cost, while ANALYZE rescans the
-    // table — O(table) per statement. Suitable for rebuild-style
-    // pipelines; a high-frequency small-append workload should ANALYZE
-    // on its own cadence instead.
-    if (spark.conf.getOption("hive.stats.autogather")
-        .exists(_.trim.equalsIgnoreCase("true")))
-      stmt match {
-        case insertTargetRe(tbl) =>
-          // stats gathering is a maintenance task: it must work under
-          // strict mode too (Hive's autogather reads job counters, never
-          // a checked query), so the internal count runs suspended
-          try graft.plans.StrictChecks.suspended(spark) {
-            spark.sql(s"ANALYZE TABLE $tbl COMPUTE STATISTICS"): Unit
-          } catch { case _: Exception => () } // temp-view target etc.
-        case _ => ()
-      }
-    out
-  }
 
   /** Multi-insert SQL text — `FROM src INSERT OVERWRITE TABLE t1 SELECT ...
     * INSERT INTO t2 SELECT ...` (reference parse/SemanticAnalyzer.java:8711
@@ -999,7 +877,7 @@ private[graft] object Dml {
     if (branches.lengthCompare(1) == 0) {
       // single destination (innerjoin.q's FROM-first INSERT): a plain
       // statement rewrite, any source shape
-      insertWithHiveCasts(spark,
+      writeSql(spark,
         s"${branches.head.insertPrefix} ${branches.head.selectSql(s"FROM $src")}")
       return
     }
@@ -1018,7 +896,7 @@ private[graft] object Dml {
         (b, v, snap)
       }
       try views.foreach { case (b, v, _) =>
-        insertWithHiveCasts(spark, s"${b.insertPrefix} SELECT * FROM $v")
+        writeSql(spark, s"${b.insertPrefix} SELECT * FROM $v")
       } finally views.foreach { case (_, v, snap) =>
         spark.catalog.dropTempView(v)
         graft.tools.Checkpoints.release(snap)
@@ -1048,7 +926,7 @@ private[graft] object Dml {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     cached.createOrReplaceTempView(view)
     try branches.foreach { b =>
-      insertWithHiveCasts(spark, s"${b.insertPrefix} ${b.selectSql(fromClause)}")
+      writeSql(spark, s"${b.insertPrefix} ${b.selectSql(fromClause)}")
     } finally {
       spark.catalog.dropTempView(view)
       cached.unpersist()

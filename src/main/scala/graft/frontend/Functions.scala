@@ -248,9 +248,9 @@ private[graft] object Functions {
       case Some(b) =>
         spark.sessionState.functionRegistry.createOrReplaceTempFunction(
           fname, b, "scala_udf")
-        spark.emptyDataFrame
-      case None => Dml.insertOrNative(spark, stmt)
+      case None => Dml.writeSql(spark, stmt)
     }
+    spark.emptyDataFrame
   }
 
   def dropFunction(spark: SparkSession, ifExists: String, name: String): Unit = {

@@ -15,10 +15,11 @@ import org.apache.spark.sql.types.StructType
 
 /** HiveQL as the session's parser (`GraftExtensions`): each `spark.sql`
   * statement makes the [[Router]]'s passes once. A row-less handler, a
-  * write the native handler takes (INSERT, CTAS, TRUNCATE: the insert
-  * route), and a CREATE or LOCATION statement's bookkeeping become a
-  * [[HiveQlCommand]] that runs when Spark executes the plan; any other
-  * native statement is Spark's own plan of the rewritten text; a handler
+  * write the native handler takes (INSERT, CTAS, TRUNCATE: Spark's plan
+  * of it, run by [[Dml.write]]), and a CREATE or LOCATION statement's
+  * bookkeeping become a [[HiveQlCommand]] that runs when Spark executes
+  * the plan; any other native statement is Spark's own plan of the
+  * rewritten text (a text Spark cannot parse fails here); a handler
   * that answers rows gives its frame's plan. The plan carries the
   * handler's name ([[HiveQlParser.HandlerTag]]). Whatever a handler runs
   * reaches Spark's parser directly, so a statement is routed once.
@@ -51,11 +52,8 @@ final class HiveQlParser(spark: SparkSession, val delegate: ParserInterface)
       else routed.run match {
         case e: Router.Effect => HiveQlCommand(routed.handler, e.body)
         case n: Router.Native =>
-          scala.util.Try(parse(n.stmt)).toOption match {
-            case Some(p) if !writes(p) => p
-            case Some(_) => HiveQlCommand(routed.handler, () => n(): Unit)
-            case None => rowsOf(n()) // the insert route's shapes, or the ParseException
-          }
+          val p = parse(n.stmt)
+          if (writes(p)) HiveQlCommand(routed.handler, () => Dml.write(spark, p)) else p
         case rows => rowsOf(rows())
       }
     plan.setTagValue(HandlerTag, routed.handler)

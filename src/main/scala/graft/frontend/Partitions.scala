@@ -509,21 +509,40 @@ private[graft] object Partitions {
     }
   }
 
-  /** On-disk partition SUBPATH for a static spec — declared column case
-    * plus Spark/Hive path escaping, in the LITERAL spelling (the real
-    * directory name, e.g. p=a%3Ab for value a:b). Shared by LOAD's
-    * destination and the auto-merge scope so every writer/reader of the
-    * layout spells directories identically. */
-  def partSubdirLiteral(declared: Seq[String], spec: String): String = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    splitPartSpec(spec).map { kv =>
-      val Array(k0, v0) = kv.split("=", 2).map(_.trim)
-      val k = declared.find(_.equalsIgnoreCase(k0)).getOrElse(k0)
-      ExternalCatalogUtils.escapePathName(k) + "=" +
-        ExternalCatalogUtils.escapePathName(
-          unescapeSqlValue(v0.stripPrefix("'").stripSuffix("'")))
+  /** On-disk partition SUBPATH for a static spec — declared column order
+    * and case plus Spark/Hive path escaping, in the LITERAL spelling (the
+    * real directory name, e.g. p=a%3Ab for value a:b; a NULL value is
+    * Hive's default partition). Shared by INSERT, LOAD and the auto-merge
+    * scope so every writer/reader of the layout spells directories
+    * identically. */
+  def partSubdir(declared: Seq[String], spec: Seq[(String, String)]): String = {
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils._
+    inDeclaredOrder(declared, spec).map { case (k, v) =>
+      escapePathName(declared.find(_.equalsIgnoreCase(k)).getOrElse(k)) + "=" +
+        (if (v == null) DEFAULT_PARTITION_NAME else escapePathName(v))
     }.mkString("/")
   }
+
+  /** [[partSubdir]] of a PARTITION clause's text. */
+  def partSubdirLiteral(declared: Seq[String], spec: String): String =
+    partSubdir(declared, staticSpec(spec))
+
+  /** A static PARTITION clause's text as (column, value) pairs. */
+  def staticSpec(spec: String): Seq[(String, String)] =
+    splitPartSpec(spec).map { kv =>
+      val Array(k, v) = kv.split("=", 2).map(_.trim)
+      k -> unescapeSqlValue(v.stripPrefix("'").stripSuffix("'"))
+    }
+
+  /** A spec's entries in the table's declared column order (a parsed
+    * spec's Map keeps no order); unknown columns go last. */
+  def inDeclaredOrder[V](declared: Seq[String], spec: Seq[(String, V)]): Seq[(String, V)] =
+    spec.sortBy { case (k, _) =>
+      declared.indexWhere(_.equalsIgnoreCase(k)) match {
+        case -1 => Int.MaxValue
+        case i => i
+      }
+    }
 
   // ---- view partitions (metadata-only; Hive keeps them in the
   // metastore with no storage). Each entry is the spec in DECLARED

@@ -30,9 +30,10 @@ private[graft] object Router {
     def apply(): DataFrame = { body(); spark.emptyDataFrame }
   }
 
-  /** A statement no handler claims: Spark's own, through the insert route. */
+  /** A statement no handler claims: Spark's own plan of it, run by
+    * [[Dml.write]]. */
   final class Native(spark: SparkSession, val stmt: String) extends Run {
-    def apply(): DataFrame = Dml.insertOrNative(spark, stmt)
+    def apply(): DataFrame = { Dml.writeSql(spark, stmt); spark.emptyDataFrame }
   }
 
   final case class Handler(name: String)(
@@ -168,9 +169,6 @@ private[graft] object Router {
     Handler("change-column") { spark => {
       case Ddl.changeColRe(table, oldC, newC, typ, pos) =>
         done(spark)(Ddl.changeColumn(spark, table, oldC, newC, typ, pos)) } },
-    Handler("insert-if-not-exists") { spark => {
-      case Dml.insertIfNotExistsRe(prefix, table, spec, rest) =>
-        done(spark)(Dml.insertIfNotExists(spark, prefix, table, spec, rest)) } },
     Handler("create-function") { spark => {
       case s @ Functions.createFunRe(name, cls, res) =>
         () => Functions.createFunction(spark, s, name, cls, res) } },

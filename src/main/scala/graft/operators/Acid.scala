@@ -262,14 +262,17 @@ object Acid {
     val lit = new org.apache.hadoop.fs.Path(new java.net.URI(path)).toString
     val df = load(spark, lit, format, schema, options = options)
     // _metadata.file_path spells the URI "file:///p" where a FileSystem
-    // listing yields "file:/p" — match every spelling so the IN list
-    // still prunes at the scan (a normalizing regexp on the column would
-    // defeat file pruning and read the whole directory)
+    // listing yields "file:/p", and a graft table spells it as the
+    // literal path (p=a%3Ab where the URI reads p=a%253Ab) — match every
+    // spelling so the IN list still prunes at the scan (a normalizing
+    // regexp on the column would defeat file pruning and read the whole
+    // directory)
     def bare(f: String) = f.replaceFirst("^[a-zA-Z][\\w+.-]*:/+", "/")
     val variantOf: Map[String, String] = files.flatMap { f =>
-      val b = bare(f)
-      Seq(f, b, "file:" + b, "file://" + b, "file:///" + b.stripPrefix("/"))
-        .map(_ -> f)
+      Seq(f, new org.apache.hadoop.fs.Path(new java.net.URI(f)).toString).flatMap { s =>
+        val b = bare(s)
+        Seq(s, b, "file:" + b, "file://" + b, "file:///" + b.stripPrefix("/"))
+      }.map(_ -> f)
     }.toMap
     val withFile = df.withColumn(FILE, col("_metadata.file_path"))
       .filter(col(FILE).isin(variantOf.keys.toSeq: _*))

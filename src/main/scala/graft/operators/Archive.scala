@@ -74,51 +74,33 @@ object Archive {
 
   /** The archived entry conflicting with a write aimed at `specPath`
     * (empty string = whole-table write, which conflicts with ANY entry). */
-  def conflict(spark: SparkSession, table: String,
-      specPath: String): Option[String] = {
-    val entries = entriesOf(spark, table)
-    if (entries.isEmpty) None
-    else if (specPath.isEmpty) entries.headOption
+  def conflict(entries: Seq[String], specPath: String): Option[String] =
+    if (specPath.isEmpty) entries.headOption
     else entries.find(e => overlaps(e, specPath))
-  }
 
   /** Escape a (possibly partial) PARTITION spec into its directory path,
     * validating it names a LEADING PREFIX of the declared partition
     * columns in order — the reference's partial-spec rule
-    * (ArchiveUtils.java:78-79). */
-  def specPath(spark: SparkSession, table: String, specText: String,
-      requirePrefix: Boolean): String = {
+    * (ArchiveUtils.java:78-79); the keys must match the declared order
+    * textually (ErrorMsg 10125, clientnegative/archive_partspec4.q
+    * refuses (hr, ds) on a (ds, hr) table). */
+  def specPath(spark: SparkSession, table: String, specText: String): String = {
     val declared = spark.sessionState.catalog.getTableMetadata(
       spark.sessionState.sqlParser.parseTableIdentifier(table))
       .partitionColumnNames
-    val kvs0 = specText.split(",").map(_.trim).filter(_.nonEmpty).map { kv =>
+    val kvs = specText.split(",").map(_.trim).filter(_.nonEmpty).map { kv =>
       require(kv.contains("="), s"PARTITION spec needs key=value, got: $kv")
       val Array(k, v) = kv.split("=", 2).map(_.trim)
       (k, v.stripPrefix("'").stripSuffix("'"))
     }.toSeq
-    // For the ARCHIVE/UNARCHIVE statement itself (requirePrefix), the
-    // reference demands the spec keys match the declared order TEXTUALLY
-    // (ErrorMsg 10125, clientnegative/archive_partspec4.q refuses
-    // (hr, ds) on a (ds, hr) table) — validate kvs0 as given. For the
-    // WRITE-GATE comparison (requirePrefix=false) an INSERT's PARTITION
-    // clause may legally list keys in any order, so the path builds in
-    // DECLARED order or a reversed-order static spec would miss the
-    // overlap and write into the relocated archive subtree.
-    if (requirePrefix) {
-      require(kvs0.nonEmpty && kvs0.length <= declared.length &&
-          kvs0.zip(declared).forall { case ((k, _), d) => k.equalsIgnoreCase(d) },
-        "Partition columns in partition specification are not the same as " +
-          s"that defined in the table schema. The names and orders have to " +
-          s"be exactly the same. Partition columns in the table schema " +
-          s"are: (${declared.mkString(", ")}), while the partitions " +
-          s"specified in the query are: (${kvs0.map(_._1).mkString(", ")}).")
-    }
-    val kvs = kvs0.sortBy { case (k, _) =>
-      val i = declared.indexWhere(_.equalsIgnoreCase(k))
-      if (i < 0) Int.MaxValue else i
-    }
-    kvs.map { case (k, v) =>
-      val d = declared.find(_.equalsIgnoreCase(k)).getOrElse(k)
+    require(kvs.nonEmpty && kvs.length <= declared.length &&
+        kvs.zip(declared).forall { case ((k, _), d) => k.equalsIgnoreCase(d) },
+      "Partition columns in partition specification are not the same as " +
+        s"that defined in the table schema. The names and orders have to " +
+        s"be exactly the same. Partition columns in the table schema " +
+        s"are: (${declared.mkString(", ")}), while the partitions " +
+        s"specified in the query are: (${kvs.map(_._1).mkString(", ")}).")
+    kvs.zip(declared).map { case ((_, v), d) =>
       ExternalCatalogUtils.escapePathName(d) + "=" +
         ExternalCatalogUtils.escapePathName(v)
     }.mkString("/")
@@ -137,7 +119,7 @@ object Archive {
 
   def archive(spark: SparkSession, table: String, specText: String): Unit = {
     requireEnabled(spark)
-    val path = specPath(spark, table, specText, requirePrefix = true)
+    val path = specPath(spark, table, specText)
     val entries = entriesOf(spark, table)
     require(!entries.exists(e => overlaps(e, path)),
       "Partition(s) already archived") // DDLTask archive's double-archive refusal
@@ -156,7 +138,7 @@ object Archive {
 
   def unarchive(spark: SparkSession, table: String, specText: String): Unit = {
     requireEnabled(spark)
-    val path = specPath(spark, table, specText, requirePrefix = true)
+    val path = specPath(spark, table, specText)
     val entries = entriesOf(spark, table)
     // the reference requires UNARCHIVE at the SAME granularity the
     // ARCHIVE ran at (a har packs one spec; you cannot unpack half)

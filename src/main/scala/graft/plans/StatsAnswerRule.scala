@@ -68,6 +68,14 @@ case class StatsAnswerRule(spark: SparkSession) extends Rule[LogicalPlan] {
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     e.injectParser((session, delegate) => new graft.frontend.HiveQlParser(session, delegate))
+    // the pack re-points greatest, least, std, stddev, variance and hash
+    // at their Hive forms on purpose, and "replaced a previously
+    // registered function" is the only WARN the registry logs. Set here,
+    // not before the builder: the SparkContext's start loads Spark's log4j
+    // profile, which drops a level set earlier.
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.catalyst.analysis.SimpleFunctionRegistry",
+      org.apache.logging.log4j.Level.ERROR)
     graft.functions.FunctionPack.descriptions.foreach(e.injectFunction)
     e.injectOptimizerRule(session => StatsAnswerRule(session))
     // Hive comparison/cast semantics (see HiveSemantics.scala)

@@ -1,7 +1,7 @@
 package org.apache.spark.sql
 
 /** Accessor for the `private[sql]` `SparkSession.cloneSession` — graft's
-  * `frontend.Dml.insertWithHiveCasts` retries a statement under Hive's permissive
+  * `frontend.Dml.write` retries an INSERT under Hive's permissive
   * store-assignment policy, and doing that on a CLONED session (same shared
   * catalog, snapshotted temp views + conf) keeps the override truly
   * statement-scoped instead of briefly flipping the shared session conf for
@@ -14,6 +14,17 @@ object GraftSessionClone {
     // temp-view snapshot) is the closest available isolation
     case other => other.newSession()
   }
+}
+
+/** Accessor for the `private[sql]` `Dataset.ofRows`: a parsed or rewritten
+  * plan as a DataFrame of the session, analyzed under it as the active
+  * session (`sessionState.executePlan`); a command in the plan runs now.
+  * `frontend.Dml.write` runs Spark's parsed write plans through it.
+  */
+object GraftDatasetBridge {
+  def ofRows(spark: SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 }
 
 /** Accessor for the `private[sql]` Column <-> Catalyst Expression bridge

@@ -62,7 +62,7 @@ object RoutingSpec {
     "ALTER TABLE rt_t NOT CLUSTERED" -> "not-clustered",
     "ALTER TABLE rt_t CHANGE s s2 STRING" -> "change-column",
     "INSERT OVERWRITE TABLE rt_part PARTITION (p='a', q='b') IF NOT EXISTS SELECT 1, 's'" ->
-      "insert-if-not-exists",
+      "insert-or-native",
     // a builtin-catalog class, a session-jar class, an unknown class: one
     // handler (a jar class only loads once its USING JAR ships)
     "CREATE TEMPORARY FUNCTION rt_f AS 'org.apache.hadoop.hive.ql.udf.generic.GenericUDFField'" ->
