@@ -65,11 +65,12 @@ object Engine {
   /** Explicit session-close hook for multi-session applications: Hive
     * scopes TEMPORARY tables to the SESSION, and application end (the
     * listener fallback) is too late when many sessions share one
-    * SparkContext. Drops the session's registered temp tables and
-    * releases its per-session registries so the session object is
-    * immediately collectable. Idempotent. */
+    * SparkContext. Drops the session's registered temp tables, frees its
+    * dedup corpus index and releases its per-session registries so the
+    * session object is immediately collectable. Idempotent. */
   def closeSession(s: SparkSession): Unit = {
     dropTempTables(s)
+    graft.operators.Dedup.release(s)
     tempTables.remove(s)
     registered.remove(s)
   }

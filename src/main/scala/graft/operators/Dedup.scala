@@ -87,10 +87,10 @@ object Dedup {
     val hb = tsets.filter(size(col("tset")) >= 1)
       .select(col("doc_id") +: carried :+
         (if (preHashed) col("tset")
-         else expr("transform(tset, h -> xxhash64(h))")).as("hbs"): _*)
+         else transform(col("tset"), h => xxhash64(h))).as("hbs"): _*)
     hb.select(hb.columns.filter(_ != "hbs").toSeq.map(col) ++
       (0 until numHashes).map(i =>
-        expr(s"array_min(transform(hbs, v -> xxhash64($i, v)))").as(s"mh$i")): _*)
+        array_min(transform(col("hbs"), v => xxhash64(lit(i), v))).as(s"mh$i")): _*)
   }
 
   /** Sorted, distinct, hash-encoded token sets `(doc_id, tset)` — the w=1
@@ -101,7 +101,7 @@ object Dedup {
     * set-valued result. */
   private def tokenSets(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"),
-      expr("array_sort(array_distinct(transform(split(text, ' '), t -> xxhash64(t))))")
+      array_sort(array_distinct(transform(split(col("text"), " "), t => xxhash64(t))))
         .as("tset"))
 
   // the sorted-set kernels as Columns over their Catalyst expressions: no
@@ -112,6 +112,23 @@ object Dedup {
 
   private def sortedIntersectAtLeast(a: Column, b: Column, k: Column): Column =
     toColumn(SortedIntersectAtLeast(toExpression(a), toExpression(b), toExpression(k)))
+
+  /** The exact confirm of a candidate pair of sorted token sets: their
+    * jaccard, rounded to 4 decimals, is at least `minJaccard`. Cheapest
+    * test first: the size ratio bounds jaccard, so most failing pairs skip
+    * the intersection; the early-abort merge scan (r18) stops once the
+    * unscanned tails cannot reach inter >= ceil(t'(|a|+|b|)/(1+t')); only
+    * survivors pay the exact merge-scan count. Both bounds use t' =
+    * t-0.001, slack for the rounding (jac >= t-0.00005 > t'), so neither
+    * drops a pair the gate keeps. */
+  private def jaccardAtLeast(a: Column, b: Column, minJaccard: Double): Column = {
+    val tp = minJaccard - 0.001
+    val inter = sortedIntersectCount(a, b).cast("long")
+    least(size(a), size(b)).cast("double") >= lit(tp) * greatest(size(a), size(b)) &&
+      sortedIntersectAtLeast(a, b,
+        ceil(lit(tp) * (size(a) + size(b)) / lit(1.0 + tp)).cast("int")) &&
+      round(inter / (size(a) + size(b) - inter), 4) >= minJaccard
+  }
 
   /** LSH band candidate pairs (da < db, distinct): the equi-join that
     * replaces all-pairs comparison. Shuffle is O(docs × bands).
@@ -271,39 +288,10 @@ object Dedup {
     val sig = signaturesFromSets(tsets, numHashes, withSize = true)
     val cand = minhashCandidates(sig, numHashes, bands, minJaccard,
       distinctPairs = false)
-    // exact-bound prefilter before the per-pair intersection: jaccard is
-    // at most min(|a|,|b|)/max(|a|,|b|) (inter ≤ min, and jac grows with
-    // inter), so a pair whose size ratio cannot reach the threshold —
-    // with slack for the 4-decimal rounding the gate applies — skips the
-    // O(|a|+|b|) array_intersect entirely. Never drops a passing pair.
-    val tp = minJaccard - 0.001
     cand
       .join(tsets.as("ta"), col("da") === col("ta.doc_id"))
       .join(tsets.as("tb"), col("db") === col("tb.doc_id"))
-      .filter(least(size(col("ta.tset")), size(col("tb.tset"))).cast("double") >=
-        lit(tp) * greatest(size(col("ta.tset")), size(col("tb.tset"))))
-      // exact intersection lower bound with early abort (r18): a pair at
-      // round(jac,4) >= t has inter >= ceil(t'(|a|+|b|)/(1+t')), t' =
-      // t-0.001 (the same slack discipline as the size bound — jac >=
-      // t-0.00005 > t', and an integer >= the real bound is >= its
-      // fp-computed ceil). The thresholded merge scan aborts once the
-      // unscanned tails cannot reach the bound, so the ~everything that
-      // fails the jaccard gate costs ~(|a|-k)+(|b|-k) steps, not
-      // |a|+|b| — the dominant CPU term of the fused confirm stage at
-      // 30x. Survivors (true near-dups, few) pay one extra scan before
-      // the exact count below.
-      .filter(sortedIntersectAtLeast(col("ta.tset"), col("tb.tset"),
-        ceil(lit(tp) * (size(col("ta.tset")) + size(col("tb.tset"))) /
-          lit(1.0 + tp)).cast("int")))
-      // merge-scan intersection count over the sorted sets (r18): same
-      // value as size(array_intersect(...)) on distinct inputs, but one
-      // codegen'd O(|a|+|b|) pass with no per-pair hash set or output
-      // array — the confirm's innermost loop at 100 TB
-      .withColumn("inter",
-        sortedIntersectCount(col("ta.tset"), col("tb.tset")).cast("long"))
-      .withColumn("jac", round(col("inter") /
-        (size(col("ta.tset")) + size(col("tb.tset")) - col("inter")), 4))
-      .filter(col("jac") >= minJaccard)
+      .filter(jaccardAtLeast(col("ta.tset"), col("tb.tset"), minJaccard))
       // pair distinct AFTER the confirm (r18): dedupes the confirmed
       // near-dup pairs (corpus-small) instead of every raw band collision
       // — the distinct that sat before the confirm owned 95% of the
@@ -505,16 +493,30 @@ object Dedup {
     * keyed by (path, length, modification time) — the identity Spark's
     * file-status cache uses — plus the hash and band counts. Each piece's
     * sorted token sets, sizes and band hashes are built once and held in
-    * an eager checkpoint for the rest of the session (durable under
-    * `spark.graft.checkpointDir`; `Checkpoints.sweep` leaves them alone).
-    * A call builds only the pieces of files it has not seen and releases
-    * those whose files left the corpus, so a file rewritten in place is a
-    * new key and never answers from stale bands. An ingest that appends
-    * each increment's survivors as a new file therefore signs, per call,
-    * only the batch and that one file. Any other corpus (filtered reads,
-    * in-memory frames) is one unkeyed piece built for that call alone.
-    * A returned frame reads the pieces it was built from: consume it
-    * before the next call over a different file set or a sweep.
+    * an eager checkpoint, with its row count, for the rest of the session
+    * (durable under `spark.graft.checkpointDir`; `Checkpoints.sweep`
+    * leaves them alone; `release` frees them). A call builds only the
+    * pieces of files it has not seen and releases those whose files left
+    * the corpus, so a file rewritten in place is a new key and never
+    * answers from stale bands. An ingest that appends each increment's
+    * survivors as a new file therefore signs, per call, only the batch and
+    * that one file. Any other corpus (filtered reads, in-memory frames) is
+    * one unkeyed piece built for that call alone. A returned frame reads
+    * the pieces it was built from: consume it before the next call over a
+    * different file set or a sweep.
+    *
+    * Join shape, from the row counts the checkpoints return: when the
+    * batch has no more docs than the corpus and its band rows fit Spark's
+    * broadcast size rule (ingest), they are broadcast with their token
+    * sets and the held corpus rows are exploded and probed in place: band
+    * join and confirm run in one narrow stage, and no corpus row is
+    * shuffled, broadcast or joined back. Any other batch (d11 at scale)
+    * takes a keyed repartition into the band join, and only the admitted
+    * candidates join back to both sides' sets; sets carried through that
+    * shuffle cost 4× its bytes on d11 at 30×. Both shapes keep the
+    * size-ratio bound in the band join (r17) and no candidate distinct
+    * (r18): a pair colliding in k bands confirms k times, and the final
+    * `b_id` distinct dedupes.
     *
     * Guarantee: with w=1 token shingles, 64 hashes / 16 bands, a pair at
     * jaccard 0.85 collides in >=1 band with p ≈ 0.99997 (see `resolve`),
@@ -523,61 +525,42 @@ object Dedup {
   def dedupIncrement(corpus: DataFrame, batch: DataFrame,
                      numHashes: Int = 64, bands: Int = 16,
                      minJaccard: Double = 0.85): DataFrame = {
-    val bt = Checkpoints.local(tokenSets(batch))
-    val (index, corpusSigned) = corpusIndex(corpus, numHashes, bands)
-    lastIncrementSignedDocs = Checkpoints.rows(bt) + corpusSigned
-    val ct = index.select(col("doc_id"), col("tset"))
-    val cband = index.select(col("doc_id").as("c_id"), col("sz").as("c_sz"),
-      posexplode(col("bhs")).as(Seq("band", "bh")))
-    // narrow signatures (r17): a projection over the checkpointed batch
-    // token sets, banded once; the band join is the only wide stage left
-    // before the confirm
-    val bband = bandize(signaturesFromSets(bt, numHashes, withSize = true),
-      numHashes, bands)
-      .withColumnRenamed("doc_id", "b_id").withColumnRenamed("sz", "b_sz")
-    // exact size-ratio bound IN the band join (r17, see bandCandidates):
-    // on vocabulary token sets the bands admit most cross pairs, so the
-    // candidate volume — not the signing — is the dominant scale term;
-    // pairs the exact confirm below would discard on sizes alone never
-    // materialize. NO candidate distinct (r18): a pair colliding in k
-    // bands confirms identically k times and the final b_id distinct
-    // already dedupes — the removed pre-confirm distinct exchange owned
-    // 95% of this operator's 30× shuffle records (StageProbe: 84.66M of
-    // 89.05M, raw collisions at k̄≈3.7 rows per colliding pair).
-    // explicit keyed repartition on the probe side: same parallelism pin
-    // as bandCandidates — the fused band-join+confirm stage explodes its
-    // input, so AQE's byte-based coalescing must not fold it to one core
-    val parts = batch.sparkSession.sessionState.conf.numShufflePartitions
-    val cand = bband.repartition(parts, col("band"), col("bh")).as("bb")
-      .join(cband.as("cb"),
-        col("bb.band") === col("cb.band") && col("bb.bh") === col("cb.bh") &&
-        least(col("bb.b_sz"), col("cb.c_sz")).cast("double") >=
-          (lit(minJaccard) - lit(0.001)) *
-            greatest(col("bb.b_sz"), col("cb.c_sz")))
-      .select(col("b_id"), col("c_id"))
-    // same exact-bound size-ratio prefilter as confirmedPairs: skips the
-    // O(|a|+|b|) intersection for pairs that cannot reach the threshold
-    val tp = minJaccard - 0.001
-    val dup = cand
-      .join(bt.as("tb"), col("b_id") === col("tb.doc_id"))
-      .join(ct.as("tc"), col("c_id") === col("tc.doc_id"))
-      .filter(least(size(col("tb.tset")), size(col("tc.tset"))).cast("double") >=
-        lit(tp) * greatest(size(col("tb.tset")), size(col("tc.tset"))))
-      // thresholded early-abort intersection bound before the exact count
-      // (r18) — see confirmedPairs; exact, never drops a passing pair
-      .filter(sortedIntersectAtLeast(col("tb.tset"), col("tc.tset"),
-        ceil(lit(tp) * (size(col("tb.tset")) + size(col("tc.tset"))) /
-          lit(1.0 + tp)).cast("int")))
-      .withColumn("inter",
-        sortedIntersectCount(col("tb.tset"), col("tc.tset")).cast("long"))
-      .withColumn("jac", round(col("inter") /
-        (size(col("tb.tset")) + size(col("tc.tset")) - col("inter")), 4))
-      .filter(col("jac") >= minJaccard)
-      .select(col("b_id")).distinct()
+    val (bt, batchDocs) = Checkpoints.counted(tokenSets(batch))
+    val (index, corpusDocs, corpusSigned) = corpusIndex(corpus, numHashes, bands)
+    lastIncrementSignedDocs = batchDocs + corpusSigned
+    val conf = batch.sparkSession.sessionState.conf
+    // Spark's plan estimate of the batch, once per band row
+    val ingest = batchDocs <= corpusDocs &&
+      bt.queryExecution.optimizedPlan.stats.sizeInBytes * bands <=
+        conf.autoBroadcastJoinThreshold
+    val bband = bandize(signaturesFromSets(bt, numHashes, withSize = true,
+      keepSet = ingest), numHashes, bands)
+      .withColumnsRenamed(Map("doc_id" -> "b_id", "sz" -> "b_sz", "tset" -> "b_tset"))
+    val sameBucket = col("bb.band") === col("cb.band") && col("bb.bh") === col("cb.bh")
+    val dup = if (ingest)
+      index.select(col("doc_id").as("c_id"), col("tset").as("c_tset"),
+          posexplode(col("bhs")).as(Seq("band", "bh"))).as("cb")
+        .join(broadcast(bband.as("bb")),
+          sameBucket && jaccardAtLeast(col("bb.b_tset"), col("cb.c_tset"), minJaccard))
+    else {
+      // keyed repartition: the same parallelism pin as bandCandidates
+      val cand = bband.repartition(conf.numShufflePartitions, col("band"), col("bh")).as("bb")
+        .join(index.select(col("doc_id").as("c_id"), col("sz").as("c_sz"),
+            posexplode(col("bhs")).as(Seq("band", "bh"))).as("cb"),
+          sameBucket && least(col("bb.b_sz"), col("cb.c_sz")).cast("double") >=
+            (lit(minJaccard) - lit(0.001)) * greatest(col("bb.b_sz"), col("cb.c_sz")))
+      cand
+        .join(bt.as("tb"), col("b_id") === col("tb.doc_id"))
+        .join(index.as("tc"), col("c_id") === col("tc.doc_id"))
+        .filter(jaccardAtLeast(col("tb.tset"), col("tc.tset"), minJaccard))
+    }
     // anti-join off the checkpointed batch token sets — the batch parquet
-    // is read exactly once (at checkpoint time), like the corpus
+    // is read exactly once (at checkpoint time), like the corpus. Ingest
+    // dup ids are a subset of a batch that fits a broadcast, so they go too
+    val distinctIds = dup.select(col("b_id")).distinct()
+    val dupIds = if (ingest) broadcast(distinctIds) else distinctIds
     bt.select(col("doc_id"))
-      .join(dup, col("doc_id") === dup("b_id"), "left_anti")
+      .join(dupIds, col("doc_id") === dupIds("b_id"), "left_anti")
   }
 
   /** Batch docs plus not-yet-indexed corpus docs the most recent
@@ -590,40 +573,48 @@ object Dedup {
   private final case class PieceKey(path: String, length: Long, modified: Long,
                                     numHashes: Int, bands: Int)
 
-  /** Per-session corpus index pieces, see `dedupIncrement`. A session's
-    * map is locked while a call refreshes it; its pieces are released only
-    * by later calls on that session. */
-  private val indexes = mutable.Map.empty[SparkSession, mutable.Map[PieceKey, DataFrame]]
+  /** Per-session corpus index pieces with their row counts, see
+    * `dedupIncrement`. A session's map is locked while a call refreshes
+    * it; its pieces are released by later calls on that session, or all
+    * at once by `release`. */
+  private val indexes =
+    mutable.Map.empty[SparkSession, mutable.Map[PieceKey, (DataFrame, Long)]]
+
+  /** Free `session`'s corpus index and forget the session (`Engine.closeSession`
+    * calls it). A no-op on a session without one. */
+  def release(session: SparkSession): Unit =
+    indexes.synchronized(indexes.remove(session)).foreach { held =>
+      held.synchronized { held.values.foreach(p => Checkpoints.release(p._1)); held.clear() }
+    }
 
   /** The corpus as `(doc_id, tset, sz, bhs)` rows — its sorted token sets,
     * their sizes and the docs' band hashes — unioned from index pieces,
-    * plus how many corpus docs this call had to sign. */
+    * plus its doc count and how many corpus docs this call had to sign. */
   private def corpusIndex(corpus: DataFrame, numHashes: Int,
-                          bands: Int): (DataFrame, Long) = {
-    def piece(docs: DataFrame, cp: DataFrame => DataFrame): (DataFrame, Long) = {
-      val p = cp(signaturesFromSets(tokenSets(docs), numHashes,
+                          bands: Int): (DataFrame, Long, Long) = {
+    def piece(docs: DataFrame, keep: Boolean): (DataFrame, Long) =
+      Checkpoints.counted(signaturesFromSets(tokenSets(docs), numHashes,
         withSize = true, keepSet = true)
         .select(col("doc_id"), col("tset"), col("sz"),
-          array(bandHashes(numHashes, bands): _*).as("bhs")))
-      (p, Checkpoints.rows(p))
-    }
+          array(bandHashes(numHashes, bands): _*).as("bhs")), keep)
     val indexed = corpusFiles(corpus).map { files =>
       val held = indexes.synchronized(
         indexes.getOrElseUpdate(corpus.sparkSession, mutable.Map.empty))
       held.synchronized {
         val want = files.map { case (path, len, mtime, read) =>
           PieceKey(path, len, mtime, numHashes, bands) -> read }.toMap
-        (held.keySet -- want.keySet).foreach(k => Checkpoints.release(held.remove(k).get))
+        (held.keySet -- want.keySet).foreach(k => Checkpoints.release(held.remove(k).get._1))
         val signed = want.toSeq.map { case (k, read) =>
           if (held.contains(k)) 0L
-          else { val (p, n) = piece(read(), Checkpoints.held); held(k) = p; n }
+          else { val p = piece(read(), keep = true); held(k) = p; p._2 }
         }.sum
         (want.keys.toSeq.sortBy(_.path).map(held), signed)
       }
     }
     indexed match {
-      case Some((pieces, signed)) if pieces.nonEmpty => (pieces.reduce(_ union _), signed)
-      case _ => piece(corpus, Checkpoints.local)
+      case Some((pieces, signed)) if pieces.nonEmpty =>
+        (pieces.map(_._1).reduce(_ union _), pieces.map(_._2).sum, signed)
+      case _ => val (p, n) = piece(corpus, keep = false); (p, n, n)
     }
   }
 
@@ -672,9 +663,9 @@ object Dedup {
     * batch-vs-corpus join consume.
     */
   private def bandize(sig: DataFrame, numHashes: Int, bands: Int): DataFrame = {
-    // an `sz` column (exact size-ratio bound, see bandCandidates) rides
-    // along when the signature table carries one
-    val keep = if (sig.columns.contains("sz")) Seq(col("sz")) else Nil
+    // `sz` (exact size-ratio bound, see bandCandidates) and `tset` (the
+    // set a broadcast probe side confirms from) ride along when present
+    val keep = Seq("sz", "tset").filter(sig.columns.contains).map(col)
     sig.select(col("doc_id") +: keep :+
       posexplode(array(bandHashes(numHashes, bands): _*)).as(Seq("band", "bh")): _*)
   }

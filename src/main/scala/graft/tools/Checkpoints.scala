@@ -50,7 +50,14 @@ object Checkpoints {
     * leaves it alone, and the owner frees it with [[release]]. */
   def held(df: DataFrame): DataFrame = checkpoint(df, swept = false)
 
-  private def checkpoint(df: DataFrame, swept: Boolean): DataFrame = {
+  /** [[local]], or [[held]] when `keep`, plus the checkpoint's row count,
+    * both from the one job that materializes it. */
+  def counted(df: DataFrame, keep: Boolean = false): (DataFrame, Long) = {
+    val cp = checkpoint(df, swept = !keep, eager = false)
+    (cp, rddOf(cp).get.count())
+  }
+
+  private def checkpoint(df: DataFrame, swept: Boolean, eager: Boolean = true): DataFrame = {
     val spark = df.sparkSession
     spark.conf.getOption("spark.graft.checkpointDir").filter(_.nonEmpty) match {
       case Some(dir) =>
@@ -58,9 +65,9 @@ object Checkpoints {
         // prefix or every call would mint a fresh subdir
         if (!spark.sparkContext.getCheckpointDir.exists(_.contains(dir)))
           spark.sparkContext.setCheckpointDir(dir)
-        df.checkpoint()
+        df.checkpoint(eager)
       case None =>
-        val cp = df.localCheckpoint()
+        val cp = df.localCheckpoint(eager)
         if (swept) rddOf(cp).foreach(live.add)
         cp
     }
@@ -70,9 +77,6 @@ object Checkpoints {
     * the separate name keeps call-site intent readable (per-iteration
     * cuts vs one-shot staging). */
   def cut(df: DataFrame): DataFrame = local(df)
-
-  /** Row count of a checkpoint: one narrow pass over its stored rows. */
-  def rows(cp: DataFrame): Long = rddOf(cp).fold(cp.count())(_.count())
 
   /** Unpersist one checkpointed DataFrame's storage (safe on non-checkpoints
     * and double-release: unpersist is idempotent). Non-blocking — block

@@ -2,16 +2,25 @@ package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
 import scala.jdk.CollectionConverters._
+import scala.collection.mutable.ArrayBuffer
 import graft.operators.Dedup
 import graft.tools.Checkpoints
+import org.apache.spark.GraftListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{RDDScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 
 /** The per-file corpus index behind `Dedup.dedupIncrement`: a bare
   * file-scan corpus answers exactly as the same rows passed in memory,
-  * each call signs only the batch plus the files it has not seen, and a
-  * file rewritten in place or deleted never answers from its old bands.
+  * each call signs only the batch plus the files it has not seen, a file
+  * rewritten in place or deleted never answers from its old bands, a small
+  * batch probes the held index rows in place, and closing the session
+  * frees them.
   */
-class DedupIndexSpec extends SparkSpec {
+class DedupIndexSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
 
   private val rnd = new scala.util.Random(7)
@@ -27,6 +36,22 @@ class DedupIndexSpec extends SparkSpec {
 
   private def parts(dir: Path): Set[Path] = Files.list(dir).iterator.asScala
     .filter(_.getFileName.toString.startsWith("part-")).toSet
+
+  // a batch of n docs: fresh texts, exact copies and light edits of `rows`
+  private def batchOf(rows: Seq[(Long, String)], from: Long, n: Int): Seq[(Long, String)] = {
+    val third = n / 3
+    docs(from until from + third) ++
+      (from + third until from + 2 * third).map(_ -> rows(rnd.nextInt(rows.size))._2) ++
+      (from + 2 * third until from + n).map(_ -> (rows(rnd.nextInt(rows.size))._2 + " edited"))
+  }
+
+  // corpus index rows (only they carry band hashes) reach `p` without
+  // passing a join
+  private def corpusFed(p: SparkPlan): Boolean = p match {
+    case s: RDDScanExec => s.output.exists(_.name == "bhs")
+    case _: BaseJoinExec => false
+    case _ => allChildren(p).exists(corpusFed)
+  }
 
   // the local file system verifies a data file against its .crc sibling
   private def crc(p: Path): Path = p.resolveSibling(s".${p.getFileName}.crc")
@@ -122,5 +147,68 @@ class DedupIndexSpec extends SparkSpec {
     assert(Dedup.confirmedPairs(corpus.union(batch)).as[(Long, Long)].collect().toSeq
       == Seq(1L -> 10L))
     Checkpoints.sweep()
+  }
+
+  test("a small batch probes the held corpus index in place, in at most 6 jobs") {
+    val dir = Files.createTempDirectory("graft_dedup_idx").resolve("corpus")
+    val rows = docs(0L until 90L)
+    frame(rows).repartition(3).write.parquet(dir.toString)
+    val warm = batchOf(rows, 1000L, 9)
+    assert(screen(read(dir), warm) == screen(frame(rows), warm))
+    val batch = batchOf(rows, 2000L, 9)
+    // the reader's schema job runs before the counted window
+    val corpus = read(dir)
+    val jobs = ArrayBuffer.empty[Int]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.synchronized(jobs += e.jobId)
+    }
+    GraftListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val kept = try {
+      val out = Dedup.dedupIncrement(corpus, frame(batch))
+      val ids = out.collect().map(_.getLong(0)).toSet
+      GraftListenerBus.drain(spark.sparkContext)
+      assert(Dedup.lastIncrementSignedDocs == batch.size)
+      // no corpus row is shuffled or broadcast: each reaches the band join
+      val plan = out.queryExecution.executedPlan
+      val exchanges = collect(plan) { case e: Exchange => e }
+      assert(exchanges.nonEmpty && !exchanges.exists(e => corpusFed(e.child)), plan)
+      assert(find(plan)(p => p.isInstanceOf[RDDScanExec] && p.output.exists(_.name == "bhs"))
+        .nonEmpty, plan)
+      ids
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.size <= 6, s"jobs ${jobs.mkString(",")}")
+    assert(kept == screen(frame(rows), batch))
+    Checkpoints.sweep()
+  }
+
+  test("a batch with more docs than the corpus answers as the in-memory corpus") {
+    val dir = Files.createTempDirectory("graft_dedup_idx").resolve("corpus")
+    val rows = docs(0L until 10L)
+    frame(rows).repartition(2).write.parquet(dir.toString)
+    val batch = batchOf(rows, 1000L, 30)
+    val got = screen(read(dir), batch)
+    assert(got == screen(frame(rows), batch))
+    assert(batch.slice(10, 20).forall(c => !got(c._1)) && batch.take(10).forall(f => got(f._1)))
+    Checkpoints.sweep()
+  }
+
+  test("Engine.closeSession frees the session's corpus index") {
+    val s = spark.newSession()
+    val dir = Files.createTempDirectory("graft_dedup_idx").resolve("corpus")
+    val rows = docs(0L until 20L)
+    frame(rows).repartition(2).write.parquet(dir.toString)
+    val sc = spark.sparkContext
+    Checkpoints.sweep()
+    val before = sc.getPersistentRDDs.keySet
+    val batch = s.createDataFrame(batchOf(rows, 1000L, 6)).toDF("doc_id", "text")
+    Dedup.dedupIncrement(s.read.parquet(dir.toString), batch).collect()
+    Checkpoints.sweep()
+    val pieces = sc.getPersistentRDDs.keySet -- before
+    assert(pieces.size == 2, pieces)
+    Engine.closeSession(s)
+    assert((sc.getPersistentRDDs.keySet & pieces).isEmpty)
+    Engine.closeSession(s)
+    assert((sc.getPersistentRDDs.keySet & pieces).isEmpty)
   }
 }

@@ -522,6 +522,9 @@ class Round13Spec extends SparkSpec {
       import spark.implicits._
       val cp = tools.Checkpoints.local(Seq(1, 2, 3).toDF("v"))
       assert(cp.count() == 3)
+      // the counting checkpoint too, with the count its one job returns
+      val (counted, rows) = tools.Checkpoints.counted(Seq(1, 2).toDF("v"))
+      assert(rows == 2 && counted.count() == 2)
       val files = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
         .iterator()
       var n = 0
